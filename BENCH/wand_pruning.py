@@ -93,7 +93,9 @@ def main() -> None:
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
+        norm_slices,
         shard_block_max,
+        sharded_block_index,
         shipped_block_stats,
         static_layout,
         wand_sharded_decode_stats,
@@ -107,11 +109,6 @@ def main() -> None:
     idx = build_fulltext_index(tokens, with_norm_len=True, cache=True)
     codec = get_codec("block_vbyte")
     bidx = materialize(build_block_index(idx.postings, codec))
-    rows = idx.docs.select("doc_id", "norm_len").collect()
-    arr = np.zeros(max(r["doc_id"] for r in rows) + 1, dtype=np.float64)
-    for r in rows:
-        arr[r["doc_id"]] = r["norm_len"]
-    norms = spark.sparkContext.broadcast(arr)
     q = spark.createDataFrame(QUERIES, schema="query_id long, terms array<string>")
     N = idx.num_docs
     # the serving artifacts: static layout + per-(block, shard) true
@@ -119,19 +116,21 @@ def main() -> None:
     # shard-local bounds everywhere). OFF-denominator calls stay
     # artifact-free: they measure what the kernel faced before ANY
     # plan-side refinement (the r3/r4 comparable base).
-    universe = len(norms.value)
+    universe = int(idx.docs.agg(F.max("doc_id")).first()[0]) + 1
     _nsh, ss = static_layout(universe)
+    norms = materialize(norm_slices(idx.docs.select("doc_id", "norm_len"), ss))
     sbmw = materialize(
         shard_block_max(
             idx.postings.select("term_id", "doc_id", "tf", "norm_len"), ss
         )
     )
+    sharded = materialize(sharded_block_index(bidx, ss, sbmw))
 
-    def decode_counts(prefilter: bool, sb=None) -> dict:
+    def decode_counts(prefilter: bool, sharded_bidx=None) -> dict:
         rows = (
             wand_sharded_decode_stats(
                 idx, bidx, codec, q, N, norms, prefilter=prefilter,
-                shard_bmw=sb,
+                universe=universe, sharded_bidx=sharded_bidx,
             )
             .groupBy("query_id")
             .agg(
@@ -149,7 +148,7 @@ def main() -> None:
     # ON = the serving default. Raw counts throughout — fractions are
     # derived at the end, never re-inverted from rounded ratios.
     pq_off = decode_counts(prefilter=False)
-    pq_on = decode_counts(prefilter=True, sb=sbmw)
+    pq_on = decode_counts(prefilter=True, sharded_bidx=sharded)
     st = {
         "t": sum(t for t, _d, _f in pq_on.values()),
         "d": sum(d for _t, d, _f in pq_on.values()),
@@ -171,9 +170,10 @@ def main() -> None:
         for qid, (t, d, f) in sorted(pq_on.items())
     }
     ship_off = shipped_block_stats(idx, bidx, codec, q, N, norms,
-                                   prefilter=False)
+                                   prefilter=False, universe=universe)
     ship_on = shipped_block_stats(idx, bidx, codec, q, N, norms,
-                                  prefilter=True, shard_bmw=sbmw)
+                                  prefilter=True, universe=universe,
+                                  shard_bmw=sbmw)
 
     FLAT_IDS = [2]
     # --- algorithmic floor estimate for the DAAT queries ---------------
@@ -239,10 +239,16 @@ def main() -> None:
 
     ref = ranks(ranked_or(idx.postings, q, idx.vocab, N))
     assert ranks(
-        wand_topk_sharded(idx, bidx, codec, q, N, norms, shard_bmw=sbmw)
+        wand_topk_sharded(
+            idx, bidx, codec, q, N, norms, universe=universe,
+            sharded_bidx=sharded,
+        )
     ) == ref
     assert ranks(
-        maxscore_topk_sharded(idx, bidx, codec, q, N, norms, shard_bmw=sbmw)
+        maxscore_topk_sharded(
+            idx, bidx, codec, q, N, norms, universe=universe,
+            sharded_bidx=sharded,
+        )
     ) == ref
 
     decoded = decode_block_index(bidx, codec).join(
@@ -326,7 +332,8 @@ def main() -> None:
             spark,
             {
                 "wand_sharded": lambda: wand_topk_sharded(
-                    idx, bidx, codec, qsel, N, norms, shard_bmw=sbmw
+                    idx, bidx, codec, qsel, N, norms,
+                    universe=universe, sharded_bidx=sharded
                 ).collect(),
                 "ranked_or_over_index": lambda: ranked_or(
                     decoded, qsel, idx.vocab, N
@@ -337,10 +344,12 @@ def main() -> None:
             spark,
             {
                 "wand_sharded": lambda: wand_topk_sharded(
-                    idx, bidx, codec, q, N, norms, shard_bmw=sbmw
+                    idx, bidx, codec, q, N, norms,
+                    universe=universe, sharded_bidx=sharded
                 ).collect(),
                 "maxscore_sharded": lambda: maxscore_topk_sharded(
-                    idx, bidx, codec, q, N, norms, shard_bmw=sbmw
+                    idx, bidx, codec, q, N, norms,
+                    universe=universe, sharded_bidx=sharded
                 ).collect(),
                 "ranked_or_over_index": lambda: ranked_or(
                     decoded, q, idx.vocab, N

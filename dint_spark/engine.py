@@ -1,6 +1,10 @@
 """High-level engine facade: build the full-text index over a documents
 table and answer the reference's query surface. Memoizes the built index
 per (session, sf_dir) so a batch of driver checks reuses cached tables.
+
+Five caches: the index, its compressed block table per codec, the docID
+universe, and the two sharded serving artifacts for the static layout —
+the norm slices and the pre-sharded block index.
 """
 
 from __future__ import annotations
@@ -14,10 +18,8 @@ from dint_spark.tokenizer import tokenize_words
 
 _INDEX_CACHE: dict[tuple[int, str], FullTextIndex] = {}
 _BLOCK_CACHE: dict[tuple[int, str, str], tuple] = {}
-_NORMS_CACHE: dict[tuple[int, str], object] = {}
 _UNIVERSE_CACHE: dict[tuple[int, str], int] = {}
 _NORMSLICE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_SHARDBMW_CACHE: dict[tuple[int, str], DataFrame] = {}
 _SHARDED_BIDX_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
@@ -76,34 +78,6 @@ def get_block_index(spark: SparkSession, sf_dir: str, codec_name: str = "single_
     return hit
 
 
-def get_norms(spark: SparkSession, sf_dir: str):
-    """Broadcast[np.ndarray]: norm_len per doc_id — the reference's
-    resident norm_lens[] (wand_data.hpp:55-58), shipped once per
-    session to executors for the sharded DAAT kernels. 8 bytes/doc
-    (8 GB per 10^9 docs per executor); beyond that, shard the norms on
-    the kernel's doc ranges and cogroup (operators/wand_shard.py
-    docstring). Memoized like the index itself."""
-    import numpy as np
-
-    key = (id(spark), sf_dir)
-    bc = _NORMS_CACHE.get(key)
-    if bc is None:
-        idx = get_index(spark, sf_dir)
-        # Arrow transfer + vectorized scatter — no per-row driver Row
-        # objects (the old collect loop cost far above the 8 B/doc the
-        # array itself needs). Sized by the docID UNIVERSE (max id + 1),
-        # not num_docs: ids need not be dense, and the sharded kernels
-        # clip shards to len(norms) — a short array would drop trailing
-        # docs.
-        pdf = idx.docs.select("doc_id", "norm_len").toPandas()
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        arr = np.zeros(int(ids.max()) + 1 if ids.size else 0, dtype=np.float64)
-        arr[ids] = pdf["norm_len"].to_numpy(dtype=np.float64)
-        bc = spark.sparkContext.broadcast(arr)
-        _NORMS_CACHE[key] = bc
-    return bc
-
-
 def get_universe(spark: SparkSession, sf_dir: str) -> int:
     """docID universe (max assigned id + 1) — an index property, fetched
     once per session as ONE scalar aggregate (never a per-row collect)."""
@@ -119,8 +93,8 @@ def get_universe(spark: SparkSession, sf_dir: str) -> int:
 
 def get_norm_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized per-shard packed norm slices for the index's STATIC
-    shard layout — the fully-distributed replacement for the broadcast
-    norms array in the default WAND/MaxScore path. Built once per
+    shard layout — the norms every WAND/MaxScore serve call cogroups
+    alongside the posting blocks. Built once per
     session (one shuffle of the docs table, an index-build-class cost),
     then every query batch cogroups the slices alongside the posting
     blocks; NO driver-side collect of per-doc data anywhere
@@ -139,50 +113,34 @@ def get_norm_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def get_shard_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized shard_block_max() artifact for the index's static
-    layout — per-(block, shard) true max weights (wand_shard.py
-    shard_block_max docstring). Like norm_slices: one index-build-class
-    shuffle per session, then every batch's plan drops dead straddle
-    pairs and serves tight shard-local bounds from it."""
-    from dint_spark.operators.wand_shard import shard_block_max, static_layout
-    from dint_spark.util import materialize
-
-    key = (id(spark), sf_dir)
-    df = _SHARDBMW_CACHE.get(key)
-    if df is None:
-        idx = get_index(spark, sf_dir)
-        _nsh, ss = static_layout(get_universe(spark, sf_dir))
-        df = materialize(
-            shard_block_max(
-                idx.postings.select("term_id", "doc_id", "tf", "norm_len"), ss
-            )
-        )
-        _SHARDBMW_CACHE[key] = df
-    return df
-
-
 def get_sharded_blocks(
     spark: SparkSession, sf_dir: str, codec_name: str = "single_packed_dint"
 ) -> DataFrame:
     """Materialized sharded_block_index() artifact: the block index
-    shard-exploded for the static layout with the shard_block_max
-    refinement pre-joined (dead straddle pairs dropped, in-shard max
-    weights in place). One index-build-class join per session; every
-    serve batch then goes term-semi-join → cogroup exchange, instead of
-    re-running a SortMergeJoin that shuffled the block payload a second
-    time per batch (guide §8: heavy bytes move once)."""
-    from dint_spark.operators.wand_shard import sharded_block_index, static_layout
+    shard-exploded for the static layout with the shard_block_max()
+    refinement joined in (dead straddle pairs dropped, in-shard max
+    weights in place — wand_shard.py shard_block_max docstring). One
+    index-build-class join per session; every serve batch then goes
+    term-semi-join → cogroup exchange, instead of re-running a
+    SortMergeJoin that shuffled the block payload a second time per
+    batch (guide §8: heavy bytes move once)."""
+    from dint_spark.operators.wand_shard import (
+        shard_block_max,
+        sharded_block_index,
+        static_layout,
+    )
     from dint_spark.util import materialize
 
     key = (id(spark), sf_dir, codec_name)
     df = _SHARDED_BIDX_CACHE.get(key)
     if df is None:
+        idx = get_index(spark, sf_dir)
         bidx, _codec = get_block_index(spark, sf_dir, codec_name)
         _nsh, ss = static_layout(get_universe(spark, sf_dir))
-        df = materialize(
-            sharded_block_index(bidx, ss, get_shard_bmw(spark, sf_dir))
+        sbmw = shard_block_max(
+            idx.postings.select("term_id", "doc_id", "tf", "norm_len"), ss
         )
+        df = materialize(sharded_block_index(bidx, ss, sbmw))
         _SHARDED_BIDX_CACHE[key] = df
     return df
 

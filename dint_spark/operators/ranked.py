@@ -73,13 +73,6 @@ def score_all(
     )
 
 
-def _top_struct():
-    # sort_array desc on (s, nd) = score DESC, then nd DESC = doc_id ASC
-    return F.struct(
-        F.col("score").alias("s"), (-F.col("doc_id")).cast("long").alias("nd")
-    )
-
-
 def topk(scored: DataFrame, k: int = 10) -> DataFrame:
     """(query_id, doc_id, score, rank) — top-k per query, deterministic ties.
 
@@ -87,8 +80,8 @@ def topk(scored: DataFrame, k: int = 10) -> DataFrame:
     hygiene (periodic GC, session.py) this measured 1.4-2.8s on a 10M-row
     scored set at local[8..32] — faster than both a
     sort_array(collect_list) aggregation (35-67s) and an Arrow
-    partition-local heap (topk_partition_local). The reference's bounded
-    heap (topk_queue, queries.hpp:150-188) corresponds to the window's
+    partition-local pandas heap. The reference's bounded heap
+    (topk_queue, queries.hpp:150-188) corresponds to the window's
     per-partition TopK sort under ORDER BY + rank filter.
     """
     scored = scored.withColumn("score", F.round(F.col("score"), SCORE_ROUND))
@@ -98,39 +91,6 @@ def topk(scored: DataFrame, k: int = 10) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "score", "rank")
     )
-
-
-def topk_partition_local(scored: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k with NO wide shuffle of the scored set.
-
-    Requires one row per (query_id, doc_id) in `scored` (guaranteed by
-    the upstream groupBy aggregation — its exchange makes keys unique
-    per partition). Phase 1: a bounded Arrow kernel keeps the best k
-    rows per query PER PARTITION (the reference's topk_queue,
-    queries.hpp:150-188 — one heap per partition). Phase 2: global
-    top-k over ≤ k·num_partitions rows per query — trivial. The naive
-    window plan re-shuffled + sorted the full scored set and measured
-    10-40× slower at local[32].
-    """
-    scored = scored.select(
-        "query_id", "doc_id", F.round(F.col("score"), SCORE_ROUND).alias("score")
-    )
-
-    def local(batches):
-        import pandas as pd
-
-        best = None
-        for pdf in batches:
-            cand = pd.concat([best, pdf], ignore_index=True) if best is not None else pdf
-            cand = cand.sort_values(
-                ["query_id", "score", "doc_id"], ascending=[True, False, True]
-            )
-            best = cand.groupby("query_id", sort=False).head(k)
-        if best is not None and len(best):
-            yield best
-
-    local_top = scored.mapInPandas(local, "query_id long, doc_id long, score double")
-    return topk(local_top, k)
 
 
 def ranked_or(
@@ -144,10 +104,7 @@ def ranked_or(
 
     Plan: broadcast-joined scoring → ONE wide shuffle (the
     groupBy(query_id, doc_id) aggregation; bucket postings by doc_id on
-    a cluster to elide it) → window top-k. For corpora where the scored
-    set itself dwarfs memory, swap the final step for
-    topk_partition_local (bounded per-partition heaps, no scored-set
-    re-shuffle).
+    a cluster to elide it) → window top-k (see topk).
     """
     return topk(score_all(postings, queries, vocab, num_docs), k)
 

@@ -151,7 +151,6 @@ def topk_auto(
     algo: str = "wand",
     universe: "int | None" = None,
     force: "str | None" = None,
-    shard_bmw: "DataFrame | None" = None,
     sharded_bidx: "DataFrame | None" = None,
 ) -> DataFrame:
     """Ranked top-k with cost-based plan choice.
@@ -182,5 +181,4 @@ def topk_auto(
         return ranked_or(idx.postings, queries, idx.vocab, num_docs, k=k)
     fn = wand_topk_sharded if algo == "wand" else maxscore_topk_sharded
     return fn(idx, bidx, codec, queries, num_docs, norms, k=k,
-              universe=universe, shard_bmw=shard_bmw,
-              sharded_bidx=sharded_bidx)
+              universe=universe, sharded_bidx=sharded_bidx)

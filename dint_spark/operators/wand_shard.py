@@ -47,8 +47,14 @@ the node-sharded form of the reference's resident norm_lens[]
 (wand_data.hpp:55-58). Each kernel reconstructs only its shard's
 contiguous slice (memory ∝ shard span, hi−lo), so the path has NO
 driver-side per-doc collect and NO universe-sized broadcast at any
-scale. A legacy Broadcast[np.ndarray] is still accepted for
-single-node-parity callers (resident-array mode).
+scale.
+
+One serving path: the layout is always static_layout(universe), the
+blocks come from ONE shard-exploded frame (the pre-sharded
+sharded_block_index artifact, or the same function applied to bidx),
+and the norms from ONE norm_slices frame (precomputed, or packed in the
+plan from idx.docs). The kernel refuses block rows or slices that were
+built for a different layout instead of mis-scoring them.
 
 Adaptive kernel: a COST MODEL (C_PIVOT / C_VEC / C_DECODE below)
 chooses per query, per shard between the DAAT path and a batched-decode
@@ -406,8 +412,8 @@ def _use_daat(
 
 
 def _exhaustive_merge(
-    enums: list[_ListEnum], norms: np.ndarray, nbase: int, lo: int,
-    hi: int, k: int, theta: float = 0.0, use_block_max: bool = False,
+    enums: list[_ListEnum], norms: np.ndarray, lo: int, hi: int, k: int,
+    theta: float = 0.0,
 ) -> list[tuple]:
     """Vectorized exhaustive scoring for groups where pruning cannot
     skip enough to pay for the per-doc DAAT loop. Uncached blocks decode
@@ -416,27 +422,25 @@ def _exhaustive_merge(
     queries in the batch reuse them. Aggregation is a bincount over the
     shard's contiguous doc range; top-k by (rounded, -doc).
 
-    With use_block_max (the WAND variant), blocks whose cross-list bound
-    qw_i·block_max_weight_i(b) + Σ_{j≠i} ub_j < θ are skipped BEFORE
+    With θ > 0 (the WAND variant passes its seed), blocks whose
+    cross-list bound qw_i·block_max_weight_i(b) + Σ_{j≠i} ub_j < θ are
+    skipped BEFORE
     decode — the same lossless filter as the relational plan's step 3
     (operators/wand.py): every doc in such a block has total score
     < θ_eff, so it cannot enter the top-k, and a doc that resurfaces via
     another list's blocks carries a partial score < θ_eff that rounds
     strictly below every true top-k doc (the 2e-9 margin > the 1e-9
-    rounding quantum). NULL (NaN) block_max_weight keeps the block."""
+    rounding quantum). NULL (NaN) block_max_weight keeps the block.
+    Every block overlaps [lo, hi) (the kernel's layout guard)."""
     blocks: list[tuple[_ListEnum, int]] = []
     need_d: list[tuple[_ListEnum, int]] = []
     need_f: list[tuple[_ListEnum, int]] = []
-    sum_ub = sum(e.ub for e in enums) if use_block_max else 0.0
+    sum_ub = sum(e.ub for e in enums)
+    skip_bound = theta > 0.0
     for e in enums:
         tb = e.tb
         others = sum_ub - e.ub
-        skip_bound = use_block_max and theta > 0.0
         for bi in range(len(tb.maxs)):
-            if tb.maxs[bi] < lo:
-                continue
-            if tb.bases[bi] + 1 >= hi:
-                break
             if skip_bound:
                 w = tb.bmw[bi]
                 if w == w and e.qw * w + others < theta:
@@ -499,7 +503,7 @@ def _exhaustive_merge(
     alld, tf, qws = alld[m], tf[m], qws[m]
     if not alld.size:
         return []
-    alls = qws * (tf / (tf + K1 * (1.0 - B + B * norms[alld - nbase])))
+    alls = qws * (tf / (tf + K1 * (1.0 - B + B * norms[alld - lo])))
     span = hi - lo
     if span <= 1 << 24:
         # dense-array aggregation (bincount is C-speed, no sort): doc
@@ -519,13 +523,10 @@ def _exhaustive_merge(
 
 
 def _wand_core(
-    enums: list[_ListEnum], seed: float, norms, nbase: int, lo: int,
-    hi: int, k: int, use_block_max: bool,
+    enums: list[_ListEnum], seed: float, norms, lo: int, hi: int, k: int,
 ) -> list[tuple]:
     if not _use_daat(enums, seed, lo, hi):
-        return _exhaustive_merge(
-            enums, norms, nbase, lo, hi, k, seed, use_block_max
-        )
+        return _exhaustive_merge(enums, norms, lo, hi, k, seed)
 
     heap: list[tuple] = []
     while True:
@@ -549,27 +550,26 @@ def _wand_core(
         # skip-past-pivot decision) must include them all
         while p + 1 < len(enums) and enums[p + 1].cur == pivot_doc:
             p += 1
-        if use_block_max:
-            # shallow block-max refinement (BMW): align each prefix
-            # enum's block metadata to pivot_doc, sum block maxima
-            bm_sum, boundary = 0.0, INT64_MAX
-            for e in enums[: p + 1]:
-                maxs, bmw = e.tb.maxs, e.tb.bmw
-                bi = int(maxs.searchsorted(pivot_doc))
-                w = bmw[bi] if bi < len(bmw) else np.nan
-                bm_sum += e.qw * (w if w == w else 1.0)
-                if bi < len(maxs):
-                    boundary = min(boundary, int(maxs[bi]))
-            if bm_sum < theta:
-                # no doc in these blocks can reach θ: jump past the
-                # nearest block boundary (Ding-Suel d'+1 rule)
-                d2 = boundary + 1
-                if p + 1 < len(enums):
-                    d2 = min(d2, enums[p + 1].cur)
-                d2 = max(d2, pivot_doc + 1)
-                big = max(enums[: p + 1], key=lambda e: e.ub)
-                big.next_geq(d2)
-                continue
+        # shallow block-max refinement (BMW): align each prefix enum's
+        # block metadata to pivot_doc, sum block maxima
+        bm_sum, boundary = 0.0, INT64_MAX
+        for e in enums[: p + 1]:
+            maxs, bmw = e.tb.maxs, e.tb.bmw
+            bi = int(maxs.searchsorted(pivot_doc))
+            w = bmw[bi] if bi < len(bmw) else np.nan
+            bm_sum += e.qw * (w if w == w else 1.0)
+            if bi < len(maxs):
+                boundary = min(boundary, int(maxs[bi]))
+        if bm_sum < theta:
+            # no doc in these blocks can reach θ: jump past the nearest
+            # block boundary (Ding-Suel d'+1 rule)
+            d2 = boundary + 1
+            if p + 1 < len(enums):
+                d2 = min(d2, enums[p + 1].cur)
+            d2 = max(d2, pivot_doc + 1)
+            big = max(enums[: p + 1], key=lambda e: e.ub)
+            big.next_geq(d2)
+            continue
         # exactness barrier: pivoting on docID LOWER BOUNDS is lossless
         # (a list with lb ≥ pivot has true cur ≥ pivot, so docs before
         # the pivot candidate still see Σub < θ; the block-max skip
@@ -585,7 +585,7 @@ def _wand_core(
             continue
         if enums[0].cur == pivot_doc:
             # full evaluation: every enum sitting on pivot contributes
-            nl = float(norms[pivot_doc - nbase])
+            nl = float(norms[pivot_doc - lo])
             score = 0.0
             for e in enums:
                 if e.cur != pivot_doc:
@@ -610,8 +610,7 @@ def _wand_core(
 
 
 def _maxscore_core(
-    enums: list[_ListEnum], seed: float, norms, nbase: int, lo: int,
-    hi: int, k: int,
+    enums: list[_ListEnum], seed: float, norms, lo: int, hi: int, k: int,
 ) -> list[tuple]:
     """Term-level MaxScore (queries.hpp:459-573): ascending-bound prefix
     is non-essential; DAAT over essential lists only; non-essential
@@ -619,7 +618,7 @@ def _maxscore_core(
     if not _use_daat(enums, seed, lo, hi):
         # no block-max filter here: MaxScore is TERM-level pruning by
         # contract (queries.hpp:459-573 never consults block maxima)
-        return _exhaustive_merge(enums, norms, nbase, lo, hi, k)
+        return _exhaustive_merge(enums, norms, lo, hi, k)
 
     enums.sort(key=lambda e: e.ub)  # ascending bound
     prefix = np.cumsum([0.0] + [e.ub for e in enums])  # prefix[i] = Σ ub[<i]
@@ -642,7 +641,7 @@ def _maxscore_core(
                 e.materialize()
             continue
         d = min(e.cur for e in live)
-        nl = float(norms[d - nbase])
+        nl = float(norms[d - lo])
         score = 0.0
         for e in live:
             if e.cur == d:
@@ -668,14 +667,14 @@ def _maxscore_core(
     return [(-nd, raw) for _r, nd, raw in heap]
 
 
-def _run_query(algo, qrows, cache, codec, norms, nbase, lo, hi, k, stats,
+def _run_query(algo, qrows, cache, codec, norms, lo, hi, k, stats,
                seed=None):
     enums = _make_enums(qrows, cache, codec, lo, hi, stats)
     if seed is None:
         seed = _seed_from_rows(qrows, k)
     if algo == "maxscore":
-        return _maxscore_core(enums, seed, norms, nbase, lo, hi, k)
-    return _wand_core(enums, seed, norms, nbase, lo, hi, k, algo == "wand")
+        return _maxscore_core(enums, seed, norms, lo, hi, k)
+    return _wand_core(enums, seed, norms, lo, hi, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1010,51 +1009,20 @@ def sharded_block_index(
 
 
 def _batch_blocks_sharded(
-    bidx, qt_full, qt, seed_df, k, algo, prefilter, ss, shard_bmw=None,
-    sharded_bidx=None,
+    sharded_bidx, qt_full, qt, seed_df, k, algo, prefilter
 ) -> DataFrame:
-    """The index slice the cogroup shuffle ships for a query batch:
-    blocks of the batch's terms (deduped, shipped ONCE), optionally
-    plan-side block-max prefiltered, shard-exploded. Shared by _run and
-    shipped_block_stats so the evidence surface measures EXACTLY the
-    serving plan.
+    """The index slice the cogroup shuffle ships for a query batch: the
+    shard-exploded block index (sharded_block_index) semi-joined to the
+    batch's terms (deduped, shipped ONCE), optionally plan-side
+    block-max prefiltered. Shared by _run and shipped_block_stats so the
+    evidence surface measures EXACTLY the serving plan.
 
-    sharded_bidx: pre-sharded index artifact (sharded_block_index,
-    already exploded + bmw-refined for THIS layout) — the serving path;
-    the per-batch explode/join below is the fallback for ad-hoc layouts.
-
-    shard_bmw: optional shard_block_max() artifact. When present the
-    shard explode is refined to the pairs that actually hold postings
-    (inner join — dead straddle pairs never ship) and the shipped
-    block_max_weight column is replaced by the true in-shard max, which
-    tightens the plan prefilter AND the kernel's shard-local bounds
-    with zero kernel changes (both already read this column).
-
-    The broadcast semi-join build sides skip .distinct(): a broadcast
+    The broadcast semi-join build side skips .distinct(): a broadcast
     left-semi probe is duplicate-insensitive, and the distinct added an
     Exchange to every serve plan."""
-    if sharded_bidx is not None:
-        blocks_sh = sharded_bidx.join(
-            F.broadcast(qt.select("term_id")), "term_id", "left_semi"
-        )
-    else:
-        blocks_q = bidx.join(
-            F.broadcast(qt.select("term_id")), "term_id", "left_semi"
-        )
-        blocks_sh = sharded_block_index(blocks_q, ss, None)
-        if shard_bmw is not None:
-            # semi-filter the artifact to the batch's terms first (same
-            # pruning the blocks got), then refine; sort-merge friendly on
-            # (term_id, block_id, _shard) — never a broadcast of an
-            # index-sized table
-            sb = shard_bmw.join(
-                F.broadcast(qt.select("term_id")), "term_id", "left_semi"
-            )
-            blocks_sh = (
-                blocks_sh.join(sb, ["term_id", "block_id", "_shard"], "inner")
-                .withColumn("block_max_weight", F.col("bmw_s"))
-                .select(*_LEFT_COLS)
-            )
+    blocks_sh = sharded_bidx.join(
+        F.broadcast(qt.select("term_id")), "term_id", "left_semi"
+    )
     if prefilter and algo == "wand":
         # plan-side block-max prefilter (lossless — see
         # _block_prefilter_cuts): (block, shard) pairs no query of the
@@ -1079,30 +1047,59 @@ def _batch_blocks_sharded(
     return blocks_sh
 
 
-def shipped_block_stats(
-    idx, bidx, codec, queries, num_docs, norms=None, k=10,
-    prefilter=True, num_shards=None, universe=None, shard_bmw=None,
-) -> dict:
-    """Rows and payload bytes the cogroup shuffle would ship for this
-    batch — the shuffled-bytes evidence surface for the plan-side
-    prefilter (BENCH/wand_pruning.py records the prefilter on/off
-    delta). Builds the SAME blocks frame as the serving plan
-    (_batch_blocks_sharded) and aggregates it without running the
-    kernel; norm-slice rows (prefilter-independent) are excluded."""
-    _nb, _sp, _ndf, universe = _resolve_norms(idx, norms, universe)
-    if num_shards is not None:
-        nsh = int(num_shards)
-        ss = -(-universe // max(1, nsh))
-    else:
-        nsh, ss = static_layout(universe)
+def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
+    """The front half shared by _run and shipped_block_stats →
+    (universe, nsh, ss, qt_full, qt, seed_df).
+
+    norms: a norm_slices() frame, or None (universe then comes from
+    idx.docs and _run packs the slices in the plan). The layout is
+    always static_layout(universe) — the docID universe (max assigned
+    id + 1) can exceed num_docs when ids are not dense (docs with no
+    tokens leave holes), so shards tile the universe or trailing docs
+    vanish."""
+    if norms is not None and "docs_bytes" not in getattr(norms, "columns", ()):
+        raise TypeError(
+            "norms must be a norm_slices() frame or None, got "
+            f"{type(norms).__name__}"
+        )
+    if universe is None:
+        # bounded metadata action: ONE max aggregate (scalar), not a
+        # per-row collect — the docID universe is an index property;
+        # serving paths pass it precomputed (engine.get_universe)
+        if norms is None:
+            mx = idx.docs.agg(F.max("doc_id")).first()[0]
+        else:
+            mx = norms.agg(F.max("block_max")).first()[0]
+        universe = int(mx) + 1
+    universe = int(universe)
+    nsh, ss = static_layout(universe)
     qt_full = _qt_meta(idx, queries, num_docs)
     qt = qt_full.select("query_id", "term_id", "qw", "w10")
     seed_df = (
         _exact_seed_df(idx, bidx, codec, qt_full, k) if k > TOPK_BOUND_K else None
     )
+    return universe, nsh, ss, qt_full, qt, seed_df
+
+
+def shipped_block_stats(
+    idx, bidx, codec, queries, num_docs, norms=None, k=10,
+    prefilter=True, universe=None, shard_bmw=None,
+) -> dict:
+    """Rows and payload bytes the cogroup shuffle would ship for this
+    batch — the shuffled-bytes evidence surface for the plan-side
+    prefilter (BENCH/wand_pruning.py records the prefilter on/off
+    delta). Builds the SAME blocks frame as the serving plan
+    (_batch_blocks_sharded over sharded_block_index(bidx, ss,
+    shard_bmw)) and aggregates it without running the kernel; norm-slice
+    rows (prefilter-independent) are excluded."""
+    _u, nsh, ss, qt_full, qt, seed_df = _serving_inputs(
+        idx, bidx, codec, queries, num_docs, norms, k, universe
+    )
     r = (
-        _batch_blocks_sharded(bidx, qt_full, qt, seed_df, k, "wand",
-                              prefilter, ss, shard_bmw)
+        _batch_blocks_sharded(
+            sharded_block_index(bidx, ss, shard_bmw), qt_full, qt, seed_df,
+            k, "wand", prefilter,
+        )
         .agg(
             F.count("*").alias("rows"),
             F.sum(
@@ -1135,37 +1132,33 @@ def wand_topk_sharded(
     codec,
     queries: DataFrame,
     num_docs: int,
-    norms=None,
+    norms: "DataFrame | None" = None,
     k: int = 10,
-    use_block_max: bool = True,
-    num_shards: "int | None" = None,
     universe: "int | None" = None,
     prefilter: "bool | None" = None,
-    shard_bmw: "DataFrame | None" = None,
     sharded_bidx: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Block-max WAND over the compressed index, doc-sharded DAAT.
+    """Block-max WAND over the compressed index, doc-sharded DAAT at the
+    static layout, static_layout(universe).
 
-    norms: None → norm slices derive from idx.docs inside the plan
-    (fully distributed); a (doc_id, norm_len) DataFrame; a precomputed
-    norm_slices() frame (engine.get_norm_slices — the serving path); or
-    a legacy Broadcast[np.ndarray] (resident-array mode, single-node
-    parity with wand_data.hpp:55-58).
+    norms: a precomputed norm_slices() frame packed for that layout
+    (engine.get_norm_slices — the serving path), or None → the slices
+    are packed inside the plan from idx.docs.
+
+    sharded_bidx: the pre-sharded block artifact, sharded_block_index
+    (bidx, ss, shard_block_max(...)) for that layout
+    (engine.get_sharded_blocks — the serving path). None → the plan
+    shard-explodes bidx with the same function, without the in-shard
+    bmw refinement. An artifact built for another layout is refused by
+    the kernel.
 
     prefilter: apply the lossless plan-side block-max cut
     (_block_prefilter_cuts) before the cogroup shuffle. None (default)
     auto-enables at ≥ PREFILTER_MIN_BATCH queries, where its fixed cuts
     stages amortize; True/False force it (A/B evidence in
-    BENCH/wand_pruning.py).
-
-    shard_bmw: optional shard_block_max() artifact (the serving path —
-    engine.get_shard_bmw): drops zero-posting (block, shard) straddle
-    pairs before the shuffle and replaces the shipped bmw with the true
-    in-shard max. Lossless; None preserves the global-bmw behavior."""
-    return _run(idx, bidx, codec, queries, num_docs, norms, k, num_shards,
-                "wand" if use_block_max else "maxscore_bm_off", universe,
-                prefilter=prefilter, shard_bmw=shard_bmw,
-                sharded_bidx=sharded_bidx)
+    BENCH/wand_pruning.py)."""
+    return _run(idx, bidx, codec, queries, num_docs, norms, k, "wand",
+                universe, prefilter=prefilter, sharded_bidx=sharded_bidx)
 
 
 def maxscore_topk_sharded(
@@ -1174,27 +1167,23 @@ def maxscore_topk_sharded(
     codec,
     queries: DataFrame,
     num_docs: int,
-    norms=None,
+    norms: "DataFrame | None" = None,
     k: int = 10,
-    num_shards: "int | None" = None,
     universe: "int | None" = None,
-    shard_bmw: "DataFrame | None" = None,
     sharded_bidx: "DataFrame | None" = None,
 ) -> DataFrame:
     """Term-level MaxScore over the compressed index, doc-sharded DAAT.
-    See wand_topk_sharded for the norms and shard_bmw contracts (the
+    See wand_topk_sharded for the norms and sharded_bidx contracts (the
     block-level plan PREFILTER stays off — MaxScore is term-level
-    pruning by contract — but the dead-pair drop and the tighter
+    pruning by contract — but the artifact's dead-pair drop and tighter
     shard-local term ubs apply)."""
-    return _run(idx, bidx, codec, queries, num_docs, norms, k, num_shards,
-                "maxscore", universe, shard_bmw=shard_bmw,
-                sharded_bidx=sharded_bidx)
+    return _run(idx, bidx, codec, queries, num_docs, norms, k, "maxscore",
+                universe, sharded_bidx=sharded_bidx)
 
 
 def wand_sharded_decode_stats(
-    idx, bidx, codec, queries, num_docs, norms=None, k=10, num_shards=None,
-    algo="wand", universe=None, prefilter=None, shard_bmw=None,
-    sharded_bidx=None,
+    idx, bidx, codec, queries, num_docs, norms=None, k=10, algo="wand",
+    universe=None, prefilter=None, sharded_bidx=None,
 ) -> DataFrame:
     """(query_id, shard, blocks_total, blocks_docs_decoded,
     blocks_freqs_decoded) — the pruning evidence surface (reference
@@ -1203,31 +1192,9 @@ def wand_sharded_decode_stats(
     attribution is restored by clearing the shard's decoded-block memo
     between queries (each query pays its own decodes, as the reference's
     per-query profiler does)."""
-    return _run(idx, bidx, codec, queries, num_docs, norms, k, num_shards,
-                algo, universe, emit="stats", prefilter=prefilter,
-                shard_bmw=shard_bmw, sharded_bidx=sharded_bidx)
-
-
-def _resolve_norms(idx, norms, universe):
-    """→ (norms_bc | None, slices_df | None, ndf | None, universe)."""
-    if hasattr(norms, "value"):  # legacy Broadcast resident-array mode
-        return norms, None, None, len(norms.value)
-    slices_pre, ndf = None, None
-    if norms is None:
-        ndf = idx.docs.select("doc_id", "norm_len")
-    elif "docs_bytes" in norms.columns:
-        slices_pre = norms
-    else:
-        ndf = norms.select("doc_id", "norm_len")
-    if universe is None:
-        # bounded metadata action: ONE max aggregate (scalar), not a
-        # per-row collect — the docID universe is an index property;
-        # serving paths pass it precomputed (engine.get_universe)
-        if ndf is not None:
-            universe = int(ndf.agg(F.max("doc_id")).first()[0]) + 1
-        else:
-            universe = int(slices_pre.agg(F.max("block_max")).first()[0]) + 1
-    return None, slices_pre, ndf, int(universe)
+    return _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
+                universe, emit="stats", prefilter=prefilter,
+                sharded_bidx=sharded_bidx)
 
 
 def _codec_broadcast(spark, codec):
@@ -1237,9 +1204,8 @@ def _codec_broadcast(spark, codec):
     return memo_broadcast(spark, codec)
 
 
-def _run(idx, bidx, codec, queries, num_docs, norms, k, num_shards, algo,
-         universe=None, emit="topk", prefilter=None, shard_bmw=None,
-         sharded_bidx=None):
+def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
+         universe=None, emit="topk", prefilter=None, sharded_bidx=None):
     spark = queries.sparkSession
     if prefilter is None:  # auto: fixed cuts stages amortize over batch
         # batch size from plan metadata when the producer attached it
@@ -1250,37 +1216,17 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, num_shards, algo,
         if nq is None:
             nq = len(queries.select("query_id").take(PREFILTER_MIN_BATCH))
         prefilter = nq >= PREFILTER_MIN_BATCH
-    norms_bc, slices_pre, ndf, universe = _resolve_norms(idx, norms, universe)
-    # the docID universe (max assigned id + 1) can exceed num_docs when
-    # ids are not dense (docs with no tokens leave holes); sharding and
-    # clipping must cover the universe or trailing docs vanish
-    if num_shards is not None:
-        nsh = int(num_shards)
-        ss = -(-universe // max(1, nsh))
-    else:
-        nsh, ss = static_layout(universe)
-    qt_full = _qt_meta(idx, queries, num_docs)
-    qt = qt_full.select("query_id", "term_id", "qw", "w10")
-    seed_df = (
-        _exact_seed_df(idx, bidx, codec, qt_full, k) if k > TOPK_BOUND_K else None
+    universe, nsh, ss, qt_full, qt, seed_df = _serving_inputs(
+        idx, bidx, codec, queries, num_docs, norms, k, universe
     )
-    if sharded_bidx is not None and num_shards is not None:
-        # the pre-sharded artifact is built for the index's STATIC
-        # layout; silently ignoring it under a custom layout would make
-        # every batch re-pay the join the artifact exists to avoid
-        raise ValueError(
-            "sharded_bidx is pre-exploded for the static layout and "
-            "cannot serve a custom num_shards — pass one or the other"
-        )
+    if sharded_bidx is None:
+        sharded_bidx = sharded_block_index(bidx, ss)
     blocks_sh = _batch_blocks_sharded(
-        bidx, qt_full, qt, seed_df, k, algo, prefilter, ss, shard_bmw,
-        sharded_bidx=sharded_bidx,
+        sharded_bidx, qt_full, qt, seed_df, k, algo, prefilter
     )
-    if norms_bc is None:
-        slices = slices_pre if slices_pre is not None else norm_slices(ndf, ss)
-        left = blocks_sh.unionByName(slices)
-    else:
-        left = blocks_sh
+    if norms is None:
+        norms = norm_slices(idx.docs.select("doc_id", "norm_len"), ss)
+    left = blocks_sh.unionByName(norms)
     if nsh <= SEQ_SHARD_MAX:
         # small layouts: fan the shard ids out with a per-row sequence
         # explode — zero extra source, zero broadcast job. (The old
@@ -1333,27 +1279,34 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, num_shards, algo,
         shard = int(key[0])
         lo, hi = shard * ss, min((shard + 1) * ss, universe)
         c = codec_bc.value
-        if norms_bc is not None:
-            nv, nbase = norms_bc.value, 0
-            blocks_pdf = left
-        else:
-            nv = np.zeros(max(0, hi - lo), dtype=np.float64)
-            nbase = lo
-            if len(left):
-                tcol = left["term_id"].to_numpy(dtype=np.int64)
-                sent = left[tcol == NORM_SENTINEL]
-                for r in sent.itertuples(index=False):
-                    if int(r.block_id) != ss:
-                        raise ValueError(
-                            f"norm slices packed for shard_size {r.block_id}, "
-                            f"query plan uses {ss} — rebuild norm_slices"
-                        )
-                    ids = np.frombuffer(r.docs_bytes, dtype=np.int64)
-                    nv[ids - lo] = np.frombuffer(r.freqs_bytes, dtype=np.float64)
-                blocks_pdf = left[tcol >= 0]
-            else:
-                blocks_pdf = left
-        cache = _term_cache(blocks_pdf) if len(blocks_pdf) else {}
+        nv = np.zeros(max(0, hi - lo), dtype=np.float64)
+        cache = {}
+        if len(left):
+            tcol = left["term_id"].to_numpy(dtype=np.int64)
+            sent = left[tcol == NORM_SENTINEL]
+            for r in sent.itertuples(index=False):
+                if int(r.block_id) != ss:
+                    raise ValueError(
+                        f"norm slices packed for shard_size {r.block_id}, "
+                        f"query plan uses {ss} — rebuild norm_slices"
+                    )
+                ids = np.frombuffer(r.docs_bytes, dtype=np.int64)
+                nv[ids - lo] = np.frombuffer(r.freqs_bytes, dtype=np.float64)
+            blocks_pdf = left[tcol >= 0]
+            # layout guard: sharded_block_index puts a block only in the
+            # shards it overlaps and every later step only drops rows, so
+            # a non-overlapping row means the artifact was exploded for a
+            # different shard_size — refuse instead of mis-scoring
+            far = (blocks_pdf["block_max"].to_numpy() < lo) | (
+                blocks_pdf["block_base"].to_numpy() + 1 >= hi
+            )
+            if far.any():
+                raise ValueError(
+                    f"{int(far.sum())} block rows handed to shard {shard} do "
+                    f"not overlap its docs [{lo}, {hi}) at shard_size {ss} — "
+                    "rebuild sharded_block_index for static_layout(universe)"
+                )
+            cache = _term_cache(blocks_pdf)
         tids = right["term_id"].to_numpy(dtype=np.int64)
         qws = right["qw"].to_numpy(dtype=np.float64)
         w10s = right["w10"].to_numpy(dtype=np.float64)
@@ -1377,7 +1330,7 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, num_shards, algo,
                     tb.fcache.clear()
             stats = [0, 0, 0]
             sv = seeds[sel[0]]
-            rows = _run_query(algo, qrows, cache, c, nv, nbase, lo, hi, k,
+            rows = _run_query(algo, qrows, cache, c, nv, lo, hi, k,
                               stats, seed=float(sv) if sv == sv else None)
             if stats_mode:
                 out_rows.append((qid, shard, stats[0], stats[1], stats[2]))

@@ -36,6 +36,10 @@ QUERY_SET: list[tuple[int, list[str]]] = [
 ]
 
 
+def _sql_escape(term: str) -> str:
+    return term.replace("\\", "\\\\").replace("'", "''")
+
+
 def queries_df(spark: SparkSession) -> DataFrame:
     """Small DataFrame (query_id long, terms array<string>) — broadcast side.
 
@@ -55,10 +59,11 @@ def queries_df(spark: SparkSession) -> DataFrame:
     """
     rows = []
     for qid, terms in QUERY_SET:
-        # escape ' as '' (Spark SQL string-literal escaping) so an
-        # extended QUERY_SET term can never break or reshape the VALUES
-        # clause; byte-identical output for the current quote-free set
-        arr = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
+        # Spark SQL string-literal escaping: \ first (the parser reads
+        # it as an escape character), then ' as '' — so an extended
+        # QUERY_SET term can never break or reshape the VALUES clause;
+        # byte-identical output for the current set, which has neither
+        arr = ", ".join("'" + _sql_escape(t) + "'" for t in terms)
         rows.append(f"(CAST({int(qid)} AS BIGINT), array({arr}))")
     df = spark.sql(
         "SELECT col1 AS query_id, col2 AS terms FROM VALUES " + ", ".join(rows)
@@ -68,9 +73,10 @@ def queries_df(spark: SparkSession) -> DataFrame:
 
 
 def queries_sql_values() -> str:
-    """DuckDB VALUES clause: (query_id, terms) rows, for oracle CTEs."""
+    """DuckDB VALUES clause: (query_id, terms) rows, for oracle CTEs.
+    DuckDB strings are standard SQL: ' doubles, \\ is literal."""
     rows = []
     for qid, terms in QUERY_SET:
-        arr = ", ".join("'" + t + "'" for t in terms)
+        arr = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
         rows.append(f"({qid}::BIGINT, [{arr}])")
     return ",\n    ".join(rows)

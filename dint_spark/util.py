@@ -40,7 +40,9 @@ def memo_broadcast(spark, obj):
     with `is`, so a broadcast can never be served to a different
     (restarted) context whose id() happens to collide, and a recycled
     object id can never alias. The cache is FIFO-bounded so a
-    long-lived process churning codecs cannot pin broadcasts forever."""
+    long-lived process churning codecs cannot pin broadcasts forever;
+    an evicted broadcast is unpersisted (not destroyed: a plan that
+    still holds it re-fetches the value from the driver)."""
     sc = spark.sparkContext
     key = id(obj)
     hit = _BC_CACHE.get(key)
@@ -48,6 +50,8 @@ def memo_broadcast(spark, obj):
         return hit[2]
     bc = sc.broadcast(obj)
     if len(_BC_CACHE) >= _BC_CACHE_MAX:
-        _BC_CACHE.pop(next(iter(_BC_CACHE)))
+        old_sc, _obj, old_bc = _BC_CACHE.pop(next(iter(_BC_CACHE)))
+        if old_sc._jsc is not None:  # a stopped context freed it already
+            old_bc.unpersist(blocking=False)
     _BC_CACHE[key] = (sc, obj, bc)
     return bc

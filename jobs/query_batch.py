@@ -104,7 +104,7 @@ def main() -> None:
             # norm slices + shard_block_max are INDEX artifacts (static
             # layout): pack once per process and reuse across the batch
             # runs — the serving shape (engine.get_norm_slices /
-            # get_shard_bmw); no driver-side per-doc collect anywhere
+            # get_sharded_blocks); no driver-side per-doc collect anywhere
             global _SLICES, _UNIVERSE, _SHARDED
             if "_SLICES" not in globals():
                 _UNIVERSE = int(docs.agg(F.max("doc_id")).first()[0]) + 1

@@ -46,18 +46,18 @@ def test_topk_auto_rank_identity_both_routes(spark, zipf_setup):  # noqa: F811
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.router import topk_auto
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     got_auto = _ranks(
-        topk_auto(idx, bidx, codec, q, idx.num_docs, norms)
+        topk_auto(idx, bidx, codec, q, idx.num_docs, slices)
     )
     got_rel = _ranks(
-        topk_auto(idx, bidx, codec, q, idx.num_docs, norms,
+        topk_auto(idx, bidx, codec, q, idx.num_docs, slices,
                   force="relational")
     )
     got_cog = _ranks(
-        topk_auto(idx, bidx, codec, q, idx.num_docs, norms,
+        topk_auto(idx, bidx, codec, q, idx.num_docs, slices,
                   force="cogroup")
     )
     assert got_auto == ref
@@ -69,11 +69,11 @@ def test_topk_auto_maxscore_route(spark, zipf_setup):  # noqa: F811
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.router import topk_auto
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     got = _ranks(
-        topk_auto(idx, bidx, codec, q, idx.num_docs, norms,
+        topk_auto(idx, bidx, codec, q, idx.num_docs, slices,
                   algo="maxscore", force="cogroup")
     )
     assert got == ref

@@ -3,7 +3,13 @@ vs the ranked_or oracle (the reference's own lossless contract,
 test_ranked_queries.cpp:42-74) across corpora that exercise BOTH kernel
 paths — the ε-flat corpus (vectorized exhaustive path) and a Zipf
 corpus with real idf spread (DAAT pruning path) — plus the decode-stats
-evidence that pruning skips blocks on the Zipf corpus."""
+evidence that pruning skips blocks on the Zipf corpus.
+
+Every case runs the one serving path: the static layout
+static_layout(universe) (3 shards on the 20,000-doc Zipf corpus), norm
+slices (precomputed, or packed in the plan when norms=None) and a
+shard-exploded block frame. Cases that need a single shard shrink the
+layout by raising MIN_SHARD_DOCS (one_shard)."""
 
 from __future__ import annotations
 
@@ -52,16 +58,40 @@ def zipf_setup(spark):
     from dint_spark.codecs.registry import get_codec
     from dint_spark.util import materialize
 
+    from dint_spark.operators.wand_shard import norm_slices, static_layout
+
     tokens, num_docs = _zipf_tokens(spark)
     idx = build_fulltext_index(tokens, with_norm_len=True, cache=True)
     codec = get_codec("block_vbyte")
     bidx = materialize(build_block_index(idx.postings, codec))
-    rows = idx.docs.select("doc_id", "norm_len").collect()
-    arr = np.zeros(max(r["doc_id"] for r in rows) + 1, dtype=np.float64)
-    for r in rows:
-        arr[r["doc_id"]] = r["norm_len"]
-    norms = spark.sparkContext.broadcast(arr)
-    return idx, bidx, codec, norms
+    _nsh, ss = static_layout(_universe(idx))
+    slices = materialize(
+        norm_slices(idx.docs.select("doc_id", "norm_len"), ss)
+    )
+    return idx, bidx, codec, slices
+
+
+def _universe(idx) -> int:
+    return int(idx.docs.agg(F.max("doc_id")).first()[0]) + 1
+
+
+def one_shard(monkeypatch) -> None:
+    """Shrink the static layout to ONE shard for the rest of the test
+    (MIN_SHARD_DOCS above the corpus size); norm slices packed for the
+    3-shard layout no longer apply, so such tests pass norms=None."""
+    from dint_spark.operators import wand_shard
+
+    monkeypatch.setattr(wand_shard, "MIN_SHARD_DOCS", 1 << 40)
+
+
+def _norms_for(monkeypatch, idx, slices, num_shards):
+    """norms for a test run at num_shards (1 or the static 3)."""
+    from dint_spark.operators.wand_shard import static_layout
+
+    if num_shards == 1:
+        one_shard(monkeypatch)
+    assert static_layout(_universe(idx))[0] == num_shards
+    return None if num_shards == 1 else slices
 
 
 def _ranks(df):
@@ -72,33 +102,33 @@ def _ranks(df):
 
 
 @pytest.mark.parametrize("num_shards", [1, 3])
-def test_wand_sharded_rank_identity_zipf(spark, zipf_setup, num_shards):
+def test_wand_sharded_rank_identity_zipf(
+    spark, zipf_setup, monkeypatch, num_shards
+):
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import wand_topk_sharded
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
+    norms = _norms_for(monkeypatch, idx, slices, num_shards)
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
-    got = _ranks(
-        wand_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, norms, num_shards=num_shards
-        )
-    )
+    got = _ranks(wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms))
     assert got == ref
 
 
 @pytest.mark.parametrize("num_shards", [1, 3])
-def test_maxscore_sharded_rank_identity_zipf(spark, zipf_setup, num_shards):
+def test_maxscore_sharded_rank_identity_zipf(
+    spark, zipf_setup, monkeypatch, num_shards
+):
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import maxscore_topk_sharded
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
+    norms = _norms_for(monkeypatch, idx, slices, num_shards)
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     got = _ranks(
-        maxscore_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, norms, num_shards=num_shards
-        )
+        maxscore_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms)
     )
     assert got == ref
 
@@ -113,31 +143,28 @@ def test_wand_sharded_tiny_corpus(spark, tiny_index):
     idx = tiny_index
     codec = get_codec("block_vbyte")
     bidx = materialize(build_block_index(idx.postings, codec))
-    arr = np.zeros(idx.num_docs, dtype=np.float64)
-    for r in idx.docs.select("doc_id", "norm_len").collect():
-        arr[r["doc_id"]] = r["norm_len"]
-    norms = spark.sparkContext.broadcast(arr)
     q = spark.createDataFrame(
         [(0, ["a", "e"]), (1, ["c"]), (2, ["a", "b", "c", "d", "e", "f"])],
         schema="query_id long, terms array<string>",
     )
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=3))
-    got = _ranks(wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms, k=3))
+    got = _ranks(wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, None, k=3))
     assert got == ref
 
 
-def test_wand_sharded_prunes_blocks_on_zipf(spark, zipf_setup):
+def test_wand_sharded_prunes_blocks_on_zipf(spark, zipf_setup, monkeypatch):
     """The pruning evidence: on a corpus with real idf spread, the DAAT
     kernel decodes well under half of the doc-stream blocks it was
-    handed, and freq decode (lazy) is rarer still."""
+    handed, and freq decode (lazy) is rarer still. One shard: a block
+    that straddles shards is handed (and counted) once per shard, which
+    inflates the denominator's share of dense blocks at 3 shards."""
     from dint_spark.operators.wand_shard import wand_sharded_decode_stats
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, _slices = zipf_setup
+    one_shard(monkeypatch)
     q = _zipf_queries(spark).filter(F.col("query_id").isin(0, 1, 3, 4))
     st = (
-        wand_sharded_decode_stats(
-            idx, bidx, codec, q, idx.num_docs, norms, num_shards=1
-        )
+        wand_sharded_decode_stats(idx, bidx, codec, q, idx.num_docs, None)
         .agg(
             F.sum("blocks_total").alias("t"),
             F.sum("blocks_docs_decoded").alias("d"),
@@ -161,11 +188,11 @@ def test_sharded_norms_cogrouped_zipf(spark, zipf_setup, algo):
         wand_topk_sharded,
     )
 
-    idx, bidx, codec, _norms = zipf_setup
+    idx, bidx, codec, _slices = zipf_setup
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     fn = wand_topk_sharded if algo == "wand" else maxscore_topk_sharded
-    got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, None, num_shards=3))
+    got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, None))
     assert got == ref
 
 
@@ -181,13 +208,9 @@ def test_sharded_norms_precomputed_slices_zipf(spark, zipf_setup):
     )
     from dint_spark.util import materialize
 
-    idx, bidx, codec, _norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
-    universe = int(idx.docs.agg(F.max("doc_id")).first()[0]) + 1
-    _nsh, ss = static_layout(universe)
-    slices = materialize(
-        norm_slices(idx.docs.select("doc_id", "norm_len"), ss)
-    )
+    universe = _universe(idx)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     got = _ranks(
         wand_topk_sharded(
@@ -195,10 +218,15 @@ def test_sharded_norms_precomputed_slices_zipf(spark, zipf_setup):
         )
     )
     assert got == ref
-    # layout-mismatch guard: packed for ss but run with a different nsh
+    # layout-mismatch guard: slices packed for a 5-shard size, served at
+    # the static 3-shard layout
+    nsh, ss = static_layout(universe)
+    assert nsh == 3
+    other = materialize(
+        norm_slices(idx.docs.select("doc_id", "norm_len"), -(-universe // 5))
+    )
     bad = wand_topk_sharded(
-        idx, bidx, codec, q, idx.num_docs, slices, num_shards=5,
-        universe=universe,
+        idx, bidx, codec, q, idx.num_docs, other, universe=universe
     )
     with pytest.raises(Exception, match="shard_size|rebuild"):
         bad.collect()
@@ -215,27 +243,26 @@ def test_sharded_rank_identity_k_gt_10(spark, zipf_setup, algo):
         wand_topk_sharded,
     )
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=25))
     fn = wand_topk_sharded if algo == "wand" else maxscore_topk_sharded
-    got = _ranks(
-        fn(idx, bidx, codec, q, idx.num_docs, norms, k=25, num_shards=2)
-    )
+    got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, slices, k=25))
     assert got == ref
 
 
-def test_k_gt_10_exact_seed_still_prunes(spark, zipf_setup):
+def test_k_gt_10_exact_seed_still_prunes(spark, zipf_setup, monkeypatch):
     """At k=25 the w10 seed is invalid, but the exact bounded-kth seed
     (shipped per query into the cogroup) keeps pruning engaged: the
     kernel still skips blocks on rare-anchored queries."""
     from dint_spark.operators.wand_shard import wand_sharded_decode_stats
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, _slices = zipf_setup
+    one_shard(monkeypatch)
     q = _zipf_queries(spark).filter(F.col("query_id").isin(0, 3, 4))
     st = (
         wand_sharded_decode_stats(
-            idx, bidx, codec, q, idx.num_docs, norms, k=25, num_shards=1
+            idx, bidx, codec, q, idx.num_docs, None, k=25
         )
         .agg(
             F.sum("blocks_total").alias("t"),
@@ -272,9 +299,7 @@ def test_sharded_norms_sparse_universe(spark):
         schema="query_id long, terms array<string>",
     )
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
-    got = _ranks(
-        wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, None, num_shards=4)
-    )
+    got = _ranks(wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, None))
     assert got == ref
 
 
@@ -354,7 +379,7 @@ def test_block_prefilter_drops_blocks_losslessly(spark, zipf_setup):
         wand_topk_sharded,
     )
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, norms = zipf_setup  # norms: static-layout slices
     q = _zipf_queries(spark)
 
     def handed(prefilter):
@@ -406,11 +431,13 @@ def test_norm_slices_chunked_rows(spark, zipf_setup):
     from dint_spark.operators.wand_shard import norm_slices, wand_topk_sharded
     from dint_spark.util import materialize
 
-    idx, bidx, codec, _norms = zipf_setup
+    from dint_spark.operators.wand_shard import static_layout
+
+    idx, bidx, codec, _slices = zipf_setup
     q = _zipf_queries(spark).filter(F.col("query_id").isin(0, 3))
-    universe = int(idx.docs.agg(F.max("doc_id")).first()[0]) + 1
-    nsh = 3
-    ss = -(-universe // nsh)
+    universe = _universe(idx)
+    nsh, ss = static_layout(universe)
+    assert nsh == 3
     slices = materialize(
         norm_slices(idx.docs.select("doc_id", "norm_len"), ss, chunk=512)
     )
@@ -420,8 +447,7 @@ def test_norm_slices_chunked_rows(spark, zipf_setup):
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     got = _ranks(
         wand_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, slices, num_shards=nsh,
-            universe=universe,
+            idx, bidx, codec, q, idx.num_docs, slices, universe=universe
         )
     )
     assert got == ref
@@ -432,11 +458,11 @@ def test_norm_slices_chunked_rows(spark, zipf_setup):
 # ---------------------------------------------------------------------------
 
 
-def _shard_bmw_for(spark, idx, norms, num_shards):
-    from dint_spark.operators.wand_shard import shard_block_max
+def _shard_bmw(idx):
+    """shard_block_max() at the static layout → (artifact, shard_size)."""
+    from dint_spark.operators.wand_shard import shard_block_max, static_layout
 
-    universe = len(norms.value)
-    ss = -(-universe // num_shards)
+    _nsh, ss = static_layout(_universe(idx))
     return (
         shard_block_max(
             idx.postings.select("term_id", "doc_id", "tf", "norm_len"), ss
@@ -450,8 +476,8 @@ def test_shard_block_max_matches_block_index(spark, zipf_setup):
     block index's (same rank//BLOCK_SIZE derivation), its per-block
     max-over-shards equals the index's global block_max_weight, and
     every row's shard sits inside the block's doc span."""
-    idx, bidx, codec, norms = zipf_setup
-    sb, ss = _shard_bmw_for(spark, idx, norms, 3)
+    idx, bidx, codec, _slices = zipf_setup
+    sb, ss = _shard_bmw(idx)
 
     a = {(r["term_id"], r["block_id"]) for r in
          sb.select("term_id", "block_id").distinct().collect()}
@@ -486,27 +512,30 @@ def test_shard_block_max_matches_block_index(spark, zipf_setup):
 @pytest.mark.parametrize("k", [10, 25])
 def test_sharded_rank_identity_with_shard_bmw(spark, zipf_setup, algo, k):
     """Dead-pair drop + in-shard bmw override are LOSSLESS: top-k with
-    the artifact (prefilter forced on for wand) is rank-identical to the
-    exhaustive oracle, for both kernels, k ≤ and > TOPK_BOUND_K."""
+    the artifact (sharded_block_index refined by shard_block_max;
+    prefilter forced on for wand) is rank-identical to the exhaustive
+    oracle, for both kernels, k ≤ and > TOPK_BOUND_K."""
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
+        sharded_block_index,
         wand_topk_sharded,
     )
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
-    sb, _ss = _shard_bmw_for(spark, idx, norms, 3)
+    sb, ss = _shard_bmw(idx)
+    sharded = sharded_block_index(bidx, ss, sb)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=k))
     if algo == "wand":
         got = wand_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, norms, k=k, num_shards=3,
-            prefilter=True, shard_bmw=sb,
+            idx, bidx, codec, q, idx.num_docs, slices, k=k,
+            prefilter=True, sharded_bidx=sharded,
         )
     else:
         got = maxscore_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, norms, k=k, num_shards=3,
-            shard_bmw=sb,
+            idx, bidx, codec, q, idx.num_docs, slices, k=k,
+            sharded_bidx=sharded,
         )
     assert _ranks(got) == ref
 
@@ -517,16 +546,15 @@ def test_shard_bmw_drops_dead_pairs_and_bytes(spark, zipf_setup):
     the artifact while the top-k stays identical (the preceding test)."""
     from dint_spark.operators.wand_shard import shipped_block_stats
 
-    idx, bidx, codec, norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
-    sb, _ss = _shard_bmw_for(spark, idx, norms, 3)
+    sb, _ss = _shard_bmw(idx)
     off = shipped_block_stats(
-        idx, bidx, codec, q, idx.num_docs, norms, prefilter=False,
-        num_shards=3,
+        idx, bidx, codec, q, idx.num_docs, slices, prefilter=False
     )
     on = shipped_block_stats(
-        idx, bidx, codec, q, idx.num_docs, norms, prefilter=True,
-        num_shards=3, shard_bmw=sb,
+        idx, bidx, codec, q, idx.num_docs, slices, prefilter=True,
+        shard_bmw=sb,
     )
     assert on["shuffled_block_rows"] < off["shuffled_block_rows"]
     assert on["shuffled_payload_bytes"] < off["shuffled_payload_bytes"]
@@ -535,9 +563,9 @@ def test_shard_bmw_drops_dead_pairs_and_bytes(spark, zipf_setup):
 def test_presharded_artifact_equals_perbatch_join(spark, zipf_setup):
     """r6 optimization guard: the pre-sharded block index
     (sharded_block_index materialized once — engine.get_sharded_blocks
-    serving shape) must produce results identical to the r5 per-batch
-    shard_bmw join AND to no artifact at all; the refinement is
-    lossless wherever it is computed."""
+    serving shape) must produce results identical to no artifact at all
+    (the plan then shard-explodes bidx without the refinement) and to
+    the oracle; the refinement is lossless."""
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
@@ -549,13 +577,10 @@ def test_presharded_artifact_equals_perbatch_join(spark, zipf_setup):
     )
     from dint_spark.util import materialize
 
-    idx, bidx, codec, _norms = zipf_setup
+    idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
-    universe = int(idx.docs.agg({"doc_id": "max"}).first()[0]) + 1
+    universe = _universe(idx)
     _nsh, ss = static_layout(universe)
-    slices = materialize(
-        norm_slices(idx.docs.select("doc_id", "norm_len"), ss)
-    )
     sbmw = materialize(
         shard_block_max(
             idx.postings.select("term_id", "doc_id", "tf", "norm_len"), ss
@@ -567,8 +592,42 @@ def test_presharded_artifact_equals_perbatch_join(spark, zipf_setup):
     for fn in (wand_topk_sharded, maxscore_topk_sharded):
         pre = _ranks(fn(idx, bidx, codec, q, idx.num_docs, slices,
                         universe=universe, sharded_bidx=sharded))
-        per = _ranks(fn(idx, bidx, codec, q, idx.num_docs, slices,
-                        universe=universe, shard_bmw=sbmw))
         none = _ranks(fn(idx, bidx, codec, q, idx.num_docs, slices,
                          universe=universe))
-        assert pre == per == none == ref, fn.__name__
+        assert pre == none == ref, fn.__name__
+
+
+def test_presharded_artifact_layout_mismatch_refused(spark, zipf_setup):
+    """A sharded block index exploded for another shard_size, served at
+    the static layout, is refused by the kernel's layout guard instead
+    of silently mis-scoring (its rows land in shards they do not
+    overlap)."""
+    from dint_spark.operators.wand_shard import (
+        sharded_block_index,
+        wand_topk_sharded,
+    )
+
+    idx, bidx, codec, slices = zipf_setup
+    q = _zipf_queries(spark)
+    universe = _universe(idx)
+    other = sharded_block_index(bidx, -(-universe // 5))
+    bad = wand_topk_sharded(
+        idx, bidx, codec, q, idx.num_docs, slices, universe=universe,
+        sharded_bidx=other,
+    )
+    with pytest.raises(Exception, match="do not overlap"):
+        bad.collect()
+
+
+def test_legacy_norms_forms_refused(spark, zipf_setup):
+    """norms is a norm_slices() frame or None; a (doc_id, norm_len)
+    frame or a broadcast array is refused before any plan is built."""
+    from dint_spark.operators.wand_shard import wand_topk_sharded
+
+    idx, bidx, codec, _slices = zipf_setup
+    q = _zipf_queries(spark)
+    bc = spark.sparkContext.broadcast(np.zeros(4))
+    for norms in (idx.docs.select("doc_id", "norm_len"), bc):
+        with pytest.raises(TypeError, match="norm_slices"):
+            wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms)
+    bc.unpersist()
