@@ -545,43 +545,60 @@ space-optimized configuration (README.md:112-115), and its decode cost
 is why single stays the default serving format there too.
 
 WAND/MaxScore pruning evidence: BENCH/wand_pruning.json
-(`python BENCH/wand_pruning.py`) — on a 200k-doc Zipf corpus, measured
-against the UNFILTERED handed-block base (every block of the batch's
-terms × overlapped shards — the r3/r4-comparable denominator), the
-serving plan + kernel decode **50% of doc blocks / 41% of freq blocks
-on the full mixed batch, 25.7% docs / 12.8% freqs excluding the flat
-dense pair** (both
+(`python BENCH/wand_pruning.py`) — on a 200k-doc Zipf corpus at 32
+shards, measured against the UNFILTERED handed-block base (every block
+of the batch's terms × overlapped shards — the r3/r4-comparable
+denominator), the serving plan + kernel decode **50% of doc blocks /
+41% of freq blocks on the full mixed batch, 25.7% docs / 12.8% freqs
+excluding the flat dense pair** (both
 terms ε-idf: every score ties to 9 decimals, NO score-based pruning
 algorithm — the reference's included — can skip a block there; its
 blocks are an inherent floor of the mixed-batch number, not a pruning
 deficiency), and **9.8% on the rare-anchored selective subset** — the
-r4 target (<0.35 excl-flat) is met with room. Against the post-filter
-denominator (what actually reaches the kernel) the fractions read
-0.77/0.53: the plan already removed the statically-useless pairs, so
-the kernel now faces mostly un-prunable blocks — which is the point.
+r4 target (<0.35 excl-flat) is met with room. Against what actually
+reaches the kernel (3,311 of the 3,354 pairs, after the artifact's
+dead-pair drop below) the fractions read 0.506/0.418, and 0.262/0.131
+excluding the flat pair: every decode saving is the kernel's own
+block-max skip, as in the reference (dict_posting_list.hpp:126-147).
 
-Plan-side block-max prefilter + shard-local bounds artifact (round 5):
-two composed mechanisms, both lossless and rank-identity-enforced by
-tests. (1) `shard_block_max` — an INDEX artifact like norm_slices:
+Shard-local bounds artifact (round 5) and the deleted plan-side
+prefilter. `shard_block_max` is an INDEX artifact like norm_slices:
 per-(term, block, shard) true in-shard max weights, derived from the
-raw postings with the exact build-time block-cut derivation. The plan
-inner-joins it, so (block, shard) straddle pairs with ZERO in-shard
-postings never ship (a sparse list's one block used to be shipped and
-decoded once per overlapped shard — 32× for a rare term), and the
-shipped block_max_weight becomes the true in-shard max, tightening the
-kernel's shard-local term ubs and (2) the relational seed-θ cut
-(wand_shard.py:_block_prefilter_cuts, qw·bmw_s + Σ other shard-local
-ubs < θ_seed) that drops statically-useless pairs before the cogroup
-shuffle. Measured on the Zipf corpus: 1,171 of 3,354 pairs dropped in
-the plan, **shuffled payload bytes −34%** (was −0.5% with global
-bounds in r4 — the shard-local bounds are what make the static cut
-fire), decoded cells at or UNDER the balls-in-bins DAAT floor estimate
-per query (q7 20 vs est 20.5, q3 210 vs 206.5, q5 114 vs 115; non-flat
-total 580 vs est 793 — under, because dead-pair removal deletes
-exactly the cells the generic estimate counts as unavoidable landings,
-and wholesale candidate θ-skips do the rest). The cuts subplan is ~3
-extra tiny-shuffle stages with a FIXED ~1s cost at local[32], so it
-auto-enables at ≥ PREFILTER_MIN_BATCH (64) queries. Round 6: the
+raw postings with the exact build-time block-cut derivation. Joined
+into the sharded block index, it keeps (block, shard) straddle pairs
+with ZERO in-shard postings from shipping (a sparse list's one block
+used to be shipped and decoded once per overlapped shard — 32× for a
+rare term), and makes the shipped block_max_weight the true in-shard
+max, tightening the kernel's shard-local term ubs and per-block skip.
+On the Zipf corpus its lists are dense enough that almost every
+straddled shard holds postings: the artifact alone drops 43 of 3,354
+pairs (1,681,575 → 1,678,505 payload bytes). Decoded cells sit at or
+UNDER the balls-in-bins DAAT floor estimate per query (q7 20 vs est
+20.5, q3 210 vs 206.5, q5 114 vs 115; non-flat total 580 vs est 793 —
+under, because dead-pair removal deletes exactly the cells the generic
+estimate counts as unavoidable landings, and wholesale candidate
+θ-skips do the rest). Round 5 also added a relational seed-θ cut
+before the cogroup (`_block_prefilter_cuts`: drop a (block, shard)
+pair when qw·bmw_s + Σ other shard-local ubs < θ_seed for every query
+of the batch), switched on at ≥ 64 queries by a batch-size gate
+(`PREFILTER_MIN_BATCH`, a `_dint_nq` DataFrame attribute, a `take(64)`
+probe). It is deleted: it saved shuffle bytes but no decodes (the
+kernel skips the same blocks), and its window, group-by and broadcast
+stages cost more wall than the bytes saved at every measured scale
+(4 cores, the sharded artifact in both arms, identical results):
+
+| corpus | shards | shipped bytes, off → on | blocks decoded (docs/freqs) | wall p50, off → on | jobs | on won |
+|---|---|---|---|---|---|---|
+| benchmark `serve`, 4 × 64-query batches, seed 1 | 4 | 725 → 662 KB | 6876/6291 in both arms | 2.90 → 3.94 s | 9 → 17 | 0/24 pairs |
+| `BENCH/wand_pruning.py` Zipf, 200k docs | 32 | 1.68 → 1.11 MB | 1674/1384 in both arms | 1.86 → 3.65 s | 9 → 18 | 0/6 pairs |
+| benchmark corpus, one 512-query wand batch, seed 1 | 4 | 705 → 693 KB | not measured | 10.94 → 13.09 s | 9 → 17 | 2/6 pairs |
+
+WAND and MaxScore now serve through one plan (term semi-join,
+cogroup, kernel, top-k) and run the same Spark jobs at every batch
+size. The refreshed Zipf run ships 3,311 rows and 1.68 MB per batch
+(2,183 rows and 1.11 MB with the cut) and decodes the same 1,674/1,384
+blocks; at local[4] its 8-query batch takes 1.81 s for wand and 1.84 s
+for maxscore (median of 4). Round 6: the
 artifact join no longer runs per batch at all — the shard explode +
 shard_block_max refinement are pre-joined ONCE into a materialized
 sharded block index (engine.get_sharded_blocks, the serving default),

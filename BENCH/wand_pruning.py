@@ -112,10 +112,10 @@ def main() -> None:
     q = spark.createDataFrame(QUERIES, schema="query_id long, terms array<string>")
     N = idx.num_docs
     # the serving artifacts: static layout + per-(block, shard) true
-    # max weights (round 5 — dead straddle pairs dropped in the plan,
-    # shard-local bounds everywhere). OFF-denominator calls stay
-    # artifact-free: they measure what the kernel faced before ANY
-    # plan-side refinement (the r3/r4 comparable base).
+    # max weights (dead straddle pairs dropped from the sharded block
+    # index, shard-local bounds everywhere). The unfiltered-denominator
+    # calls stay artifact-free: every block of the batch's terms × the
+    # shards it overlaps (the r3/r4 comparable base).
     universe = int(idx.docs.agg(F.max("doc_id")).first()[0]) + 1
     _nsh, ss = static_layout(universe)
     norms = materialize(norm_slices(idx.docs.select("doc_id", "norm_len"), ss))
@@ -126,10 +126,10 @@ def main() -> None:
     )
     sharded = materialize(sharded_block_index(bidx, ss, sbmw))
 
-    def decode_counts(prefilter: bool, sharded_bidx=None) -> dict:
+    def decode_counts(sharded_bidx=None) -> dict:
         rows = (
             wand_sharded_decode_stats(
-                idx, bidx, codec, q, N, norms, prefilter=prefilter,
+                idx, bidx, codec, q, N, norms,
                 universe=universe, sharded_bidx=sharded_bidx,
             )
             .groupBy("query_id")
@@ -143,12 +143,13 @@ def main() -> None:
         return {int(r["query_id"]): (int(r["t"]), int(r["d"]), int(r["f"]))
                 for r in rows}
 
-    # A/B around the plan-side block-max prefilter: OFF = every block of
-    # the batch's terms is handed to the kernel (the r3/r4 denominator),
-    # ON = the serving default. Raw counts throughout — fractions are
-    # derived at the end, never re-inverted from rounded ratios.
-    pq_off = decode_counts(prefilter=False)
-    pq_on = decode_counts(prefilter=True, sharded_bidx=sharded)
+    # A/B around the shard_block_max artifact: OFF = every block of the
+    # batch's terms is handed to the kernel (the r3/r4 denominator),
+    # ON = the serving default (the refined sharded block index). Raw
+    # counts throughout — fractions are derived at the end, never
+    # re-inverted from rounded ratios.
+    pq_off = decode_counts()
+    pq_on = decode_counts(sharded_bidx=sharded)
     st = {
         "t": sum(t for t, _d, _f in pq_on.values()),
         "d": sum(d for _t, d, _f in pq_on.values()),
@@ -163,17 +164,16 @@ def main() -> None:
             "freqs_decoded": f,
             "docs_frac": round(d / t, 3) if t else 0.0,
             # the work-avoided view: decodes over the UNfiltered handed
-            # count (what the kernel faced before the plan-side cut)
+            # count (what the kernel faces without the artifact)
             "docs_frac_of_unfiltered": round(d / pq_off[qid][0], 3)
             if pq_off[qid][0] else 0.0,
         }
         for qid, (t, d, f) in sorted(pq_on.items())
     }
     ship_off = shipped_block_stats(idx, bidx, codec, q, N, norms,
-                                   prefilter=False, universe=universe)
+                                   universe=universe)
     ship_on = shipped_block_stats(idx, bidx, codec, q, N, norms,
-                                  prefilter=True, universe=universe,
-                                  shard_bmw=sbmw)
+                                  universe=universe, shard_bmw=sbmw)
 
     FLAT_IDS = [2]
     # --- algorithmic floor estimate for the DAAT queries ---------------
@@ -274,14 +274,14 @@ def main() -> None:
         "docs": args.docs,
         "n_postings": int(idx.postings.count()),
         "n_queries": len(QUERIES),
-        # denominators: "handed" counts what reaches the kernel with the
-        # plan-side prefilter ON (the serving default, round 5+);
-        # "_unfiltered" is every block of the batch's terms (the r3/r4
-        # denominator — what the kernel faced before the plan-side cut,
-        # and the honest work-avoided base)
+        # denominators: "handed" counts what reaches the kernel from
+        # the serving artifact (dead straddle pairs dropped);
+        # "_unfiltered" is every block of the batch's terms × the shards
+        # it overlaps (the r3/r4 denominator, and the honest
+        # work-avoided base)
         "blocks_handed_to_kernel": int(st["t"]),
         "blocks_handed_unfiltered": int(handed_off),
-        "blocks_dropped_by_plan_prefilter": int(handed_off - st["t"]),
+        "blocks_dropped_by_shard_block_max": int(handed_off - st["t"]),
         "blocks_docs_decoded": int(st["d"]),
         "blocks_freqs_decoded": int(st["f"]),
         "decoded_docs_fraction": round(st["d"] / st["t"], 3),
@@ -292,8 +292,8 @@ def main() -> None:
         "decoded_freqs_fraction_of_unfiltered": round(
             st["f"] / handed_off, 3
         ),
-        "shuffle_prefilter_off": ship_off,
-        "shuffle_prefilter_on": ship_on,
+        "shuffle_no_artifact": ship_off,
+        "shuffle_with_artifact": ship_on,
         "shuffled_bytes_reduction": round(
             1.0
             - ship_on["shuffled_payload_bytes"]

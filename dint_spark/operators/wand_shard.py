@@ -54,7 +54,16 @@ blocks come from ONE shard-exploded frame (the pre-sharded
 sharded_block_index artifact, or the same function applied to bidx),
 and the norms from ONE norm_slices frame (precomputed, or packed in the
 plan from idx.docs). The kernel refuses block rows or slices that were
-built for a different layout instead of mis-scoring them.
+built for a different layout instead of mis-scoring them. WAND and
+MaxScore share one plan — term semi-join, cogroup, kernel, top-k — at
+every batch size; they differ only in the kernel core.
+
+Pruning happens only inside the kernel, as in the reference, whose
+posting-list iterator skips useless blocks itself
+(dict_posting_list.hpp:126-147) with no pass before the scan. A
+plan-side block-max cut before the cogroup once saved shuffle bytes
+but no decodes, and its extra exchange stages cost more wall time than
+the bytes saved at every measured scale (BENCH/BASELINE.md).
 
 Adaptive kernel: a COST MODEL (C_PIVOT / C_VEC / C_DECODE below)
 chooses per query, per shard between the DAAT path and a batched-decode
@@ -102,12 +111,6 @@ MIN_SHARD_DOCS = 6144  # static layout: ~24 blocks of doc span per shard
 # (measured sweet spot on the 5.4M-posting corpus: smaller shards
 # multiply the per-(query,shard) kernel setup, larger ones under-tile)
 MAX_STATIC_SHARDS = 32  # small-corpus cap on MIN_SHARD_DOCS-driven growth
-PREFILTER_MIN_BATCH = 64  # auto-enable the plan-side block-max prefilter
-# at this batch size: its cuts subplan costs ~3 extra tiny-shuffle
-# stages (~1s measured at local[32]) REGARDLESS of batch or corpus, so
-# it belongs with the other fixed batch-amortized stages — free at the
-# 500-2,000-query batches of the 100 TB regime, pure overhead for a
-# handful of interactive queries
 SEQ_SHARD_MAX = 4096  # fan shard ids out via sequence-explode up to this
 # many shards (bounded per-row array); larger layouts stream a range frame
 TARGET_SHARD_SPAN = 1 << 18  # 262,144 docs (~1024 blocks): max doc span
@@ -776,9 +779,9 @@ def shard_block_max(postings: DataFrame, shard_size: int) -> DataFrame:
       * surviving pairs carry bmw_s ≤ block_max_weight, which tightens
         every downstream bound that already keys off the shipped bmw
         column — the kernel's shard-local term ub (_ListEnum.ub via
-        _TermBlocks.max_bmw), the exhaustive merge's per-block skip,
-        and the plan prefilter's shard-local ubs — all of which bound
-        only in-shard docs, so a true in-shard max stays lossless.
+        _TermBlocks.max_bmw) and the exhaustive merge's per-block skip
+        — both of which bound only in-shard docs, so a true in-shard
+        max stays lossless.
 
     Block membership reuses the EXACT build-time derivation
     (build/blocks.py prepare_block_data: rank_within_term → rank //
@@ -887,99 +890,6 @@ def _exact_seed_df(idx, bidx, codec, qt: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _block_prefilter_cuts(
-    qt_full: DataFrame, k: int, seed_df, blocks_sh: DataFrame
-) -> DataFrame:
-    """(term_id, _shard, bmw_cut) — the PLAN-side, shard-local form of
-    the kernel's lossless block-max skip (_exhaustive_merge skip_bound;
-    wand.py step-3 semantics; ref dict_posting_list.hpp:126-147 "decode
-    only what can matter").
-
-    A block b of term t in shard s is useless to query q when
-    qw·block_max_weight(b) + Σ_{j≠t} ub_j(s) < θ_seed(q): every doc of
-    b inside s then totals < θ_eff even with full credit from the other
-    lists, so it cannot enter q's top-k, and a doc resurfacing via
-    another list carries a partial score < θ_eff that rounds strictly
-    below every true top-k doc (the 2e-9 margin > the 1e-9 rounding
-    quantum — the established lossless contract). Rearranged per
-    (term, shard): keep b iff bmw(b) ≥ min over queries q containing t
-    of (θ_q − (Σub_q(s) − ub_qt(s))) / qw_qt  (bmw_cut).
-
-    ub_j(s) is the SHARD-LOCAL qw·max(bmw of j's blocks overlapping s)
-    — exactly the kernel's e.ub — which is what makes the cut fire on
-    real corpora: the earlier global-max_weight formulation only pruned
-    when θ beat the sum of whole-collection maxima, i.e. almost never
-    for multi-term queries. A (term, shard) whose local max is NULL/NaN
-    falls back to the global max_weight (conservative). Dropping a
-    (block, shard) pair that fails the cut for EVERY query containing
-    its term is lossless for the whole batch, and the drop happens
-    BEFORE the cogroup shuffle, cutting both shuffle bytes and the
-    handed-block denominator. The kernel's own filter still runs on the
-    survivors with its evolving θ; its post-filter shard ubs can only
-    shrink, which stays valid — every doc a shrunken ub bounds either
-    sits in a surviving block (bounded by the surviving max) or in a
-    dropped one (already provably below θ).
-
-    θ_seed matches the kernel's seeds exactly: max(0, max qw·w10 − m)
-    over the query's non-NaN w10 terms (k ≤ TOPK_BOUND_K —
-    _seed_from_rows), or the exact bounded-kth seed frame (k > 10;
-    queries without a seed row get θ=0, which never drops: their cut is
-    ≤ −other/qw < every bmw ≥ 0)."""
-    from pyspark.sql import Window as W
-
-    if k > TOPK_BOUND_K:
-        if seed_df is None:
-            return None
-        theta = seed_df
-    else:
-        theta = qt_full.groupBy("query_id").agg(
-            F.greatest(
-                F.coalesce(
-                    F.max(
-                        F.when(~F.isnan("w10"), F.col("qw") * F.col("w10"))
-                    )
-                    - F.lit(THETA_MARGIN),
-                    F.lit(0.0),
-                ),
-                F.lit(0.0),
-            ).alias("seed")
-        )
-    # metadata-only projection BEFORE the agg: the cuts subplan must
-    # never touch the payload bytes (explicit, not left to pruning
-    # through the cached bidx)
-    local = (
-        blocks_sh.select("term_id", "_shard", "block_max_weight")
-        .groupBy("term_id", "_shard")
-        .agg(
-            F.max("block_max_weight").alias("_mx"),
-            F.max(
-                F.col("block_max_weight").isNull().cast("int")
-            ).alias("_anynull"),
-        )
-    )
-    qts = (
-        qt_full.select("query_id", "term_id", "qw", "max_weight")
-        .join(local, "term_id")
-        .withColumn(
-            "_ub",
-            F.col("qw")
-            * F.when(
-                (F.col("_anynull") == 1) | F.isnan("_mx"), F.col("max_weight")
-            ).otherwise(F.col("_mx")),
-        )
-        .join(F.broadcast(theta), "query_id", "left")
-    )
-    wqs = W.partitionBy("query_id", "_shard")
-    qts = qts.withColumn("_sum_ub", F.sum("_ub").over(wqs))
-    # 1e-12 absorbs the division round-trip (scores are O(1-10); the
-    # FP error ~1e-15 sits far under the 2e-9 margin's slack)
-    cut = (
-        F.coalesce(F.col("seed"), F.lit(0.0))
-        - (F.col("_sum_ub") - F.col("_ub"))
-    ) / F.col("qw") - F.lit(1e-12)
-    return qts.groupBy("term_id", "_shard").agg(F.min(cut).alias("bmw_cut"))
-
-
 def sharded_block_index(
     bidx: DataFrame, shard_size: int, shard_bmw: "DataFrame | None" = None
 ) -> DataFrame:
@@ -1008,48 +918,25 @@ def sharded_block_index(
     return blocks_sh
 
 
-def _batch_blocks_sharded(
-    sharded_bidx, qt_full, qt, seed_df, k, algo, prefilter
-) -> DataFrame:
+def _batch_blocks_sharded(sharded_bidx, qt) -> DataFrame:
     """The index slice the cogroup shuffle ships for a query batch: the
     shard-exploded block index (sharded_block_index) semi-joined to the
-    batch's terms (deduped, shipped ONCE), optionally plan-side
-    block-max prefiltered. Shared by _run and shipped_block_stats so the
-    evidence surface measures EXACTLY the serving plan.
+    batch's terms (deduped, shipped ONCE). Shared by _run and
+    shipped_block_stats so the evidence surface measures EXACTLY the
+    serving plan. No block is cut here: the kernel skips useless blocks
+    itself (see the module docstring).
 
     The broadcast semi-join build side skips .distinct(): a broadcast
     left-semi probe is duplicate-insensitive, and the distinct added an
     Exchange to every serve plan."""
-    blocks_sh = sharded_bidx.join(
+    return sharded_bidx.join(
         F.broadcast(qt.select("term_id")), "term_id", "left_semi"
     )
-    if prefilter and algo == "wand":
-        # plan-side block-max prefilter (lossless — see
-        # _block_prefilter_cuts): (block, shard) pairs no query of the
-        # batch can use are dropped BEFORE the cogroup shuffle. WAND
-        # only — MaxScore is term-level pruning by contract. The cuts
-        # frame is ≤ |batch terms|·|shards| rows → broadcast.
-        cuts = _block_prefilter_cuts(qt_full, k, seed_df, blocks_sh)
-        if cuts is not None:
-            blocks_sh = (
-                blocks_sh.join(
-                    F.broadcast(cuts), ["term_id", "_shard"], "left"
-                )
-                .filter(
-                    F.col("bmw_cut").isNull()
-                    | F.isnan("bmw_cut")
-                    | F.col("block_max_weight").isNull()
-                    | F.isnan("block_max_weight")
-                    | (F.col("block_max_weight") >= F.col("bmw_cut"))
-                )
-                .select(*_LEFT_COLS)
-            )
-    return blocks_sh
 
 
 def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
     """The front half shared by _run and shipped_block_stats →
-    (universe, nsh, ss, qt_full, qt, seed_df).
+    (universe, nsh, ss, qt, seed_df).
 
     norms: a norm_slices() frame, or None (universe then comes from
     idx.docs and _run packs the slices in the plan). The layout is
@@ -1078,28 +965,24 @@ def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
     seed_df = (
         _exact_seed_df(idx, bidx, codec, qt_full, k) if k > TOPK_BOUND_K else None
     )
-    return universe, nsh, ss, qt_full, qt, seed_df
+    return universe, nsh, ss, qt, seed_df
 
 
 def shipped_block_stats(
     idx, bidx, codec, queries, num_docs, norms=None, k=10,
-    prefilter=True, universe=None, shard_bmw=None,
+    universe=None, shard_bmw=None,
 ) -> dict:
     """Rows and payload bytes the cogroup shuffle would ship for this
-    batch — the shuffled-bytes evidence surface for the plan-side
-    prefilter (BENCH/wand_pruning.py records the prefilter on/off
-    delta). Builds the SAME blocks frame as the serving plan
-    (_batch_blocks_sharded over sharded_block_index(bidx, ss,
-    shard_bmw)) and aggregates it without running the kernel; norm-slice
-    rows (prefilter-independent) are excluded."""
-    _u, nsh, ss, qt_full, qt, seed_df = _serving_inputs(
+    batch — the shuffled-bytes evidence surface (BENCH/wand_pruning.py
+    records the shard_block_max artifact's dead-pair drop). Builds the
+    SAME blocks frame as the serving plan (_batch_blocks_sharded over
+    sharded_block_index(bidx, ss, shard_bmw)) and aggregates it without
+    running the kernel; norm-slice rows are excluded."""
+    _u, nsh, ss, qt, _seed = _serving_inputs(
         idx, bidx, codec, queries, num_docs, norms, k, universe
     )
     r = (
-        _batch_blocks_sharded(
-            sharded_block_index(bidx, ss, shard_bmw), qt_full, qt, seed_df,
-            k, "wand", prefilter,
-        )
+        _batch_blocks_sharded(sharded_block_index(bidx, ss, shard_bmw), qt)
         .agg(
             F.count("*").alias("rows"),
             F.sum(
@@ -1135,7 +1018,6 @@ def wand_topk_sharded(
     norms: "DataFrame | None" = None,
     k: int = 10,
     universe: "int | None" = None,
-    prefilter: "bool | None" = None,
     sharded_bidx: "DataFrame | None" = None,
 ) -> DataFrame:
     """Block-max WAND over the compressed index, doc-sharded DAAT at the
@@ -1152,13 +1034,11 @@ def wand_topk_sharded(
     bmw refinement. An artifact built for another layout is refused by
     the kernel.
 
-    prefilter: apply the lossless plan-side block-max cut
-    (_block_prefilter_cuts) before the cogroup shuffle. None (default)
-    auto-enables at ≥ PREFILTER_MIN_BATCH queries, where its fixed cuts
-    stages amortize; True/False force it (A/B evidence in
-    BENCH/wand_pruning.py)."""
+    Every block of the batch's terms ships to the kernel; block-max
+    pruning happens there, per (query, shard), so WAND and MaxScore run
+    the same plan and the same Spark jobs."""
     return _run(idx, bidx, codec, queries, num_docs, norms, k, "wand",
-                universe, prefilter=prefilter, sharded_bidx=sharded_bidx)
+                universe, sharded_bidx=sharded_bidx)
 
 
 def maxscore_topk_sharded(
@@ -1173,17 +1053,18 @@ def maxscore_topk_sharded(
     sharded_bidx: "DataFrame | None" = None,
 ) -> DataFrame:
     """Term-level MaxScore over the compressed index, doc-sharded DAAT.
-    See wand_topk_sharded for the norms and sharded_bidx contracts (the
-    block-level plan PREFILTER stays off — MaxScore is term-level
-    pruning by contract — but the artifact's dead-pair drop and tighter
-    shard-local term ubs apply)."""
+    Same plan as wand_topk_sharded (see it for the norms and
+    sharded_bidx contracts); only the kernel core differs. The kernel
+    applies no block-level skip here — MaxScore is term-level pruning by
+    contract — but the artifact's dead-pair drop and tighter shard-local
+    term ubs apply."""
     return _run(idx, bidx, codec, queries, num_docs, norms, k, "maxscore",
                 universe, sharded_bidx=sharded_bidx)
 
 
 def wand_sharded_decode_stats(
     idx, bidx, codec, queries, num_docs, norms=None, k=10, algo="wand",
-    universe=None, prefilter=None, sharded_bidx=None,
+    universe=None, sharded_bidx=None,
 ) -> DataFrame:
     """(query_id, shard, blocks_total, blocks_docs_decoded,
     blocks_freqs_decoded) — the pruning evidence surface (reference
@@ -1193,8 +1074,7 @@ def wand_sharded_decode_stats(
     between queries (each query pays its own decodes, as the reference's
     per-query profiler does)."""
     return _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
-                universe, emit="stats", prefilter=prefilter,
-                sharded_bidx=sharded_bidx)
+                universe, emit="stats", sharded_bidx=sharded_bidx)
 
 
 def _codec_broadcast(spark, codec):
@@ -1205,25 +1085,14 @@ def _codec_broadcast(spark, codec):
 
 
 def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
-         universe=None, emit="topk", prefilter=None, sharded_bidx=None):
+         universe=None, emit="topk", sharded_bidx=None):
     spark = queries.sparkSession
-    if prefilter is None:  # auto: fixed cuts stages amortize over batch
-        # batch size from plan metadata when the producer attached it
-        # (queryset.queries_df), else a bounded take() probe that stops
-        # at PREFILTER_MIN_BATCH rows — the old full count() ran an
-        # unbounded eager job on every serve call (r5 ADVICE).
-        nq = getattr(queries, "_dint_nq", None)
-        if nq is None:
-            nq = len(queries.select("query_id").take(PREFILTER_MIN_BATCH))
-        prefilter = nq >= PREFILTER_MIN_BATCH
-    universe, nsh, ss, qt_full, qt, seed_df = _serving_inputs(
+    universe, nsh, ss, qt, seed_df = _serving_inputs(
         idx, bidx, codec, queries, num_docs, norms, k, universe
     )
     if sharded_bidx is None:
         sharded_bidx = sharded_block_index(bidx, ss)
-    blocks_sh = _batch_blocks_sharded(
-        sharded_bidx, qt_full, qt, seed_df, k, algo, prefilter
-    )
+    blocks_sh = _batch_blocks_sharded(sharded_bidx, qt)
     if norms is None:
         norms = norm_slices(idx.docs.select("doc_id", "norm_len"), ss)
     left = blocks_sh.unionByName(norms)

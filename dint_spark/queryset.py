@@ -52,10 +52,6 @@ def queries_df(spark: SparkSession) -> DataFrame:
     LocalRelation lives in the JVM, carries real size stats (so the
     planner broadcasts it without hints), and its scan is free. A
     genuinely huge query log would arrive as a table, not as literals.
-
-    _dint_nq: the batch size as plan metadata, so operators that gate
-    fixed-cost subplans on batch size (wand_shard._run's prefilter
-    auto-enable) can read it without running a count() job per query.
     """
     rows = []
     for qid, terms in QUERY_SET:
@@ -65,11 +61,9 @@ def queries_df(spark: SparkSession) -> DataFrame:
         # byte-identical output for the current set, which has neither
         arr = ", ".join("'" + _sql_escape(t) + "'" for t in terms)
         rows.append(f"(CAST({int(qid)} AS BIGINT), array({arr}))")
-    df = spark.sql(
+    return spark.sql(
         "SELECT col1 AS query_id, col2 AS terms FROM VALUES " + ", ".join(rows)
     )
-    df._dint_nq = len(QUERY_SET)
-    return df
 
 
 def queries_sql_values() -> str:

@@ -53,8 +53,7 @@ def main() -> None:
     )
 
     qlog = make_query_log(args.queries, seed=args.seed)
-    # few, right-sized slices (not defaultParallelism) + batch-size
-    # metadata: the serving layout queryset.queries_df uses
+    # few, right-sized slices (not defaultParallelism)
     qdf = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(qid, terms) for qid, terms in qlog],
@@ -62,7 +61,6 @@ def main() -> None:
         ),
         "query_id long, terms array<string>",
     )
-    qdf._dint_nq = len(qlog)
 
     def run():
         if args.op == "ranked_or":

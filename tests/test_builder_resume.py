@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -57,6 +58,37 @@ def test_build_resume_and_verify(spark, small_corpus, tmp_path_factory):
     out2 = str(tmp_path_factory.mktemp("idx2"))
     r4 = IndexBuilder(spark, out2).build(c2)
     assert all(s.endswith("compute") for s in r4["stages"])
+
+
+def test_verify_fails_on_missing_block(spark, small_corpus, tmp_path_factory):
+    """A built index that loses one block row fails its re-run verify
+    stage loudly instead of being served with postings missing."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path_factory.mktemp("idx_corrupt"))
+    r = IndexBuilder(spark, out).build(small_corpus)
+    assert r["verify"]["missing"] == 0 and r["verify"]["extra"] == 0
+
+    # rewrite the index table without its first block: write a sibling
+    # directory, then swap it in
+    index = os.path.join(out, "index")
+    bidx = spark.read.parquet(index)
+    first = (
+        bidx.select("term_id", "block_id").orderBy("term_id", "block_id").first()
+    )
+    cut = bidx.filter(
+        (F.col("term_id") != first["term_id"])
+        | (F.col("block_id") != first["block_id"])
+    )
+    sibling = index + ".corrupt"
+    cut.write.parquet(sibling)
+    assert spark.read.parquet(sibling).count() == bidx.count() - 1
+    shutil.rmtree(index)
+    os.rename(sibling, index)
+
+    os.remove(os.path.join(out, "_lineage", "verify.json"))
+    with pytest.raises(RuntimeError, match="index verify FAILED: missing="):
+        IndexBuilder(spark, out).build(small_corpus)
 
 
 def test_codec_auto_chooser(spark, small_corpus, tmp_path_factory, monkeypatch):

@@ -18,6 +18,9 @@ import pytest
 from pyspark.sql import functions as F
 
 
+EDGE_TERM = "edge"
+
+
 def _zipf_tokens(spark, num_docs=20000, seed=7):
     """Deterministic Zipf-ish corpus: term df spans 10..~2*N/3 so idf
     ranges from ~ln(N/10) (strong) to ε-clamped (dense)."""
@@ -35,19 +38,42 @@ def _zipf_tokens(spark, num_docs=20000, seed=7):
         tfs = 1 + rng.integers(0, 4, size=df)
         for d, tf in zip(docs, tfs):
             rows += [(int(d), term)] * int(tf)
+    # EDGE_TERM: one block spanning the whole docID range, postings only
+    # in the first and last shard — the middle shard is a dead pair
+    rows += [(0, EDGE_TERM), (num_docs - 1, EDGE_TERM)]
     return spark.createDataFrame(rows, schema="doc_id long, term string"), num_docs
 
 
+ZIPF_QUERIES = [
+    (0, ["t00", "t08"]),            # dense + rare: the WAND showcase
+    (1, ["t10"]),                    # rare single
+    (2, ["dense0", "dense1"]),       # flat pair (exhaustive path)
+    (3, ["t01", "t05", "t09"]),      # mixed
+    (4, ["t11", "dense2"]),          # rarest + dense
+    (5, ["t03", "t03", "t07"]),      # duplicate term (qtf=2)
+    (6, ["missing", "t02"]),         # unknown term ignored
+]
+
+
 def _zipf_queries(spark):
-    qs = [
-        (0, ["t00", "t08"]),            # dense + rare: the WAND showcase
-        (1, ["t10"]),                    # rare single
-        (2, ["dense0", "dense1"]),       # flat pair (exhaustive path)
-        (3, ["t01", "t05", "t09"]),      # mixed
-        (4, ["t11", "dense2"]),          # rarest + dense
-        (5, ["t03", "t03", "t07"]),      # duplicate term (qtf=2)
-        (6, ["missing", "t02"]),         # unknown term ignored
-    ]
+    return spark.createDataFrame(
+        ZIPF_QUERIES, schema="query_id long, terms array<string>"
+    )
+
+
+def _edge_queries(spark):
+    """Queries over EDGE_TERM, whose straddling block is dead in the
+    middle shard (ids continue after _zipf_queries)."""
+    return spark.createDataFrame(
+        [(7, [EDGE_TERM]), (8, [EDGE_TERM, "t01"])],
+        schema="query_id long, terms array<string>",
+    )
+
+
+def _zipf_batch(spark, size=64):
+    """A `size`-query batch: ZIPF_QUERIES repeated under fresh query
+    ids (64 is the serve benchmark's batch size)."""
+    qs = [(i, ZIPF_QUERIES[i % len(ZIPF_QUERIES)][1]) for i in range(size)]
     return spark.createDataFrame(qs, schema="query_id long, terms array<string>")
 
 
@@ -368,60 +394,64 @@ def test_wand_elastic_layout_end_to_end(spark):
     assert got == ref
 
 
-def test_block_prefilter_drops_blocks_losslessly(spark, zipf_setup):
-    """The plan-side block-max cut (ask: wand.py step-3 semantics BEFORE
-    the cogroup shuffle) must (a) hand strictly fewer blocks to the
-    kernel on a corpus with idf spread, and (b) stay rank-identical to
-    the unfiltered plan and the ranked_or oracle."""
+def test_wand_rank_identity_64_query_batch(spark, zipf_setup):
+    """A 64-query batch at the static 3-shard layout runs the same plan
+    as a small one (term semi-join, cogroup, kernel, top-k) and stays
+    rank-identical to the ranked_or oracle."""
     from dint_spark.operators.ranked import ranked_or
-    from dint_spark.operators.wand_shard import (
-        wand_sharded_decode_stats,
-        wand_topk_sharded,
-    )
+    from dint_spark.operators.wand_shard import wand_topk_sharded
 
     idx, bidx, codec, norms = zipf_setup  # norms: static-layout slices
-    q = _zipf_queries(spark)
-
-    def handed(prefilter):
-        return (
-            wand_sharded_decode_stats(
-                idx, bidx, codec, q, idx.num_docs, norms, prefilter=prefilter
-            )
-            .agg(F.sum("blocks_total"))
-            .first()[0]
-        )
-
-    h_off, h_on = handed(False), handed(True)
-    assert h_on < h_off, (h_on, h_off)  # the cut actually drops blocks
-
+    q = _zipf_batch(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     assert _ranks(
-        wand_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, norms, prefilter=True
-        )
-    ) == ref
-    assert _ranks(
-        wand_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, norms, prefilter=False
-        )
+        wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms)
     ) == ref
 
 
-def test_block_prefilter_k25_exact_seed(spark, zipf_setup):
-    """k > TOPK_BOUND_K: the prefilter must use the exact bounded-kth
-    seed frame (w10 invalid there) and stay rank-identical at k=25."""
+def test_wand_k25_exact_seed_64_query_batch(spark, zipf_setup):
+    """k > TOPK_BOUND_K on a 64-query batch: the kernel prunes against
+    the exact bounded-kth seed frame (w10 is invalid there) and stays
+    rank-identical at k=25."""
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import wand_topk_sharded
 
     idx, bidx, codec, norms = zipf_setup
-    q = _zipf_queries(spark)
+    q = _zipf_batch(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=25))
     got = _ranks(
-        wand_topk_sharded(
-            idx, bidx, codec, q, idx.num_docs, norms, k=25, prefilter=True
-        )
+        wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms, k=25)
     )
     assert got == ref
+
+
+def test_wand_runs_no_more_jobs_than_maxscore(spark, zipf_setup):
+    """WAND and MaxScore serve through one plan: on a 64-query batch a
+    WAND collect runs no more Spark jobs than a MaxScore collect (no
+    batch-size probe, no plan-side cut stages)."""
+    from dint_spark.operators.wand_shard import (
+        maxscore_topk_sharded,
+        wand_topk_sharded,
+    )
+
+    idx, bidx, codec, norms = zipf_setup
+    q = _zipf_batch(spark)
+    sc = spark.sparkContext
+    fns = {"wand": wand_topk_sharded, "maxscore": maxscore_topk_sharded}
+    jobs = {}
+    try:
+        for fn in fns.values():
+            fn(idx, bidx, codec, q, idx.num_docs, norms).collect()  # warm
+        for name, fn in fns.items():
+            group = f"test_jobs_{name}"
+            sc.setJobGroup(group, group)
+            fn(idx, bidx, codec, q, idx.num_docs, norms).collect()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["maxscore"] > 0
+    assert jobs["wand"] <= jobs["maxscore"], jobs
 
 
 def test_norm_slices_chunked_rows(spark, zipf_setup):
@@ -512,9 +542,10 @@ def test_shard_block_max_matches_block_index(spark, zipf_setup):
 @pytest.mark.parametrize("k", [10, 25])
 def test_sharded_rank_identity_with_shard_bmw(spark, zipf_setup, algo, k):
     """Dead-pair drop + in-shard bmw override are LOSSLESS: top-k with
-    the artifact (sharded_block_index refined by shard_block_max;
-    prefilter forced on for wand) is rank-identical to the exhaustive
-    oracle, for both kernels, k ≤ and > TOPK_BOUND_K."""
+    the artifact (sharded_block_index refined by shard_block_max) is
+    rank-identical to the exhaustive oracle, for both kernels, k ≤ and
+    > TOPK_BOUND_K — including EDGE_TERM queries, whose middle-shard
+    pair the artifact drops."""
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
@@ -523,14 +554,14 @@ def test_sharded_rank_identity_with_shard_bmw(spark, zipf_setup, algo, k):
     )
 
     idx, bidx, codec, slices = zipf_setup
-    q = _zipf_queries(spark)
+    q = _zipf_queries(spark).unionByName(_edge_queries(spark))
     sb, ss = _shard_bmw(idx)
     sharded = sharded_block_index(bidx, ss, sb)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=k))
     if algo == "wand":
         got = wand_topk_sharded(
             idx, bidx, codec, q, idx.num_docs, slices, k=k,
-            prefilter=True, sharded_bidx=sharded,
+            sharded_bidx=sharded,
         )
     else:
         got = maxscore_topk_sharded(
@@ -541,23 +572,31 @@ def test_sharded_rank_identity_with_shard_bmw(spark, zipf_setup, algo, k):
 
 
 def test_shard_bmw_drops_dead_pairs_and_bytes(spark, zipf_setup):
-    """A rare term's straddling block ships only to shards that hold
-    its postings: shipped rows and payload bytes strictly shrink with
-    the artifact while the top-k stays identical (the preceding test)."""
+    """A term's straddling block ships only to shards that hold its
+    postings: with the shard_block_max artifact alone, shipped rows and
+    payload bytes strictly shrink while the top-k stays identical (the
+    preceding test). EDGE_TERM's one block spans all 3 shards but has
+    postings only in the first and last, so its middle pair is dead."""
     from dint_spark.operators.wand_shard import shipped_block_stats
 
     idx, bidx, codec, slices = zipf_setup
-    q = _zipf_queries(spark)
     sb, _ss = _shard_bmw(idx)
-    off = shipped_block_stats(
-        idx, bidx, codec, q, idx.num_docs, slices, prefilter=False
-    )
-    on = shipped_block_stats(
-        idx, bidx, codec, q, idx.num_docs, slices, prefilter=True,
-        shard_bmw=sb,
-    )
-    assert on["shuffled_block_rows"] < off["shuffled_block_rows"]
-    assert on["shuffled_payload_bytes"] < off["shuffled_payload_bytes"]
+
+    def shipped(q, shard_bmw):
+        s = shipped_block_stats(
+            idx, bidx, codec, q, idx.num_docs, slices, shard_bmw=shard_bmw
+        )
+        assert s["num_shards"] == 3
+        return s["shuffled_block_rows"], s["shuffled_payload_bytes"]
+
+    edge = _edge_queries(spark).filter(F.col("query_id") == 7)
+    assert shipped(edge, None)[0] == 3
+    assert shipped(edge, sb)[0] == 2
+
+    q = _zipf_queries(spark).unionByName(_edge_queries(spark))
+    (rows_off, bytes_off), (rows_on, bytes_on) = shipped(q, None), shipped(q, sb)
+    assert rows_on < rows_off, (rows_on, rows_off)
+    assert bytes_on < bytes_off, (bytes_on, bytes_off)
 
 
 def test_presharded_artifact_equals_perbatch_join(spark, zipf_setup):
