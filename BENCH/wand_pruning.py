@@ -106,7 +106,7 @@ def main() -> None:
 
     spark = get_spark("wand_pruning")
     tokens, spec = zipf_tokens(spark, args.docs)
-    idx = build_fulltext_index(tokens, with_norm_len=True, cache=True)
+    idx = build_fulltext_index(tokens)
     codec = get_codec("block_vbyte")
     bidx = materialize(build_block_index(idx.postings, codec))
     q = spark.createDataFrame(QUERIES, schema="query_id long, terms array<string>")

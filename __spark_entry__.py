@@ -92,6 +92,19 @@ def q_ft_intersect_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     return intersect_pair(idx.postings, "hash", "join")
 
 
+def _sharded(fn, spark: SparkSession, sf_dir: str, codec_name: str = "single_packed_dint"):
+    """fn (a wand_shard / router top-k entry point) over the engine's
+    memoized index, block index and serving artifacts, k=10."""
+    from dint_spark.engine import get_block_index, get_serving
+
+    idx = _idx(spark, sf_dir)
+    bidx, codec = get_block_index(spark, sf_dir, codec_name)
+    return fn(
+        idx, bidx, codec, _queries(spark), idx.num_docs, k=10,
+        **get_serving(spark, sf_dir, codec_name),
+    )
+
+
 def q_ft_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-max WAND over the compressed index — rank-identical to
     ranked_or (oracle is the SAME SQL: pruning must be lossless).
@@ -101,35 +114,15 @@ def q_ft_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandas kernel — two shuffles total, lazy per-block decode.
     norm_lens ride the cogroup as per-shard packed slices (no
     driver-side collect or data-sized broadcast anywhere in the path)."""
-    from dint_spark.engine import (
-        get_block_index, get_norm_slices, get_sharded_blocks, get_universe,
-    )
     from dint_spark.operators.wand_shard import wand_topk_sharded
 
-    idx = _idx(spark, sf_dir)
-    bidx, codec = get_block_index(spark, sf_dir, "single_packed_dint")
-    return wand_topk_sharded(
-        idx, bidx, codec, _queries(spark), idx.num_docs,
-        get_norm_slices(spark, sf_dir), k=10,
-        universe=get_universe(spark, sf_dir),
-        sharded_bidx=get_sharded_blocks(spark, sf_dir, "single_packed_dint"),
-    )
+    return _sharded(wand_topk_sharded, spark, sf_dir)
 
 
 def q_ft_maxscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dint_spark.engine import (
-        get_block_index, get_norm_slices, get_sharded_blocks, get_universe,
-    )
     from dint_spark.operators.wand_shard import maxscore_topk_sharded
 
-    idx = _idx(spark, sf_dir)
-    bidx, codec = get_block_index(spark, sf_dir, "single_packed_dint")
-    return maxscore_topk_sharded(
-        idx, bidx, codec, _queries(spark), idx.num_docs,
-        get_norm_slices(spark, sf_dir), k=10,
-        universe=get_universe(spark, sf_dir),
-        sharded_bidx=get_sharded_blocks(spark, sf_dir, "single_packed_dint"),
-    )
+    return _sharded(maxscore_topk_sharded, spark, sf_dir)
 
 
 def q_ft_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,19 +132,9 @@ def q_ft_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     showed a 4× inversion between 500- and 2,000-query batches. Both
     realizations are rank-identical, so the oracle is the SAME
     RANKED_OR SQL regardless of which plan the router picks."""
-    from dint_spark.engine import (
-        get_block_index, get_norm_slices, get_sharded_blocks, get_universe,
-    )
     from dint_spark.operators.router import topk_auto
 
-    idx = _idx(spark, sf_dir)
-    bidx, codec = get_block_index(spark, sf_dir, "single_packed_dint")
-    return topk_auto(
-        idx, bidx, codec, _queries(spark), idx.num_docs,
-        get_norm_slices(spark, sf_dir), k=10,
-        universe=get_universe(spark, sf_dir),
-        sharded_bidx=get_sharded_blocks(spark, sf_dir, "single_packed_dint"),
-    )
+    return _sharded(topk_auto, spark, sf_dir)
 
 
 def q_ft_wand_pef(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,19 +144,9 @@ def q_ft_wand_pef(spark: SparkSession, sf_dir: str) -> DataFrame:
     index type, index_types.hpp:83-87; here it is one kernel, many
     codecs). Oracle is the same RANKED_OR SQL: pruning and the codec
     swap must both be lossless."""
-    from dint_spark.engine import (
-        get_block_index, get_norm_slices, get_sharded_blocks, get_universe,
-    )
     from dint_spark.operators.wand_shard import wand_topk_sharded
 
-    idx = _idx(spark, sf_dir)
-    bidx, codec = get_block_index(spark, sf_dir, "pef_opt")
-    return wand_topk_sharded(
-        idx, bidx, codec, _queries(spark), idx.num_docs,
-        get_norm_slices(spark, sf_dir), k=10,
-        universe=get_universe(spark, sf_dir),
-        sharded_bidx=get_sharded_blocks(spark, sf_dir, "pef_opt"),
-    )
+    return _sharded(wand_topk_sharded, spark, sf_dir, "pef_opt")
 
 
 def q_ft_wand_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,14 +194,18 @@ def q_ft_vroom_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ft_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode the DINT-compressed block index → must equal the oracle's
-    postings exactly (verify_collection semantics, B9)."""
+def _decoded(spark: SparkSession, sf_dir: str, codec_name: str) -> DataFrame:
+    """The engine's memoized block index of codec_name, fully decoded."""
     from dint_spark.build.blocks import decode_block_index
     from dint_spark.engine import get_block_index
 
-    bidx, codec = get_block_index(spark, sf_dir, "single_packed_dint")
-    return decode_block_index(bidx, codec)
+    return decode_block_index(*get_block_index(spark, sf_dir, codec_name))
+
+
+def q_ft_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decode the DINT-compressed block index → must equal the oracle's
+    postings exactly (verify_collection semantics, B9)."""
+    return _decoded(spark, sf_dir, "single_packed_dint")
 
 
 def q_ft_block_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,9 +217,6 @@ def q_ft_block_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bidx.select(
         "term_id", "block_id", F.col("n").cast("long").alias("n"), "block_max"
     )
-
-
-_STREAM_INGEST_CACHE: dict = {}
 
 
 def q_ft_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,19 +235,18 @@ def q_ft_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_ingest,
         stream_documents,
     )
+    from dint_spark.util import memo
 
-    key = (id(spark), sf_dir)
-    out = _STREAM_INGEST_CACHE.get(key)
-    if out is None:
+    def ingest():
         work = tempfile.mkdtemp(prefix="dint_stream_ingest_")
         landing = os.path.join(work, "landing")
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         docs.select("doc_id", "text").repartition(3).write.parquet(landing)
         stream = stream_documents(spark, landing, max_files_per_trigger=1)
         run_ingest(stream, work)
-        out = work
-        _STREAM_INGEST_CACHE[key] = out
-    return compact_postings(spark, out)
+        return work
+
+    return compact_postings(spark, memo(spark, ("stream_ingest", sf_dir), ingest))
 
 
 def q_st_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,10 +260,9 @@ def q_st_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from dint_spark.streaming.ingest import run_streaming_dedup, stream_documents
+    from dint_spark.util import memo
 
-    key = ("st_dedup", id(spark), sf_dir)
-    res = _STREAM_INGEST_CACHE.get(key)
-    if res is None:
+    def dedup():
         work = tempfile.mkdtemp(prefix="dint_stream_dedup_")
         landing = os.path.join(work, "landing")
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
@@ -319,9 +291,11 @@ def q_st_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             seen_parts = parts
         stream = stream_documents(spark, landing, max_files_per_trigger=1)
         run_streaming_dedup(stream, work)
-        res = os.path.join(work, "dedup")
-        _STREAM_INGEST_CACHE[key] = res
-    return spark.read.parquet(res).select("doc_id", "canonical_doc_id", "is_dup")
+        return os.path.join(work, "dedup")
+
+    return spark.read.parquet(memo(spark, ("st_dedup", sf_dir), dedup)).select(
+        "doc_id", "canonical_doc_id", "is_dup"
+    )
 
 
 def q_ft_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,11 +327,7 @@ def q_ft_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ft_decode_roundtrip_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode the multi_packed (6 selector dictionaries, 12-way
     tournament) index — must equal the oracle's postings exactly."""
-    from dint_spark.build.blocks import decode_block_index
-    from dint_spark.engine import get_block_index
-
-    bidx, codec = get_block_index(spark, sf_dir, "multi_packed_dint")
-    return decode_block_index(bidx, codec)
+    return _decoded(spark, sf_dir, "multi_packed_dint")
 
 
 def q_ft_decode_roundtrip_pef(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,11 +336,7 @@ def q_ft_decode_roundtrip_pef(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned_sequence.hpp role) — must equal the oracle's postings
     exactly. Both streams ride PEF via the positive_sequence prefix-sum
     trick (registry adapter)."""
-    from dint_spark.build.blocks import decode_block_index
-    from dint_spark.engine import get_block_index
-
-    bidx, codec = get_block_index(spark, sf_dir, "pef_opt")
-    return decode_block_index(bidx, codec)
+    return _decoded(spark, sf_dir, "pef_opt")
 
 
 def q_ft_decode_roundtrip_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:

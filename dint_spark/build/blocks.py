@@ -245,6 +245,18 @@ def build_block_index(
     )
 
 
+def decode_doc_ids(codec, bufs, ns, bases) -> tuple[np.ndarray, np.ndarray]:
+    """Many blocks' docs streams → (int64 doc ids, block start offsets):
+    one batch decode (codec.decode_docs_batch), then the segmented
+    prefix-sum un-gap (P5) over the whole batch at once:
+    doc[i] = base(block) + Σ_{block-local ≤ i} (gap+1)."""
+    ns = np.asarray(ns, dtype=np.int64)
+    gaps, offs = codec.decode_docs_batch(bufs, ns)
+    cs = np.cumsum(gaps.astype(np.int64) + 1)
+    excl = np.where(offs > 0, cs[offs - 1], 0)
+    return cs + np.repeat(np.asarray(bases, dtype=np.int64) - excl, ns), offs
+
+
 def decode_block_index(
     index: DataFrame,
     codec,
@@ -279,39 +291,20 @@ def decode_block_index(
 
     def decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = codec_bc.value
-        batched = hasattr(c, "decode_docs_batch")
         for pdf in batches:
             if not len(pdf):
                 continue
             ns = pdf["n"].to_numpy(dtype=np.int64)
-            bases = pdf["block_base"].to_numpy(dtype=np.int64)
-            dbufs = list(pdf["docs_bytes"])
-            if batched:
-                gaps_flat, offs = c.decode_docs_batch(dbufs, ns)
-            else:
-                gaps_flat = np.concatenate(
-                    [c.decode_docs(b, int(n)) for b, n in zip(dbufs, ns)]
-                ) if len(dbufs) else np.empty(0, dtype=np.uint32)
-                offs = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            if not docs_only:
-                fbufs = list(pdf["freqs_bytes"])
-                if batched:
-                    tfs_flat, _ = c.decode_freqs_batch(fbufs, ns)
-                else:
-                    tfs_flat = np.concatenate(
-                        [c.decode_freqs(b, int(n)) for b, n in zip(fbufs, ns)]
-                    ) if len(fbufs) else np.empty(0, dtype=np.uint32)
-            # segmented prefix-sum un-gap (P5), whole batch at once:
-            # doc[i] = base(block) + Σ_{block-local ≤ i} (gap+1)
-            g = gaps_flat.astype(np.int64) + 1
-            cs = np.cumsum(g)
-            excl = np.where(offs > 0, cs[offs - 1], 0)
-            docs = cs + np.repeat(bases - excl, ns)
+            docs, _offs = decode_doc_ids(
+                c, list(pdf["docs_bytes"]), ns,
+                pdf["block_base"].to_numpy(dtype=np.int64),
+            )
             cols = {
                 "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
                 "doc_id": docs,
             }
             if not docs_only:
+                tfs_flat, _ = c.decode_freqs_batch(list(pdf["freqs_bytes"]), ns)
                 cols["tf"] = tfs_flat.astype(np.int64) + 1
             for name in extra_names:
                 cols[name] = np.repeat(pdf[name].to_numpy(), ns)

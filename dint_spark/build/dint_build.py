@@ -64,8 +64,22 @@ _MULTI_STATS_SCHEMA = T.StructType(
 
 @dataclass
 class DintModel:
+    """One dictionary per stream — the single_packed / dint model."""
+
     docs: DintDict
     freqs: DintDict
+
+    # build-lineage tokens (index/builder.py): a model of another family
+    # or selection version is relearned, never loaded
+    FAMILY, VERSION = "single", ""
+
+    @classmethod
+    def learn(cls, postings: DataFrame) -> "DintModel":
+        return learn_dint_model(postings)
+
+    def entries(self) -> tuple[int, int]:
+        """(docs, freqs) dictionary entries."""
+        return len(self.docs), len(self.freqs)
 
     def save(self, spark, path: str) -> None:
         rows = []
@@ -102,6 +116,19 @@ class MultiDintModel:
     docs: list  # [DintDict] × NUM_SELECTORS
     freqs: list
 
+    # selection-algorithm version: rb1 = global entry-budget refill
+    # (_refill_banks); rb2 = deterministic (freq, size, pattern)
+    # tie-break with head+tail derived from one ranking fetch — an
+    # out_dir built under an older selection relearns and re-encodes
+    FAMILY, VERSION = "multi", ":rb2"
+
+    @classmethod
+    def learn(cls, postings: DataFrame) -> "MultiDintModel":
+        return learn_multi_dint_model(postings)
+
+    def entries(self) -> tuple[int, int]:
+        return sum(len(d) for d in self.docs), sum(len(d) for d in self.freqs)
+
     def save(self, spark, path: str) -> None:
         rows = []
         for stream, dicts in (("docs", self.docs), ("freqs", self.freqs)):
@@ -132,6 +159,18 @@ class MultiDintModel:
                 pats = [np.frombuffer(p, dtype=np.uint32) for _, p in lst]
                 out[stream].append(DintDict.from_patterns(pats))
         return cls(docs=out["docs"], freqs=out["freqs"])
+
+
+def model_class(codec_name: str) -> "type[DintModel] | type[MultiDintModel] | None":
+    """The dictionary-model class a codec name needs (learn / load /
+    save), or None for a codec that learns nothing — the one place a
+    codec name picks its DINT model (index_types.hpp:83-87 role; the
+    registry then builds the codec from the model, get_codec)."""
+    if codec_name == "multi_packed_dint":
+        return MultiDintModel
+    if codec_name.startswith(("single_packed_dint", "dint")):
+        return DintModel
+    return None
 
 
 def collect_pattern_stats(

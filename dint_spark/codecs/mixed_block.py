@@ -49,6 +49,7 @@ import numpy as np
 
 from dint_spark.codecs import dec_time, interpolative, simple16, varintfam
 from dint_spark.codecs.dec_time import Predictor
+from dint_spark.codecs.registry import BlockCodec
 
 BLOCK_SIZE = 256  # build/blocks.py BLOCK_SIZE (reference util.hpp:35)
 
@@ -203,7 +204,7 @@ def decode_block(buf: bytes, n: int) -> np.ndarray:
     return dec(bytes(buf[1:]), n)
 
 
-class MixedCodec:
+class MixedCodec(BlockCodec):
     """Registry codec (symmetric: both streams carry u32 residuals).
 
     ``access_count_fn`` hook: the reference weighs predicted time by the

@@ -2,7 +2,8 @@
 index-type dispatch (/root/reference/include/index_types.hpp:83-87).
 
 A codec object exposes encode_docs / encode_freqs / decode_docs /
-decode_freqs over uint32 numpy arrays (one posting block per call). The
+decode_freqs over uint32 numpy arrays (one posting block per call), and
+decode_docs_batch / decode_freqs_batch over many blocks (BlockCodec). The
 docs stream carries docID gaps−1, the freqs stream tf−1. DINT codecs are
 asymmetric: separate dictionaries are learned for the two streams
 (dict_freq_index::builder::build_model learns two models,
@@ -16,7 +17,29 @@ import numpy as np
 from dint_spark.codecs import vbyte
 
 
-class SymmetricCodec:
+class BlockCodec:
+    """Many-block decode for every codec: decode_*_batch(bufs, ns) →
+    (flat values, block start offsets). This default decodes block by
+    block; codecs with a vectorized kernel (DINT's lockstep decode)
+    override it."""
+
+    def decode_docs_batch(self, bufs, ns):
+        return _per_block(self.decode_docs, bufs, ns)
+
+    def decode_freqs_batch(self, bufs, ns):
+        return _per_block(self.decode_freqs, bufs, ns)
+
+
+def _per_block(decode, bufs, ns) -> tuple[np.ndarray, np.ndarray]:
+    ns = np.asarray(ns, dtype=np.int64)
+    flat = (
+        np.concatenate([decode(b, int(n)) for b, n in zip(bufs, ns)])
+        if len(ns) else np.empty(0, dtype=np.uint32)
+    )
+    return flat, np.concatenate(([0], np.cumsum(ns)[:-1]))
+
+
+class SymmetricCodec(BlockCodec):
     """Wrap a stateless encode/decode module (vbyte, u32) for both streams."""
 
     def __init__(self, name: str, encode, decode):
@@ -35,7 +58,7 @@ class SymmetricCodec:
     decode_freqs = decode_docs
 
 
-class PairCodec:
+class PairCodec(BlockCodec):
     """Distinct per-stream codecs (DINT: docs dict + freqs dict)."""
 
     def __init__(self, name: str, docs, freqs):
@@ -55,7 +78,7 @@ class PairCodec:
     def decode_freqs(self, buf, n):
         return self.freqs.decode(buf, n)
 
-    # vectorized many-block decode (build/blocks.py uses it when present)
+    # the per-stream vectorized many-block decode
     def decode_docs_batch(self, bufs, ns):
         return self.docs.decode_batch(bufs, ns)
 

@@ -32,13 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dint_spark.build.blocks import build_block_index, decode_block_index, index_stats
-from dint_spark.build.dint_build import (
-    DintModel,
-    MultiDintModel,
-    choose_packed_codec,
-    learn_dint_model,
-    learn_multi_dint_model,
-)
+from dint_spark.build.dint_build import choose_packed_codec, model_class
 from dint_spark.build.postings import build_fulltext_index
 from dint_spark.codecs.registry import get_codec
 from dint_spark.corpus import with_doc_ids
@@ -117,7 +111,7 @@ class IndexBuilder:
                 if self.tokenizer == "code"
                 else tokenize_words(corpus, text_col="text", doc_id_col="doc_id")
             )
-            idx = build_fulltext_index(tok, with_norm_len=True, cache=True)
+            idx = build_fulltext_index(tok)
             idx.postings.write.mode("overwrite").parquet(self._table("postings"))
             idx.docs.write.mode("overwrite").parquet(self._table("docs"))
             idx.vocab.write.mode("overwrite").parquet(self._table("vocab"))
@@ -170,46 +164,31 @@ class IndexBuilder:
                 f"codec {self.codec_requested} -> {self.codec_name}"
             )
         # index/verify stages are keyed by postings AND codec (+ a schema
-        # version token, + the model-selection version for multi — a new
+        # version token, + the model's selection version — a new
         # dictionary model must re-encode the blocks too): re-running on
         # an existing out_dir with a different codec must re-encode +
         # re-verify, never silently load an index encoded with the old
         # codec or the old model.
-        is_multi = self.codec_name == "multi_packed_dint"
-        fp_index = f"{fp_postings}:{self.codec_name}:v2" + (
-            ":rb2" if is_multi else ""
-        )
+        cls = model_class(self.codec_name)
+        fp_index = f"{fp_postings}:{self.codec_name}:v2" + (cls.VERSION if cls else "")
 
         # stage: model (DINT only); keyed by postings AND model family so
         # switching single↔multi on one out_dir relearns, never misloads.
         model = None
-        is_dint = is_multi or self.codec_name.startswith(("single_packed_dint", "dint"))
-        if is_dint:
-            # multi carries a selection-algorithm version: rb1 = global
-            # entry-budget refill (_refill_banks); rb2 = deterministic
-            # (freq, size, pattern) tie-break with head+tail derived from
-            # one ranking fetch — an out_dir built under an older
-            # selection relearns instead of silently resuming with the
-            # stale model
-            family = "multi:rb2" if is_multi else "single"
-            fp_model = f"{fp_postings}:{family}"
-            learn = learn_multi_dint_model if is_multi else learn_dint_model
-            cls = MultiDintModel if is_multi else DintModel
+        if cls is not None:
+            fp_model = f"{fp_postings}:{cls.FAMILY}{cls.VERSION}"
             if not self._stage_done("model", fp_model):
                 t0 = time.time()
-                model = learn(postings.select("term_id", "doc_id", "tf"))
+                model = cls.learn(postings.select("term_id", "doc_id", "tf"))
                 model.save(self.spark, self._table("dint_model"))
+                docs_entries, freqs_entries = model.entries()
                 self._write_lineage(
                     "model",
                     {
                         "stage": "model",
                         "input_fingerprint": fp_model,
-                        "docs_entries": sum(len(d) for d in model.docs)
-                        if is_multi
-                        else len(model.docs),
-                        "freqs_entries": sum(len(d) for d in model.freqs)
-                        if is_multi
-                        else len(model.freqs),
+                        "docs_entries": docs_entries,
+                        "freqs_entries": freqs_entries,
                         "wall_sec": round(time.time() - t0, 2),
                     },
                 )

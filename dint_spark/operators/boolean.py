@@ -108,21 +108,6 @@ def or_query(postings: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
-def and_docs(postings: DataFrame, queries: DataFrame) -> DataFrame:
-    """(query_id, doc_id) — the matching docs themselves (with_freqs shape)."""
-    qt = query_terms(queries, dedup=True)
-    nterms = query_nterms(queries)
-    return (
-        postings.select("term", "doc_id")
-        .join(F.broadcast(qt), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.count("*").alias("_nt"))
-        .join(F.broadcast(nterms), "query_id")
-        .filter(F.col("_nt") == F.col("_k"))
-        .select("query_id", "doc_id")
-    )
-
-
 def intersect_pair(postings: DataFrame, term_a: str, term_b: str) -> DataFrame:
     """Materializing pairwise intersection (pair_wise_intersect.cpp:28-59).
 

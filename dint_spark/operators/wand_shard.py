@@ -81,10 +81,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from dint_spark.build.blocks import (
+    BLOCK_SIZE, decode_block_index, decode_doc_ids, rank_within_term,
+)
 from dint_spark.build.postings import TOPK_BOUND_K, FullTextIndex
-from dint_spark.functions.bm25 import B, K1, query_term_weight
+from dint_spark.functions.bm25 import B, K1, doc_term_weight, query_term_weight
 from dint_spark.operators.boolean import query_terms
 from dint_spark.operators.ranked import topk
+from dint_spark.util import materialize, memo_broadcast
 
 THETA_MARGIN = 2e-9
 SCORE_ROUND = 9
@@ -454,39 +458,21 @@ def _exhaustive_merge(
             if bi not in tb.fcache:
                 need_f.append((e, bi))
     if need_d:
-        c = need_d[0][0].codec
-        ns = np.asarray([int(e.tb.ns[bi]) for e, bi in need_d], dtype=np.int64)
-        dbufs = [e.tb.dbytes[bi] for e, bi in need_d]
-        if hasattr(c, "decode_docs_batch"):
-            gaps, offs = c.decode_docs_batch(dbufs, ns)
-        else:
-            gaps = np.concatenate(
-                [c.decode_docs(b, int(n)) for b, n in zip(dbufs, ns)]
-            )
-            offs = np.concatenate(([0], np.cumsum(ns)[:-1]))
-        # segmented un-gap (same prefix-sum trick as decode_block_index)
-        g = gaps.astype(np.int64) + 1
-        cs = np.cumsum(g)
-        excl = np.where(offs > 0, cs[offs - 1], 0)
-        bases = np.asarray(
-            [int(e.tb.bases[bi]) for e, bi in need_d], dtype=np.int64
+        docs_flat, offs = decode_doc_ids(
+            need_d[0][0].codec,
+            [e.tb.dbytes[bi] for e, bi in need_d],
+            [int(e.tb.ns[bi]) for e, bi in need_d],
+            [int(e.tb.bases[bi]) for e, bi in need_d],
         )
-        docs_flat = cs + np.repeat(bases - excl, ns)
         for j, (e, bi) in enumerate(need_d):
-            s, t = int(offs[j]), int(offs[j] + ns[j])
-            e.tb.dcache[bi] = docs_flat[s:t]
+            s = int(offs[j])
+            e.tb.dcache[bi] = docs_flat[s : s + int(e.tb.ns[bi])]
             e.stats[1] += 1
     if need_f:
-        c = need_f[0][0].codec
         ns = np.asarray([int(e.tb.ns[bi]) for e, bi in need_f], dtype=np.int64)
-        fbufs = [e.tb.fbytes[bi] for e, bi in need_f]
-        if hasattr(c, "decode_freqs_batch"):
-            tfs_flat, offs = c.decode_freqs_batch(fbufs, ns)
-        else:
-            tfs_flat = np.concatenate(
-                [c.decode_freqs(b, int(n)) for b, n in zip(fbufs, ns)]
-            )
-            offs = np.concatenate(([0], np.cumsum(ns)[:-1]))
+        tfs_flat, offs = need_f[0][0].codec.decode_freqs_batch(
+            [e.tb.fbytes[bi] for e, bi in need_f], ns
+        )
         tfs_all = tfs_flat.astype(np.int64) + 1
         for j, (e, bi) in enumerate(need_f):
             s, t = int(offs[j]), int(offs[j] + ns[j])
@@ -790,9 +776,6 @@ def shard_block_max(postings: DataFrame, shard_size: int) -> DataFrame:
     ≈ a small multiple of the block count — metadata-sized at any
     corpus scale, partition-pruned by the batch's term semi-join before
     the plan join."""
-    from dint_spark.build.blocks import BLOCK_SIZE, rank_within_term
-    from dint_spark.functions.bm25 import doc_term_weight
-
     ranked = rank_within_term(postings.select("term_id", "doc_id", "tf", "norm_len"))
     return (
         ranked.withColumn("block_id", (F.col("rank") / BLOCK_SIZE).cast("long"))
@@ -852,8 +835,6 @@ def _exact_seed_df(idx, bidx, codec, qt: DataFrame, k: int) -> DataFrame:
     no row (kernel falls back to seed 0)."""
     from pyspark.sql import Window as W
 
-    from dint_spark.build.blocks import decode_block_index
-    from dint_spark.functions.bm25 import doc_term_weight
     from dint_spark.operators.wand import _bounded_kth
 
     w_best = W.partitionBy("query_id").orderBy(
@@ -916,6 +897,39 @@ def sharded_block_index(
             .select(*_LEFT_COLS)
         )
     return blocks_sh
+
+
+def serving_artifacts(
+    idx: FullTextIndex, bidx: "DataFrame | None" = None, shared: "dict | None" = None
+) -> dict:
+    """The one recipe for the serving index → the norms / universe /
+    sharded_bidx keywords of every sharded top-k entry point
+    (wand_topk_sharded, maxscore_topk_sharded, router.topk_auto,
+    wand_sharded_decode_stats): the docID universe (ONE max aggregate),
+    the norm slices packed for static_layout(universe) and, given a block
+    index, the pre-sharded block artifact sharded_block_index(bidx, ss,
+    shard_block_max(...)). Each is materialized once, then reused by
+    every query batch (the reference maps the index and its wand_data
+    once per process, queries.cpp:69-90).
+
+    shared: an earlier result for the same idx whose universe and norm
+    slices are reused, so the block artifacts of several codecs share
+    one set of norms. No driver-side collect of per-doc data anywhere."""
+    if shared is None:
+        mx = idx.docs.agg(F.max("doc_id")).first()[0]
+        universe = int(mx) + 1 if mx is not None else 0
+        _nsh, ss = static_layout(universe)
+        slices = materialize(norm_slices(idx.docs.select("doc_id", "norm_len"), ss))
+    else:
+        universe, slices = shared["universe"], shared["norms"]
+        _nsh, ss = static_layout(universe)
+    out = {"norms": slices, "universe": universe, "sharded_bidx": None}
+    if bidx is not None:
+        sbmw = shard_block_max(
+            idx.postings.select("term_id", "doc_id", "tf", "norm_len"), ss
+        )
+        out["sharded_bidx"] = materialize(sharded_block_index(bidx, ss, sbmw))
+    return out
 
 
 def _batch_blocks_sharded(sharded_bidx, qt) -> DataFrame:
@@ -1077,13 +1091,6 @@ def wand_sharded_decode_stats(
                 universe, emit="stats", sharded_bidx=sharded_bidx)
 
 
-def _codec_broadcast(spark, codec):
-    """Memoized sc.broadcast(codec) — see util.memo_broadcast."""
-    from dint_spark.util import memo_broadcast
-
-    return memo_broadcast(spark, codec)
-
-
 def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
          universe=None, emit="topk", sharded_bidx=None):
     spark = queries.sparkSession
@@ -1128,7 +1135,7 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
         qx = qx.join(F.broadcast(seed_df), "query_id", "left")
     else:
         qx = qx.withColumn("seed", F.lit(None).cast("double"))
-    codec_bc = _codec_broadcast(spark, codec)
+    codec_bc = memo_broadcast(spark, codec)
 
     stats_mode = emit == "stats"
     out_schema = (

@@ -33,13 +33,3 @@ def read_query_log(
         )
     return df.select("query_id", "terms")
 
-
-def write_query_log(df: DataFrame, path: str) -> None:
-    """Inverse: (query_id, terms) → whitespace-joined lines (ref format)."""
-    (
-        df.orderBy("query_id")
-        .select(F.concat_ws(" ", F.col("terms")).alias("value"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .text(path)
-    )

@@ -25,6 +25,30 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+_MEMO: dict = {}
+
+
+def memo(spark, key, build):
+    """build() once per (live session, key) — the one memo for every
+    per-session serving artifact (index tables, block indexes, norm
+    slices, ...).
+
+    Keyed the way memo_broadcast is: the SparkContext is stored with the
+    value and a hit is served only if it `is` this session's context, so
+    a restarted session is never handed frames of a dead one. Entries
+    whose context has stopped are dropped on every call, so a dead
+    session's frames are not pinned either."""
+    sc = spark.sparkContext
+    for k in [k for k, (hit_sc, _v) in _MEMO.items() if hit_sc._jsc is None]:
+        del _MEMO[k]
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] is sc:
+        return hit[1]
+    val = build()
+    _MEMO[key] = (sc, val)
+    return val
+
+
 _BC_CACHE: dict = {}
 _BC_CACHE_MAX = 64  # a session holds a handful of codecs; bound the pins
 

@@ -51,4 +51,4 @@ def tiny_index(tiny_docs):
     from dint_spark.build.postings import build_fulltext_index
     from dint_spark.tokenizer import tokenize_words
 
-    return build_fulltext_index(tokenize_words(tiny_docs), with_norm_len=True)
+    return build_fulltext_index(tokenize_words(tiny_docs))

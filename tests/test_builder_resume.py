@@ -130,3 +130,52 @@ def test_codec_auto_chooser(spark, small_corpus, tmp_path_factory, monkeypatch):
     assert r2["index"]["codec"] == "multi_packed_dint"
     assert r2["index"]["codec_requested"] == "auto_space"
     assert r2["verify"]["missing"] == 0 and r2["verify"]["extra"] == 0
+    # serving loads the codec the index was built with, and its model
+    from jobs.query_batch import load_blocks
+
+    _bidx, codec = load_blocks(spark, out2)
+    assert codec.name == "multi_packed_dint"
+
+
+def _ranks(df):
+    return sorted(
+        (r["query_id"], r["doc_id"], round(r["score"], 9), r["rank"])
+        for r in df.collect()
+    )
+
+
+def test_builder_index_serves_rank_identical(spark, small_corpus, tmp_path_factory):
+    """The IndexBuilder-loaded serving path of jobs/query_batch.py: tables
+    with no term_catalog, the codec read from _lineage/index.json with
+    its model loaded through dint_build.model_class, and the serving
+    artifacts from wand_shard.serving_artifacts. WAND and MaxScore rank
+    exactly as ranked_or at k=10 and at k=25 (the exact-seed path)."""
+    from dint_spark.corpus import make_query_log
+    from dint_spark.operators.ranked import ranked_or
+    from dint_spark.operators.wand_shard import (
+        maxscore_topk_sharded,
+        serving_artifacts,
+        wand_topk_sharded,
+    )
+    from jobs.query_batch import load_blocks, load_index
+
+    out = str(tmp_path_factory.mktemp("idx_serve"))
+    IndexBuilder(spark, out).build(small_corpus)
+    idx = load_index(spark, out)
+    assert getattr(idx, "term_catalog", None) is None
+    bidx, codec = load_blocks(spark, out)
+    assert codec.name == "single_packed_dint"
+    serving = serving_artifacts(idx, bidx)
+    assert serving["sharded_bidx"] is not None
+
+    q = spark.createDataFrame(
+        make_query_log(64, seed=42), "query_id long, terms array<string>"
+    )
+    for k in (10, 25):
+        ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=k))
+        assert ref
+        for fn in (wand_topk_sharded, maxscore_topk_sharded):
+            got = _ranks(
+                fn(idx, bidx, codec, q, idx.num_docs, k=k, **serving)
+            )
+            assert got == ref, (fn.__name__, k)

@@ -46,7 +46,7 @@ def _corpus(spark, num_docs=6000, seed=11):
 def gate_setup(spark):
     from dint_spark.build.postings import build_fulltext_index
 
-    idx = build_fulltext_index(_corpus(spark), with_norm_len=True, cache=True)
+    idx = build_fulltext_index(_corpus(spark))
     return idx
 
 

@@ -26,7 +26,7 @@ def code_index(corpus):
     from dint_spark.tokenizer import tokenize_code
 
     toks = tokenize_code(corpus, text_col="content", doc_id_col="doc_id")
-    return build_fulltext_index(toks, with_norm_len=True)
+    return build_fulltext_index(toks)
 
 
 @pytest.fixture(scope="module")

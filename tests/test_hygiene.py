@@ -4,7 +4,7 @@
    no unpersist in a long-lived session leaks (each plan instantiation
    caches a fresh copy; BENCH_r02 measured monotonic degradation).
    Caching belongs to the build/engine layers, whose memoized frames
-   live for the session by design (engine._INDEX_CACHE/_BLOCK_CACHE —
+   live for the session by design (engine.py's util.memo entries —
    eviction = session scope).
 2. No `F.broadcast(...)` on a frame derived from the block index or
    postings inside operators — those are data-sized at cluster scale;

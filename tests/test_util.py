@@ -1,4 +1,5 @@
-"""util.memo_broadcast: memoized codec broadcasts with a FIFO bound."""
+"""util.memo_broadcast (memoized codec broadcasts with a FIFO bound) and
+util.memo (session-checked memo of serving artifacts)."""
 
 from __future__ import annotations
 
@@ -30,3 +31,45 @@ def test_memo_broadcast_evicts_and_rebroadcasts(spark, monkeypatch):
     assert bc_a2 is not bc_a
     assert _read(spark, bc_a2) == a
     assert _read(spark, bc_b) == b
+
+
+def test_memo_builds_once_per_session(spark, monkeypatch):
+    import dint_spark.util as U
+
+    monkeypatch.setattr(U, "_MEMO", {})
+    calls = []
+
+    def build():
+        calls.append(1)
+        return ["artifact"]
+
+    v = U.memo(spark, ("index", "sf"), build)
+    assert U.memo(spark, ("index", "sf"), build) is v  # memo hit
+    assert calls == [1]
+
+
+def test_memo_rebuilds_entry_of_another_context(spark, monkeypatch):
+    """An entry stored under a different (live) context object is never
+    served to this session: a restarted session gets fresh frames."""
+    import types
+
+    import dint_spark.util as U
+
+    other = types.SimpleNamespace(_jsc=object())
+    monkeypatch.setattr(U, "_MEMO", {"k": (other, "stale")})
+    assert U.memo(spark, "k", lambda: "fresh") == "fresh"
+    assert U._MEMO["k"] == (spark.sparkContext, "fresh")
+
+
+def test_memo_drops_entries_of_a_stopped_context(spark, monkeypatch):
+    """Entries whose context has stopped are dropped on the next lookup
+    of any key, so a dead session's frames are not pinned."""
+    import types
+
+    import dint_spark.util as U
+
+    stopped = types.SimpleNamespace(_jsc=None)
+    monkeypatch.setattr(U, "_MEMO", {"dead": (stopped, "frames")})
+    assert U.memo(spark, "k", lambda: 1) == 1
+    assert "dead" not in U._MEMO
+    assert U._MEMO == {"k": (spark.sparkContext, 1)}

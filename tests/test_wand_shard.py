@@ -87,7 +87,7 @@ def zipf_setup(spark):
     from dint_spark.operators.wand_shard import norm_slices, static_layout
 
     tokens, num_docs = _zipf_tokens(spark)
-    idx = build_fulltext_index(tokens, with_norm_len=True, cache=True)
+    idx = build_fulltext_index(tokens)
     codec = get_codec("block_vbyte")
     bidx = materialize(build_block_index(idx.postings, codec))
     _nsh, ss = static_layout(_universe(idx))
@@ -317,7 +317,7 @@ def test_sharded_norms_sparse_universe(spark):
         for d in rng.choice(400, size=df, replace=False):
             rows += [(int(d) * 97 + 13, term)] * int(1 + d % 3)  # sparse ids
     tokens = spark.createDataFrame(rows, schema="doc_id long, term string")
-    idx = build_fulltext_index(tokens, with_norm_len=True, cache=True)
+    idx = build_fulltext_index(tokens)
     codec = get_codec("block_vbyte")
     bidx = materialize(build_block_index(idx.postings, codec))
     q = spark.createDataFrame(
@@ -379,7 +379,7 @@ def test_wand_elastic_layout_end_to_end(spark):
         for d in rng.choice(400, size=df, replace=False):
             rows += [(int(d) * 50_021 + 5, term)] * int(1 + d % 3)
     tokens = spark.createDataFrame(rows, schema="doc_id long, term string")
-    idx = build_fulltext_index(tokens, with_norm_len=True, cache=True)
+    idx = build_fulltext_index(tokens)
     universe = int(idx.docs.agg(F.max("doc_id")).first()[0]) + 1
     nsh, _ss = static_layout(universe)
     assert nsh > MAX_STATIC_SHARDS, (universe, nsh)

@@ -34,28 +34,21 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from dint_spark.session import get_spark
-    from dint_spark.engine import (
-        get_block_index,
-        get_index,
-        get_norm_slices,
-        get_sharded_blocks,
-        get_universe,
-    )
+    from dint_spark.engine import get_block_index, get_index, get_serving
     from dint_spark.operators.wand_shard import wand_topk_sharded
     from dint_spark.queryset import queries_df
 
     spark = get_spark("codec_serving_bench")
     idx = get_index(spark, args.sf)
-    slices = get_norm_slices(spark, args.sf)
-    uni = get_universe(spark, args.sf)
+    get_serving(spark, args.sf)  # universe + norm slices, shared by every codec
 
     # prepare every codec's serving artifacts up front (index-build-class
-    # costs, untimed — identical to the engine serving path)
+    # costs, untimed — the engine serving path, wand_shard.serving_artifacts)
     arts = {}
     for name in CODECS:
         t0 = time.perf_counter()
         bidx, codec = get_block_index(spark, args.sf, name)
-        sharded = get_sharded_blocks(spark, args.sf, name)
+        serving = get_serving(spark, args.sf, name)
         prep = time.perf_counter() - t0
         st = bidx.agg(
             F.sum("n").alias("n"),
@@ -65,7 +58,7 @@ def main() -> None:
         arts[name] = {
             "bidx": bidx,
             "codec": codec,
-            "sharded": sharded,
+            "serving": serving,
             "prep_sec": round(prep, 2),
             "docs_bpi": round(8.0 * st["db"] / st["n"], 3),
             "freqs_bpi": round(8.0 * st["fb"] / st["n"], 3),
@@ -75,7 +68,7 @@ def main() -> None:
         a = arts[name]
         return wand_topk_sharded(
             idx, a["bidx"], a["codec"], queries_df(spark), idx.num_docs,
-            slices, k=10, universe=uni, sharded_bidx=a["sharded"],
+            k=10, **a["serving"],
         )
 
     # correctness cross-check first: identical rankings across codecs

@@ -44,7 +44,7 @@ def main() -> None:
 
         corpus = with_doc_ids(synth_corpus(spark, int(src.split(":")[1])))
         tok = tokenize_code(corpus, text_col="content", doc_id_col="doc_id")
-        idx = build_fulltext_index(tok, with_norm_len=True, cache=True)
+        idx = build_fulltext_index(tok)
     else:
         from dint_spark.engine import get_index
 

@@ -25,12 +25,13 @@ def timed(spark, name, fn, runs=3):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from dint_spark.session import get_spark
-    from dint_spark.engine import get_block_index, get_index, get_queries
+    from dint_spark.engine import get_block_index, get_index
+    from dint_spark.queryset import queries_df
 
     spark = get_spark("wand_phases")
     idx = get_index(spark, sf_dir)
     bidx, codec = get_block_index(spark, sf_dir)
-    queries = get_queries(spark)
+    queries = queries_df(spark)
 
     from pyspark.sql import functions as F
     from dint_spark.build.blocks import decode_block_index

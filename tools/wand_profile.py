@@ -20,9 +20,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window as W, functions as F
 
-from dint_spark.engine import get_block_index, get_index, get_queries
+from dint_spark.engine import get_block_index, get_index
 from dint_spark.functions.bm25 import query_term_weight
 from dint_spark.operators.boolean import query_terms
+from dint_spark.queryset import queries_df
 from dint_spark.session import get_spark
 
 
@@ -31,7 +32,7 @@ def main() -> None:
     spark = get_spark("wand_profile")
     idx = get_index(spark, sf_dir)
     bidx, codec = get_block_index(spark, sf_dir)
-    queries = get_queries(spark)
+    queries = queries_df(spark)
     num_docs = idx.num_docs
 
     from dint_spark.build.postings import TOPK_BOUND_K
