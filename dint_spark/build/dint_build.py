@@ -6,23 +6,28 @@ block_statistics (block_statistics.hpp:45-109) + DSF selection
 (dictionary_builders.hpp:40-77) as Spark jobs:
 
   PASS 1 (this module): gap-transform every posting block (shared
-  prepare_block_data pipeline), extract aligned sub-patterns of sizes
-  {16,8,4,2,1} with per-partition pre-aggregation (a Counter per Arrow
-  batch — the map-side combine), then a global
-  groupBy(stream, pattern).sum(freq) — the classic partial+final hash
-  aggregation (SURVEY.md A2). Candidates below the cost filter are
-  dropped (A4, dictionary_builders.hpp:15-38; singletons exempt), the
-  top-`capacity` by (freq DESC, size DESC) are selected (A5,
-  freq_length_sorter, statistics_collectors.hpp:57-64) with
-  orderBy().limit() — a distributed TakeOrdered, collected to the driver
-  only at ≤65,529 rows.
+  prepare_block_data pipeline), let the model family's rule pick the
+  block's dictionary (single: the one dictionary; multi: a full block's
+  selector context), extract aligned sub-patterns of sizes {16,8,4,2,1}
+  with per-partition pre-aggregation (a Counter per Arrow batch — the
+  map-side combine), then a global
+  groupBy(stream, selector, pattern).sum(freq) — the classic
+  partial+final hash aggregation (SURVEY.md A2). Per dictionary,
+  candidates below the cost filter are dropped (A4,
+  dictionary_builders.hpp:15-38; singletons exempt), the top-`capacity`
+  by (freq DESC, size DESC) are selected (A5, freq_length_sorter,
+  statistics_collectors.hpp:57-64) with orderBy().limit() — a
+  distributed TakeOrdered, collected to the driver only at ≤65,529 rows.
+  Both families learn through learn_dint_model.
 
   PASS 2 (build/blocks.py with the DINT codec): encode every block with
   the broadcast dictionary.
 
 Model persistence = the reference's dictionary side files
-(dict.<collection>... README.md:96): a small Parquet table
-(stream, codeword, pattern), create-or-load semantics (S6/S7).
+(dict.<collection>... README.md:96): a small Parquet table, one row per
+entry — (stream, codeword, pattern) for the single family, (stream,
+selector, codeword, pattern) for the multi family — with create-or-load
+semantics (S6/S7).
 """
 
 from __future__ import annotations
@@ -34,25 +39,23 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from dint_spark.build.blocks import BLOCK_SIZE, iter_block_arrays, prepare_block_data
+from dint_spark.build.blocks import iter_block_arrays, prepare_block_data
 from dint_spark.codecs.dint import (
+    DINT_BLOCK_SIZE,
     NUM_ENTRIES,
     NUM_SELECTORS,
     RESERVED,
     DintDict,
     extract_patterns,
-    extract_patterns_multi,
+    selector_code,
 )
+
+STREAMS = ("docs", "freqs")
+# DSF cost filter (dictionary_builders.hpp:15-38): a pattern is kept iff
+# its saving exceeds this fraction of the stream's uncompressed bits
+EPS = 1e-9
 
 _STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("stream", T.StringType(), False),
-        T.StructField("pattern", T.BinaryType(), False),
-        T.StructField("freq", T.LongType(), False),
-    ]
-)
-
-_MULTI_STATS_SCHEMA = T.StructType(
     [
         T.StructField("stream", T.StringType(), False),
         T.StructField("selector", T.IntegerType(), False),
@@ -62,8 +65,50 @@ _MULTI_STATS_SCHEMA = T.StructType(
 )
 
 
+class _Family:
+    """What the single and multi model families share. A family is
+    SELECTORS dictionaries per stream ("banks"), a rule that picks the
+    bank each block's patterns train, and one model-table row per entry
+    (SCHEMA; the single table has no selector column)."""
+
+    SELECTORS: int
+    SCHEMA: str
+
+    def entries(self) -> tuple[int, int]:
+        """(docs, freqs) dictionary entries."""
+        return tuple(sum(len(d) for d in self.banks(stream)) for stream in STREAMS)
+
+    def save(self, spark, path: str) -> None:
+        rows = []
+        for stream in STREAMS:
+            for sel, d in enumerate(self.banks(stream)):
+                for i in range(len(d)):
+                    pattern = d.matrix[i, : int(d.sizes[i])].tobytes()
+                    if self.SELECTORS == 1:
+                        rows.append((stream, RESERVED + i, pattern))
+                    else:
+                        rows.append((stream, sel, RESERVED + i, pattern))
+        df = spark.createDataFrame(rows, schema=self.SCHEMA)
+        df.coalesce(1).write.mode("overwrite").parquet(path)
+
+    @classmethod
+    def load(cls, spark, path: str):
+        per: dict[tuple[str, int], list[tuple[int, bytes]]] = {}
+        for r in spark.read.parquet(path).collect():
+            sel = r["selector"] if cls.SELECTORS > 1 else 0
+            per.setdefault((r["stream"], sel), []).append((r["codeword"], r["pattern"]))
+        banks: dict[str, list[DintDict]] = {}
+        for stream in STREAMS:
+            banks[stream] = []
+            for sel in range(cls.SELECTORS):
+                lst = sorted(per.get((stream, sel), []))
+                pats = [np.frombuffer(p, dtype=np.uint32) for _, p in lst]
+                banks[stream].append(DintDict.from_patterns(pats))
+        return cls.from_banks(banks)
+
+
 @dataclass
-class DintModel:
+class DintModel(_Family):
     """One dictionary per stream — the single_packed / dint model."""
 
     docs: DintDict
@@ -72,44 +117,24 @@ class DintModel:
     # build-lineage tokens (index/builder.py): a model of another family
     # or selection version is relearned, never loaded
     FAMILY, VERSION = "single", ""
+    SELECTORS = 1
+    SCHEMA = "stream string, codeword long, pattern binary"
+
+    @staticmethod
+    def selector(vals: np.ndarray) -> int:
+        """Every block, tails included, trains the one dictionary."""
+        return 0
+
+    def banks(self, stream: str) -> list[DintDict]:
+        return [getattr(self, stream)]
 
     @classmethod
-    def learn(cls, postings: DataFrame) -> "DintModel":
-        return learn_dint_model(postings)
-
-    def entries(self) -> tuple[int, int]:
-        """(docs, freqs) dictionary entries."""
-        return len(self.docs), len(self.freqs)
-
-    def save(self, spark, path: str) -> None:
-        rows = []
-        for stream, d in (("docs", self.docs), ("freqs", self.freqs)):
-            for i in range(len(d)):
-                s = int(d.sizes[i])
-                rows.append(
-                    (stream, RESERVED + i, d.matrix[i, :s].tobytes())
-                )
-        df = spark.createDataFrame(
-            rows, schema="stream string, codeword long, pattern binary"
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "DintModel":
-        rows = spark.read.parquet(path).collect()
-        per: dict[str, list[tuple[int, bytes]]] = {"docs": [], "freqs": []}
-        for r in rows:
-            per[r["stream"]].append((r["codeword"], r["pattern"]))
-        dicts = {}
-        for stream, lst in per.items():
-            lst.sort()
-            pats = [np.frombuffer(p, dtype=np.uint32) for _, p in lst]
-            dicts[stream] = DintDict.from_patterns(pats)
-        return cls(docs=dicts["docs"], freqs=dicts["freqs"])
+    def from_banks(cls, banks: dict) -> "DintModel":
+        return cls(docs=banks["docs"][0], freqs=banks["freqs"][0])
 
 
 @dataclass
-class MultiDintModel:
+class MultiDintModel(_Family):
     """NUM_SELECTORS dictionaries per stream — the multi_packed model
     (block_multi_statistics, block_statistics.hpp:171-258)."""
 
@@ -121,44 +146,23 @@ class MultiDintModel:
     # tie-break with head+tail derived from one ranking fetch — an
     # out_dir built under an older selection relearns and re-encodes
     FAMILY, VERSION = "multi", ":rb2"
+    SELECTORS = NUM_SELECTORS
+    SCHEMA = "stream string, selector int, codeword long, pattern binary"
+
+    @staticmethod
+    def selector(vals: np.ndarray) -> "int | None":
+        """A FULL block trains the dictionary of its selector context
+        (adjusted::collect(buf, block_maps), statistics_collectors.hpp:
+        90-107); a tail trains none — multi_packed encodes it with
+        interpolative coding, so it never consults a dictionary."""
+        return selector_code(vals) if vals.size == DINT_BLOCK_SIZE else None
+
+    def banks(self, stream: str) -> list[DintDict]:
+        return getattr(self, stream)
 
     @classmethod
-    def learn(cls, postings: DataFrame) -> "MultiDintModel":
-        return learn_multi_dint_model(postings)
-
-    def entries(self) -> tuple[int, int]:
-        return sum(len(d) for d in self.docs), sum(len(d) for d in self.freqs)
-
-    def save(self, spark, path: str) -> None:
-        rows = []
-        for stream, dicts in (("docs", self.docs), ("freqs", self.freqs)):
-            for sel, d in enumerate(dicts):
-                for i in range(len(d)):
-                    s = int(d.sizes[i])
-                    rows.append(
-                        (stream, sel, RESERVED + i, d.matrix[i, :s].tobytes())
-                    )
-        df = spark.createDataFrame(
-            rows,
-            schema="stream string, selector int, codeword long, pattern binary",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "MultiDintModel":
-        rows = spark.read.parquet(path).collect()
-        per: dict[tuple[str, int], list[tuple[int, bytes]]] = {}
-        for r in rows:
-            per.setdefault((r["stream"], r["selector"]), []).append(
-                (r["codeword"], r["pattern"])
-            )
-        out = {"docs": [], "freqs": []}
-        for stream in ("docs", "freqs"):
-            for sel in range(NUM_SELECTORS):
-                lst = sorted(per.get((stream, sel), []))
-                pats = [np.frombuffer(p, dtype=np.uint32) for _, p in lst]
-                out[stream].append(DintDict.from_patterns(pats))
-        return cls(docs=out["docs"], freqs=out["freqs"])
+    def from_banks(cls, banks: dict) -> "MultiDintModel":
+        return cls(docs=banks["docs"], freqs=banks["freqs"])
 
 
 def model_class(codec_name: str) -> "type[DintModel] | type[MultiDintModel] | None":
@@ -173,75 +177,50 @@ def model_class(codec_name: str) -> "type[DintModel] | type[MultiDintModel] | No
     return None
 
 
-def collect_pattern_stats(
-    postings: DataFrame, block_size: int = BLOCK_SIZE
-) -> DataFrame:
-    """(stream, pattern, freq) — globally aggregated sub-block pattern
-    frequencies for the docs-gap and freq−1 streams."""
-    data, _ = prepare_block_data(postings, block_size)
+def collect_pattern_stats(postings: DataFrame, selector) -> DataFrame:
+    """(stream, selector, pattern, freq) — globally aggregated sub-block
+    pattern frequencies of the docs-gap and freq−1 streams, each block
+    counted into the bank selector(block) picks (None: no bank)."""
+    data, _ = prepare_block_data(postings)
 
     def stats_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        docs_counter: dict[bytes, int] = {}
-        freqs_counter: dict[bytes, int] = {}
+        counters: dict[tuple[str, int], dict] = {}
         for _tid, _bid, _base, gaps, freqs in iter_block_arrays(batches):
-            extract_patterns(gaps, docs_counter)
-            extract_patterns(freqs, freqs_counter)
-        rows = [("docs", k, v) for k, v in docs_counter.items()] + [
-            ("freqs", k, v) for k, v in freqs_counter.items()
-        ]
-        if rows:
-            yield pd.DataFrame(rows, columns=["stream", "pattern", "freq"])
-
-    local = data.mapInPandas(stats_kernel, schema=_STATS_SCHEMA)
-    return local.groupBy("stream", "pattern").agg(F.sum("freq").alias("freq"))
-
-
-def collect_pattern_stats_multi(
-    postings: DataFrame, block_size: int = BLOCK_SIZE
-) -> DataFrame:
-    """(stream, selector, pattern, freq) — pattern frequencies partitioned
-    by the block's selector context (block_multi_statistics semantics:
-    only FULL blocks train dictionaries; tails go to interpolative)."""
-    data, _ = prepare_block_data(postings, block_size)
-
-    def stats_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        docs_counters: list[dict] = [{} for _ in range(NUM_SELECTORS)]
-        freqs_counters: list[dict] = [{} for _ in range(NUM_SELECTORS)]
-        for _tid, _bid, _base, gaps, freqs in iter_block_arrays(batches):
-            extract_patterns_multi(gaps, docs_counters)
-            extract_patterns_multi(freqs, freqs_counters)
+            for stream, vals in (("docs", gaps), ("freqs", freqs)):
+                sel = selector(vals)
+                if sel is not None:
+                    extract_patterns(vals, counters.setdefault((stream, sel), {}))
         rows = [
             (stream, sel, k, v)
-            for stream, counters in (("docs", docs_counters), ("freqs", freqs_counters))
-            for sel, counter in enumerate(counters)
+            for (stream, sel), counter in counters.items()
             for k, v in counter.items()
         ]
         if rows:
             yield pd.DataFrame(rows, columns=["stream", "selector", "pattern", "freq"])
 
-    local = data.mapInPandas(stats_kernel, schema=_MULTI_STATS_SCHEMA)
+    local = data.mapInPandas(stats_kernel, schema=_STATS_SCHEMA)
     return local.groupBy("stream", "selector", "pattern").agg(
         F.sum("freq").alias("freq")
     )
 
 
 def _ranked_candidates(
-    stats: DataFrame,
-    stream: str,
-    limit: int,
-    total_ints: int | None = None,
-    eps: float = 1e-9,
-    selector: int | None = None,
-) -> list[np.ndarray]:
-    """Cost-filtered candidates ranked by (freq DESC, size DESC), top
-    `limit` — the DSF order (freq_length_sorter). Distributed
-    TakeOrdered; driver sees ≤ limit rows."""
-    s = stats.filter(F.col("stream") == stream)
-    if selector is not None:
-        s = s.filter(F.col("selector") == selector)
+    stats: DataFrame, stream: str, selector: int, limit: int, total_ints: int
+) -> list[tuple[np.ndarray, int]]:
+    """DSF selection for one bank: cost filter (A4) then the top `limit`
+    (pattern, freq) by (freq DESC, size DESC) — the DSF order
+    (freq_length_sorter). Distributed TakeOrdered; driver sees ≤ limit
+    rows.
+
+    Cost model per dictionary_builders.hpp:15-38: a pattern saves
+    freq·(48·size − 16) bits (48 = assumed uncompressed bits/int, 16 =
+    codeword cost); keep it iff the saving fraction of the stream's total
+    exceeds EPS. Singletons are always kept (exception codes are dearer).
+    """
+    s = stats.filter((F.col("stream") == stream) & (F.col("selector") == selector))
     s = s.withColumn("size", (F.octet_length("pattern") / 4).cast("int"))
     if total_ints:
-        min_saving = eps * 48.0 * float(total_ints)
+        min_saving = EPS * 48.0 * float(total_ints)
         s = s.filter(
             (F.col("size") == 1)
             | (F.col("freq") * (48 * F.col("size") - 16) > F.lit(min_saving))
@@ -261,47 +240,31 @@ def _ranked_candidates(
     ]
 
 
-def select_dictionary(
-    stats: DataFrame,
-    stream: str,
-    capacity: int = NUM_ENTRIES - RESERVED,
-    total_ints: int | None = None,
-    eps: float = 1e-9,
-    selector: int | None = None,
-) -> list[np.ndarray]:
-    """DSF selection: cost filter (A4) then top-capacity by (freq, size).
-
-    Cost model per dictionary_builders.hpp:15-38: a pattern saves
-    freq·(48·size − 16) bits (48 = assumed uncompressed bits/int, 16 =
-    codeword cost); keep it iff the saving fraction of the stream's total
-    exceeds eps. Singletons are always kept (exception codes are dearer).
-    """
-    return [
-        p
-        for p, _f in _ranked_candidates(
-            stats, stream, capacity, total_ints, eps, selector
-        )
-    ]
-
-
 def learn_dint_model(
     postings: DataFrame,
+    model: "type[DintModel] | type[MultiDintModel]" = DintModel,
     capacity: int = NUM_ENTRIES - RESERVED,
-    block_size: int = BLOCK_SIZE,
-    eps: float = 1e-9,
-) -> DintModel:
-    """Two-dictionary model (docs gaps + freqs), one stats pass."""
+) -> "DintModel | MultiDintModel":
+    """Learn a model of `model`'s family (dict_freq_index builder; with
+    block_multi_statistics for the multi family) in one stats pass: each
+    bank takes its top-`capacity` DSF candidates, then _refill_banks
+    rebalances idle entries (a no-op with one bank). The DSF cost filter
+    uses the stream-global posting count, as the reference's filter
+    closes over total_integers (block_statistics.hpp:245-249)."""
     n_postings = postings.count()
-    stats = collect_pattern_stats(postings, block_size).cache()
+    stats = collect_pattern_stats(postings, model.selector).cache()
     try:
-        docs_pats = select_dictionary(stats, "docs", capacity, n_postings, eps)
-        freqs_pats = select_dictionary(stats, "freqs", capacity, n_postings, eps)
+        banks: dict[str, list[DintDict]] = {}
+        for stream in STREAMS:
+            per_sel = [
+                _ranked_candidates(stats, stream, sel, capacity, n_postings)
+                for sel in range(model.SELECTORS)
+            ]
+            pat_lists = _refill_banks(stats, stream, per_sel, capacity, n_postings)
+            banks[stream] = [DintDict.from_patterns(p) for p in pat_lists]
     finally:
         stats.unpersist()
-    return DintModel(
-        docs=DintDict.from_patterns(docs_pats),
-        freqs=DintDict.from_patterns(freqs_pats),
-    )
+    return model.from_banks(banks)
 
 
 def _refill_banks(
@@ -310,7 +273,6 @@ def _refill_banks(
     per_sel: "list[list[tuple[np.ndarray, int]]]",
     capacity: int,
     n_postings: int,
-    eps: float,
 ) -> "list[list[np.ndarray]]":
     """GLOBAL entry-budget rebalancing across the NUM_SELECTORS
     dictionaries (our extension past the reference's fixed 65,529 per
@@ -321,7 +283,7 @@ def _refill_banks(
     selectors 2-4 full, 0/1/5 at 486/8,965/0 → ~187k of 393k codeword
     slots idle). Because the multi encoder runs a TOURNAMENT — every
     block tries every dictionary at both codeword widths and the
-    smallest encoding wins (codecs/dint.py MultiPackedDint) — idle
+    smallest encoding wins (codecs/dint.py MultiDintCodec) — idle
     dictionaries can serve as EXTENDED BANKS for the saturated classes:
     each underfull dictionary keeps its own patterns and is topped up
     with a half-head/half-tail mix of a saturated selector's candidates
@@ -347,9 +309,7 @@ def _refill_banks(
     tail_saving: list[tuple[int, int]] = []
     out = [[p for p, _f in lst] for lst in per_sel]
     for s in sat:
-        ranked = _ranked_candidates(
-            stats, stream, 2 * capacity, n_postings, eps, selector=s
-        )
+        ranked = _ranked_candidates(stats, stream, s, 2 * capacity, n_postings)
         tails[s] = ranked
         out[s] = [p for p, _f in ranked[:capacity]]
         sv = sum(
@@ -418,42 +378,3 @@ def choose_packed_codec(n_postings: int, objective: str = "serve") -> str:
         if n_postings >= MULTI_PACKED_MIN_POSTINGS
         else "single_packed_dint"
     )
-
-
-def learn_multi_dint_model(
-    postings: DataFrame,
-    capacity: int = NUM_ENTRIES - RESERVED,
-    block_size: int = BLOCK_SIZE,
-    eps: float = 1e-9,
-    refill: bool = True,
-) -> MultiDintModel:
-    """2 × NUM_SELECTORS dictionaries, one selector-partitioned stats pass
-    (dict_freq_index builder with block_multi_statistics). The DSF cost
-    filter uses the stream-global posting count, as the reference's
-    filter closes over total_integers (block_statistics.hpp:245-249).
-
-    refill=True additionally rebalances idle codeword slots into
-    extended banks for the saturated selector classes (_refill_banks) —
-    a strict superset of the reference's per-selector selection;
-    refill=False reproduces the reference's allocation exactly."""
-    n_postings = postings.count()
-    stats = collect_pattern_stats_multi(postings, block_size).cache()
-    try:
-        dicts: dict[str, list[DintDict]] = {"docs": [], "freqs": []}
-        for stream in ("docs", "freqs"):
-            per_sel = [
-                _ranked_candidates(
-                    stats, stream, capacity, n_postings, eps, selector=sel
-                )
-                for sel in range(NUM_SELECTORS)
-            ]
-            if refill:
-                pat_lists = _refill_banks(
-                    stats, stream, per_sel, capacity, n_postings, eps
-                )
-            else:
-                pat_lists = [[p for p, _f in lst] for lst in per_sel]
-            dicts[stream] = [DintDict.from_patterns(p) for p in pat_lists]
-    finally:
-        stats.unpersist()
-    return MultiDintModel(docs=dicts["docs"], freqs=dicts["freqs"])

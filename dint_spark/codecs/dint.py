@@ -12,11 +12,20 @@ C++):
   405-408) when the codec is built with tail_fallback=True (the
   registry's index codecs; the raw kernel default is False so the
   codeword wire format stays directly testable);
+* one wire format, parameterized by the codeword width b ∈ {16, 8} (the
+  reference's single writer and reader, dint_codecs.hpp:285-509): a
+  stream of b-bit little-endian units; a pattern or run is one unit, an
+  exception is its code unit followed by the 16- or 32-bit value as b-bit
+  units (OPERAND_UNITS). single_packed writes the 16-bit stream, which
+  is also multi_packed's 16-bit payload. _ser writes a parse, _decode
+  reads one block, _decode_lockstep reads many blocks at once; a stream
+  cut inside an operand raises ValueError on every read path;
 * encode = greedy longest-run-then-longest-pattern-first parse
   (dint_codecs.hpp:52-139) or the optimal shortest-path parse
   (dint_codecs.hpp:141-283), with pattern matching VECTORIZED across
   positions (numpy void-dtype searchsorted over per-size sorted pattern
-  tables) so the per-block Python cost is the DP loop alone;
+  tables) so the per-block Python cost is the DP loop alone; either
+  parse is a list of (start, end, codeword) ops that _ser writes;
 * multi_packed (opt_dint_multi_dict_block, dint_codecs.hpp:285-509):
   6 selector-context dictionaries; each full block is encoded with all
   6 dictionaries × 2 codeword widths (16-bit and 8-bit) and the
@@ -24,9 +33,10 @@ C++):
   precedes the payload. The selector classifies a block by the
   bit-width class of its max value (statistics_collectors.hpp:21-40).
 
-The dictionaries are LEARNED in Spark (build/dint_build.py): a global
-pattern-frequency aggregation (two-pass per the north rule) followed by
-decreasing-static-frequency selection (DSF, dictionary_builders.hpp:40-77).
+The dictionaries are LEARNED in Spark (build/dint_build.py, one pass for
+both families): a global pattern-frequency aggregation (two-pass per the
+north rule) followed by decreasing-static-frequency selection (DSF,
+dictionary_builders.hpp:40-77).
 This module is the pure-numpy kernel layer used inside pandas UDFs.
 
 Storage-format note: the reference's packed/rectangular layouts
@@ -47,13 +57,21 @@ NUM_ENTRIES = 65536
 MAX_PATTERN = 16
 TARGET_SIZES = (16, 8, 4, 2, 1)
 RESERVED = 7
-EXC16 = 0  # next word = value (< 2^16)
-EXC32 = 1  # next two words = lo, hi
+EXC16 = 0  # followed by the value (< 2^16)
+EXC32 = 1  # followed by the value (< 2^32)
 RUN_CODES = {256: 2, 128: 3, 64: 4, 32: 5, 16: 6}
 RUN_SIZES = {2: 256, 3: 128, 4: 64, 5: 32, 6: 16}
 _RUN_ORDER = (256, 128, 64, 32, 16)
 DINT_BLOCK_SIZE = 256  # constants::block_size (dint_configuration.hpp:23)
 NUM_SELECTORS = 6  # dint_configuration.hpp:20
+# codeword width in bits → the stream's unit dtype, and the units of the
+# value that follows an exception codeword (indexed by EXC16 = 0 and
+# EXC32 = 1): the value is stored as little-endian units
+UNIT_DTYPE = {16: np.dtype("<u2"), 8: np.dtype("u1")}
+OPERAND_UNITS = {16: (1, 2), 8: (2, 4)}
+# zero bytes after the last block of a lockstep batch: a cut final operand
+# reads them and is refused by the post-hoc check instead of indexing out
+_PAD = bytes(4)
 
 
 def ceil_log2(x: int) -> int:
@@ -159,8 +177,8 @@ def _optimal_ops(
     exc32 = 3 — the reference's node costs); cw_limit restricts usable
     codewords (the 8-bit width uses only codewords < 256,
     builder.lookup(..., b) in dint_codecs.hpp:333). Returns
-    [(start, end, code)] where code ≥ 0 is the emitted codeword and
-    −16/−32 mark exceptions.
+    [(start, end, code)] where code is the emitted codeword: EXC16 or
+    EXC32 for an exception, a run code or a pattern codeword otherwise.
     """
     n = v.size
     INF = 1 << 30
@@ -182,9 +200,9 @@ def _optimal_ops(
     for i in range(n - 1, -1, -1):
         # exception edge (always available)
         if vl[i] < 65536:
-            best, bn, bc = 2 + cost[i + 1], i + 1, -16
+            best, bn, bc = 2 + cost[i + 1], i + 1, EXC16
         else:
-            best, bn, bc = 3 + cost[i + 1], i + 1, -32
+            best, bn, bc = 3 + cost[i + 1], i + 1, EXC32
         # pattern edges
         for s, arr in cwl:
             j = i + s
@@ -214,98 +232,56 @@ def _optimal_ops(
     return ops
 
 
-def _ser_words(ops: list, v: np.ndarray) -> bytes:
-    """u16 codeword stream (single_packed wire format == multi b=16
-    payload: exceptions are a u16 code + 2/4 little-endian value bytes)."""
+def _ser(ops: list, v: np.ndarray, width: int) -> bytes:
+    """Write a parse as a codeword stream of `width`-bit units (the write
+    path of dint_codecs.hpp:379-397 with b = width). A pattern or run is
+    one unit; an exception is its code unit, then the value v[start] as
+    OPERAND_UNITS little-endian units. An 8-bit parse only uses codewords
+    < 256 (_optimal_ops' cw_limit)."""
+    mask = (1 << width) - 1
     out: list[int] = []
     for i, _j, c in ops:
-        if c == -16:
-            out.append(EXC16)
-            out.append(int(v[i]))
-        elif c == -32:
+        out.append(c)
+        if c <= EXC32:
             x = int(v[i])
-            out.append(EXC32)
-            out.append(x & 0xFFFF)
-            out.append(x >> 16)
-        else:
-            out.append(c)
-    return np.asarray(out, dtype=np.uint16).tobytes()
+            for u in range(OPERAND_UNITS[width][c]):
+                out.append((x >> (width * u)) & mask)
+    return np.asarray(out, dtype=UNIT_DTYPE[width]).tobytes()
 
 
-def _ser_bytes(ops: list, v: np.ndarray) -> bytes:
-    """1-byte codeword stream (multi b=8 payload,
-    dint_codecs.hpp:379-397 write path with b=8)."""
-    out = bytearray()
-    for i, _j, c in ops:
-        if c == -16:
-            out.append(0)
-            out += int(v[i]).to_bytes(2, "little")
-        elif c == -32:
-            out.append(1)
-            out += int(v[i]).to_bytes(4, "little")
-        else:
-            out.append(c)  # < 256 guaranteed by cw_limit
-    return bytes(out)
-
-
-def _decode_words(buf: bytes, n: int, matrix: np.ndarray, sizes: np.ndarray) -> np.ndarray:
-    cws = np.frombuffer(buf, dtype=np.uint16)
+def _decode(buf: bytes, n: int, d: DintDict, width: int) -> np.ndarray:
+    """Read one block's codeword stream of `width`-bit units → n values."""
+    size = UNIT_DTYPE[width].itemsize
+    if len(buf) % size:
+        raise ValueError("dint: truncated codeword stream (partial unit)")
+    units = np.frombuffer(buf, dtype=UNIT_DTYPE[width]).tolist()
+    operands = OPERAND_UNITS[width]
+    matrix, sizes = d.matrix, d.sizes
     out = np.zeros(n, dtype=np.uint32)
     pos = 0
     j = 0
-    m = cws.size
+    m = len(units)
     while pos < n:
         if j >= m:
             raise ValueError("dint: truncated codeword stream")
-        c = int(cws[j])
+        c = units[j]
         j += 1
         if c >= RESERVED:
             k = c - RESERVED
             s = int(sizes[k])
             out[pos : pos + s] = matrix[k, :s]
             pos += s
-        elif c == EXC16:
-            out[pos] = cws[j]
-            j += 1
-            pos += 1
-        elif c == EXC32:
-            out[pos] = int(cws[j]) | (int(cws[j + 1]) << 16)
-            j += 2
+        elif c <= EXC32:
+            w = operands[c]
+            if j + w > m:
+                raise ValueError("dint: truncated codeword stream")
+            out[pos] = int.from_bytes(buf[j * size : (j + w) * size], "little")
+            j += w
             pos += 1
         else:  # zero run — out already zeroed
             pos += RUN_SIZES[c]
     if pos != n:
         raise ValueError(f"dint: decoded {pos}, expected {n}")
-    return out
-
-
-def _decode_bytes(buf: bytes, n: int, matrix: np.ndarray, sizes: np.ndarray) -> np.ndarray:
-    out = np.zeros(n, dtype=np.uint32)
-    pos = 0
-    j = 0
-    m = len(buf)
-    while pos < n:
-        if j >= m:
-            raise ValueError("dint8: truncated codeword stream")
-        c = buf[j]
-        j += 1
-        if c >= RESERVED:
-            k = c - RESERVED
-            s = int(sizes[k])
-            out[pos : pos + s] = matrix[k, :s]
-            pos += s
-        elif c == EXC16:
-            out[pos] = int.from_bytes(buf[j : j + 2], "little")
-            j += 2
-            pos += 1
-        elif c == EXC32:
-            out[pos] = int.from_bytes(buf[j : j + 4], "little")
-            j += 4
-            pos += 1
-        else:
-            pos += RUN_SIZES[c]
-    if pos != n:
-        raise ValueError(f"dint8: decoded {pos}, expected {n}")
     return out
 
 
@@ -321,6 +297,7 @@ class DintCodec:
     mode="greedy" — longest-run-then-longest-pattern-first
     (dint_codecs.hpp:52-139); mode="optimal" — shortest-path DP over
     codeword costs (the reference's optimal parse, dint_codecs.hpp:141-283).
+    Either parse is written as the 16-bit codeword stream.
     tail_fallback=True adds the reference's interpolative coding for
     blocks < 256 ints (dint_codecs.hpp:161-164); the registry's index
     codecs enable it, the raw kernel default keeps pure codeword streams
@@ -347,7 +324,7 @@ class DintCodec:
         v = np.asarray(vals, dtype=np.uint32)
         n = v.size
         lookup = self.dict.lookup
-        out: list[int] = []
+        ops: list[tuple[int, int, int]] = []
         zrun = _zrun(v)
         i = 0
         while i < n:
@@ -355,76 +332,40 @@ class DintCodec:
             if z >= 16:
                 for size in _RUN_ORDER:
                     while z >= size:
-                        out.append(RUN_CODES[size])
+                        ops.append((i, i + size, RUN_CODES[size]))
                         i += size
                         z -= size
                 continue
-            matched = False
-            for s in (16, 8, 4, 2):
-                if i + s <= n:
-                    cw = lookup.get(v[i : i + s].tobytes())
-                    if cw is not None:
-                        out.append(cw)
-                        i += s
-                        matched = True
-                        break
-            if matched:
-                continue
-            cw = lookup.get(v[i : i + 1].tobytes())
-            if cw is not None:
-                out.append(cw)
+            for s in TARGET_SIZES:
+                cw = lookup.get(v[i : i + s].tobytes()) if i + s <= n else None
+                if cw is not None:
+                    ops.append((i, i + s, cw))
+                    i += s
+                    break
             else:
-                x = int(v[i])
-                if x < 65536:
-                    out.append(EXC16)
-                    out.append(x)
-                else:
-                    out.append(EXC32)
-                    out.append(x & 0xFFFF)
-                    out.append(x >> 16)
-            i += 1
-        return np.asarray(out, dtype=np.uint16).tobytes()
+                ops.append((i, i + 1, EXC16 if v[i] < 65536 else EXC32))
+                i += 1
+        return _ser(ops, v, 16)
 
     def encode_optimal(self, vals: np.ndarray) -> bytes:
         v = np.asarray(vals, dtype=np.uint32)
         ops = _optimal_ops(v, self.dict.match_codewords(v), _zrun(v), None)
-        return _ser_words(ops, v)
+        return _ser(ops, v, 16)
 
     def decode(self, buf: bytes, n: int) -> np.ndarray:
         if self.tail_fallback and n < DINT_BLOCK_SIZE:
             return np.asarray(_interp().decode(buf, n), dtype=np.uint32)
-        return _decode_words(buf, n, self.dict.matrix, self.dict.sizes)
+        return _decode(buf, n, self.dict, 16)
 
     def decode_batch(
         self, bufs: list[bytes], ns: np.ndarray
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Vectorized lockstep decode of many blocks → (flat, offsets).
-        Full blocks decode in whole-batch numpy lockstep; interpolative
-        tails (short by construction) decode per block."""
-        ns = np.asarray(ns, dtype=np.int64)
-        if self.tail_fallback:
-            full = np.flatnonzero(ns >= DINT_BLOCK_SIZE)
-            tail = np.flatnonzero(ns < DINT_BLOCK_SIZE)
-        else:
-            full = np.arange(len(bufs))
-            tail = np.empty(0, dtype=np.int64)
-        parts = []
-        if full.size:
-            f_flat, _ = _decode_words_lockstep(
-                [bufs[i] for i in full], ns[full], self.dict.matrix, self.dict.sizes
-            )
-            parts.append((full, f_flat, ns[full]))
-        if tail.size:
-            interp = _interp()
-            t_flat = (
-                np.concatenate(
-                    [np.asarray(interp.decode(bufs[i], int(ns[i])), dtype=np.uint32) for i in tail]
-                )
-                if tail.size
-                else np.empty(0, dtype=np.uint32)
-            )
-            parts.append((tail, t_flat, ns[tail]))
-        return _merge_subsets(ns, parts)
+        """Many blocks → (flat, offsets); every codeword stream in one
+        lockstep pass."""
+        return _decode_blocks(bufs, ns, self.tail_fallback, self._groups)
+
+    def _groups(self, bufs: list[bytes]):
+        return [(slice(None), bufs, self.dict, 16)]
 
 
 class MultiDintCodec:
@@ -455,8 +396,8 @@ class MultiDintCodec:
         best_ctrl = 0
         for s, d in enumerate(self.dicts):
             cw = d.match_codewords(v)
-            p16 = _ser_words(_optimal_ops(v, cw, zr, None), v)
-            p8 = _ser_bytes(_optimal_ops(v, cw, zr, 256), v)
+            p16 = _ser(_optimal_ops(v, cw, zr, None), v, 16)
+            p8 = _ser(_optimal_ops(v, cw, zr, 256), v, 8)
             # per-dict: prefer 8-bit on ties (reference :418-423)
             if len(p8) <= len(p16):
                 sz, ctrl, payload = len(p8), s + NUM_SELECTORS, p8
@@ -469,41 +410,56 @@ class MultiDintCodec:
     def decode(self, buf: bytes, n: int) -> np.ndarray:
         if n < DINT_BLOCK_SIZE:
             return np.asarray(_interp().decode(buf, n), dtype=np.uint32)
-        ctrl = buf[0]
-        if ctrl < NUM_SELECTORS:
-            d = self.dicts[ctrl]
-            return _decode_words(buf[1:], n, d.matrix, d.sizes)
-        d = self.dicts[ctrl - NUM_SELECTORS]
-        return _decode_bytes(buf[1:], n, d.matrix, d.sizes)
+        return _decode(buf[1:], n, *self._route(buf[0]))
 
     def decode_batch(
         self, bufs: list[bytes], ns: np.ndarray
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Lockstep decode grouped by control byte (dictionary × width);
-        interpolative tails per block."""
-        ns = np.asarray(ns, dtype=np.int64)
-        parts = []
-        tail = np.flatnonzero(ns < DINT_BLOCK_SIZE)
-        if tail.size:
-            interp = _interp()
-            t_flat = np.concatenate(
-                [np.asarray(interp.decode(bufs[i], int(ns[i])), dtype=np.uint32) for i in tail]
-            )
-            parts.append((tail, t_flat, ns[tail]))
-        full = np.flatnonzero(ns >= DINT_BLOCK_SIZE)
-        if full.size:
-            ctrls = np.fromiter((bufs[i][0] for i in full), dtype=np.int64, count=full.size)
-            for ctrl in np.unique(ctrls):
-                grp = full[ctrls == ctrl]
-                payloads = [bufs[i][1:] for i in grp]
-                if ctrl < NUM_SELECTORS:
-                    d = self.dicts[int(ctrl)]
-                    g_flat, _ = _decode_words_lockstep(payloads, ns[grp], d.matrix, d.sizes)
-                else:
-                    d = self.dicts[int(ctrl) - NUM_SELECTORS]
-                    g_flat, _ = _decode_bytes_lockstep(payloads, ns[grp], d.matrix, d.sizes)
-                parts.append((grp, g_flat, ns[grp]))
-        return _merge_subsets(ns, parts)
+        """Many blocks → (flat, offsets); one lockstep pass per control
+        byte (dictionary × width)."""
+        return _decode_blocks(bufs, ns, True, self._groups)
+
+    def _route(self, ctrl: int) -> tuple[DintDict, int]:
+        """Control byte → (dictionary, codeword width)."""
+        if ctrl >= 2 * NUM_SELECTORS:
+            raise ValueError(f"multi dint: bad control byte {ctrl}")
+        if ctrl < NUM_SELECTORS:
+            return self.dicts[ctrl], 16
+        return self.dicts[ctrl - NUM_SELECTORS], 8
+
+    def _groups(self, bufs: list[bytes]):
+        ctrls = np.fromiter((b[0] for b in bufs), dtype=np.int64, count=len(bufs))
+        for ctrl in np.unique(ctrls):
+            sel = np.flatnonzero(ctrls == ctrl)
+            yield (sel, [bufs[i][1:] for i in sel], *self._route(int(ctrl)))
+
+
+def _decode_blocks(
+    bufs: list[bytes], ns: np.ndarray, tails: bool, groups
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode many blocks → (flat, offsets) in block order; block b's
+    values are flat[offsets[b]:offsets[b]+ns[b]]. With `tails`, blocks
+    shorter than DINT_BLOCK_SIZE are interpolative payloads (short by
+    construction) decoded one by one. groups(full blocks' bufs) yields
+    (positions, payloads, dictionary, width) per stream kind, and each
+    kind decodes in one lockstep pass."""
+    ns = np.asarray(ns, dtype=np.int64)
+    is_tail = ns < DINT_BLOCK_SIZE if tails else np.zeros(ns.size, dtype=bool)
+    tail = np.flatnonzero(is_tail)
+    full = np.flatnonzero(~is_tail)
+    parts = []
+    if tail.size:
+        interp = _interp()
+        t_flat = np.concatenate(
+            [np.asarray(interp.decode(bufs[i], int(ns[i])), dtype=np.uint32) for i in tail]
+        )
+        parts.append((tail, t_flat, ns[tail]))
+    if full.size:
+        for sel, payloads, d, width in groups([bufs[i] for i in full]):
+            idx = full[sel]
+            g_flat, _ = _decode_lockstep(payloads, ns[idx], d, width)
+            parts.append((idx, g_flat, ns[idx]))
+    return _merge_subsets(ns, parts)
 
 
 def extract_patterns(vals: np.ndarray, counter: dict) -> None:
@@ -531,22 +487,11 @@ def extract_patterns(vals: np.ndarray, counter: dict) -> None:
             counter[key] = counter.get(key, 0) + 1
 
 
-def extract_patterns_multi(vals: np.ndarray, counters: list[dict]) -> None:
-    """Selector-partitioned pattern statistics
-    (adjusted::collect(buf, block_maps), statistics_collectors.hpp:90-107):
-    the FULL block's patterns are counted into the map of its selector
-    context. Partial blocks are skipped — multi_packed encodes them with
-    interpolative coding, so they never consult a dictionary."""
-    v = np.asarray(vals, dtype=np.uint32)
-    if v.size != DINT_BLOCK_SIZE:
-        return
-    extract_patterns(v, counters[selector_code(v)])
-
-
-def _decode_words_lockstep(
-    bufs: list[bytes], ns: np.ndarray, matrix: np.ndarray, sizes: np.ndarray
+def _decode_lockstep(
+    bufs: list[bytes], ns: np.ndarray, d: DintDict, width: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batch decode of MANY u16 codeword streams in vectorized lockstep.
+    """Batch decode of MANY codeword streams of `width`-bit units, in
+    vectorized lockstep.
 
     The per-block decoder walks codewords in a Python loop (~1 µs each —
     the engine's hottest path: every WAND/MaxScore rescore and the decode
@@ -560,19 +505,24 @@ def _decode_words_lockstep(
     nb = len(bufs)
     if nb == 0:
         return np.empty(0, dtype=np.uint32), np.zeros(0, dtype=np.int64)
-    lens = np.fromiter((len(b) // 2 for b in bufs), dtype=np.int64, count=nb)
+    size = UNIT_DTYPE[width].itemsize
+    nbytes = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=nb)
+    if (nbytes % size).any():
+        raise ValueError("dint: truncated codeword stream (partial unit)")
+    lens = nbytes // size
     starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    cws = np.frombuffer(b"".join(bufs), dtype="<u2").astype(np.int64)
+    cws = np.frombuffer(b"".join([*bufs, _PAD]), dtype=UNIT_DTYPE[width]).astype(np.int64)
     ns = np.asarray(ns, dtype=np.int64)
     out_off = np.concatenate(([0], np.cumsum(ns)[:-1]))
     out = np.zeros(int(ns.sum()), dtype=np.uint32)
+    matrix, sizes = d.matrix, d.sizes
 
     j = np.zeros(nb, dtype=np.int64)  # codeword cursor per block
     pos = np.zeros(nb, dtype=np.int64)  # output cursor per block
     active = pos < ns
     run_sizes = np.zeros(RESERVED, dtype=np.int64)
-    for code, size in RUN_SIZES.items():
-        run_sizes[code] = size
+    for code, run in RUN_SIZES.items():
+        run_sizes[code] = run
     while active.any():
         ai = np.flatnonzero(active)
         if (j[ai] >= lens[ai]).any():
@@ -593,21 +543,17 @@ def _decode_words_lockstep(
             pos[pi] += s
             j[pi] += 1
 
-        e16 = c == EXC16
-        if e16.any():
-            ei = ai[e16]
-            out[out_off[ei] + pos[ei]] = cws[starts[ei] + j[ei] + 1].astype(np.uint32)
-            pos[ei] += 1
-            j[ei] += 2
-
-        e32 = c == EXC32
-        if e32.any():
-            ei = ai[e32]
-            lo = cws[starts[ei] + j[ei] + 1]
-            hi = cws[starts[ei] + j[ei] + 2]
-            out[out_off[ei] + pos[ei]] = (lo | (hi << 16)).astype(np.uint32)
-            pos[ei] += 1
-            j[ei] += 3
+        for exc in (EXC16, EXC32):
+            e = c == exc
+            if e.any():
+                ei = ai[e]
+                p = starts[ei] + j[ei] + 1
+                x = cws[p]
+                for u in range(1, OPERAND_UNITS[width][exc]):
+                    x = x | (cws[p + u] << (width * u))
+                out[out_off[ei] + pos[ei]] = x.astype(np.uint32)
+                pos[ei] += 1
+                j[ei] += 1 + OPERAND_UNITS[width][exc]
 
         run = (~pat) & (c > EXC32)
         if run.any():
@@ -617,93 +563,15 @@ def _decode_words_lockstep(
 
         active = pos < ns
     # truncation check, POST-HOC (zero hot-loop cost): an exception
-    # codeword whose operands ran past its block advances j beyond lens
-    # (+2/+3 from ≤ lens−1), so any cross-block operand read — which
-    # would have returned the NEXT block's words, buffers being
-    # concatenated — is detected here and raised like the scalar
-    # decoder does. Per-iteration operand checks measured ~45% decode
-    # slowdown on the lockstep hot loop.
+    # codeword whose operands ran past its block advances j beyond lens,
+    # so an operand read from the NEXT block's units (buffers being
+    # concatenated) or from the zero pad after the last block is refused
+    # here, as the scalar decoder refuses it. Per-iteration operand
+    # checks measured ~45% decode slowdown on the lockstep hot loop.
     if (j > lens).any():
         raise ValueError("dint: truncated codeword stream")
     if (pos != ns).any():
         raise ValueError("dint: batch decode length mismatch")
-    return out, out_off
-
-
-def _decode_bytes_lockstep(
-    bufs: list[bytes], ns: np.ndarray, matrix: np.ndarray, sizes: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Byte-width twin of _decode_words_lockstep (multi_packed b=8
-    payloads: 1-byte codewords, exceptions carry 2/4 little-endian value
-    bytes)."""
-    nb = len(bufs)
-    if nb == 0:
-        return np.empty(0, dtype=np.uint32), np.zeros(0, dtype=np.int64)
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=nb)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    raw = np.frombuffer(b"".join(bufs), dtype=np.uint8).astype(np.int64)
-    ns = np.asarray(ns, dtype=np.int64)
-    out_off = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    out = np.zeros(int(ns.sum()), dtype=np.uint32)
-
-    j = np.zeros(nb, dtype=np.int64)
-    pos = np.zeros(nb, dtype=np.int64)
-    active = pos < ns
-    run_sizes = np.zeros(RESERVED, dtype=np.int64)
-    for code, size in RUN_SIZES.items():
-        run_sizes[code] = size
-    while active.any():
-        ai = np.flatnonzero(active)
-        if (j[ai] >= lens[ai]).any():
-            raise ValueError("dint8: truncated codeword stream")
-        c = raw[starts[ai] + j[ai]]
-
-        pat = c >= RESERVED
-        if pat.any():
-            pi = ai[pat]
-            k = c[pat] - RESERVED
-            s = sizes[k].astype(np.int64)
-            base = out_off[pi] + pos[pi]
-            for col in range(MAX_PATTERN):
-                m = s > col
-                if not m.any():
-                    break
-                out[base[m] + col] = matrix[k[m], col]
-            pos[pi] += s
-            j[pi] += 1
-
-        e16 = c == EXC16
-        if e16.any():
-            ei = ai[e16]
-            p = starts[ei] + j[ei]
-            out[out_off[ei] + pos[ei]] = (raw[p + 1] | (raw[p + 2] << 8)).astype(
-                np.uint32
-            )
-            pos[ei] += 1
-            j[ei] += 3
-
-        e32 = c == EXC32
-        if e32.any():
-            ei = ai[e32]
-            p = starts[ei] + j[ei]
-            out[out_off[ei] + pos[ei]] = (
-                raw[p + 1] | (raw[p + 2] << 8) | (raw[p + 3] << 16) | (raw[p + 4] << 24)
-            ).astype(np.uint32)
-            pos[ei] += 1
-            j[ei] += 5
-
-        run = (~pat) & (c > EXC32)
-        if run.any():
-            ri = ai[run]
-            pos[ri] += run_sizes[c[run]]
-            j[ri] += 1
-
-        active = pos < ns
-    # post-hoc truncation check — see the u16 twin for the argument
-    if (j > lens).any():
-        raise ValueError("dint8: truncated codeword stream")
-    if (pos != ns).any():
-        raise ValueError("dint8: batch decode length mismatch")
     return out, out_off
 
 

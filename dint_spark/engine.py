@@ -46,12 +46,13 @@ def get_block_index(spark: SparkSession, sf_dir: str, codec_name: str = "single_
 
     def build():
         from dint_spark.build.blocks import build_block_index
-        from dint_spark.build.dint_build import model_class
+        from dint_spark.build.dint_build import learn_dint_model, model_class
         from dint_spark.codecs.registry import get_codec
 
         idx = get_index(spark, sf_dir)
         cls = model_class(codec_name)
-        model = cls.learn(idx.postings.select("term_id", "doc_id", "tf")) if cls else None
+        postings = idx.postings.select("term_id", "doc_id", "tf")
+        model = learn_dint_model(postings, cls) if cls else None
         codec = get_codec(codec_name, model)
         return materialize(build_block_index(idx.postings, codec)), codec
 
@@ -113,7 +114,7 @@ def get_index_stats(
     Each DINT model family is learned once.
     """
     from dint_spark.build.blocks import build_block_index, index_stats, prepare_block_data
-    from dint_spark.build.dint_build import model_class
+    from dint_spark.build.dint_build import learn_dint_model, model_class
     from dint_spark.codecs.registry import get_codec
 
     idx = get_index(spark, sf_dir)
@@ -126,7 +127,7 @@ def get_index_stats(
     for name in codec_names:
         cls = model_class(name)
         if cls is not None and cls not in models:
-            models[cls] = cls.learn(idx.postings.select("term_id", "doc_id", "tf"))
+            models[cls] = learn_dint_model(idx.postings.select("term_id", "doc_id", "tf"), cls)
         codec = get_codec(name, models.get(cls))
         bidx = build_block_index(postings, codec, prepared=(data, meta))
         outs.append(index_stats(bidx).withColumn("codec", F.lit(name)))

@@ -32,7 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dint_spark.build.blocks import build_block_index, decode_block_index, index_stats
-from dint_spark.build.dint_build import choose_packed_codec, model_class
+from dint_spark.build.dint_build import choose_packed_codec, learn_dint_model, model_class
 from dint_spark.build.postings import build_fulltext_index
 from dint_spark.codecs.registry import get_codec
 from dint_spark.corpus import with_doc_ids
@@ -179,7 +179,7 @@ class IndexBuilder:
             fp_model = f"{fp_postings}:{cls.FAMILY}{cls.VERSION}"
             if not self._stage_done("model", fp_model):
                 t0 = time.time()
-                model = cls.learn(postings.select("term_id", "doc_id", "tf"))
+                model = learn_dint_model(postings.select("term_id", "doc_id", "tf"), cls)
                 model.save(self.spark, self._table("dint_model"))
                 docs_entries, freqs_entries = model.entries()
                 self._write_lineage(

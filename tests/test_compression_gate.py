@@ -73,8 +73,8 @@ def test_single_packed_bpi_within_tolerance(spark, gate_setup):
 def test_multi_packed_never_worse_than_single_plus_control(spark, gate_setup):
     """multi ≤ single + control byte EVERYWHERE: the tournament tries
     every dictionary, so the worst case is single's encoding behind a
-    1-byte selector (codecs/dint.py MultiPackedDint)."""
-    from dint_spark.build.dint_build import learn_dint_model, learn_multi_dint_model
+    1-byte selector (codecs/dint.py MultiDintCodec)."""
+    from dint_spark.build.dint_build import MultiDintModel, learn_dint_model
     from dint_spark.codecs.registry import get_codec
 
     idx = gate_setup
@@ -83,7 +83,7 @@ def test_multi_packed_never_worse_than_single_plus_control(spark, gate_setup):
         idx, get_codec("single_packed_dint", learn_dint_model(postings))
     )
     m_docs, m_freqs, _ = _bpi(
-        idx, get_codec("multi_packed_dint", learn_multi_dint_model(postings))
+        idx, get_codec("multi_packed_dint", learn_dint_model(postings, MultiDintModel))
     )
     assert m_docs <= s_docs + CTRL_OVERHEAD, (m_docs, s_docs)
     assert m_freqs <= s_freqs + CTRL_OVERHEAD, (m_freqs, s_freqs)

@@ -180,14 +180,10 @@ def test_dint_tail_fallback_interpolative():
 @pytest.mark.usefixtures("spark")
 def test_multi_learned_model_roundtrip(spark, random_postings):
     from dint_spark.build.blocks import build_block_index, decode_block_index, index_stats
-    from dint_spark.build.dint_build import (
-        MultiDintModel,
-        learn_dint_model,
-        learn_multi_dint_model,
-    )
+    from dint_spark.build.dint_build import MultiDintModel, learn_dint_model
     from dint_spark.codecs.registry import get_codec
 
-    model = learn_multi_dint_model(random_postings, capacity=4096)
+    model = learn_dint_model(random_postings, MultiDintModel, capacity=4096)
     assert sum(len(d) for d in model.docs) > 0
 
     codec = get_codec("multi_packed_dint", model)

@@ -30,7 +30,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from dint_spark.build.blocks import build_block_index, index_stats, prepare_block_data
-    from dint_spark.build.dint_build import learn_dint_model, learn_multi_dint_model
+    from dint_spark.build.dint_build import MultiDintModel, learn_dint_model
     from dint_spark.codecs.dint import NUM_SELECTORS, RESERVED
     from dint_spark.codecs.registry import get_codec
     from dint_spark.session import get_spark
@@ -52,7 +52,7 @@ def main() -> None:
     postings = idx.postings.select("term_id", "doc_id", "tf")
 
     single = learn_dint_model(postings)
-    multi = learn_multi_dint_model(postings)
+    multi = learn_dint_model(postings, MultiDintModel)
 
     data, meta = prepare_block_data(idx.postings.select("term_id", "doc_id", "tf", "norm_len"))
     data, meta = materialize(data), materialize(meta)
