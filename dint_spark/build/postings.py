@@ -10,8 +10,8 @@ This is the Spark re-creation of the ds2i data model (SURVEY.md §1):
   vocab(term, term_id, df)                 — term-ids are dense ordinals
       (dict_freq_index.hpp:174); we order lexicographically (deterministic
       and oracle-reproducible).
-  term_meta(term_id, df, max_weight, w10)  — wand_data max_term_weight
-      (wand_data.hpp:34-49).
+  term_meta(term_id, term, df, max_weight, w10) — wand_data
+      max_term_weight (wand_data.hpp:34-49); also the query-term catalog.
 
 Scale notes (10^12-doc design):
 * postings comes from ONE shuffle: groupBy(term, doc_id) with map-side
@@ -49,7 +49,7 @@ class FullTextIndex:
     postings: DataFrame  # term, term_id, doc_id, tf [, norm_len]
     docs: DataFrame      # doc_id, doc_len, norm_len
     vocab: DataFrame     # term, term_id, df
-    term_meta: DataFrame # term_id, df, max_weight, w10
+    term_meta: DataFrame # term_id, term, df, max_weight, w10
     num_docs: int
     avgdl: float
 
@@ -117,7 +117,10 @@ def build_term_meta(
     bucket_bits: int = 16,
     merge_bits: int = 12,
 ) -> DataFrame:
-    """term_meta(term_id, df, max_weight, w10) — wand_data.hpp:34-49.
+    """term_meta(term_id, term, df, max_weight, w10) — wand_data.hpp:34-49.
+
+    postings must carry `term`; it rides the group keys, so term_meta is
+    also the serving catalog (operators/wand.py query_bounds).
 
     max_weight = max over the posting list of the BM25 doc-side weight;
     it UPPER-bounds any doc's contribution for the term (the WAND bound).
@@ -140,7 +143,7 @@ def build_term_meta(
     K = TOPK_BOUND_K
     lvl1 = (
         p.withColumn("_b1", F.shiftrightunsigned("doc_id", bucket_bits))
-        .groupBy("term_id", "_b1")
+        .groupBy("term_id", "term", "_b1")
         .agg(
             F.count("*").alias("_n"),
             F.max(dtw).alias("_mx"),
@@ -149,7 +152,7 @@ def build_term_meta(
     )
     lvl2 = (
         lvl1.withColumn("_b2", F.shiftrightunsigned("_b1", merge_bits))
-        .groupBy("term_id", "_b2")
+        .groupBy("term_id", "term", "_b2")
         .agg(
             F.sum("_n").alias("_n"),
             F.max("_mx").alias("_mx"),
@@ -158,7 +161,7 @@ def build_term_meta(
             ).alias("_t"),
         )
     )
-    return lvl2.groupBy("term_id").agg(
+    return lvl2.groupBy("term_id", "term").agg(
         F.sum("_n").cast("long").alias("df"),
         F.max("_mx").alias("max_weight"),
         F.get(

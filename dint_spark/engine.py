@@ -20,21 +20,15 @@ from dint_spark.util import materialize, memo
 
 
 def get_index(spark: SparkSession, sf_dir: str) -> FullTextIndex:
+    """The relational index of sf_dir's documents table. Its term_meta
+    carries the term, so it is also the serving catalog that resolves
+    query terms in one join (wand.query_bounds)."""
+
     def build():
         docs_tbl = load_table(spark, sf_dir, "documents")
-        idx = build_fulltext_index(
+        return build_fulltext_index(
             tokenize_words(docs_tbl, text_col="text", doc_id_col="doc_id")
         )
-        # pre-merged vocab⋈term_meta (term, term_id, df, max_weight, w10):
-        # the serving metadata join (wand_shard._qt_meta) then pays ONE
-        # broadcast build per batch instead of two. An index artifact —
-        # one tiny build-time join, term_meta-sized.
-        idx.term_catalog = materialize(
-            idx.vocab.join(
-                idx.term_meta.select("term_id", "max_weight", "w10"), "term_id"
-            ).select("term", "term_id", "df", "max_weight", "w10")
-        )
-        return idx
 
     return memo(spark, ("index", sf_dir), build)
 

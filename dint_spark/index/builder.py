@@ -93,13 +93,14 @@ class IndexBuilder:
         """Run (or resume) the full build. Returns summary metrics."""
         t_all = time.time()
         fp_corpus = _fingerprint(corpus, ["content_sha256"] if "content_sha256" in corpus.columns else corpus.columns[:2])
-        # Schema-version token (":pv2" = term_meta gained w10): an out_dir
-        # written before a postings-stage schema change must RECOMPUTE,
-        # not resume — else downstream consumers (wand_topk's w10 select)
-        # hit AnalysisException on the stale parquet. Same stale-resume
-        # class the ":v2"/model-family tokens below prevent for
-        # index/model stages.
-        fp_corpus = fp_corpus + ":pv2"
+        # Schema-version token (":pv2" = term_meta gained w10, ":pv3" =
+        # term_meta gained term): an out_dir written before a
+        # postings-stage schema change must RECOMPUTE, not resume — else
+        # downstream consumers (wand.query_bounds' term join) hit
+        # AnalysisException on the stale parquet. Same stale-resume class
+        # the ":v2"/model-family tokens below prevent for index/model
+        # stages.
+        fp_corpus = fp_corpus + ":pv3"
 
         # stage: postings (+ docs, vocab, term_meta, docids)
         if not self._stage_done("postings", fp_corpus):

@@ -105,6 +105,61 @@ def _bounded_kth(scores: DataFrame, k: int) -> DataFrame:
     )
 
 
+def query_bounds(idx: FullTextIndex, queries: DataFrame, num_docs: int) -> DataFrame:
+    """(query_id, term, qtf, term_id, df, max_weight, w10, qw) — the
+    query terms resolved against term_meta, the per-term bound table
+    (wand_data.hpp:34-49), in ONE broadcast join. The front half of both
+    pruned plans: wand_topk here and wand_shard's cogroup plan."""
+    qt = query_terms(queries, dedup=False).join(  # query_id, term, qtf
+        F.broadcast(idx.term_meta.select("term", "term_id", "df", "max_weight", "w10")),
+        "term",
+    )
+    return qt.withColumn(
+        "qw", query_term_weight(F.col("qtf"), F.col("df"), F.lit(num_docs))
+    )
+
+
+def exact_seed(idx: FullTextIndex, bidx: DataFrame, codec, qt: DataFrame, k: int) -> DataFrame:
+    """(query_id, seed) for k > TOPK_BOUND_K: the kth-best PARTIAL score
+    of each query's highest-upper-bound term, less THETA_MARGIN — a valid
+    lower bound on the true kth TOTAL score (total ≥ partial for every
+    doc). qt is query_bounds() output. One extra decode of ONE list per
+    query through the bounded two-phase top-k (_bounded_kth); queries
+    whose best list holds < k docs get no row (θ then starts at 0)."""
+    w_best = W.partitionBy("query_id").orderBy(
+        F.desc(F.col("qw") * F.col("max_weight")), F.asc("term_id")
+    )
+    best = (
+        qt.withColumn("_r", F.row_number().over(w_best))
+        .filter(F.col("_r") == 1)
+        .select("query_id", "term_id", "qw")
+    )
+    best_dec = decode_block_index(
+        bidx.join(
+            F.broadcast(best.select("term_id").distinct()), "term_id", "left_semi"
+        ),
+        codec,
+    )
+    # docs join: no broadcast hint — norm_len is O(num_docs); AQE picks
+    # broadcast when it fits, shuffle join when it doesn't (10^12 docs).
+    scores = (
+        best_dec.join(idx.docs.select("doc_id", "norm_len"), "doc_id")
+        .join(F.broadcast(best), "term_id")
+        .select(
+            "query_id",
+            (F.col("qw") * doc_term_weight(F.col("tf"), F.col("norm_len"))).alias("_s"),
+        )
+    )
+    return (
+        _bounded_kth(scores, k)
+        .filter(F.col("cnt") >= k)
+        .select(
+            "query_id",
+            F.greatest(F.col("kth") - F.lit(THETA_MARGIN), F.lit(0.0)).alias("seed"),
+        )
+    )
+
+
 def blocks_containing(
     bounds: DataFrame, pairs: DataFrame, bucket_size: int
 ) -> DataFrame:
@@ -151,14 +206,8 @@ def wand_topk(
     use_block_max: bool = True,
 ) -> DataFrame:
     # ---- per-query term bounds (lazy, ≤ |queries|·16 rows) -------------
-    qt = query_terms(queries, dedup=False)  # query_id, term, qtf
-    qt = qt.join(F.broadcast(idx.vocab.select("term", "term_id", "df")), "term")
-    qt = qt.withColumn(
-        "qw", query_term_weight(F.col("qtf"), F.col("df"), F.lit(num_docs))
-    )
-    qt = qt.join(
-        F.broadcast(idx.term_meta.select("term_id", "max_weight", "w10")), "term_id"
-    ).select(
+    qb = query_bounds(idx, queries, num_docs)
+    qt = qb.select(
         "query_id",
         "term_id",
         "qw",
@@ -177,45 +226,20 @@ def wand_topk(
         # ≥ max over terms of qw·w10 — computed by the SAME per-query
         # window that does the essential split. No posting decode, no
         # extra stage.
-        theta_col = F.max("kth_lb").over(w_all)
+        qt2 = qt.withColumn(
+            "theta",
+            F.greatest(F.max("kth_lb").over(w_all) - THETA_MARGIN, F.lit(0.0)),
+        )
     else:
         # Exact seed: kth-best partial score of the highest-upper-bound
         # term, via a bounded two-phase top-k over its decoded list.
-        w_best = W.partitionBy("query_id").orderBy(F.desc("ub"), F.asc("term_id"))
-        best = (
-            qt.withColumn("_r", F.row_number().over(w_best))
-            .filter(F.col("_r") == 1)
-            .select("query_id", "term_id", "qw")
-        )
-        best_dec = decode_block_index(
-            bidx.join(
-                F.broadcast(best.select("term_id").distinct()), "term_id", "left_semi"
-            ),
-            codec,
-        )
-        # docs join: no broadcast hint — norm_len is O(num_docs); AQE picks
-        # broadcast when it fits, shuffle join when it doesn't (10^12 docs).
-        seed = (
-            best_dec.join(idx.docs.select("doc_id", "norm_len"), "doc_id")
-            .join(F.broadcast(best), "term_id")
-            .select(
-                "query_id",
-                (F.col("qw") * doc_term_weight(F.col("tf"), F.col("norm_len"))).alias("_s"),
-            )
-        )
-        theta_df = _bounded_kth(seed, k).filter(F.col("cnt") >= k).select(
-            "query_id", "kth"
-        )
-        qt = qt.join(theta_df, "query_id", "left")
-        theta_col = F.col("kth")
+        qt2 = qt.join(
+            exact_seed(idx, bidx, codec, qb, k), "query_id", "left"
+        ).withColumn("theta", F.coalesce(F.col("seed"), F.lit(0.0)))
 
     # ---- essential split (queries.hpp:498-509) as tiny-frame windows ---
     # θ, Σub and the cumulative prefix all come out of ONE per-query
     # window exchange over the ≤|q|·16-row frame.
-    qt2 = qt.withColumn(
-        "theta",
-        F.coalesce(F.greatest(theta_col - THETA_MARGIN, F.lit(0.0)), F.lit(0.0)),
-    )
     w_cum = (
         W.partitionBy("query_id")
         .orderBy(F.asc("ub"), F.asc("term_id"))

@@ -81,21 +81,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from dint_spark.build.blocks import (
-    BLOCK_SIZE, decode_block_index, decode_doc_ids, rank_within_term,
-)
+from dint_spark.build.blocks import BLOCK_SIZE, decode_doc_ids, rank_within_term
 from dint_spark.build.postings import TOPK_BOUND_K, FullTextIndex
-from dint_spark.functions.bm25 import B, K1, doc_term_weight, query_term_weight
-from dint_spark.operators.boolean import query_terms
-from dint_spark.operators.ranked import topk
+from dint_spark.functions.bm25 import B, K1, doc_term_weight
+from dint_spark.operators.ranked import SCORE_ROUND, topk
+from dint_spark.operators.wand import THETA_MARGIN, exact_seed, query_bounds
 from dint_spark.util import materialize, memo_broadcast
 
-THETA_MARGIN = 2e-9
-SCORE_ROUND = 9
 INT64_MAX = np.iinfo(np.int64).max
 
-# Cost model for the per-(query, shard) DAAT-vs-vectorized choice —
-# constants measured on this host (tools/wand_phases.py profiling):
+# Cost model for the per-(query, shard) DAAT-vs-vectorized choice:
 C_PIVOT = 20e-6   # sec per DAAT pivot iteration (sort + bound scan + probes)
 C_VEC = 0.05e-6   # sec per posting through the bincount merge
 C_DECODE = 30e-6  # sec per block decode (DINT lockstep, amortized)
@@ -493,17 +488,11 @@ def _exhaustive_merge(
     if not alld.size:
         return []
     alls = qws * (tf / (tf + K1 * (1.0 - B + B * norms[alld - lo])))
-    span = hi - lo
-    if span <= 1 << 24:
-        # dense-array aggregation (bincount is C-speed, no sort): doc
-        # space within a shard is contiguous by construction
-        tot_all = np.bincount(alld - lo, weights=alls, minlength=span)
-        nz = np.flatnonzero(tot_all)  # every matching doc scores > 0
-        uniq, tot = nz + lo, tot_all[nz]
-    else:
-        uniq, inv = np.unique(alld, return_inverse=True)
-        tot = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(tot, inv, alls)
+    # dense-array aggregation (bincount is C-speed, no sort): doc space
+    # within a shard is contiguous, and its span hi−lo ≤ TARGET_SHARD_SPAN
+    tot_all = np.bincount(alld - lo, weights=alls, minlength=hi - lo)
+    nz = np.flatnonzero(tot_all)  # every matching doc scores > 0
+    uniq, tot = nz + lo, tot_all[nz]
     # top-k by (rounded score desc, doc asc); a partial-sort shortcut
     # (argpartition) is WRONG here — on ε-flat corpora every doc ties on
     # the rounded score and the tie-break must see all of them
@@ -800,77 +789,6 @@ _LEFT_SCHEMA = (
 )
 
 
-def _qt_meta(idx: FullTextIndex, queries: DataFrame, num_docs: int) -> DataFrame:
-    qt = query_terms(queries, dedup=False)
-    cat = getattr(idx, "term_catalog", None)
-    if cat is not None:
-        # pre-merged vocab⋈term_meta index artifact (engine.get_index):
-        # ONE broadcast join per serve call instead of two
-        qt = qt.join(
-            F.broadcast(
-                cat.select("term", "term_id", "df", "max_weight", "w10")
-            ),
-            "term",
-        )
-        return qt.withColumn(
-            "qw", query_term_weight(F.col("qtf"), F.col("df"), F.lit(num_docs))
-        )
-    qt = qt.join(F.broadcast(idx.vocab.select("term", "term_id", "df")), "term")
-    return qt.withColumn(
-        "qw", query_term_weight(F.col("qtf"), F.col("df"), F.lit(num_docs))
-    ).join(
-        F.broadcast(idx.term_meta.select("term_id", "max_weight", "w10")),
-        "term_id",
-    )
-
-
-def _exact_seed_df(idx, bidx, codec, qt: DataFrame, k: int) -> DataFrame:
-    """(query_id, seed) for k > TOPK_BOUND_K: the kth-best PARTIAL score
-    of each query's highest-upper-bound term — a valid lower bound on
-    the true kth TOTAL score (total ≥ partial for every doc), computed
-    with the same bounded two-phase top-k as the relational plan
-    (operators/wand.py step 1, k > 10 branch; ref queries.hpp:150-188
-    topk_queue). One extra decode of ONE list per query, shared across
-    all shards of the batch; queries whose best list holds < k docs get
-    no row (kernel falls back to seed 0)."""
-    from pyspark.sql import Window as W
-
-    from dint_spark.operators.wand import _bounded_kth
-
-    w_best = W.partitionBy("query_id").orderBy(
-        F.desc(F.col("qw") * F.col("max_weight")), F.asc("term_id")
-    )
-    best = (
-        qt.withColumn("_r", F.row_number().over(w_best))
-        .filter(F.col("_r") == 1)
-        .select("query_id", "term_id", "qw")
-    )
-    best_dec = decode_block_index(
-        bidx.join(
-            F.broadcast(best.select("term_id").distinct()), "term_id", "left_semi"
-        ),
-        codec,
-    )
-    scores = (
-        best_dec.join(idx.docs.select("doc_id", "norm_len"), "doc_id")
-        .join(F.broadcast(best), "term_id")
-        .select(
-            "query_id",
-            (F.col("qw") * doc_term_weight(F.col("tf"), F.col("norm_len"))).alias("_s"),
-        )
-    )
-    return (
-        _bounded_kth(scores, k)
-        .filter(F.col("cnt") >= k)
-        .select(
-            "query_id",
-            F.greatest(
-                F.col("kth") - F.lit(THETA_MARGIN), F.lit(0.0)
-            ).alias("seed"),
-        )
-    )
-
-
 def sharded_block_index(
     bidx: DataFrame, shard_size: int, shard_bmw: "DataFrame | None" = None
 ) -> DataFrame:
@@ -950,7 +868,9 @@ def _batch_blocks_sharded(sharded_bidx, qt) -> DataFrame:
 
 def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
     """The front half shared by _run and shipped_block_stats →
-    (universe, nsh, ss, qt, seed_df).
+    (universe, nsh, ss, qt, seed_df): the layout, the query terms with
+    their bounds (wand.query_bounds) and, for k > TOPK_BOUND_K, the
+    exact θ seed (wand.exact_seed) — the same front half as wand_topk.
 
     norms: a norm_slices() frame, or None (universe then comes from
     idx.docs and _run packs the slices in the plan). The layout is
@@ -974,11 +894,9 @@ def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
         universe = int(mx) + 1
     universe = int(universe)
     nsh, ss = static_layout(universe)
-    qt_full = _qt_meta(idx, queries, num_docs)
+    qt_full = query_bounds(idx, queries, num_docs)
     qt = qt_full.select("query_id", "term_id", "qw", "w10")
-    seed_df = (
-        _exact_seed_df(idx, bidx, codec, qt_full, k) if k > TOPK_BOUND_K else None
-    )
+    seed_df = exact_seed(idx, bidx, codec, qt_full, k) if k > TOPK_BOUND_K else None
     return universe, nsh, ss, qt, seed_df
 
 

@@ -19,7 +19,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def load_index(spark, index_dir: str):
     """The relational index tables of an IndexBuilder directory,
-    materialized (no term_catalog: serving joins vocab and term_meta)."""
+    materialized; term_meta carries the term, so it is also the catalog
+    serving resolves query terms against (wand.query_bounds)."""
     from dint_spark.build.postings import FullTextIndex
     from dint_spark.util import materialize
 

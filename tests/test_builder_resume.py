@@ -146,12 +146,15 @@ def _ranks(df):
 
 def test_builder_index_serves_rank_identical(spark, small_corpus, tmp_path_factory):
     """The IndexBuilder-loaded serving path of jobs/query_batch.py: tables
-    with no term_catalog, the codec read from _lineage/index.json with
-    its model loaded through dint_build.model_class, and the serving
-    artifacts from wand_shard.serving_artifacts. WAND and MaxScore rank
-    exactly as ranked_or at k=10 and at k=25 (the exact-seed path)."""
+    whose term_meta carries the term, the codec read from
+    _lineage/index.json with its model loaded through
+    dint_build.model_class, and the serving artifacts from
+    wand_shard.serving_artifacts. Sharded and relational WAND and
+    MaxScore rank exactly as ranked_or at k=10 and at k=25 (the
+    exact-seed path)."""
     from dint_spark.corpus import make_query_log
     from dint_spark.operators.ranked import ranked_or
+    from dint_spark.operators.wand import maxscore_topk, wand_topk
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
         serving_artifacts,
@@ -162,7 +165,7 @@ def test_builder_index_serves_rank_identical(spark, small_corpus, tmp_path_facto
     out = str(tmp_path_factory.mktemp("idx_serve"))
     IndexBuilder(spark, out).build(small_corpus)
     idx = load_index(spark, out)
-    assert getattr(idx, "term_catalog", None) is None
+    assert "term" in idx.term_meta.columns
     bidx, codec = load_blocks(spark, out)
     assert codec.name == "single_packed_dint"
     serving = serving_artifacts(idx, bidx)
@@ -174,8 +177,58 @@ def test_builder_index_serves_rank_identical(spark, small_corpus, tmp_path_facto
     for k in (10, 25):
         ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=k))
         assert ref
-        for fn in (wand_topk_sharded, maxscore_topk_sharded):
-            got = _ranks(
-                fn(idx, bidx, codec, q, idx.num_docs, k=k, **serving)
-            )
-            assert got == ref, (fn.__name__, k)
+        for fn, kw in (
+            (wand_topk_sharded, serving),
+            (maxscore_topk_sharded, serving),
+            (wand_topk, {}),
+            (maxscore_topk, {}),
+        ):
+            got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, k=k, **kw))
+            assert got == ref, (fn.__module__, fn.__name__, k)
+
+
+def test_postings_schema_token_recomputes_stale_term_meta(
+    spark, small_corpus, tmp_path_factory
+):
+    """An out_dir whose term_meta predates the `term` column (postings
+    lineage token :pv2) recomputes its postings stage instead of loading
+    a term_meta that serving cannot join on, and then serves."""
+    from dint_spark.corpus import make_query_log
+    from dint_spark.operators.ranked import ranked_or
+    from dint_spark.operators.wand_shard import serving_artifacts, wand_topk_sharded
+    from jobs.query_batch import load_blocks, load_index
+
+    out = str(tmp_path_factory.mktemp("idx_pv2"))
+    IndexBuilder(spark, out).build(small_corpus)
+
+    # turn the out_dir into one written before term_meta gained `term`
+    tm = os.path.join(out, "term_meta")
+    sibling = tm + ".old"
+    spark.read.parquet(tm).drop("term").write.parquet(sibling)
+    shutil.rmtree(tm)
+    os.rename(sibling, tm)
+    lineage = os.path.join(out, "_lineage", "postings.json")
+    with open(lineage) as f:
+        rec = json.load(f)
+    rec["input_fingerprint"] = rec["input_fingerprint"].rsplit(":", 1)[0] + ":pv2"
+    with open(lineage, "w") as f:
+        json.dump(rec, f)
+    assert "term" not in spark.read.parquet(tm).columns
+
+    b = IndexBuilder(spark, out)
+    b.build(small_corpus)
+    assert "postings: compute" in b.log, b.log
+    idx = load_index(spark, out)
+    assert "term" in idx.term_meta.columns
+
+    bidx, codec = load_blocks(spark, out)
+    q = spark.createDataFrame(
+        make_query_log(16, seed=7), "query_id long, terms array<string>"
+    )
+    got = _ranks(
+        wand_topk_sharded(
+            idx, bidx, codec, q, idx.num_docs, k=10, **serving_artifacts(idx, bidx)
+        )
+    )
+    assert got
+    assert got == _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=10))
