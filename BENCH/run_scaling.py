@@ -601,7 +601,8 @@ blocks; at local[4] its 8-query batch takes 1.81 s for wand and 1.84 s
 for maxscore (median of 4). Round 6: the
 artifact join no longer runs per batch at all — the shard explode +
 shard_block_max refinement are pre-joined ONCE into a materialized
-sharded block index (engine.get_sharded_blocks, the serving default),
+sharded block index (engine.get_serving's sharded_bidx, served with
+the required norm slices),
 so the block payload crosses exactly ONE exchange per batch (the
 cogroup shuffle); the per-batch SortMergeJoin that re-shuffled the
 payload a second time is gone (guide §8: heavy bytes move once).

@@ -37,6 +37,7 @@ from dint_spark.functions.bm25 import doc_term_weight
 
 BLOCK_SIZE = 256  # reference block size, util.hpp:35
 CHUNK_BLOCKS = 4096  # blocks per shuffle key chunk for heavy terms
+RANK_BUCKET_BITS = 16  # rank_within_term's local-window bucket: 2^16 docIDs
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -60,10 +61,10 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-def rank_within_term(postings: DataFrame, bucket_bits: int = 16) -> DataFrame:
+def rank_within_term(postings: DataFrame) -> DataFrame:
     """Append `rank` = 0-based position of the posting within its term's
     docID-ordered list. Bounded windows only (see module docstring)."""
-    p = postings.withColumn("_bucket", F.shiftrightunsigned(F.col("doc_id"), bucket_bits))
+    p = postings.withColumn("_bucket", F.shiftrightunsigned(F.col("doc_id"), RANK_BUCKET_BITS))
     local_w = W.partitionBy("term_id", "_bucket").orderBy("doc_id")
     p = p.withColumn("_lrank", F.row_number().over(local_w) - 1)
     counts = p.groupBy("term_id", "_bucket").agg(F.count("*").alias("_bc"))
@@ -111,7 +112,7 @@ def _block_meta(ranked: DataFrame) -> DataFrame:
     )
 
 
-def prepare_block_data(postings: DataFrame, block_size: int = BLOCK_SIZE):
+def prepare_block_data(postings: DataFrame):
     """Shared front half of encode/stats passes: (data, meta).
 
     data: (term_id, block_id, doc_id, tf, block_base), repartitioned by
@@ -120,7 +121,7 @@ def prepare_block_data(postings: DataFrame, block_size: int = BLOCK_SIZE):
     block_max_weight, block_base) — metadata-sized.
     """
     ranked = rank_within_term(postings)
-    ranked = ranked.withColumn("block_id", (F.col("rank") / block_size).cast("long"))
+    ranked = ranked.withColumn("block_id", (F.col("rank") / BLOCK_SIZE).cast("long"))
     meta = _block_meta(ranked)
 
     data = ranked.join(
@@ -183,7 +184,6 @@ def iter_block_arrays(batches: Iterator[pd.DataFrame]):
 def build_block_index(
     postings: DataFrame,
     codec,
-    block_size: int = BLOCK_SIZE,
     prepared: tuple | None = None,
 ) -> DataFrame:
     """postings(term_id, doc_id, tf[, norm_len]) → compressed block table.
@@ -198,9 +198,7 @@ def build_block_index(
     codecs (codec benchmarking, ft_index_stats) materialize the prepared
     frames once instead of re-ranking/re-shuffling per codec.
     """
-    data, meta = prepared if prepared is not None else prepare_block_data(
-        postings, block_size
-    )
+    data, meta = prepared if prepared is not None else prepare_block_data(postings)
     spark = postings.sparkSession
     from dint_spark.util import memo_broadcast
     codec_bc = memo_broadcast(spark, codec)
@@ -410,7 +408,7 @@ def posting_at(index: DataFrame, codec, positions: DataFrame) -> DataFrame:
         hits.select("term_id", "block_id").distinct(), ["term_id", "block_id"], "left_semi"
     )
     dec = decode_block_index(blocks, codec, extra_cols=(("block_id", "long"),))
-    bw = W.partitionBy("term_id", "block_id").orderBy("doc_id")  # ≤ block_size rows
+    bw = W.partitionBy("term_id", "block_id").orderBy("doc_id")  # ≤ BLOCK_SIZE rows
     dec = dec.withColumn("_br", F.row_number().over(bw) - 1)
     return (
         dec.join(

@@ -40,6 +40,8 @@ from dint_spark.functions.bm25 import doc_term_weight
 
 TOPK_BOUND_K = 10  # the reference harness's fixed top-k (queries.cpp:105-111);
 #   term_meta.w10 = 10th-largest list weight → WAND's metadata-only θ seed.
+META_BUCKET_BITS = 16  # build_term_meta level 1: per (term, 2^16-doc bucket)
+META_MERGE_BITS = 12  # build_term_meta level 2: 4096 buckets per merge
 
 
 @dataclass
@@ -110,13 +112,7 @@ def build_vocab(
     )
 
 
-def build_term_meta(
-    postings: DataFrame,
-    docs: DataFrame,
-    num_docs: int,
-    bucket_bits: int = 16,
-    merge_bits: int = 12,
-) -> DataFrame:
+def build_term_meta(postings: DataFrame, docs: DataFrame, num_docs: int) -> DataFrame:
     """term_meta(term_id, term, df, max_weight, w10) — wand_data.hpp:34-49.
 
     postings must carry `term`; it rides the group keys, so term_meta is
@@ -130,11 +126,12 @@ def build_term_meta(
     metadata alone (operators/wand.py step 1). NULL when df < 10.
 
     Scale shape: a three-level tree aggregation — per (term, 2^16-doc
-    bucket) bounded top-10 (collect_list bounded by bucket population),
-    a 4096-way merge level, then the per-term merge (≤ ~4k arrays of 10
-    even for a df≈10^12 stopword). No unbounded per-term buffer; docs
-    join carries no broadcast hint (both sides are data-sized at
-    cluster scale — AQE picks the strategy).
+    bucket, META_BUCKET_BITS) bounded top-10 (collect_list bounded by
+    bucket population), a 4096-way merge level (META_MERGE_BITS), then
+    the per-term merge (≤ ~4k arrays of 10 even for a df≈10^12
+    stopword). No unbounded per-term buffer; docs join carries no
+    broadcast hint (both sides are data-sized at cluster scale — AQE
+    picks the strategy).
     """
     p = postings
     if "norm_len" not in p.columns:
@@ -142,7 +139,7 @@ def build_term_meta(
     dtw = doc_term_weight(F.col("tf"), F.col("norm_len"))
     K = TOPK_BOUND_K
     lvl1 = (
-        p.withColumn("_b1", F.shiftrightunsigned("doc_id", bucket_bits))
+        p.withColumn("_b1", F.shiftrightunsigned("doc_id", META_BUCKET_BITS))
         .groupBy("term_id", "term", "_b1")
         .agg(
             F.count("*").alias("_n"),
@@ -151,7 +148,7 @@ def build_term_meta(
         )
     )
     lvl2 = (
-        lvl1.withColumn("_b2", F.shiftrightunsigned("_b1", merge_bits))
+        lvl1.withColumn("_b2", F.shiftrightunsigned("_b1", META_MERGE_BITS))
         .groupBy("term_id", "term", "_b2")
         .agg(
             F.sum("_n").alias("_n"),

@@ -87,16 +87,6 @@ def get_norm_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     return get_serving(spark, sf_dir)["norms"]
 
 
-def get_sharded_blocks(
-    spark: SparkSession, sf_dir: str, codec_name: str = "single_packed_dint"
-) -> DataFrame:
-    """Materialized sharded_block_index() artifact for the static layout,
-    with the shard_block_max() refinement joined in: every serve batch
-    goes term-semi-join → cogroup exchange, with no per-batch join that
-    ships the block payload twice."""
-    return get_serving(spark, sf_dir, codec_name)["sharded_bidx"]
-
-
 def get_index_stats(
     spark: SparkSession, sf_dir: str, codec_names: list[str]
 ) -> DataFrame:

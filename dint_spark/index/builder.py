@@ -36,7 +36,7 @@ from dint_spark.build.dint_build import choose_packed_codec, learn_dint_model, m
 from dint_spark.build.postings import build_fulltext_index
 from dint_spark.codecs.registry import get_codec
 from dint_spark.corpus import with_doc_ids
-from dint_spark.tokenizer import tokenize_code, tokenize_words
+from dint_spark.tokenizer import tokenize_code
 
 
 def _fingerprint(df: DataFrame, cols: list[str]) -> str:
@@ -53,12 +53,10 @@ class IndexBuilder:
         spark: SparkSession,
         out_dir: str,
         codec_name: str = "single_packed_dint",
-        tokenizer: str = "code",
     ):
         self.spark = spark
         self.out = out_dir
         self.codec_name = codec_name
-        self.tokenizer = tokenizer
         os.makedirs(os.path.join(out_dir, "_lineage"), exist_ok=True)
         self.log: list[str] = []
 
@@ -107,11 +105,7 @@ class IndexBuilder:
             t0 = time.time()
             if "doc_id" not in corpus.columns:
                 corpus = with_doc_ids(corpus)
-            tok = (
-                tokenize_code(corpus, text_col="content", doc_id_col="doc_id")
-                if self.tokenizer == "code"
-                else tokenize_words(corpus, text_col="text", doc_id_col="doc_id")
-            )
+            tok = tokenize_code(corpus, text_col="content", doc_id_col="doc_id")
             idx = build_fulltext_index(tok)
             idx.postings.write.mode("overwrite").parquet(self._table("postings"))
             idx.docs.write.mode("overwrite").parquet(self._table("docs"))
@@ -155,23 +149,21 @@ class IndexBuilder:
         # 12-way multi decode measured 1.4-3.4× query wall,
         # BENCH/multi_serving_50k.json); "auto_space" optimizes storage
         # (multi once capacity binds: docs bpi −25%, freqs −39% there).
-        self.codec_requested = self.codec_name
-        if self.codec_name in ("auto", "auto_space"):
-            objective = "space" if self.codec_name == "auto_space" else "serve"
-            self.codec_name = choose_packed_codec(
-                int(postings_lineage["rows"]), objective
-            )
-            self.log.append(
-                f"codec {self.codec_requested} -> {self.codec_name}"
-            )
+        # Resolved per build() call into a local: self.codec_name keeps
+        # the request, so a later build() on a grown corpus re-resolves.
+        codec_name = self.codec_name
+        if codec_name in ("auto", "auto_space"):
+            objective = "space" if codec_name == "auto_space" else "serve"
+            codec_name = choose_packed_codec(int(postings_lineage["rows"]), objective)
+            self.log.append(f"codec {self.codec_name} -> {codec_name}")
         # index/verify stages are keyed by postings AND codec (+ a schema
         # version token, + the model's selection version — a new
         # dictionary model must re-encode the blocks too): re-running on
         # an existing out_dir with a different codec must re-encode +
         # re-verify, never silently load an index encoded with the old
         # codec or the old model.
-        cls = model_class(self.codec_name)
-        fp_index = f"{fp_postings}:{self.codec_name}:v2" + (cls.VERSION if cls else "")
+        cls = model_class(codec_name)
+        fp_index = f"{fp_postings}:{codec_name}:v2" + (cls.VERSION if cls else "")
 
         # stage: model (DINT only); keyed by postings AND model family so
         # switching single↔multi on one out_dir relearns, never misloads.
@@ -195,7 +187,7 @@ class IndexBuilder:
                 )
             else:
                 model = cls.load(self.spark, self._table("dint_model"))
-        codec = get_codec(self.codec_name, model)
+        codec = get_codec(codec_name, model)
 
         # stage: index (block encode)
         if not self._stage_done("index", fp_index):
@@ -227,8 +219,8 @@ class IndexBuilder:
                 {
                     "stage": "index",
                     "input_fingerprint": fp_index,
-                    "codec": self.codec_name,
-                    "codec_requested": self.codec_requested,
+                    "codec": codec_name,
+                    "codec_requested": self.codec_name,
                     "n_blocks": stats["n_blocks"],
                     "n_postings": stats["n_postings"],
                     "docs_bpi": stats["docs_bpi"],

@@ -107,13 +107,7 @@ def route_constants() -> dict:
     return _ART
 
 
-def route_decision(
-    n_queries: int,
-    scored_rows: int,
-    rel_rows_per_sec: "float | None" = None,
-    cog_fixed_sec: "float | None" = None,
-    kernel_qps: "float | None" = None,
-) -> str:
+def route_decision(n_queries: int, scored_rows: int) -> str:
     """Pure decision: 'relational' or 'cogroup' from batch metadata.
 
     t_rel  = scored_rows / rel_rows_per_sec      (linear, high-rate →
@@ -121,22 +115,16 @@ def route_decision(
                                                   the relational plan)
     t_cog  = cog_fixed_sec + n_queries / kernel_qps
 
-    Constants default to the measured artifact (route_constants); the
-    decision is correctness-free either way — both realizations are
-    oracle-identical, so a drifted constant costs latency near the
-    crossover, never results, and the regret is bounded there because
-    the flip happens where t_rel ≈ t_cog (tests/test_router.py pins a
-    ±2× perturbation sweep).
+    The constants come from route_constants() only (the measured
+    artifact, or the literals); the decision is correctness-free either
+    way — both realizations are oracle-identical, so a drifted constant
+    costs latency near the crossover, never results, and the regret is
+    bounded there because the flip happens where t_rel ≈ t_cog
+    (tests/test_router.py pins a ±2× perturbation sweep).
     """
     c = route_constants()
-    if rel_rows_per_sec is None:
-        rel_rows_per_sec = c["rel_rows_per_sec"]
-    if cog_fixed_sec is None:
-        cog_fixed_sec = c["cog_fixed_sec"]
-    if kernel_qps is None:
-        kernel_qps = c["kernel_qps"]
-    t_rel = scored_rows / rel_rows_per_sec
-    t_cog = cog_fixed_sec + n_queries / kernel_qps
+    t_rel = scored_rows / c["rel_rows_per_sec"]
+    t_cog = c["cog_fixed_sec"] + n_queries / c["kernel_qps"]
     return "relational" if t_rel <= t_cog else "cogroup"
 
 
@@ -146,11 +134,10 @@ def topk_auto(
     codec,
     queries: DataFrame,
     num_docs: int,
-    norms=None,
+    norms: DataFrame,
     k: int = 10,
     algo: str = "wand",
     universe: "int | None" = None,
-    force: "str | None" = None,
     sharded_bidx: "DataFrame | None" = None,
 ) -> DataFrame:
     """Ranked top-k with cost-based plan choice.
@@ -162,21 +149,16 @@ def topk_auto(
     return (query_id, doc_id, score, rank) with identical ranking
     semantics (round-to-9 before rank, ties → doc_id ASC).
 
-    force: 'relational' | 'cogroup' overrides the decision (tests,
-    A/B benches)."""
-    if force is None:
-        qt = query_terms(queries, dedup=True).join(
-            F.broadcast(idx.vocab.select("term", "df")), "term"
-        )
-        row = qt.agg(
-            F.countDistinct("query_id").alias("q"),
-            F.sum("df").alias("s"),
-        ).first()
-        nq = int(row["q"] or 0)
-        scored = int(row["s"] or 0)
-        choice = route_decision(nq, scored)
-    else:
-        choice = force
+    norms/universe/sharded_bidx: the serving artifacts of the cogroup
+    route (engine.get_serving); norms is required."""
+    qt = query_terms(queries, dedup=True).join(
+        F.broadcast(idx.vocab.select("term", "df")), "term"
+    )
+    row = qt.agg(
+        F.countDistinct("query_id").alias("q"),
+        F.sum("df").alias("s"),
+    ).first()
+    choice = route_decision(int(row["q"] or 0), int(row["s"] or 0))
     if choice == "relational":
         return ranked_or(idx.postings, queries, idx.vocab, num_docs, k=k)
     fn = wand_topk_sharded if algo == "wand" else maxscore_topk_sharded

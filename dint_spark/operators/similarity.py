@@ -16,14 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 DIM = 64
-NUM_PLANES = 8  # fixed-size fallback (256 buckets); the DEFAULT is now
-# AUTO sizing (num_planes=None): np = clamp(ceil(log2(N / 128)), 1, 62),
-# derived RELATIONALLY from the vector count, so bucket population stays
-# ≈ TARGET_BUCKET at any scale (10^12 vectors → ~33 planes → ~2^33
-# buckets of ~128) with no operator retuning. The oracle SQL computes
-# the identical np from the same count (sqlgen_pipeline._NPLANES_CTE) —
-# auto-sizing stays hash-reproducible. The planes are a deterministic
-# function of (plane index, dimension) alone, so ANY np is reproducible.
+# The plane count is always AUTO-sized: np = clamp(ceil(log2(N / 128)),
+# 1, 62), derived RELATIONALLY from the vector count, so bucket
+# population stays ≈ TARGET_BUCKET at any scale (10^12 vectors → ~33
+# planes → ~2^33 buckets of ~128) with no operator retuning. The oracle
+# SQL computes the identical np from the same count
+# (sqlgen_pipeline._NPLANES_CTE) — auto-sizing stays hash-reproducible.
+# The planes are a deterministic function of (plane index, dimension)
+# alone, so ANY np is reproducible.
 TARGET_BUCKET = 128
 # Deterministic integer "hyperplanes": component (j, d) =
 # ((1103515245·(j·DIM+d) + 12345) mod 2000001) − 1000000  ∈ [−1e6, 1e6]
@@ -78,40 +78,18 @@ def cosine_topk(
     )
 
 
-def lsh_bucket(
-    embeddings: DataFrame, num_planes: int | None = None
-) -> DataFrame:
+def lsh_bucket(embeddings: DataFrame) -> DataFrame:
     """(vec_id, bucket) — random-hyperplane signature.
 
     sign bit j = 1 iff Σ_d v[d]·plane(j,d) > 0. Native expressions only.
 
-    num_planes=None (default) AUTO-sizes from the vector count:
+    The plane count AUTO-sizes from the vector count:
     np = clamp(ceil(log2(N / TARGET_BUCKET)), 1, 62), computed as a
     COLUMN from a broadcast count aggregate — no driver action, and the
     same arithmetic runs in the DuckDB oracle. Expected bucket
     population ≈ TARGET_BUCKET at every scale.
     """
     e = _as_double(embeddings)
-    if num_planes is not None:
-        if not 1 <= num_planes <= 62:
-            raise ValueError(f"num_planes must be in [1, 62], got {num_planes}")
-        bucket = F.lit(0).cast("long")
-        for j in range(num_planes):
-            comps = F.expr(
-                "aggregate(zip_with(v, sequence(0, {dmax}), (x, d) -> "
-                "x * (((CAST({m} AS BIGINT) * ({j} * {dim} + d) + {a}) % {mod}) - {sh})), "
-                "cast(0.0 as double), (acc, x) -> acc + x)".format(
-                    dmax=DIM - 1,
-                    m=PLANE_MULT,
-                    j=j,
-                    dim=DIM,
-                    a=PLANE_ADD,
-                    mod=PLANE_MOD,
-                    sh=PLANE_SHIFT,
-                )
-            )
-            bucket = bucket + F.when(comps > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        return e.select("vec_id", bucket.alias("bucket"), "v")
     n_df = embeddings.agg(F.count("*").cast("long").alias("_n"))
     e = e.crossJoin(F.broadcast(n_df)).withColumn(
         "_np",
@@ -147,7 +125,6 @@ def ann_lsh_topk(
     embeddings: DataFrame,
     query_ids: list[int] | None = None,
     k: int = 10,
-    num_planes: int | None = None,
 ) -> DataFrame:
     """(query_vec, vec_id, cosine, rank) — approximate top-k within the
     query's LSH bucket (bucket equi-join = the 10^12-vector plan shape).
@@ -157,7 +134,7 @@ def ann_lsh_topk(
     """
     if query_ids is None:
         query_ids = DEFAULT_QUERY_IDS
-    b = lsh_bucket(embeddings, num_planes)
+    b = lsh_bucket(embeddings)
     q = b.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_vec"), F.col("bucket"), F.col("v").alias("qv")
     )

@@ -52,11 +52,12 @@ scale.
 One serving path: the layout is always static_layout(universe), the
 blocks come from ONE shard-exploded frame (the pre-sharded
 sharded_block_index artifact, or the same function applied to bidx),
-and the norms from ONE norm_slices frame (precomputed, or packed in the
-plan from idx.docs). The kernel refuses block rows or slices that were
-built for a different layout instead of mis-scoring them. WAND and
-MaxScore share one plan — term semi-join, cogroup, kernel, top-k — at
-every batch size; they differ only in the kernel core.
+and the norms from ONE norm_slices frame, which every caller passes
+(engine.get_serving / serving_artifacts). The kernel refuses block rows
+or slices that were built for a different layout instead of
+mis-scoring them. WAND and MaxScore share one plan — term semi-join,
+cogroup, kernel, top-k — at every batch size; they differ only in the
+kernel core.
 
 Pruning happens only inside the kernel, as in the reference, whose
 posting-list iterator skips useless blocks itself
@@ -661,7 +662,6 @@ def _run_query(algo, qrows, cache, codec, norms, lo, hi, k, stats,
 
 
 NORM_SENTINEL = -1  # term_id of packed norm-slice rows in the cogroup left side
-NORM_CHUNK = 1 << 18  # docs per packed slice row (4 MB of ids+vals per row)
 
 
 def static_layout(universe: int) -> tuple[int, int]:
@@ -688,9 +688,7 @@ def static_layout(universe: int) -> tuple[int, int]:
     return nsh, -(-universe // nsh)
 
 
-def norm_slices(
-    norms_df: DataFrame, shard_size: int, chunk: int = NORM_CHUNK
-) -> DataFrame:
+def norm_slices(norms_df: DataFrame, shard_size: int) -> DataFrame:
     """Pack (doc_id, norm_len) into per-shard slice rows that union into
     the cogroup's block side — the distributed replacement for the
     reference's node-resident norm_lens[] (wand_data.hpp:55-58).
@@ -703,24 +701,18 @@ def norm_slices(
     shard_size the layout was packed for (validated in the kernel so a
     precomputed slices frame cannot silently pair with a different
     layout); docs_bytes/freqs_bytes carry raw little-endian int64 ids /
-    float64 norms, chunked at NORM_CHUNK docs per row."""
+    float64 norms. One row per non-empty shard: static_layout caps a
+    shard's span at TARGET_SHARD_SPAN docs (4 MB of ids+vals)."""
     ssz = int(shard_size)
-    ck = int(chunk)
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["doc_id"].to_numpy(dtype=np.int64)
         vals = pdf["norm_len"].to_numpy(dtype=np.float64)
         o = np.argsort(ids)
         ids, vals = ids[o], vals[o]
-        shard = int(ids[0] // ssz)
-        rows = []
-        for s in range(0, len(ids), ck):
-            i, v = ids[s : s + ck], vals[s : s + ck]
-            rows.append(
-                (NORM_SENTINEL, ssz, len(i), int(i[0]), int(i[-1]), None,
-                 i.tobytes(), v.tobytes(), shard)
-            )
-        return pd.DataFrame(rows, columns=_LEFT_COLS)
+        row = (NORM_SENTINEL, ssz, len(ids), int(ids[0]), int(ids[-1]), None,
+               ids.tobytes(), vals.tobytes(), int(ids[0] // ssz))
+        return pd.DataFrame([row], columns=_LEFT_COLS)
 
     return (
         norms_df.select(
@@ -803,8 +795,9 @@ def sharded_block_index(
     exchange for the join and a second for the cogroup. The join's
     inputs (bidx, shard_bmw) and key (the static layout) are all INDEX
     properties, so the joined frame is an index artifact: built once,
-    materialized (engine.get_sharded_blocks), and every batch's plan
-    goes straight from term semi-join to the single cogroup exchange."""
+    materialized (serving_artifacts, served as engine.get_serving's
+    sharded_bidx), and every batch's plan goes straight from term
+    semi-join to the single cogroup exchange."""
     blocks_sh = bidx.withColumn("_shard", _shard_col(int(shard_size))).select(
         *_LEFT_COLS
     )
@@ -872,26 +865,20 @@ def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
     their bounds (wand.query_bounds) and, for k > TOPK_BOUND_K, the
     exact θ seed (wand.exact_seed) — the same front half as wand_topk.
 
-    norms: a norm_slices() frame, or None (universe then comes from
-    idx.docs and _run packs the slices in the plan). The layout is
-    always static_layout(universe) — the docID universe (max assigned
-    id + 1) can exceed num_docs when ids are not dense (docs with no
-    tokens leave holes), so shards tile the universe or trailing docs
+    norms: a norm_slices() frame (required). The layout is always
+    static_layout(universe) — the docID universe (max assigned id + 1)
+    can exceed num_docs when ids are not dense (docs with no tokens
+    leave holes), so shards tile the universe or trailing docs
     vanish."""
-    if norms is not None and "docs_bytes" not in getattr(norms, "columns", ()):
+    if "docs_bytes" not in getattr(norms, "columns", ()):
         raise TypeError(
-            "norms must be a norm_slices() frame or None, got "
-            f"{type(norms).__name__}"
+            f"norms must be a norm_slices() frame, got {type(norms).__name__}"
         )
     if universe is None:
         # bounded metadata action: ONE max aggregate (scalar), not a
         # per-row collect — the docID universe is an index property;
-        # serving paths pass it precomputed (engine.get_universe)
-        if norms is None:
-            mx = idx.docs.agg(F.max("doc_id")).first()[0]
-        else:
-            mx = norms.agg(F.max("block_max")).first()[0]
-        universe = int(mx) + 1
+        # serving paths pass it precomputed (engine.get_serving)
+        universe = int(norms.agg(F.max("block_max")).first()[0]) + 1
     universe = int(universe)
     nsh, ss = static_layout(universe)
     qt_full = query_bounds(idx, queries, num_docs)
@@ -901,7 +888,7 @@ def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
 
 
 def shipped_block_stats(
-    idx, bidx, codec, queries, num_docs, norms=None, k=10,
+    idx, bidx, codec, queries, num_docs, norms, k=10,
     universe=None, shard_bmw=None,
 ) -> dict:
     """Rows and payload bytes the cogroup shuffle would ship for this
@@ -947,7 +934,7 @@ def wand_topk_sharded(
     codec,
     queries: DataFrame,
     num_docs: int,
-    norms: "DataFrame | None" = None,
+    norms: DataFrame,
     k: int = 10,
     universe: "int | None" = None,
     sharded_bidx: "DataFrame | None" = None,
@@ -955,16 +942,16 @@ def wand_topk_sharded(
     """Block-max WAND over the compressed index, doc-sharded DAAT at the
     static layout, static_layout(universe).
 
-    norms: a precomputed norm_slices() frame packed for that layout
-    (engine.get_norm_slices — the serving path), or None → the slices
-    are packed inside the plan from idx.docs.
+    norms: the norm_slices() frame packed for that layout (required;
+    engine.get_serving's norms — the serving path). Slices packed for
+    another shard size are refused by the kernel.
 
     sharded_bidx: the pre-sharded block artifact, sharded_block_index
     (bidx, ss, shard_block_max(...)) for that layout
-    (engine.get_sharded_blocks — the serving path). None → the plan
-    shard-explodes bidx with the same function, without the in-shard
-    bmw refinement. An artifact built for another layout is refused by
-    the kernel.
+    (engine.get_serving's sharded_bidx — the serving path). None → the
+    plan shard-explodes bidx with the same function, without the
+    in-shard bmw refinement. An artifact built for another layout is
+    refused by the kernel.
 
     Every block of the batch's terms ships to the kernel; block-max
     pruning happens there, per (query, shard), so WAND and MaxScore run
@@ -979,7 +966,7 @@ def maxscore_topk_sharded(
     codec,
     queries: DataFrame,
     num_docs: int,
-    norms: "DataFrame | None" = None,
+    norms: DataFrame,
     k: int = 10,
     universe: "int | None" = None,
     sharded_bidx: "DataFrame | None" = None,
@@ -995,7 +982,7 @@ def maxscore_topk_sharded(
 
 
 def wand_sharded_decode_stats(
-    idx, bidx, codec, queries, num_docs, norms=None, k=10, algo="wand",
+    idx, bidx, codec, queries, num_docs, norms, k=10, algo="wand",
     universe=None, sharded_bidx=None,
 ) -> DataFrame:
     """(query_id, shard, blocks_total, blocks_docs_decoded,
@@ -1017,10 +1004,7 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
     )
     if sharded_bidx is None:
         sharded_bidx = sharded_block_index(bidx, ss)
-    blocks_sh = _batch_blocks_sharded(sharded_bidx, qt)
-    if norms is None:
-        norms = norm_slices(idx.docs.select("doc_id", "norm_len"), ss)
-    left = blocks_sh.unionByName(norms)
+    left = _batch_blocks_sharded(sharded_bidx, qt).unionByName(norms)
     if nsh <= SEQ_SHARD_MAX:
         # small layouts: fan the shard ids out with a per-row sequence
         # explode — zero extra source, zero broadcast job. (The old

@@ -17,30 +17,28 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "dint_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str = "48g",
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     cpus: parallelism for local[N]; defaults to $SPARK_GRAFT_CPUS or 32.
-    shuffle_partitions: defaults to cpus (never the 200 default — at local
-    scale that's pure scheduling overhead; on a cluster AQE coalesces).
+    spark.sql.shuffle.partitions is cpus (never the 200 default — at
+    local scale that's pure scheduling overhead; on a cluster AQE
+    coalesces); extra_conf overrides it, like any other Spark conf.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Start wide, let AQE coalesce: shuffle_partitions==cpus is right
+        # Start wide, let AQE coalesce: shuffle.partitions==cpus is right
         # for the many tiny exchanges of the query plans, but data-heavy
         # stages (multi-million-row window sorts) need more splits than
         # cores — a 2000-query scored-set sort measured 170s -> 104s at

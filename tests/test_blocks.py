@@ -17,8 +17,12 @@ from dint_spark.build.blocks import (
 from dint_spark.codecs.registry import VBYTE as vbyte_codec
 
 
-def test_rank_within_term(random_postings):
-    ranked = rank_within_term(random_postings, bucket_bits=10).collect()
+def test_rank_within_term(random_postings, monkeypatch):
+    from dint_spark.build import blocks
+
+    # 2^10-doc buckets: the 20k-doc lists span ~20 local-rank windows
+    monkeypatch.setattr(blocks, "RANK_BUCKET_BITS", 10)
+    ranked = rank_within_term(random_postings).collect()
     by_term = {}
     for r in ranked:
         by_term.setdefault(r["term_id"], []).append((r["doc_id"], r["rank"]))

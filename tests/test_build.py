@@ -52,6 +52,35 @@ def test_term_meta_max_weight(tiny_index):
         assert abs(got[t] - expect[t]) < 1e-9
 
 
+def test_term_meta_multilevel_merge(random_postings, monkeypatch):
+    """build_term_meta's three-level tree (2^16-doc buckets, 4096 per
+    merge) combines one array per level on any fixture under 65,536
+    docs. With 2^8-doc buckets merged 4 at a time, the 20k-doc lists of
+    random_postings span ~79 level-1 buckets and ~20 level-2 groups, and
+    term_meta must equal the default result exactly."""
+    from dint_spark.build import postings as P
+
+    post = random_postings.withColumn(
+        "term", F.concat(F.lit("t"), F.col("term_id").cast("string"))
+    )
+    doc_len = post.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
+    avg = doc_len.agg(F.avg("doc_len")).first()[0]
+    docs = doc_len.withColumn("norm_len", F.col("doc_len") / F.lit(avg))
+    num_docs = docs.count()
+
+    def meta():
+        rows = P.build_term_meta(post, docs, num_docs).collect()
+        return sorted(tuple(r) for r in rows)
+
+    want = meta()
+    assert len(want) == 25 and all(r[4] is not None for r in want)
+    monkeypatch.setattr(P, "META_BUCKET_BITS", 8)
+    monkeypatch.setattr(P, "META_MERGE_BITS", 2)
+    lvl1 = post.select("term_id", F.shiftrightunsigned("doc_id", 8).alias("b"))
+    assert lvl1.select("b").distinct().count() > 4**2  # 3 levels all merge
+    assert meta() == want
+
+
 def test_vocab_scalable_matches_window_path(spark, tiny_docs):
     """build_vocab(scalable=True) — the production default since round 3 —
     assigns term_ids identical to the window-rank debug path, so flipping

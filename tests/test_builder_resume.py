@@ -137,6 +137,29 @@ def test_codec_auto_chooser(spark, small_corpus, tmp_path_factory, monkeypatch):
     assert codec.name == "multi_packed_dint"
 
 
+def test_codec_auto_reresolves_per_build(
+    spark, small_corpus, tmp_path_factory, monkeypatch
+):
+    """One builder, two build() calls under auto_space: each call
+    resolves the codec again and records the request, so the second
+    call, with the threshold now under the corpus size, re-encodes as
+    multi_packed_dint instead of reusing the first call's resolution."""
+    from dint_spark.build import dint_build
+
+    b = IndexBuilder(spark, str(tmp_path_factory.mktemp("idx_auto_2x")),
+                     codec_name="auto_space")
+    r1 = b.build(small_corpus)
+    assert r1["index"]["codec"] == "single_packed_dint"
+    assert r1["index"]["codec_requested"] == "auto_space"
+
+    monkeypatch.setattr(dint_build, "MULTI_PACKED_MIN_POSTINGS", 1)
+    r2 = b.build(small_corpus)
+    assert r2["index"]["codec"] == "multi_packed_dint"
+    assert r2["index"]["codec_requested"] == "auto_space"
+    assert r2["verify"]["missing"] == 0 and r2["verify"]["extra"] == 0
+    assert b.codec_name == "auto_space"
+
+
 def _ranks(df):
     return sorted(
         (r["query_id"], r["doc_id"], round(r["score"], 9), r["rank"])

@@ -209,7 +209,7 @@ def test_minhash_lsh_no_full_selfjoin(dup_docs):
 
 
 def test_lsh_auto_bucket_population(spark):
-    """Auto-sized LSH (num_planes=None, the round-3 default): planes
+    """Auto-sized LSH (the only plane-count mode): planes
     derive from the vector count so MEAN bucket population tracks
     TARGET_BUCKET at any scale — the operator needs no retuning between
     sf0.01 and 10^12 vectors. Uses the sf0.1 embeddings table (the

@@ -156,14 +156,16 @@ def test_sharded_defaults_rank_identical_on_reference_queries(spark, ref_setup):
     from dint_spark.codecs.registry import get_codec
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
+        serving_artifacts,
         wand_topk_sharded,
     )
     from dint_spark.util import materialize
 
     codec = get_codec("block_vbyte")
     bidx = materialize(build_block_index(idx.postings, codec))
+    norms = serving_artifacts(idx)["norms"]
     for fn in (wand_topk_sharded, maxscore_topk_sharded):
-        got = fn(idx, bidx, codec, queries, idx.num_docs, k=K).collect()
+        got = fn(idx, bidx, codec, queries, idx.num_docs, norms, k=K).collect()
         by_q: dict[int, list] = {}
         for r in got:
             by_q.setdefault(r["query_id"], []).append(r)

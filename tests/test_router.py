@@ -40,7 +40,16 @@ def test_route_decision_degenerate_batches():
     assert route_decision(100_000, 10_000_000_000) == "cogroup"
 
 
-def test_topk_auto_rank_identity_both_routes(spark, zipf_setup):  # noqa: F811
+def _pin_route(monkeypatch, choice):
+    """Make every later topk_auto call take `choice`."""
+    import dint_spark.operators.router as R
+
+    monkeypatch.setattr(R, "route_decision", lambda nq, scored: choice)
+
+
+def test_topk_auto_rank_identity_both_routes(
+    spark, zipf_setup, monkeypatch  # noqa: F811
+):
     """topk_auto returns the SAME ranking whichever plan it picks; the
     auto decision for this tiny batch is the relational plan."""
     from dint_spark.operators.ranked import ranked_or
@@ -52,29 +61,25 @@ def test_topk_auto_rank_identity_both_routes(spark, zipf_setup):  # noqa: F811
     got_auto = _ranks(
         topk_auto(idx, bidx, codec, q, idx.num_docs, slices)
     )
-    got_rel = _ranks(
-        topk_auto(idx, bidx, codec, q, idx.num_docs, slices,
-                  force="relational")
-    )
-    got_cog = _ranks(
-        topk_auto(idx, bidx, codec, q, idx.num_docs, slices,
-                  force="cogroup")
-    )
+    _pin_route(monkeypatch, "relational")
+    got_rel = _ranks(topk_auto(idx, bidx, codec, q, idx.num_docs, slices))
+    _pin_route(monkeypatch, "cogroup")
+    got_cog = _ranks(topk_auto(idx, bidx, codec, q, idx.num_docs, slices))
     assert got_auto == ref
     assert got_rel == ref
     assert got_cog == ref
 
 
-def test_topk_auto_maxscore_route(spark, zipf_setup):  # noqa: F811
+def test_topk_auto_maxscore_route(spark, zipf_setup, monkeypatch):  # noqa: F811
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.router import topk_auto
 
     idx, bidx, codec, slices = zipf_setup
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
+    _pin_route(monkeypatch, "cogroup")
     got = _ranks(
-        topk_auto(idx, bidx, codec, q, idx.num_docs, slices,
-                  algo="maxscore", force="cogroup")
+        topk_auto(idx, bidx, codec, q, idx.num_docs, slices, algo="maxscore")
     )
     assert got == ref
 
@@ -119,17 +124,16 @@ def test_route_decision_perturbed_constants_bounded_regret(monkeypatch):
     never the 4× inversion the router exists to avoid."""
     import dint_spark.operators.router as R
 
-    monkeypatch.setenv("DINT_ROUTE_CONSTANTS", "/nonexistent")
-    monkeypatch.setattr(R, "_ART", None)
     for nq, scored, t_rel, t_cog, want in MEASURED:
         worst = max(t_rel, t_cog) / min(t_rel, t_cog)
         for f in (0.5, 1.0, 2.0):
-            got = R.route_decision(
-                nq, scored,
-                rel_rows_per_sec=R.ROUTE_REL_ROWS_PER_SEC * f,
-                cog_fixed_sec=R.ROUTE_COG_FIXED_SEC / f,
-                kernel_qps=R.ROUTE_KERNEL_QPS * f,
-            )
+            monkeypatch.setattr(R, "_ART", {
+                "rel_rows_per_sec": R.ROUTE_REL_ROWS_PER_SEC * f,
+                "cog_fixed_sec": R.ROUTE_COG_FIXED_SEC / f,
+                "kernel_qps": R.ROUTE_KERNEL_QPS * f,
+                "source": "perturbed",
+            })
+            got = R.route_decision(nq, scored)
             if got != want:
                 # a flip is tolerable only when the real walls are close
                 assert worst <= 2.2, (nq, f, got, want, worst)

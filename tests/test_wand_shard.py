@@ -7,7 +7,8 @@ evidence that pruning skips blocks on the Zipf corpus.
 
 Every case runs the one serving path: the static layout
 static_layout(universe) (3 shards on the 20,000-doc Zipf corpus), norm
-slices (precomputed, or packed in the plan when norms=None) and a
+slices (always passed: the fixture's materialized frame, or a
+norm_slices() frame packed in the plan by _layout_slices) and a
 shard-exploded block frame. Cases that need a single shard shrink the
 layout by raising MIN_SHARD_DOCS (one_shard)."""
 
@@ -104,10 +105,20 @@ def _universe(idx) -> int:
 def one_shard(monkeypatch) -> None:
     """Shrink the static layout to ONE shard for the rest of the test
     (MIN_SHARD_DOCS above the corpus size); norm slices packed for the
-    3-shard layout no longer apply, so such tests pass norms=None."""
+    3-shard layout no longer apply, so such tests pass _layout_slices(idx)."""
     from dint_spark.operators import wand_shard
 
     monkeypatch.setattr(wand_shard, "MIN_SHARD_DOCS", 1 << 40)
+
+
+def _layout_slices(idx):
+    """norm_slices() of idx packed for the layout static_layout gives
+    now (after one_shard: one shard), unmaterialized — the slices pack
+    inside the serving plan."""
+    from dint_spark.operators.wand_shard import norm_slices, static_layout
+
+    _nsh, ss = static_layout(_universe(idx))
+    return norm_slices(idx.docs.select("doc_id", "norm_len"), ss)
 
 
 def _norms_for(monkeypatch, idx, slices, num_shards):
@@ -117,7 +128,7 @@ def _norms_for(monkeypatch, idx, slices, num_shards):
     if num_shards == 1:
         one_shard(monkeypatch)
     assert static_layout(_universe(idx))[0] == num_shards
-    return None if num_shards == 1 else slices
+    return _layout_slices(idx) if num_shards == 1 else slices
 
 
 def _ranks(df):
@@ -174,7 +185,11 @@ def test_wand_sharded_tiny_corpus(spark, tiny_index):
         schema="query_id long, terms array<string>",
     )
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=3))
-    got = _ranks(wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, None, k=3))
+    got = _ranks(
+        wand_topk_sharded(
+            idx, bidx, codec, q, idx.num_docs, _layout_slices(idx), k=3
+        )
+    )
     assert got == ref
 
 
@@ -190,7 +205,9 @@ def test_wand_sharded_prunes_blocks_on_zipf(spark, zipf_setup, monkeypatch):
     one_shard(monkeypatch)
     q = _zipf_queries(spark).filter(F.col("query_id").isin(0, 1, 3, 4))
     st = (
-        wand_sharded_decode_stats(idx, bidx, codec, q, idx.num_docs, None)
+        wand_sharded_decode_stats(
+            idx, bidx, codec, q, idx.num_docs, _layout_slices(idx)
+        )
         .agg(
             F.sum("blocks_total").alias("t"),
             F.sum("blocks_docs_decoded").alias("d"),
@@ -205,7 +222,7 @@ def test_wand_sharded_prunes_blocks_on_zipf(spark, zipf_setup, monkeypatch):
 
 @pytest.mark.parametrize("algo", ["wand", "maxscore"])
 def test_sharded_norms_cogrouped_zipf(spark, zipf_setup, algo):
-    """Default norms mode (norms=None): norm slices derive from
+    """An unmaterialized norm_slices() frame: the slices pack from
     idx.docs INSIDE the plan and ride the cogroup — rank-identical to
     the oracle with zero driver-side per-doc collection."""
     from dint_spark.operators.ranked import ranked_or
@@ -218,7 +235,7 @@ def test_sharded_norms_cogrouped_zipf(spark, zipf_setup, algo):
     q = _zipf_queries(spark)
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     fn = wand_topk_sharded if algo == "wand" else maxscore_topk_sharded
-    got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, None))
+    got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, _layout_slices(idx)))
     assert got == ref
 
 
@@ -288,7 +305,7 @@ def test_k_gt_10_exact_seed_still_prunes(spark, zipf_setup, monkeypatch):
     q = _zipf_queries(spark).filter(F.col("query_id").isin(0, 3, 4))
     st = (
         wand_sharded_decode_stats(
-            idx, bidx, codec, q, idx.num_docs, None, k=25
+            idx, bidx, codec, q, idx.num_docs, _layout_slices(idx), k=25
         )
         .agg(
             F.sum("blocks_total").alias("t"),
@@ -325,7 +342,9 @@ def test_sharded_norms_sparse_universe(spark):
         schema="query_id long, terms array<string>",
     )
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
-    got = _ranks(wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, None))
+    got = _ranks(
+        wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, _layout_slices(idx))
+    )
     assert got == ref
 
 
@@ -390,8 +409,34 @@ def test_wand_elastic_layout_end_to_end(spark):
         schema="query_id long, terms array<string>",
     )
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
-    got = _ranks(wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, None))
+    got = _ranks(
+        wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, _layout_slices(idx))
+    )
     assert got == ref
+
+
+@pytest.mark.parametrize("algo", ["wand", "maxscore"])
+def test_sharded_rank_identity_range_fanout(spark, zipf_setup, monkeypatch, algo):
+    """Layouts above SEQ_SHARD_MAX fan the shard ids out with a
+    crossJoin over spark.range instead of a per-row sequence: with the
+    cap at 1 the 3-shard layout takes that branch and stays
+    rank-identical to the oracle."""
+    from dint_spark.operators import wand_shard
+    from dint_spark.operators.ranked import ranked_or
+
+    idx, bidx, codec, slices = zipf_setup
+    monkeypatch.setattr(wand_shard, "SEQ_SHARD_MAX", 1)
+    assert wand_shard.static_layout(_universe(idx))[0] == 3
+    q = _zipf_queries(spark).unionByName(_edge_queries(spark))
+    ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
+    fn = (
+        wand_shard.wand_topk_sharded
+        if algo == "wand"
+        else wand_shard.maxscore_topk_sharded
+    )
+    got = fn(idx, bidx, codec, q, idx.num_docs, slices)
+    assert "BroadcastNestedLoopJoin" in got._jdf.queryExecution().toString()
+    assert _ranks(got) == ref
 
 
 def test_wand_rank_identity_64_query_batch(spark, zipf_setup):
@@ -455,25 +500,31 @@ def test_wand_runs_no_more_jobs_than_maxscore(spark, zipf_setup):
 
 
 def test_norm_slices_chunked_rows(spark, zipf_setup):
-    """Multiple packed slice rows per shard (chunk < shard population)
-    reassemble into the same result as single-row slices."""
+    """norm_slices packs exactly one slice row per non-empty shard
+    (static_layout caps a shard's span at TARGET_SHARD_SPAN), and the
+    rows reassemble into an oracle-identical result."""
     from dint_spark.operators.ranked import ranked_or
-    from dint_spark.operators.wand_shard import norm_slices, wand_topk_sharded
+    from dint_spark.operators.wand_shard import (
+        NORM_SENTINEL,
+        norm_slices,
+        static_layout,
+        wand_topk_sharded,
+    )
     from dint_spark.util import materialize
-
-    from dint_spark.operators.wand_shard import static_layout
 
     idx, bidx, codec, _slices = zipf_setup
     q = _zipf_queries(spark).filter(F.col("query_id").isin(0, 3))
     universe = _universe(idx)
     nsh, ss = static_layout(universe)
     assert nsh == 3
-    slices = materialize(
-        norm_slices(idx.docs.select("doc_id", "norm_len"), ss, chunk=512)
-    )
-    # chunking produced multiple rows per shard
-    n_rows = slices.count()
-    assert n_rows > nsh, n_rows
+    slices = materialize(norm_slices(idx.docs.select("doc_id", "norm_len"), ss))
+    rows = slices.collect()
+    shards = {
+        r["doc_id"] // ss for r in idx.docs.select("doc_id").collect()
+    }
+    assert sorted(r["_shard"] for r in rows) == sorted(shards)
+    assert all(r["term_id"] == NORM_SENTINEL for r in rows)
+    assert sum(r["n"] for r in rows) == idx.docs.count()
     ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs))
     got = _ranks(
         wand_topk_sharded(
@@ -601,10 +652,10 @@ def test_shard_bmw_drops_dead_pairs_and_bytes(spark, zipf_setup):
 
 def test_presharded_artifact_equals_perbatch_join(spark, zipf_setup):
     """r6 optimization guard: the pre-sharded block index
-    (sharded_block_index materialized once — engine.get_sharded_blocks
-    serving shape) must produce results identical to no artifact at all
-    (the plan then shard-explodes bidx without the refinement) and to
-    the oracle; the refinement is lossless."""
+    (sharded_block_index materialized once — the sharded_bidx that
+    engine.get_serving serves) must produce results identical to no
+    artifact at all (the plan then shard-explodes bidx without the
+    refinement) and to the oracle; the refinement is lossless."""
     from dint_spark.operators.ranked import ranked_or
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
@@ -659,14 +710,15 @@ def test_presharded_artifact_layout_mismatch_refused(spark, zipf_setup):
 
 
 def test_legacy_norms_forms_refused(spark, zipf_setup):
-    """norms is a norm_slices() frame or None; a (doc_id, norm_len)
-    frame or a broadcast array is refused before any plan is built."""
+    """norms is a required norm_slices() frame; None, a (doc_id,
+    norm_len) frame or a broadcast array is refused before any plan is
+    built."""
     from dint_spark.operators.wand_shard import wand_topk_sharded
 
     idx, bidx, codec, _slices = zipf_setup
     q = _zipf_queries(spark)
     bc = spark.sparkContext.broadcast(np.zeros(4))
-    for norms in (idx.docs.select("doc_id", "norm_len"), bc):
+    for norms in (None, idx.docs.select("doc_id", "norm_len"), bc):
         with pytest.raises(TypeError, match="norm_slices"):
             wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms)
     bc.unpersist()
