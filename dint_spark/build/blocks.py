@@ -243,18 +243,6 @@ def build_block_index(
     )
 
 
-def decode_doc_ids(codec, bufs, ns, bases) -> tuple[np.ndarray, np.ndarray]:
-    """Many blocks' docs streams → (int64 doc ids, block start offsets):
-    one batch decode (codec.decode_docs_batch), then the segmented
-    prefix-sum un-gap (P5) over the whole batch at once:
-    doc[i] = base(block) + Σ_{block-local ≤ i} (gap+1)."""
-    ns = np.asarray(ns, dtype=np.int64)
-    gaps, offs = codec.decode_docs_batch(bufs, ns)
-    cs = np.cumsum(gaps.astype(np.int64) + 1)
-    excl = np.where(offs > 0, cs[offs - 1], 0)
-    return cs + np.repeat(np.asarray(bases, dtype=np.int64) - excl, ns), offs
-
-
 def decode_block_index(
     index: DataFrame,
     codec,
@@ -293,13 +281,16 @@ def decode_block_index(
             if not len(pdf):
                 continue
             ns = pdf["n"].to_numpy(dtype=np.int64)
-            docs, _offs = decode_doc_ids(
-                c, list(pdf["docs_bytes"]), ns,
-                pdf["block_base"].to_numpy(dtype=np.int64),
-            )
+            # one many-block decode for the whole Arrow batch, then the
+            # segmented prefix-sum un-gap (P5) over all of it at once:
+            # doc[i] = base(block) + Σ_{block-local ≤ i} (gap+1)
+            gaps, offs = c.decode_docs_batch(list(pdf["docs_bytes"]), ns)
+            cs = np.cumsum(gaps.astype(np.int64) + 1)
+            excl = np.where(offs > 0, cs[offs - 1], 0)
+            bases = pdf["block_base"].to_numpy(dtype=np.int64)
             cols = {
                 "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
-                "doc_id": docs,
+                "doc_id": cs + np.repeat(bases - excl, ns),
             }
             if not docs_only:
                 tfs_flat, _ = c.decode_freqs_batch(list(pdf["freqs_bytes"]), ns)

@@ -47,10 +47,13 @@ class _BitReader:
     def __init__(self, buf: bytes):
         self.buf = buf
         self.pos = 0  # bit position
+        self.nbits = 8 * len(buf)
 
     def read(self, width: int) -> int:
         if width == 0:
             return 0
+        if self.pos + width > self.nbits:
+            raise ValueError(f"truncated bit stream ({self.nbits} bits)")
         v = 0
         for _ in range(width):
             byte = self.buf[self.pos >> 3]
@@ -110,6 +113,8 @@ def encode(values: np.ndarray) -> bytes:
 
 
 def decode(buf: bytes, n_expected: int | None = None) -> np.ndarray:
+    if len(buf) < 8:
+        raise ValueError(f"interpolative: truncated header ({len(buf)} of 8 bytes)")
     n, last = np.frombuffer(buf[:8], dtype=np.uint32)
     n = int(n)
     if n_expected is not None and n != n_expected:
@@ -117,7 +122,10 @@ def decode(buf: bytes, n_expected: int | None = None) -> np.ndarray:
     if n == 0:
         return np.empty(0, dtype=np.uint32)
     out: list[int] = []
-    _dec(_BitReader(buf[8:]), n - 1, 0, int(last) - 1, out)
+    try:
+        _dec(_BitReader(buf[8:]), n - 1, 0, int(last) - 1, out)
+    except ValueError as e:
+        raise ValueError(f"interpolative: {e}") from None
     out.append(int(last))
     mono = np.asarray(out, dtype=np.uint64)
     vals = np.diff(mono, prepend=np.uint64(0))

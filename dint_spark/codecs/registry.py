@@ -3,7 +3,10 @@ index-type dispatch (/root/reference/include/index_types.hpp:83-87).
 
 A codec object exposes encode_docs / encode_freqs / decode_docs /
 decode_freqs over uint32 numpy arrays (one posting block per call), and
-decode_docs_batch / decode_freqs_batch over many blocks (BlockCodec). The
+decode_docs_batch / decode_freqs_batch over many blocks (BlockCodec).
+The serving kernel reads one block per call; the many-block calls serve
+decode_block_index, whose calls carry a whole Arrow batch of blocks —
+enough work for DINT's lockstep decoder to beat the scalar reader. The
 docs stream carries docID gaps−1, the freqs stream tf−1. DINT codecs are
 asymmetric: separate dictionaries are learned for the two streams
 (dict_freq_index::builder::build_model learns two models,

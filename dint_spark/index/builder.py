@@ -31,7 +31,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from dint_spark.build.blocks import build_block_index, decode_block_index, index_stats
+from dint_spark.build.blocks import build_block_index, decode_block_index
 from dint_spark.build.dint_build import choose_packed_codec, learn_dint_model, model_class
 from dint_spark.build.postings import build_fulltext_index
 from dint_spark.codecs.registry import get_codec
@@ -195,7 +195,12 @@ class IndexBuilder:
             bidx = build_block_index(postings, codec)
             bidx.write.mode("overwrite").parquet(self._table("index"))
             bidx = self.spark.read.parquet(self._table("index"))
-            # per-partition encode metrics (north rule)
+            # per-partition encode metrics (north rule); the lineage's
+            # index totals are their sums, bpi rounded as index_stats does
+            bpi = [
+                F.round(F.col(f"{s}_bytes") * 8.0 / F.col("n_postings"), 4).alias(f"{s}_bpi")
+                for s in ("docs", "freqs")
+            ]
             per_part = (
                 bidx.withColumn("_pid", F.spark_partition_id())
                 .groupBy("_pid")
@@ -205,15 +210,15 @@ class IndexBuilder:
                     F.sum(F.octet_length("docs_bytes")).alias("docs_bytes"),
                     F.sum(F.octet_length("freqs_bytes")).alias("freqs_bytes"),
                 )
-                .withColumn(
-                    "docs_bpi", F.round(F.col("docs_bytes") * 8.0 / F.col("n_postings"), 4)
-                )
-                .withColumn(
-                    "freqs_bpi", F.round(F.col("freqs_bytes") * 8.0 / F.col("n_postings"), 4)
-                )
+                .select("*", *bpi)
             )
             per_part.write.mode("overwrite").parquet(self._table("metrics_partitions"))
-            stats = index_stats(bidx).first()
+            stats = (
+                self.spark.read.parquet(self._table("metrics_partitions"))
+                .agg(*[F.sum(c).alias(c) for c in ("n_blocks", "n_postings", "docs_bytes", "freqs_bytes")])
+                .select("*", *bpi)
+                .first()
+            )
             self._write_lineage(
                 "index",
                 {
@@ -221,10 +226,7 @@ class IndexBuilder:
                     "input_fingerprint": fp_index,
                     "codec": codec_name,
                     "codec_requested": self.codec_name,
-                    "n_blocks": stats["n_blocks"],
-                    "n_postings": stats["n_postings"],
-                    "docs_bpi": stats["docs_bpi"],
-                    "freqs_bpi": stats["freqs_bpi"],
+                    **{c: stats[c] for c in ("n_blocks", "n_postings", "docs_bpi", "freqs_bpi")},
                     "wall_sec": round(time.time() - t0, 2),
                 },
             )
@@ -233,10 +235,20 @@ class IndexBuilder:
         # stage: verify (decode round-trip, verify_collection semantics)
         if not self._stage_done("verify", fp_index):
             t0 = time.time()
-            decoded = decode_block_index(bidx, codec)
-            truth = postings.select("term_id", "doc_id", "tf")
-            missing = truth.exceptAll(decoded).count()
-            extra = decoded.exceptAll(truth).count()
+            # one signed multiset pass, so the index decodes once: truth
+            # counts +1 and decoded −1 per (term_id, doc_id, tf); a
+            # positive net count is missing, a negative one extra
+            net = (
+                postings.select("term_id", "doc_id", "tf", F.lit(1).alias("_s"))
+                .unionByName(decode_block_index(bidx, codec).withColumn("_s", F.lit(-1)))
+                .groupBy("term_id", "doc_id", "tf")
+                .agg(F.sum("_s").alias("_s"))
+            )
+            diff = net.agg(
+                F.sum(F.greatest("_s", F.lit(0))).alias("missing"),
+                F.sum(F.greatest(-F.col("_s"), F.lit(0))).alias("extra"),
+            ).first()
+            missing, extra = int(diff["missing"] or 0), int(diff["extra"] or 0)
             if missing or extra:
                 raise RuntimeError(
                     f"index verify FAILED: missing={missing} extra={extra}"

@@ -24,7 +24,8 @@ COGROUP so the index slice ships ONCE regardless of batch size:
            touches a block another query already decoded pays nothing —
            the shard-server working set, not a Spark-level cache)
          · per query: DAAT kernel (pivot/next_geq/block-max, lazy
-           per-block doc+freq decode) or a vectorized exhaustive merge
+           doc+freq decode) or a vectorized exhaustive merge; both read
+           every block through ONE memoized one-block-per-call decode
       → topk merge over ≤ k·shards rows per query   -- tiny
 
 Shuffle volume is O(index slice of the batch's terms), NOT
@@ -67,11 +68,11 @@ but no decodes, and its extra exchange stages cost more wall time than
 the bytes saved at every measured scale (BENCH/BASELINE.md).
 
 Adaptive kernel: a COST MODEL (C_PIVOT / C_VEC / C_DECODE below)
-chooses per query, per shard between the DAAT path and a batched-decode
-bincount merge — DAAT runs when its pivot work undercuts the vectorized
-merge plus the decode credit for blocks the merge would decode but DAAT
-skips. Runtime re-planning from group statistics, like a cost-based
-optimizer.
+chooses per query, per shard between the DAAT path and a bincount merge
+— DAAT runs when its pivot work undercuts the vectorized merge plus the
+decode credit for blocks the merge would decode but DAAT skips. Runtime
+re-planning from group statistics, like a cost-based optimizer. The two
+paths differ in which blocks they read, never in how a block decodes.
 """
 
 from __future__ import annotations
@@ -82,7 +83,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from dint_spark.build.blocks import BLOCK_SIZE, decode_doc_ids, rank_within_term
+from dint_spark.build.blocks import BLOCK_SIZE, rank_within_term
 from dint_spark.build.postings import TOPK_BOUND_K, FullTextIndex
 from dint_spark.functions.bm25 import B, K1, doc_term_weight
 from dint_spark.operators.ranked import SCORE_ROUND, topk
@@ -94,7 +95,9 @@ INT64_MAX = np.iinfo(np.int64).max
 # Cost model for the per-(query, shard) DAAT-vs-vectorized choice:
 C_PIVOT = 20e-6   # sec per DAAT pivot iteration (sort + bound scan + probes)
 C_VEC = 0.05e-6   # sec per posting through the bincount merge
-C_DECODE = 30e-6  # sec per block decode (DINT lockstep, amortized)
+C_DECODE = 30e-6  # sec per block decode: one scalar decode_docs call
+# (measured ~43 µs for DINT); the value predates the one decode path and
+# stays until the constants are re-fit from per-path kernel counters
 # DAAT wins only when its pivot work (≈ postings of pivot-capable lists,
 # the ones whose bound reaches θ_seed) undercuts the vectorized merge
 # PLUS the decode credit for blocks the merge would have to decode but
@@ -132,9 +135,14 @@ TARGET_SHARD_SPAN = 1 << 18  # 262,144 docs (~1024 blocks): max doc span
 class _TermBlocks:
     """One term's block arrays within a shard, shared across the batch's
     queries, with decoded-block memo dicts (the shard server's working
-    set — decode each touched block at most once per shard per batch)."""
+    set — decode each touched block at most once per shard per batch).
 
-    __slots__ = ("bases", "maxs", "ns", "bmw", "dbytes", "fbytes",
+    docs() and tfs() are the kernel's only decode: one block per codec
+    call, as the reference's enumerator decodes (dict_posting_list.hpp:
+    120-169), memoized, each fresh decode counted in the caller's
+    stats = [blocks_total, docs_decoded, freqs_decoded]."""
+
+    __slots__ = ("bases", "maxs", "ns", "bmw", "dbytes", "fbytes", "codec",
                  "dcache", "fcache", "max_bmw", "ns_total", "_est")
 
     def est_postings(self, lo: int, hi: int) -> float:
@@ -156,13 +164,14 @@ class _TermBlocks:
             self._est = float((self.ns * (ov / span)).sum())
         return self._est
 
-    def __init__(self, bases, maxs, ns, bmw, dbytes, fbytes):
+    def __init__(self, bases, maxs, ns, bmw, dbytes, fbytes, codec):
         self.bases = bases    # int64[nb] block gap-chain seeds
         self.maxs = maxs      # int64[nb] last docID per block
         self.ns = ns          # int64[nb]
         self.bmw = bmw        # float64[nb] block max weights (may be nan)
         self.dbytes = dbytes
         self.fbytes = fbytes
+        self.codec = codec
         self.dcache: dict[int, np.ndarray] = {}  # bi → absolute docIDs
         self.fcache: dict[int, np.ndarray] = {}  # bi → tf values
         # per-shard constants computed ONCE, shared by every query of
@@ -172,8 +181,28 @@ class _TermBlocks:
         self.ns_total = int(ns.sum())
         self._est = -1.0
 
+    def docs(self, bi: int, stats) -> np.ndarray:
+        """Block bi's absolute docIDs: gaps un-gapped from block_base."""
+        docs = self.dcache.get(bi)
+        if docs is None:
+            gaps = self.codec.decode_docs(self.dbytes[bi], int(self.ns[bi]))
+            docs = np.cumsum(gaps.astype(np.int64) + 1) + self.bases[bi]
+            self.dcache[bi] = docs
+            stats[1] += 1
+        return docs
 
-def _term_cache(left: pd.DataFrame) -> dict[int, _TermBlocks]:
+    def tfs(self, bi: int, stats) -> np.ndarray:
+        """Block bi's term frequencies."""
+        tfs = self.fcache.get(bi)
+        if tfs is None:
+            tfs = self.codec.decode_freqs(self.fbytes[bi], int(self.ns[bi]))
+            tfs = tfs.astype(np.int64) + 1
+            self.fcache[bi] = tfs
+            stats[2] += 1
+        return tfs
+
+
+def _term_cache(left: pd.DataFrame, codec) -> dict[int, _TermBlocks]:
     """Build the shard's term → _TermBlocks map ONCE per kernel call
     (numpy boundary split — no per-term pandas groupby)."""
     left = left.sort_values(["term_id", "block_id"])
@@ -191,7 +220,7 @@ def _term_cache(left: pd.DataFrame) -> dict[int, _TermBlocks]:
     bounds = np.append(bounds, len(tid))
     for s, e in zip(bounds[:-1], bounds[1:]):
         cache[int(tid[s])] = _TermBlocks(
-            bases[s:e], maxs[s:e], ns[s:e], bmw[s:e], db[s:e], fb[s:e]
+            bases[s:e], maxs[s:e], ns[s:e], bmw[s:e], db[s:e], fb[s:e], codec
         )
     return cache
 
@@ -216,13 +245,12 @@ class _ListEnum:
     next_geq positions exactly at zero cost.
     """
 
-    __slots__ = ("qw", "ub", "tb", "codec", "bi", "docs", "tfs", "pos",
+    __slots__ = ("qw", "ub", "tb", "bi", "docs", "tfs", "pos",
                  "cur", "exhausted", "stats", "approx")
 
-    def __init__(self, qw, tb: _TermBlocks, codec, stats):
+    def __init__(self, qw, tb: _TermBlocks, stats):
         self.qw = qw
         self.tb = tb
-        self.codec = codec
         self.bi = -1
         self.docs = None
         self.tfs = None
@@ -237,14 +265,7 @@ class _ListEnum:
 
     def _enter_block(self, bi: int) -> None:
         self.bi = bi
-        tb = self.tb
-        docs = tb.dcache.get(bi)
-        if docs is None:
-            gaps = self.codec.decode_docs(tb.dbytes[bi], int(tb.ns[bi]))
-            docs = np.cumsum(gaps.astype(np.int64) + 1) + tb.bases[bi]
-            tb.dcache[bi] = docs
-            self.stats[1] += 1
-        self.docs = docs
+        self.docs = self.tb.docs(bi, self.stats)
         self.tfs = None
 
     def materialize(self) -> None:
@@ -261,16 +282,7 @@ class _ListEnum:
 
     def freq(self) -> int:
         if self.tfs is None:
-            tb = self.tb
-            tfs = tb.fcache.get(self.bi)
-            if tfs is None:
-                tfs = (
-                    self.codec.decode_freqs(tb.fbytes[self.bi], int(tb.ns[self.bi]))
-                    .astype(np.int64) + 1
-                )
-                tb.fcache[self.bi] = tfs
-                self.stats[2] += 1
-            self.tfs = tfs
+            self.tfs = self.tb.tfs(self.bi, self.stats)
         return int(self.tfs[self.pos])
 
     def next_geq(self, target: int) -> None:
@@ -324,15 +336,14 @@ def _dtw(tf: float, norm_len: float) -> float:
 
 
 def _make_enums(
-    qrows: list[tuple], cache: dict[int, _TermBlocks], codec, lo: int,
-    hi: int, stats,
+    qrows: list[tuple], cache: dict[int, _TermBlocks], lo: int, hi: int, stats,
 ) -> list[_ListEnum]:
     enums = []
     for term_id, qw, _w10 in qrows:
         tb = cache.get(int(term_id))
         if tb is None:
             continue
-        e = _ListEnum(float(qw), tb, codec, stats)
+        e = _ListEnum(float(qw), tb, stats)
         stats[0] += len(tb.ns)
         e.next_geq(lo)
         if not e.exhausted and e.cur < hi:
@@ -419,11 +430,13 @@ def _exhaustive_merge(
     theta: float = 0.0,
 ) -> list[tuple]:
     """Vectorized exhaustive scoring for groups where pruning cannot
-    skip enough to pay for the per-doc DAAT loop. Uncached blocks decode
-    in ONE batched-decoder call (the lockstep DINT kernel where the
-    codec provides it); results land in the shard's memo so later
-    queries in the batch reuse them. Aggregation is a bincount over the
-    shard's contiguous doc range; top-k by (rounded, -doc).
+    skip enough to pay for the per-doc DAAT loop. Each surviving block
+    is read through the same memoized per-block reader as the DAAT path
+    (_TermBlocks.docs / tfs), so later queries in the batch reuse it. A
+    lockstep many-block decode does not pay here: a merge reads ~5 blocks,
+    where its per-call cost is 15-90× the scalar reader's per block.
+    Aggregation is a bincount over the shard's contiguous doc range;
+    top-k by (rounded, -doc).
 
     With θ > 0 (the WAND variant passes its seed), blocks whose
     cross-list bound qw_i·block_max_weight_i(b) + Σ_{j≠i} ub_j < θ are
@@ -435,9 +448,7 @@ def _exhaustive_merge(
     strictly below every true top-k doc (the 2e-9 margin > the 1e-9
     rounding quantum). NULL (NaN) block_max_weight keeps the block.
     Every block overlaps [lo, hi) (the kernel's layout guard)."""
-    blocks: list[tuple[_ListEnum, int]] = []
-    need_d: list[tuple[_ListEnum, int]] = []
-    need_f: list[tuple[_ListEnum, int]] = []
+    parts: list[tuple[float, np.ndarray, np.ndarray]] = []
     sum_ub = sum(e.ub for e in enums)
     skip_bound = theta > 0.0
     for e in enums:
@@ -448,35 +459,7 @@ def _exhaustive_merge(
                 w = tb.bmw[bi]
                 if w == w and e.qw * w + others < theta:
                     continue
-            blocks.append((e, bi))
-            if bi not in tb.dcache:
-                need_d.append((e, bi))
-            if bi not in tb.fcache:
-                need_f.append((e, bi))
-    if need_d:
-        docs_flat, offs = decode_doc_ids(
-            need_d[0][0].codec,
-            [e.tb.dbytes[bi] for e, bi in need_d],
-            [int(e.tb.ns[bi]) for e, bi in need_d],
-            [int(e.tb.bases[bi]) for e, bi in need_d],
-        )
-        for j, (e, bi) in enumerate(need_d):
-            s = int(offs[j])
-            e.tb.dcache[bi] = docs_flat[s : s + int(e.tb.ns[bi])]
-            e.stats[1] += 1
-    if need_f:
-        ns = np.asarray([int(e.tb.ns[bi]) for e, bi in need_f], dtype=np.int64)
-        tfs_flat, offs = need_f[0][0].codec.decode_freqs_batch(
-            [e.tb.fbytes[bi] for e, bi in need_f], ns
-        )
-        tfs_all = tfs_flat.astype(np.int64) + 1
-        for j, (e, bi) in enumerate(need_f):
-            s, t = int(offs[j]), int(offs[j] + ns[j])
-            e.tb.fcache[bi] = tfs_all[s:t]
-            e.stats[2] += 1
-    parts = [
-        (e.qw, e.tb.dcache[bi], e.tb.fcache[bi]) for e, bi in blocks
-    ]
+            parts.append((e.qw, tb.docs(bi, e.stats), tb.tfs(bi, e.stats)))
     if not parts:
         return []
     alld = np.concatenate([d for _q, d, _f in parts])
@@ -646,9 +629,8 @@ def _maxscore_core(
     return [(-nd, raw) for _r, nd, raw in heap]
 
 
-def _run_query(algo, qrows, cache, codec, norms, lo, hi, k, stats,
-               seed=None):
-    enums = _make_enums(qrows, cache, codec, lo, hi, stats)
+def _run_query(algo, qrows, cache, norms, lo, hi, k, stats, seed=None):
+    enums = _make_enums(qrows, cache, lo, hi, stats)
     if seed is None:
         seed = _seed_from_rows(qrows, k)
     if algo == "maxscore":
@@ -1056,7 +1038,6 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
             return empty
         shard = int(key[0])
         lo, hi = shard * ss, min((shard + 1) * ss, universe)
-        c = codec_bc.value
         nv = np.zeros(max(0, hi - lo), dtype=np.float64)
         cache = {}
         if len(left):
@@ -1084,7 +1065,7 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
                     f"not overlap its docs [{lo}, {hi}) at shard_size {ss} — "
                     "rebuild sharded_block_index for static_layout(universe)"
                 )
-            cache = _term_cache(blocks_pdf)
+            cache = _term_cache(blocks_pdf, codec_bc.value)
         tids = right["term_id"].to_numpy(dtype=np.int64)
         qws = right["qw"].to_numpy(dtype=np.float64)
         w10s = right["w10"].to_numpy(dtype=np.float64)
@@ -1108,8 +1089,8 @@ def _run(idx, bidx, codec, queries, num_docs, norms, k, algo,
                     tb.fcache.clear()
             stats = [0, 0, 0]
             sv = seeds[sel[0]]
-            rows = _run_query(algo, qrows, cache, c, nv, lo, hi, k,
-                              stats, seed=float(sv) if sv == sv else None)
+            rows = _run_query(algo, qrows, cache, nv, lo, hi, k, stats,
+                              seed=float(sv) if sv == sv else None)
             if stats_mode:
                 out_rows.append((qid, shard, stats[0], stats[1], stats[2]))
             else:

@@ -91,6 +91,44 @@ def test_verify_fails_on_missing_block(spark, small_corpus, tmp_path_factory):
         IndexBuilder(spark, out).build(small_corpus)
 
 
+def test_verify_fails_on_corrupt_block(spark, small_corpus, tmp_path_factory):
+    """A built index with bytes flipped inside one block's docs stream
+    fails its re-run verify stage loudly: a verify mismatch or a decode
+    error, never a silent pass."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path_factory.mktemp("idx_flipped"))
+    IndexBuilder(spark, out).build(small_corpus)
+
+    # the block with the longest docs stream; flip its middle byte
+    index = os.path.join(out, "index")
+    bidx = spark.read.parquet(index)
+    target = bidx.orderBy(
+        F.desc(F.octet_length("docs_bytes")), "term_id", "block_id"
+    ).first()
+    buf = bytearray(target["docs_bytes"])
+    assert len(buf) > 16
+    buf[len(buf) // 2] ^= 0xFF
+    hit = (F.col("term_id") == target["term_id"]) & (
+        F.col("block_id") == target["block_id"]
+    )
+    flipped = bidx.withColumn(
+        "docs_bytes",
+        F.when(hit, F.lit(bytes(buf))).otherwise(F.col("docs_bytes")),
+    )
+    sibling = index + ".corrupt"
+    flipped.write.parquet(sibling)
+    assert spark.read.parquet(sibling).filter(hit).first()["docs_bytes"] == bytes(buf)
+    shutil.rmtree(index)
+    os.rename(sibling, index)
+
+    os.remove(os.path.join(out, "_lineage", "verify.json"))
+    with pytest.raises(Exception) as err:
+        IndexBuilder(spark, out).build(small_corpus)
+    msg = str(err.value)
+    assert "index verify FAILED" in msg or "ValueError" in msg, msg
+
+
 def test_codec_auto_chooser(spark, small_corpus, tmp_path_factory, monkeypatch):
     """codec_name='auto' optimizes SERVING (always single — the 12-way
     multi decode measured 1.4-3.4× query wall,

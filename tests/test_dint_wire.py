@@ -112,9 +112,16 @@ def test_learned_dictionaries_match_golden_digest(random_postings):
 
 def _truncation_case(kind: str, exc_value: int):
     """(codec, 256-int block whose last codeword is an exception): the
-    single codec's u16 stream, or a multi block that wins at 16 or 8 bits."""
+    single codec's u16 stream, or a multi block that wins at 16 or 8 bits.
+    The tail kinds give a 100-int block ending in exc_value instead, which
+    both codecs write as an interpolative payload."""
     d = golden_dict()
     rng = np.random.default_rng(5)
+    if kind.startswith("tail"):
+        v = np.append(rng.integers(1, 100, size=99), exc_value).astype(np.uint32)
+        if kind == "tail_multi":
+            return MultiDintCodec([d] * NUM_SELECTORS), v
+        return DintCodec(d, tail_fallback=True), v
     if kind == "multi16":  # tiled from ≥ 256 codewords: 16-bit wins
         pat = d.matrix[SMALL, :16]
         v = np.concatenate([np.tile(pat, 15), rng.integers(1, 100, size=15)])
@@ -128,21 +135,25 @@ def _truncation_case(kind: str, exc_value: int):
 
 @pytest.mark.parametrize("path", ["scalar", "batch_last", "batch_cross"])
 @pytest.mark.parametrize("exc_value", [4660, 0x12345678], ids=["exc16", "exc32"])
-@pytest.mark.parametrize("kind", ["single16", "multi16", "multi8"])
-@pytest.mark.parametrize("cut", [1, 2], ids=["cut1", "cut2"])
+@pytest.mark.parametrize(
+    "kind", ["single16", "multi16", "multi8", "tail_single", "tail_multi"]
+)
+@pytest.mark.parametrize("cut", [1, 2, "head"], ids=["cut1", "cut2", "head"])
 def test_truncated_stream_raises(kind, exc_value, path, cut):
     """A stream whose final exception operand is cut raises ValueError:
     decoded alone, as the last block of a lockstep batch, and as a block
-    whose cut operand would run into the next block's bytes."""
+    whose cut operand would run into the next block's bytes. A tail
+    (interpolative) payload cut at its end raises it too, and so does
+    every stream cut to 5 bytes (inside a tail's 8-byte header)."""
     codec, v = _truncation_case(kind, exc_value)
     enc = codec.encode(v)
-    if isinstance(codec, MultiDintCodec):
+    if kind in ("multi16", "multi8"):
         assert (enc[0] >= NUM_SELECTORS) == (kind == "multi8")
-    bad = enc[:-cut]
-    ns = np.array([256, 256])
+    bad = enc[:5] if cut == "head" else enc[:-cut]
+    ns = np.array([v.size, v.size])
     with pytest.raises(ValueError, match="truncated"):
         if path == "scalar":
-            codec.decode(bad, 256)
+            codec.decode(bad, v.size)
         elif path == "batch_last":
             codec.decode_batch([enc, bad], ns)
         else:

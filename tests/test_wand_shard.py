@@ -722,3 +722,111 @@ def test_legacy_norms_forms_refused(spark, zipf_setup):
         with pytest.raises(TypeError, match="norm_slices"):
             wand_topk_sharded(idx, bidx, codec, q, idx.num_docs, norms)
     bc.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# one decode path: every block through the per-block memoized reader
+# ---------------------------------------------------------------------------
+
+# Σ (blocks_total, blocks_docs_decoded, blocks_freqs_decoded) of the
+# decode stats for ZIPF_QUERIES at the static 3-shard layout. A change
+# to how the kernel decodes must leave the decoded-block set, and so
+# these counts, exactly as they are.
+PINNED_DECODE_COUNTS = {
+    "wand": (264, 197, 168),
+    "maxscore": (264, 173, 153),
+}
+
+
+@pytest.mark.parametrize("algo", ["wand", "maxscore"])
+def test_decode_counts_pinned_zipf(spark, zipf_setup, algo):
+    from dint_spark.operators.wand_shard import wand_sharded_decode_stats
+
+    idx, bidx, codec, slices = zipf_setup
+    st = (
+        wand_sharded_decode_stats(
+            idx, bidx, codec, _zipf_queries(spark), idx.num_docs, slices,
+            algo=algo,
+        )
+        .agg(
+            F.sum("blocks_total").alias("t"),
+            F.sum("blocks_docs_decoded").alias("d"),
+            F.sum("blocks_freqs_decoded").alias("f"),
+        )
+        .first()
+    )
+    assert (st["t"], st["d"], st["f"]) == PINNED_DECODE_COUNTS[algo]
+
+
+class _ScalarOnly:
+    """The fixture's codec with its many-block decode refused: the
+    kernel must read every block through decode_docs / decode_freqs."""
+
+    def __init__(self, codec):
+        self.decode_docs = codec.decode_docs
+        self.decode_freqs = codec.decode_freqs
+
+    def decode_docs_batch(self, bufs, ns):
+        raise AssertionError("the shard kernel made a many-block decode call")
+
+    decode_freqs_batch = decode_docs_batch
+
+
+@pytest.mark.parametrize("algo", ["wand", "maxscore"])
+def test_kernel_decodes_one_block_per_call(spark, zipf_setup, monkeypatch, algo):
+    """Driver-side run of the shard kernel over the fixture's block rows:
+    with many-block decode refused, both kernel paths (DAAT and the
+    exhaustive merge) give the same rows and decode counts as the real
+    codec, and the shards' merged top-10 equals the ranked_or oracle."""
+    from dint_spark.operators import wand_shard as W
+    from dint_spark.operators.ranked import ranked_or
+    from dint_spark.operators.wand import query_bounds
+
+    idx, bidx, codec, _slices = zipf_setup
+    merges = []
+    real_merge = W._exhaustive_merge
+    monkeypatch.setattr(
+        W, "_exhaustive_merge", lambda *a, **kw: merges.append(1) or real_merge(*a, **kw)
+    )
+    universe = _universe(idx)
+    _nsh, ss = W.static_layout(universe)
+    blocks = W.sharded_block_index(bidx, ss).toPandas()
+    docs = idx.docs.select("doc_id", "norm_len").toPandas()
+    norms = np.zeros(universe)
+    norms[docs["doc_id"].to_numpy()] = docs["norm_len"].to_numpy()
+    q = _zipf_queries(spark)
+    qt = (
+        query_bounds(idx, q, idx.num_docs)
+        .select("query_id", "term_id", "qw", "w10")
+        .toPandas()
+        .sort_values(["query_id", "term_id"])
+    )
+    per_query: dict[int, list] = {}
+    decoded = 0
+    for shard, left in blocks.groupby("_shard"):
+        lo, hi = int(shard) * ss, min((int(shard) + 1) * ss, universe)
+        for qid, g in qt.groupby("query_id"):
+            qrows = [
+                (int(t), float(w), float(w10))
+                for t, w, w10 in zip(g["term_id"], g["qw"], g["w10"])
+            ]
+            runs = []
+            for c in (codec, _ScalarOnly(codec)):
+                stats = [0, 0, 0]
+                rows = W._run_query(algo, qrows, W._term_cache(left, c),
+                                    norms[lo:hi], lo, hi, 10, stats)
+                runs.append((sorted(rows), stats))
+            assert runs[1] == runs[0], (algo, shard, qid)
+            decoded += runs[1][1][1]
+            per_query.setdefault(int(qid), []).extend(runs[1][0])
+    assert merges and decoded > 0
+    got = sorted(
+        (qid, d, round(s, 9))
+        for qid, rows in per_query.items()
+        for d, s in sorted(rows, key=lambda r: (-round(r[1], 9), r[0]))[:10]
+    )
+    ref = sorted(
+        (r["query_id"], r["doc_id"], round(r["score"], 9))
+        for r in ranked_or(idx.postings, q, idx.vocab, idx.num_docs).collect()
+    )
+    assert got == ref
