@@ -150,26 +150,36 @@ def q_ft_wand_pef(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ft_wand_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fully-relational two-phase WAND plan (operators/wand.py):
-    metadata pruning + candidate decode + rescore, zero driver
-    round-trips. Kept as a first-class oracle-checked operator — it is
-    the plan shape for clusters where per-doc Python kernels are
-    undesirable; the sharded DAAT plan above is the default."""
-    from dint_spark.engine import get_block_index
-    from dint_spark.operators.wand import wand_topk
+    """Sharded WAND with the shard explosion built in the plan. The name
+    is kept from the deleted relational two-phase plan, so the declared
+    query set keeps its names. No pre-sharded artifact is passed
+    (sharded_bidx=None): the plan shard-explodes the block index itself,
+    the path bench.py's decode_stats run, so this checks that path's
+    ranking against the same RANKED_OR oracle."""
+    from dint_spark.engine import get_block_index, get_serving
+    from dint_spark.operators.wand_shard import wand_topk_sharded
 
     idx = _idx(spark, sf_dir)
     bidx, codec = get_block_index(spark, sf_dir, "single_packed_dint")
-    return wand_topk(idx, bidx, codec, _queries(spark), idx.num_docs, k=10)
+    return wand_topk_sharded(
+        idx, bidx, codec, _queries(spark), idx.num_docs, k=10,
+        **get_serving(spark, sf_dir),
+    )
 
 
 def q_ft_maxscore_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dint_spark.engine import get_block_index
-    from dint_spark.operators.wand import maxscore_topk
+    """Sharded MaxScore with the shard explosion built in the plan; the
+    name is kept from the deleted relational two-phase plan (see
+    q_ft_wand_twophase)."""
+    from dint_spark.engine import get_block_index, get_serving
+    from dint_spark.operators.wand_shard import maxscore_topk_sharded
 
     idx = _idx(spark, sf_dir)
     bidx, codec = get_block_index(spark, sf_dir, "single_packed_dint")
-    return maxscore_topk(idx, bidx, codec, _queries(spark), idx.num_docs, k=10)
+    return maxscore_topk_sharded(
+        idx, bidx, codec, _queries(spark), idx.num_docs, k=10,
+        **get_serving(spark, sf_dir),
+    )
 
 
 def q_ft_freqs_sum(spark: SparkSession, sf_dir: str) -> DataFrame:

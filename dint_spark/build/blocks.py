@@ -88,7 +88,7 @@ def _block_meta(ranked: DataFrame) -> DataFrame:
 
     Without norm_len, block_max_weight is NULL ("no bound" sentinel): an
     index built that way cannot silently feed WAND's block-max filter
-    with a lossy 0.0 bound — wand_topk treats NULL as unskippable
+    with a lossy 0.0 bound — the WAND kernel treats NULL as unskippable
     (keeps the block), degrading to term-level pruning, never to a
     wrong (or empty) top-k.
     """
@@ -247,7 +247,6 @@ def decode_block_index(
     index: DataFrame,
     codec,
     extra_cols: tuple[tuple[str, str], ...] = (),
-    docs_only: bool = False,
 ) -> DataFrame:
     """Compressed block table → postings(term_id, doc_id, tf[, extras]).
 
@@ -258,16 +257,8 @@ def decode_block_index(
 
     extra_cols: ((name, spark_type), ...) — columns of `index` replicated
     onto every decoded posting of their block (lets a caller ride per-
-    block context, e.g. a query_id, through the decode without a
-    re-join; see operators/wand.py).
-
-    docs_only: lazy-freq decode — skip the freqs stream entirely and
-    emit (term_id, doc_id[, extras]) only. The reference's enumerators
-    decode freqs lazily on first freq() access
-    (/root/reference/include/dint/dict_posting_list.hpp:164-169);
-    callers that only gate candidates on docIDs (WAND's phase-1
-    candidate pass) pay half the decode and the scan never reads
-    freqs_bytes (column pruning reaches the cached/parquet block table).
+    block context through the decode without a re-join; posting_at
+    rides the block_id).
     """
 
     spark = index.sparkSession
@@ -288,24 +279,20 @@ def decode_block_index(
             cs = np.cumsum(gaps.astype(np.int64) + 1)
             excl = np.where(offs > 0, cs[offs - 1], 0)
             bases = pdf["block_base"].to_numpy(dtype=np.int64)
+            tfs_flat, _ = c.decode_freqs_batch(list(pdf["freqs_bytes"]), ns)
             cols = {
                 "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
                 "doc_id": cs + np.repeat(bases - excl, ns),
+                "tf": tfs_flat.astype(np.int64) + 1,
             }
-            if not docs_only:
-                tfs_flat, _ = c.decode_freqs_batch(list(pdf["freqs_bytes"]), ns)
-                cols["tf"] = tfs_flat.astype(np.int64) + 1
             for name in extra_names:
                 cols[name] = np.repeat(pdf[name].to_numpy(), ns)
             yield pd.DataFrame(cols)
 
-    out_cols = ["term_id long, doc_id long"]
-    if not docs_only:
-        out_cols = ["term_id long, doc_id long, tf long"]
-    schema = ", ".join(out_cols + [f"{n} {t}" for n, t in extra_cols])
-    base_cols = ["term_id", "block_id", "n", "block_base", "docs_bytes"]
-    if not docs_only:
-        base_cols.append("freqs_bytes")
+    schema = ", ".join(
+        ["term_id long, doc_id long, tf long"] + [f"{n} {t}" for n, t in extra_cols]
+    )
+    base_cols = ["term_id", "block_id", "n", "block_base", "docs_bytes", "freqs_bytes"]
     return index.select(
         *base_cols, *[c for c in extra_names if c not in base_cols]
     ).mapInPandas(decode_blocks, schema=schema)

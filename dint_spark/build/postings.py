@@ -123,7 +123,7 @@ def build_term_meta(postings: DataFrame, docs: DataFrame, num_docs: int) -> Data
     w10 = the TOPK_BOUND_K-th (=10, the harness's fixed k) largest weight
     in the list; qw·w10 LOWER-bounds the true kth-best total score for
     any query containing the term, giving WAND a θ seed from term
-    metadata alone (operators/wand.py step 1). NULL when df < 10.
+    metadata alone (the θ seed, operators/wand.py). NULL when df < 10.
 
     Scale shape: a three-level tree aggregation — per (term, 2^16-doc
     bucket, META_BUCKET_BITS) bounded top-10 (collect_list bounded by

@@ -12,7 +12,7 @@ encodes gaps by prefix-summing first, block_codecs.hpp:104-151 — this
 kernel takes the raw block values and does the same).
 
 The recursion is Python-level (tail blocks ≤ 256 ints — bounded work);
-bit IO is chunked through ints.
+bit IO holds the whole stream as one Python int.
 """
 
 from __future__ import annotations
@@ -21,46 +21,39 @@ import numpy as np
 
 
 class _BitWriter:
+    """MSB-first bit stream accumulated in one Python int."""
+
     def __init__(self):
-        self.bits: list[tuple[int, int]] = []  # (value, width)
+        self.acc = 0
+        self.nbits = 0
 
     def write(self, value: int, width: int) -> None:
         if width:
-            self.bits.append((value, width))
+            self.acc = (self.acc << width) | (value & ((1 << width) - 1))
+            self.nbits += width
 
     def getvalue(self) -> bytes:
-        acc = 0
-        nacc = 0
-        out = bytearray()
-        for v, w in self.bits:
-            acc = (acc << w) | (v & ((1 << w) - 1))
-            nacc += w
-            while nacc >= 8:
-                nacc -= 8
-                out.append((acc >> nacc) & 0xFF)
-        if nacc:
-            out.append((acc << (8 - nacc)) & 0xFF)
-        return bytes(out)
+        pad = -self.nbits % 8  # zero-pad the last byte
+        return (self.acc << pad).to_bytes((self.nbits + pad) // 8, "big")
 
 
 class _BitReader:
+    """MSB-first reader over the payload held as one Python int: a read
+    is one shift and one mask, not a Python step per bit."""
+
     def __init__(self, buf: bytes):
-        self.buf = buf
+        self.val = int.from_bytes(buf, "big")
         self.pos = 0  # bit position
         self.nbits = 8 * len(buf)
 
     def read(self, width: int) -> int:
         if width == 0:
             return 0
-        if self.pos + width > self.nbits:
+        end = self.pos + width
+        if end > self.nbits:
             raise ValueError(f"truncated bit stream ({self.nbits} bits)")
-        v = 0
-        for _ in range(width):
-            byte = self.buf[self.pos >> 3]
-            bit = (byte >> (7 - (self.pos & 7))) & 1
-            v = (v << 1) | bit
-            self.pos += 1
-        return v
+        self.pos = end
+        return (self.val >> (self.nbits - end)) & ((1 << width) - 1)
 
 
 def _width(r: int) -> int:

@@ -19,7 +19,8 @@ order reproducible across engines computing in float64: with ≤ dozens of
 terms and scores ≤ O(10²), summation-order differences are ≤ ~1e-12 —
 far inside the 1e-9 quantum — while 9 decimals keeps even eps-clamped
 dense-term scores (≈2.2e-6 · dtw, tiny-vocab corpora) distinguishable,
-so WAND's θ pruning stays effective on them (operators/wand.py).
+so WAND's θ pruning stays effective on them (the θ margin,
+operators/wand.py).
 
 Scale: postings is pre-filtered to query terms by a broadcast join (the
 scan reads only matching terms — with a term-bucketed index table this is

@@ -1,4 +1,4 @@
-"""WAND / MaxScore — pruned top-k BM25 over the compressed block index.
+"""The front half of pruned top-k BM25: query-term bounds and the θ seed.
 
 Reference semantics (/root/reference/include/ds2i/queries.hpp):
   wand_query     (:190-307) — pivot on Σ max-weights vs θ (current kth
@@ -6,50 +6,29 @@ Reference semantics (/root/reference/include/ds2i/queries.hpp):
   maxscore_query (:459-573) — essential/non-essential list split by
                   cumulative max-weight bounds.
 
-Spark realization (SURVEY.md §4: two-phase — relational candidate
-pruning + exact rescore), as ONE fully-lazy plan with ZERO driver
-round-trips (plan build does no Spark jobs; the caller's action runs
-everything):
+Both run in the doc-sharded cogroup kernel (operators/wand_shard.py).
+This module builds what the kernel is handed besides the blocks, lazily
+and with nothing collected (plan build runs no Spark job):
+query_bounds resolves the query terms against term_meta, the per-term
+bound table, and exact_seed gives the θ seed for k > TOPK_BOUND_K.
 
-  1. θ seed — METADATA ONLY for k ≤ 10 (the harness's fixed k,
-     queries.cpp:105-111): term_meta stores w10, the 10th-largest BM25
-     doc weight of the list; a term with df ≥ 10 guarantees 10 docs
-     whose total score ≥ qw·w10, so θ = max over query terms of qw·w10
-     lower-bounds the true kth with NO posting decode — it falls out of
-     the same per-query window as the essential split (zero extra
-     stages). For k > 10: exact kth partial of the best term via
-     a BOUNDED two-phase top-k (partition-local head(k) Arrow kernel,
-     ≤ k rows per query per partition, then a ≤ k·P-row final slice —
-     never an unbounded collect_list, even for a df≈N stopword term).
-  2. MaxScore split (queries.hpp:498-509), relational: terms sorted by
-     upper bound ub = qw·max_weight; the maximal ascending prefix with
-     Σub < θ is non-essential (no doc lacking every essential term can
-     reach θ). A cumulative-sum window over the ≤|q|·16-row query-term
-     frame — no collect.
-  3. Block-max pruning (wand only): essential term t's block b is
-     skipped when qw_t·block_max_weight(t,b) + Σ_{t'≠t} ub_{t'} < θ —
-     the reference's block-max skip as a FILTER on the block index's
-     metadata columns (blocks never decoded).
-  4. Candidates = docs decoded from surviving essential blocks, with
-     query_id riding through the decode kernel (extra_cols) — no
-     dedup/semi-join stages between filter and decode.
-  5. Exact rescore: decode only blocks of query terms whose docID range
-     (block_base, block_max] holds a candidate (next_geq as a BUCKETED
-     range join — plain equi-join on (term_id, doc-range bucket); AQE
-     broadcasts whichever side is small, shuffles when both are big —
-     no data-sized broadcast hint), full BM25, top-k. Duplicate
-     (term, doc) requests are absorbed by the left-semi join against
-     the block table — no distinct shuffle.
+θ seed: METADATA ONLY for k ≤ 10 (the harness's fixed k,
+queries.cpp:105-111). term_meta stores w10, the 10th-largest BM25 doc
+weight of the list; a term with df ≥ 10 guarantees 10 docs whose total
+score ≥ qw·w10, so θ = max over query terms of qw·w10 lower-bounds the
+true kth with NO posting decode. For k > 10: the exact kth partial
+score of the best term via a BOUNDED two-phase top-k (_bounded_kth:
+partition-local head(k) Arrow kernel, ≤ k rows per query per
+partition, then a ≤ k·P-row final slice — never an unbounded
+collect_list, even for a df≈N stopword term).
 
 Losslessness (rank-identical to ranked_or, the reference's own oracle,
 test_ranked_queries.cpp:42-74): every true top-k doc has score ≥ the
-true kth ≥ θ_seed, so it survives steps 2-4 and all its blocks are
-decoded in step 5 → its score is complete. A doc PRUNED in 2-4 has
-true score < θ_eff = θ_seed − 2e-9; if it re-enters step 5 through a
-shared rescore block its PARTIAL score ≤ its true score < θ_eff, and
-after 9-decimal rounding it sits strictly below every true top-k doc
-(gap 2e-9 > rounding quantum 1e-9) — so no candidate-set semi-join is
-needed on the rescore output.
+true kth ≥ θ_seed, so pruning against θ_eff = θ_seed − 2e-9 never
+drops it. A pruned doc has true score < θ_eff; if it resurfaces through
+another list with a PARTIAL score, that is ≤ its true score < θ_eff,
+and after 9-decimal rounding it sits strictly below every true top-k
+doc (gap 2e-9 > rounding quantum 1e-9).
 
 θ safety margin: final ranking rounds scores to 9 decimals (oracle
 parity), so scores within 1e-9 can round equal and tie-break by doc_id;
@@ -65,10 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from dint_spark.build.blocks import decode_block_index
-from dint_spark.build.postings import TOPK_BOUND_K, FullTextIndex
+from dint_spark.build.postings import FullTextIndex
 from dint_spark.functions.bm25 import doc_term_weight, query_term_weight
 from dint_spark.operators.boolean import query_terms
-from dint_spark.operators.ranked import topk
 
 THETA_MARGIN = 2e-9
 
@@ -108,8 +86,7 @@ def _bounded_kth(scores: DataFrame, k: int) -> DataFrame:
 def query_bounds(idx: FullTextIndex, queries: DataFrame, num_docs: int) -> DataFrame:
     """(query_id, term, qtf, term_id, df, max_weight, w10, qw) — the
     query terms resolved against term_meta, the per-term bound table
-    (wand_data.hpp:34-49), in ONE broadcast join. The front half of both
-    pruned plans: wand_topk here and wand_shard's cogroup plan."""
+    (wand_data.hpp:34-49), in ONE broadcast join."""
     qt = query_terms(queries, dedup=False).join(  # query_id, term, qtf
         F.broadcast(idx.term_meta.select("term", "term_id", "df", "max_weight", "w10")),
         "term",
@@ -158,169 +135,3 @@ def exact_seed(idx: FullTextIndex, bidx: DataFrame, codec, qt: DataFrame, k: int
             F.greatest(F.col("kth") - F.lit(THETA_MARGIN), F.lit(0.0)).alias("seed"),
         )
     )
-
-
-def blocks_containing(
-    bounds: DataFrame, pairs: DataFrame, bucket_size: int
-) -> DataFrame:
-    """(term_id, block_id) rows (NOT deduped) whose (block_base, block_max]
-    docID range contains a requested (term_id, doc_id) pair — the batch
-    next_geq.
-
-    Scale shape: a BUCKETED range join. Each block row explodes into the
-    coarse doc-range buckets it overlaps (blocks tile a term's docID
-    space, so per term this adds ~universe/bucket_size + n_blocks rows);
-    each pair maps to one bucket; the join is a plain equi-join on
-    (term_id, bucket) + a range filter. No broadcast hint: AQE picks the
-    strategy from runtime sizes (both sides can be data-sized).
-    Duplicates are intended to be absorbed by a downstream left-semi
-    join, not a distinct.
-    """
-    b = bounds.withColumn(
-        "_bk",
-        F.explode(
-            F.sequence(
-                F.floor((F.col("block_base") + F.lit(1)) / bucket_size),
-                F.floor(F.col("block_max") / bucket_size),
-            )
-        ),
-    )
-    p = pairs.withColumn("_bk", F.floor(F.col("doc_id") / bucket_size))
-    return (
-        p.join(b, ["term_id", "_bk"])
-        .filter(
-            (F.col("doc_id") > F.col("block_base"))
-            & (F.col("doc_id") <= F.col("block_max"))
-        )
-        .select("term_id", "block_id")
-    )
-
-
-def wand_topk(
-    idx: FullTextIndex,
-    bidx: DataFrame,
-    codec,
-    queries: DataFrame,
-    num_docs: int,
-    k: int = 10,
-    use_block_max: bool = True,
-) -> DataFrame:
-    # ---- per-query term bounds (lazy, ≤ |queries|·16 rows) -------------
-    qb = query_bounds(idx, queries, num_docs)
-    qt = qb.select(
-        "query_id",
-        "term_id",
-        "qw",
-        (F.col("qw") * F.col("max_weight")).alias("ub"),
-        (F.col("qw") * F.col("w10")).alias("kth_lb"),
-    )
-
-    # ---- θ seed ---------------------------------------------------------
-    w_all = W.partitionBy("query_id").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    if k <= TOPK_BOUND_K:
-        # Metadata-only θ: any query term with df ≥ TOPK_BOUND_K has
-        # TOPK_BOUND_K docs whose TOTAL score is ≥ qw·w10 (total ≥ that
-        # term's partial), so the true kth (k ≤ TOPK_BOUND_K) is
-        # ≥ max over terms of qw·w10 — computed by the SAME per-query
-        # window that does the essential split. No posting decode, no
-        # extra stage.
-        qt2 = qt.withColumn(
-            "theta",
-            F.greatest(F.max("kth_lb").over(w_all) - THETA_MARGIN, F.lit(0.0)),
-        )
-    else:
-        # Exact seed: kth-best partial score of the highest-upper-bound
-        # term, via a bounded two-phase top-k over its decoded list.
-        qt2 = qt.join(
-            exact_seed(idx, bidx, codec, qb, k), "query_id", "left"
-        ).withColumn("theta", F.coalesce(F.col("seed"), F.lit(0.0)))
-
-    # ---- essential split (queries.hpp:498-509) as tiny-frame windows ---
-    # θ, Σub and the cumulative prefix all come out of ONE per-query
-    # window exchange over the ≤|q|·16-row frame.
-    w_cum = (
-        W.partitionBy("query_id")
-        .orderBy(F.asc("ub"), F.asc("term_id"))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    qt2 = qt2.withColumn("cum_ub", F.sum("ub").over(w_cum)).withColumn(
-        "sum_ub", F.sum("ub").over(w_all)
-    )
-    ess_meta = qt2.filter(F.col("cum_ub") >= F.col("theta")).select(
-        "query_id", "term_id", "qw", "ub", "theta", "sum_ub"
-    )
-    qt_df = qt.select("query_id", "term_id", "qw")
-
-    # ---- candidates from surviving essential blocks --------------------
-    # query_id rides through the decode kernel: no dedup/semi-join stage.
-    # A block shared by two queries' essential sets decodes once per
-    # query — the reference executes per query too (queries.cpp:37-44).
-    # (Round-2 postmortem, VERDICT r02 "What's wrong" #1: a shared-decode
-    # rewrite — decode each block once + cache() + broadcast(surv) re-join
-    # — measured 5-7× SLOWER at sf0.1: the cached Python-UDF frame adds a
-    # materialization barrier both consumers wait on, the broadcast is
-    # data-sized, and the unmanaged cache leaks across plan
-    # instantiations. Judge A/B confirmed this per-query shape at
-    # 4.2-5.3s vs 25-37s. Do not re-land shared-decode without a
-    # measured win AND an unpersist.)
-    ess_blocks = bidx.join(F.broadcast(ess_meta), "term_id")
-    if use_block_max:
-        # NULL block_max_weight = "no bound" sentinel (index built without
-        # norm_len, blocks._block_meta): a NULL predicate would silently
-        # DROP the block — an empty top-k, not an error. No bound means
-        # the block cannot be skipped, so NULL keeps it (lossless).
-        ess_blocks = ess_blocks.filter(
-            F.col("block_max_weight").isNull()
-            | (
-                F.col("qw") * F.col("block_max_weight")
-                + (F.col("sum_ub") - F.col("ub"))
-                >= F.col("theta")
-            )
-        )
-    cand = decode_block_index(
-        ess_blocks, codec, extra_cols=(("query_id", "long"),), docs_only=True
-    ).select("query_id", "doc_id")
-
-    # candidate (query, doc) pairs → (term, doc) next_geq targets across
-    # the query's FULL term set; per-query detail drops out here.
-    # NOTE: every qt_df reference below uses the SAME projection so
-    # Catalyst's ReuseExchange shares one computation of the query-term
-    # subtree (differing projections would defeat canonicalization).
-    pairs = cand.join(F.broadcast(qt_df), "query_id").select("term_id", "doc_id")
-
-    # ---- exact rescore over blocks containing candidates ---------------
-    # left-semi tolerates duplicate term_ids in qt_df — no distinct stage.
-    bounds = bidx.select("term_id", "block_id", "block_base", "block_max").join(
-        F.broadcast(qt_df), "term_id", "left_semi"
-    )
-    bucket = max(256, num_docs // 1024)
-    need = blocks_containing(bounds, pairs, bucket)
-    rescore_dec = decode_block_index(
-        bidx.join(need, ["term_id", "block_id"], "left_semi"), codec
-    )
-    scored = (
-        rescore_dec.join(idx.docs.select("doc_id", "norm_len"), "doc_id")
-        .join(F.broadcast(qt_df), "term_id")
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("qw") * doc_term_weight(F.col("tf"), F.col("norm_len"))).alias("_s"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("_s").alias("score"))
-    )
-    return topk(scored, k)
-
-
-def maxscore_topk(
-    idx: FullTextIndex,
-    bidx: DataFrame,
-    codec,
-    queries: DataFrame,
-    num_docs: int,
-    k: int = 10,
-) -> DataFrame:
-    """Term-level MaxScore: the WAND plan without the per-block filter."""
-    return wand_topk(idx, bidx, codec, queries, num_docs, k, use_block_max=False)

@@ -33,11 +33,11 @@ O(Σ_q blocks(q)) — a 500-query batch ships each hot block once, where
 the first fan-out implementation shipped it once per query.
 
 Losslessness: θ is seeded from term metadata (qw·w10 lower-bounds the
-true GLOBAL kth total score — see operators/wand.py step 1) and grows
-with the shard-local kth; both bounds are valid for the global top-k
-(a doc beaten by k docs within one shard is beaten globally). A 2e-9
-margin under θ protects 9-decimal rounding ties exactly as in the
-relational plan. Exact BM25 is evaluated for every candidate that
+true GLOBAL kth total score — see the θ seed in operators/wand.py) and
+grows with the shard-local kth; both bounds are valid for the global
+top-k (a doc beaten by k docs within one shard is beaten globally). A
+2e-9 margin under θ protects 9-decimal rounding ties (THETA_MARGIN,
+operators/wand.py). Exact BM25 is evaluated for every candidate that
 survives, so surviving scores are complete and the merge is
 rank-identical to ranked_or (the reference's own oracle,
 test_ranked_queries.cpp:42-74).
@@ -352,7 +352,7 @@ def _make_enums(
 
 
 def _seed_from_rows(qrows: list[tuple], k: int) -> float:
-    """max over terms of qw·w10 − margin (see operators/wand.py step 1).
+    """max over terms of qw·w10 − margin (the θ seed, operators/wand.py).
 
     VALID ONLY for k ≤ TOPK_BOUND_K: w10 lower-bounds the 10th-best
     partial score of the list, so qw·w10 lower-bounds the true kth TOTAL
@@ -440,13 +440,13 @@ def _exhaustive_merge(
 
     With θ > 0 (the WAND variant passes its seed), blocks whose
     cross-list bound qw_i·block_max_weight_i(b) + Σ_{j≠i} ub_j < θ are
-    skipped BEFORE
-    decode — the same lossless filter as the relational plan's step 3
-    (operators/wand.py): every doc in such a block has total score
-    < θ_eff, so it cannot enter the top-k, and a doc that resurfaces via
-    another list's blocks carries a partial score < θ_eff that rounds
-    strictly below every true top-k doc (the 2e-9 margin > the 1e-9
-    rounding quantum). NULL (NaN) block_max_weight keeps the block.
+    skipped BEFORE decode — the reference's block-max skip as a
+    lossless filter (the margin argument in operators/wand.py): every
+    doc in such a block has total score < θ_eff, so it cannot enter the
+    top-k, and a doc that resurfaces via another list's blocks carries
+    a partial score < θ_eff that rounds strictly below every true top-k
+    doc (the 2e-9 margin > the 1e-9 rounding quantum). NULL (NaN)
+    block_max_weight keeps the block.
     Every block overlaps [lo, hi) (the kernel's layout guard)."""
     parts: list[tuple[float, np.ndarray, np.ndarray]] = []
     sum_ub = sum(e.ub for e in enums)
@@ -845,13 +845,16 @@ def _serving_inputs(idx, bidx, codec, queries, num_docs, norms, k, universe):
     """The front half shared by _run and shipped_block_stats →
     (universe, nsh, ss, qt, seed_df): the layout, the query terms with
     their bounds (wand.query_bounds) and, for k > TOPK_BOUND_K, the
-    exact θ seed (wand.exact_seed) — the same front half as wand_topk.
+    exact θ seed (wand.exact_seed). k < 1 is refused here, before any
+    job runs: the kernel's heap has no kth to prune against.
 
     norms: a norm_slices() frame (required). The layout is always
     static_layout(universe) — the docID universe (max assigned id + 1)
     can exceed num_docs when ids are not dense (docs with no tokens
     leave holes), so shards tile the universe or trailing docs
     vanish."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1 (top-k results per query), got {k}")
     if "docs_bytes" not in getattr(norms, "columns", ()):
         raise TypeError(
             f"norms must be a norm_slices() frame, got {type(norms).__name__}"

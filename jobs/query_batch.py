@@ -1,9 +1,10 @@
 """spark-submit entry: run the 500-query BM25 batch against a built index.
 
     python jobs/query_batch.py --index /tmp/idx --queries 500 --k 10 \
-        [--op ranked_or|ranked_and|wand|maxscore|wand_twophase|and|or]
+        [--op ranked_or|ranked_and|wand|maxscore|and|or]
 
-Prints one JSON line: {queries, wall_sec, qps, op, k}.
+An unknown --op is refused before anything is loaded. Prints one JSON
+line: {queries, wall_sec, qps, op, k}.
 """
 
 from __future__ import annotations
@@ -55,7 +56,10 @@ def main() -> None:
     ap.add_argument("--index", required=True, help="IndexBuilder out dir")
     ap.add_argument("--queries", type=int, default=500)
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--op", default="ranked_or")
+    ap.add_argument(
+        "--op", default="ranked_or",
+        choices=("ranked_or", "ranked_and", "wand", "maxscore", "and", "or"),
+    )
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--repeats", type=int, default=1)
     args = ap.parse_args()
@@ -76,9 +80,8 @@ def main() -> None:
     postings, vocab, num_docs = idx.postings, idx.vocab, idx.num_docs
     # the block index, its codec and the serving artifacts are loaded
     # once per process, before the untimed warmup (queries.cpp:69-90)
-    if args.op in ("wand", "wand_twophase", "maxscore"):
-        bidx, codec = load_blocks(spark, args.index)
     if args.op in ("wand", "maxscore"):
+        bidx, codec = load_blocks(spark, args.index)
         from dint_spark.operators.wand_shard import serving_artifacts
 
         serving = serving_artifacts(idx, bidx)
@@ -98,10 +101,6 @@ def main() -> None:
             return ranked_or(postings, qdf, vocab, num_docs, k=args.k).count()
         if args.op == "ranked_and":
             return ranked_and(postings, qdf, vocab, num_docs, k=args.k).count()
-        if args.op == "wand_twophase":
-            from dint_spark.operators.wand import wand_topk
-
-            return wand_topk(idx, bidx, codec, qdf, num_docs, k=args.k).count()
         if args.op in ("wand", "maxscore"):
             from dint_spark.operators.wand_shard import (
                 maxscore_topk_sharded,
@@ -112,9 +111,7 @@ def main() -> None:
             return fn(idx, bidx, codec, qdf, num_docs, k=args.k, **serving).count()
         if args.op == "and":
             return and_query(postings, qdf).count()
-        if args.op == "or":
-            return or_query(postings, qdf).count()
-        raise SystemExit(f"unknown op {args.op}")
+        return or_query(postings, qdf).count()
 
     run()  # warmup pass, untimed (op_perftest protocol, queries.cpp:13-37)
     t0 = time.perf_counter()

@@ -210,12 +210,10 @@ def test_builder_index_serves_rank_identical(spark, small_corpus, tmp_path_facto
     whose term_meta carries the term, the codec read from
     _lineage/index.json with its model loaded through
     dint_build.model_class, and the serving artifacts from
-    wand_shard.serving_artifacts. Sharded and relational WAND and
-    MaxScore rank exactly as ranked_or at k=10 and at k=25 (the
-    exact-seed path)."""
+    wand_shard.serving_artifacts. Sharded WAND and MaxScore rank exactly
+    as ranked_or at k=10 and at k=25 (the exact-seed path)."""
     from dint_spark.corpus import make_query_log
     from dint_spark.operators.ranked import ranked_or
-    from dint_spark.operators.wand import maxscore_topk, wand_topk
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
         serving_artifacts,
@@ -238,13 +236,8 @@ def test_builder_index_serves_rank_identical(spark, small_corpus, tmp_path_facto
     for k in (10, 25):
         ref = _ranks(ranked_or(idx.postings, q, idx.vocab, idx.num_docs, k=k))
         assert ref
-        for fn, kw in (
-            (wand_topk_sharded, serving),
-            (maxscore_topk_sharded, serving),
-            (wand_topk, {}),
-            (maxscore_topk, {}),
-        ):
-            got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, k=k, **kw))
+        for fn in (wand_topk_sharded, maxscore_topk_sharded):
+            got = _ranks(fn(idx, bidx, codec, q, idx.num_docs, k=k, **serving))
             assert got == ref, (fn.__module__, fn.__name__, k)
 
 

@@ -110,14 +110,20 @@ def test_ranked_or_rank_identical_to_pyref(spark, code_index, pyref):
 
 
 def test_wand_rank_identical_on_code_corpus(spark, corpus, code_index):
-    """WAND over the compressed DINT index == exhaustive ranked_or, on a
-    corpus with REAL idf spread (rare sym_k terms → pruning actually
-    prunes, unlike the dense driver testdata)."""
+    """Sharded WAND and MaxScore over the compressed DINT index ==
+    exhaustive ranked_or, on a corpus with REAL idf spread (rare sym_k
+    terms → pruning actually prunes, unlike the dense sf testdata),
+    served with the pre-sharded artifact and norm slices of
+    serving_artifacts."""
     from dint_spark.build.blocks import build_block_index
     from dint_spark.build.dint_build import learn_dint_model
     from dint_spark.codecs.registry import get_codec
     from dint_spark.operators.ranked import ranked_or
-    from dint_spark.operators.wand import wand_topk
+    from dint_spark.operators.wand_shard import (
+        maxscore_topk_sharded,
+        serving_artifacts,
+        wand_topk_sharded,
+    )
     from dint_spark.util import materialize
 
     model = learn_dint_model(code_index.postings.select("term_id", "doc_id", "tf"))
@@ -129,7 +135,10 @@ def test_wand_rank_identical_on_code_corpus(spark, corpus, code_index):
         [(qid, terms) for qid, terms in qlog], "query_id long, terms array<string>"
     )
     exhaustive = ranked_or(code_index.postings, qdf, code_index.vocab, code_index.num_docs, k=10)
-    pruned = wand_topk(code_index, bidx, codec, qdf, code_index.num_docs, k=10)
     e = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in exhaustive.collect()}
-    p = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in pruned.collect()}
-    assert e == p
+    assert e
+    serving = serving_artifacts(code_index, bidx)
+    for fn in (wand_topk_sharded, maxscore_topk_sharded):
+        pruned = fn(code_index, bidx, codec, qdf, code_index.num_docs, k=10, **serving)
+        p = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in pruned.collect()}
+        assert e == p, fn.__name__

@@ -82,3 +82,23 @@ def test_entry_wand_path_uses_sharded_norms():
         "norms array (get_norms) — default paths must use "
         "get_norm_slices"
     )
+
+
+def test_declared_queries_and_oracles():
+    """__spark_entry__ declares 42 queries; every oracle names a
+    declared query, only the two binary-payload queries are checked on
+    rows alone, and every pruned top-k query (the sharded WAND/MaxScore
+    entries, the router, and the two names kept from the deleted
+    relational two-phase plan) shares ranked_or's oracle SQL."""
+    import __spark_entry__ as E
+    from dint_spark.oracle import sqlgen as S
+
+    declared, oracles = E.queries(), E.oracle_sql()
+    assert len(declared) == 42
+    assert set(declared) - set(oracles) == {"ft_index_stats", "ft_dint_histogram"}
+    assert set(oracles) <= set(declared)
+    for name in (
+        "ft_ranked_or", "ft_wand", "ft_maxscore", "ft_topk_auto", "ft_wand_pef",
+        "ft_wand_twophase", "ft_maxscore_twophase",
+    ):
+        assert oracles[name] == S.RANKED_OR, name

@@ -9,8 +9,9 @@ deterministic posting list per query term id over the reference fixture
 shape (10,000 docs, README.md:53), mixed sparse/dense document
 frequencies so MaxScore's essential split and WAND's block-max filter
 both engage. Both the relational ranked_or AND the compressed-index
-WAND/MaxScore plans must be rank-identical to the pure-Python reference
-engine (oracle/pyref.py, queries.hpp/bm25.hpp semantics) on every query.
+sharded WAND/MaxScore plan must be rank-identical to the pure-Python
+reference engine (oracle/pyref.py, queries.hpp/bm25.hpp semantics) on
+every query.
 """
 
 from __future__ import annotations
@@ -128,29 +129,11 @@ def test_ranked_or_rank_identical_on_reference_queries(spark, ref_setup):
     _assert_rank_identical(by_q, oracle, qlog)
 
 
-def test_wand_and_maxscore_rank_identical_on_reference_queries(spark, ref_setup):
-    idx, oracle, qlog, queries = ref_setup
-    from dint_spark.build.blocks import build_block_index
-    from dint_spark.codecs.registry import get_codec
-    from dint_spark.operators.wand import maxscore_topk, wand_topk
-    from dint_spark.util import materialize
-
-    codec = get_codec("block_vbyte")
-    bidx = materialize(build_block_index(idx.postings, codec))
-    for fn in (wand_topk, maxscore_topk):
-        got = fn(idx, bidx, codec, queries, idx.num_docs, k=K).collect()
-        by_q: dict[int, list] = {}
-        for r in got:
-            by_q.setdefault(r["query_id"], []).append(r)
-        _assert_rank_identical(by_q, oracle, qlog)
-
-
 def test_sharded_defaults_rank_identical_on_reference_queries(spark, ref_setup):
-    """The DEFAULT realization (doc-sharded DAAT cogroup kernels,
-    cogrouped norm slices) against all 500 reference queries — closes
-    the loop on the reference's own oracle relationship
-    (test_ranked_queries.cpp:42-74) for the path the engine actually
-    serves by default."""
+    """The pruned plan (doc-sharded DAAT cogroup kernels, cogrouped norm
+    slices), WAND and MaxScore, against all 500 reference queries —
+    closes the loop on the reference's own oracle relationship
+    (test_ranked_queries.cpp:42-74) for the path the engine serves."""
     idx, oracle, qlog, queries = ref_setup
     from dint_spark.build.blocks import build_block_index
     from dint_spark.codecs.registry import get_codec

@@ -724,6 +724,32 @@ def test_legacy_norms_forms_refused(spark, zipf_setup):
     bc.unpersist()
 
 
+def test_k_below_one_refused_before_any_job(spark, zipf_setup):
+    """k < 1 is refused when the plan is built, with no Spark job run
+    (universe left for the entry to compute), on both pruned entries —
+    not answered one way by the DAAT kernel and another by the
+    exhaustive merge."""
+    from dint_spark.operators.wand_shard import (
+        maxscore_topk_sharded,
+        wand_topk_sharded,
+    )
+
+    idx, bidx, codec, slices = zipf_setup
+    q = _zipf_queries(spark)
+    sc = spark.sparkContext
+    group = "test_k_below_one"
+    try:
+        sc.setJobGroup(group, group)
+        for fn in (wand_topk_sharded, maxscore_topk_sharded):
+            for k in (0, -1):
+                with pytest.raises(ValueError, match="k must be >= 1"):
+                    fn(idx, bidx, codec, q, idx.num_docs, slices, k=k)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 # ---------------------------------------------------------------------------
 # one decode path: every block through the per-block memoized reader
 # ---------------------------------------------------------------------------
