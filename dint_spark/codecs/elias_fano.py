@@ -1,23 +1,27 @@
 """Elias-Fano encoding of monotone sequences — numpy kernel.
 
-Re-creates the role of the reference's compact_elias_fano
-(/root/reference/include/ds2i/compact_elias_fano.hpp:12-420): docID
-lists are strictly increasing, EF stores them in
-n·(2 + ceil(log2(U/n))) bits. The enumerator surface (move/next_geq) is
-not needed here — block_max columns + np.searchsorted fill that role
+Re-creates the wire role of the reference's compact_elias_fano
+(compact_elias_fano.hpp:12-149): docID lists are strictly increasing,
+EF stores them in n·(2 + ceil(log2(U/n))) bits. The reference's
+enumerator (move/next_geq/prev_value, hpp:150-420) has no counterpart:
+skipping is served for every codec by block metadata — the shard
+kernel's _ListEnum runs next_geq over block_max and decodes whole blocks
 (SURVEY.md §2.8) — so this kernel is encode/decode only, usable as an
-alternative docs-stream block codec ("ef" in the registry).
+alternative docs-stream block codec ("ef" in the registry) and as the
+upper-bounds/cuts sequence of the partitioned codecs.
 
 Layout (self-contained, little-endian):
   u32 n, u32 universe  (the VByte header convention of the vroom streams,
                         vroom_env/codecs.hpp:110-124, kept fixed-width
                         for simplicity)
-  lower-bits array: n × l bits packed LSB-first, l = max(0,
+  u8 l, lower-bits array: n × l bits packed LSB-first, l = max(0,
                     floor(log2(U/n)))
   upper-bits bitvector: unary-coded high parts, (n + (U >> l) + 1) bits.
 
 Decode is fully vectorized: set-bit positions of the upper bitvector via
-np.unpackbits, lower bits gathered with shifts.
+np.unpackbits, lower bits gathered with shifts. A cut buffer raises
+ValueError("ef: truncated …"): every proper prefix loses the header, the
+lower bits or the last set bit of the upper bitvector.
 """
 
 from __future__ import annotations
@@ -79,8 +83,8 @@ def encode(values: np.ndarray, universe: int | None = None) -> bytes:
         upper_bits = np.concatenate([upper_bits, np.zeros(pad, dtype=np.uint8)])
     upper = np.packbits(upper_bits.reshape(-1, 8)[:, ::-1], axis=1).reshape(-1)
     # u == 2^32 (full-u32 domain) does not fit the u32 header slot; the
-    # stored universe is never read back (decode/enumerator use the
-    # bitvector), so mask explicitly — numpy 1.x wrapped silently,
+    # stored universe is never read back (decode uses the bitvector),
+    # so mask explicitly — numpy 1.x wrapped silently,
     # numpy >= 2 would raise OverflowError on the blessed boundary case
     header = np.array([n, u & 0xFFFFFFFF], dtype=np.uint32).tobytes()
     return header + np.uint8(l).tobytes() + low.tobytes() + upper.tobytes()
@@ -88,158 +92,27 @@ def encode(values: np.ndarray, universe: int | None = None) -> bytes:
 
 def decode(buf: bytes, n_expected: int | None = None) -> np.ndarray:
     b = np.frombuffer(buf, dtype=np.uint8)
-    n, u = np.frombuffer(b[:8], dtype=np.uint32)
-    n = int(n)
+    if b.size < 8:
+        raise ValueError(f"ef: truncated header ({b.size} of 8 bytes)")
+    n = int(np.frombuffer(b[:8], dtype=np.uint32)[0])
     if n_expected is not None and n != n_expected:
         raise ValueError(f"ef: expected {n_expected}, got {n}")
     if n == 0:
         return np.empty(0, dtype=np.uint32)
+    if b.size < 9:
+        raise ValueError("ef: truncated header (no lower-bits width)")
     l = int(b[8])
     low_bytes = (n * l + 7) // 8
-    low_arr = b[9 : 9 + low_bytes]
+    if b.size < 9 + low_bytes:
+        raise ValueError(f"ef: truncated lower bits ({b.size - 9} of {low_bytes} bytes)")
     lows = np.zeros(n, dtype=np.uint64)
     if l:
-        bits = _unpack_bits(low_arr, n * l).reshape(n, l)
+        bits = _unpack_bits(b[9 : 9 + low_bytes], n * l).reshape(n, l)
         lows = (bits.astype(np.uint64) << np.arange(l, dtype=np.uint64)).sum(axis=1)
     upper_arr = b[9 + low_bytes :]
     ubits = np.unpackbits(upper_arr[:, None], axis=1)[:, ::-1].reshape(-1)
     positions = np.flatnonzero(ubits)[:n]
+    if positions.size < n:
+        raise ValueError(f"ef: truncated upper bits ({positions.size} of {n} values)")
     highs = (positions - np.arange(n)).astype(np.uint64)
     return ((highs << np.uint64(l)) | lows).astype(np.uint32)
-
-
-# ---------------------------------------------------------------------------
-# enumerator (compact_elias_fano.hpp:150-420 role: move / next / next_geq)
-# ---------------------------------------------------------------------------
-
-_POPCNT = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(
-    axis=1
-).astype(np.int64)
-
-
-class EliasFanoEnumerator:
-    """Positional enumerator over an EF buffer — the reference's
-    compact_elias_fano::enumerator surface (move / next / next_geq via
-    select over the upper bitvector), WITHOUT decoding the sequence.
-
-    Init builds the select directory the reference stores explicitly
-    (compact_elias_fano.hpp:55-79 skip pointers): per-byte popcount
-    prefix sums over the upper bitvector — O(bytes), independent of
-    value width. Each next_geq(t) then costs one binary search in the
-    directory, a ≤8-bit in-byte scan, and a searchsorted over ONE
-    bucket's lower bits; move(i) is one select1 + one l-bit gather.
-    Only the touched bucket's lower bits are ever unpacked.
-    """
-
-    def __init__(self, buf: bytes):
-        b = np.frombuffer(buf, dtype=np.uint8)
-        n, u = np.frombuffer(b[:8], dtype=np.uint32)
-        self.n, self.u = int(n), int(u)
-        if self.n == 0:
-            self.l = 0
-            self.low = b[0:0]
-            self.upper = b[0:0]
-            self.cum1 = np.zeros(0, dtype=np.int64)
-            self.cum0 = np.zeros(0, dtype=np.int64)
-            self.high_last = -1
-            return
-        self.l = int(b[8])
-        low_bytes = (self.n * self.l + 7) // 8
-        self.low = b[9 : 9 + low_bytes]
-        self.upper = b[9 + low_bytes :]
-        pops = _POPCNT[self.upper]
-        self.cum1 = np.cumsum(pops)  # ones up to END of byte k
-        self.cum0 = 8 * np.arange(1, len(self.upper) + 1) - self.cum1
-        self.high_last = self._select1(self.n - 1) - (self.n - 1)
-
-    # -- select primitives (directory binary search + in-byte scan) -----
-
-    def _select1(self, k: int) -> int:
-        """Bit position of the (k+1)-th set bit (k 0-based)."""
-        byte = int(np.searchsorted(self.cum1, k, side="right"))
-        prior = int(self.cum1[byte - 1]) if byte else 0
-        need = k - prior  # 0-based within byte
-        v = int(self.upper[byte])
-        for j in range(8):
-            if (v >> j) & 1:
-                if need == 0:
-                    return byte * 8 + j
-                need -= 1
-        raise IndexError("select1 out of range")
-
-    def _select0(self, k: int) -> int:
-        """Bit position of the k-th zero (k 1-based). Padding zeros past
-        the last set bit are valid sentinels (they terminate the final
-        bucket exactly as the reference's trailing zero does)."""
-        byte = int(np.searchsorted(self.cum0, k, side="left"))
-        if byte >= len(self.upper):
-            # beyond the stored bytes: every further bit is zero
-            extra = k - int(self.cum0[-1]) if len(self.upper) else k
-            return len(self.upper) * 8 + extra - 1
-        prior = int(self.cum0[byte - 1]) if byte else 0
-        need = k - prior  # 1-based within byte
-        v = int(self.upper[byte])
-        for j in range(8):
-            if not (v >> j) & 1:
-                need -= 1
-                if need == 0:
-                    return byte * 8 + j
-        raise IndexError("select0 out of range")
-
-    def _lows(self, i0: int, i1: int) -> np.ndarray:
-        if self.l == 0 or i1 <= i0:
-            return np.zeros(max(0, i1 - i0), dtype=np.uint64)
-        idx = np.arange(i0 * self.l, i1 * self.l)
-        bits = (self.low[idx // 8] >> (idx % 8).astype(np.uint8)) & 1
-        return (
-            bits.reshape(-1, self.l).astype(np.uint64)
-            << np.arange(self.l, dtype=np.uint64)
-        ).sum(axis=1)
-
-    # -- the enumerator surface ----------------------------------------
-
-    def move(self, i: int) -> int:
-        """value at position i (compact_elias_fano enumerator::move)."""
-        if not (0 <= i < self.n):
-            raise IndexError(i)
-        high = self._select1(i) - i
-        return int((high << self.l) | int(self._lows(i, i + 1)[0]))
-
-    def next_geq(self, target: int) -> "tuple[int, int] | None":
-        """(index, value) of the first element ≥ target, or None when
-        exhausted — the skip primitive WAND consumes."""
-        if self.n == 0:
-            return None
-        h = target >> self.l
-        if h > self.high_last:
-            return None
-        i0 = self._select0(h) - h + 1 if h > 0 else 0
-        i1 = self._select0(h + 1) - h  # first index with high > h
-        i1 = min(i1, self.n)
-        if i1 > i0:
-            tlow = target & ((1 << self.l) - 1) if self.l else 0
-            j = int(np.searchsorted(self._lows(i0, i1), tlow))
-            if j < i1 - i0:
-                i = i0 + j
-                return i, self.move(i)
-        # bucket h empty or exhausted below target: the answer is the
-        # first element with high > h, which is index i1 by construction
-        if i1 < self.n:
-            return i1, self.move(i1)
-        return None
-
-    def prev_value(self, i: int) -> int:
-        """Value preceding position i — the reference enumerator's
-        prev_value() observed with m_position == i
-        (ref:compact_elias_fano.hpp:233-254): 0 when i == 0, and for
-        i == n (past-the-end, the else-branch reading the last set bit
-        before lower_bits_offset) the final element. Its consumer is the
-        partitioned sequences' partition-boundary lookup (PEF upper
-        bounds, partitioned_sequence.hpp), which needs the predecessor
-        without rewinding the enumerator; here one select1 + one l-bit
-        gather via move(i-1) — no full decode."""
-        if i <= 0:
-            return 0
-        if i > self.n:
-            raise IndexError(i)
-        return self.move(i - 1)

@@ -1,15 +1,13 @@
 """Partitioned Elias-Fano sequences — the reference's PEF family as
-numpy kernels.
+numpy block codecs.
 
 Re-creates, over byte-aligned self-contained buffers (the established
 container deviation of this repo: Python has no succinct bit_vector, so
-buffers are byte-aligned while the representation SELECTION and the
-enumerator SEMANTICS are the graft):
+buffers are byte-aligned while the representation SELECTION is the
+graft):
 
   * all-ones sequence            (ref:all_ones_sequence.hpp:1-77)
   * ranked (plain) bitvector     (ref:compact_ranked_bitvector.hpp)
-  * strict Elias-Fano            (ref:strict_elias_fano.hpp:1-83 —
-                                  EF of v_i − i over universe − n + 1)
   * indexed_sequence             (ref:indexed_sequence.hpp:22-87 —
                                   per-partition best-of-three choice)
   * uniform_partitioned_sequence (ref:uniform_partitioned_sequence.hpp:
@@ -22,15 +20,14 @@ enumerator SEMANTICS are the graft):
                                   Elias-Fano Indexes", SIGIR 2014)
 
 Both partitioned forms store the partition upper bounds as ONE
-compact-EF sequence and navigate it with the EF enumerator's
-move/prev_value pair — prev_value(p+1) + 1 is partition p's base
-(ref:uniform_partitioned_sequence.hpp:283-287), the call this repo's
-EliasFanoEnumerator.prev_value exists for. next_geq on the partitioned
-enumerator routes through upper_bounds.next_geq → one partition, so a
-skip touches exactly one partition's payload (plus the metadata-sized
-bounds sequence); EF partitions then navigate with the select-directory
-enumerator (no full decode), bitvector/all-ones partitions materialize
-only their ≤ 2^log_psize elements.
+compact-EF sequence; partition p holds the values in
+[ubs[p] + (1 if p else 0), ubs[p+1]] (the reference enumerator's
+switch_partition arithmetic, uniform_partitioned_sequence.hpp:283-287).
+Like elias_fano.py this module is encode/decode only: skipping is
+served for every codec by block metadata in the shard kernel
+(SURVEY.md §2.8), so the reference's per-sequence enumerators have no
+counterpart. A cut buffer raises ValueError("pef: truncated …") or,
+from an EF leaf, ValueError("ef: truncated …").
 
 Sequences here are STRICTLY increasing (docID semantics), values in
 [0, universe).
@@ -44,14 +41,12 @@ import numpy as np
 
 from dint_spark.codecs import elias_fano as ef
 
-INF = float("inf")
-
 # per-partition fixed overhead for the DP cost model, in BYTES: one
 # endpoint + one upper-bound entry + the type byte (the reference's
 # conf.fix_cost = 64 bits plays the same role, configuration.hpp)
 FIX_COST = 12.0
 EPS1, EPS2 = 0.03, 0.3  # reference defaults (configuration.hpp)
-T_EF, T_RB, T_AO = 0, 1, 2  # indexed_sequence::index_type
+T_EF, T_RB = 0, 1  # indexed_sequence::index_type; all-ones is an empty payload
 
 
 # ---------------------------------------------------------------------------
@@ -71,56 +66,19 @@ def rb_encode(values: np.ndarray, universe: int) -> bytes:
 
 
 def rb_decode(buf: bytes) -> np.ndarray:
+    if len(buf) < 8:
+        raise ValueError(f"pef: truncated ranked bitvector header ({len(buf)} of 8 bytes)")
     n, universe = struct.unpack_from("<II", buf)
     b = np.frombuffer(buf, dtype=np.uint8, offset=8)
+    if b.size * 8 < universe:
+        raise ValueError(
+            f"pef: truncated ranked bitvector ({b.size} of {-(-universe // 8)} bytes)"
+        )
     bits = np.unpackbits(b[:, None], axis=1)[:, ::-1].reshape(-1)[:universe]
     out = np.flatnonzero(bits).astype(np.uint64)
-    assert out.size == n
+    if out.size != n:
+        raise ValueError(f"pef: ranked bitvector holds {out.size} values, header says {n}")
     return out
-
-
-def strict_ef_encode(values: np.ndarray, universe: int) -> bytes:
-    """Strict EF (ref:strict_elias_fano.hpp): v_i − i is non-decreasing
-    over universe − n + 1 — cheaper than plain EF for dense runs."""
-    v = np.asarray(values, dtype=np.uint64)
-    n = v.size
-    return ef.encode(v - np.arange(n, dtype=np.uint64), int(universe) - n + 1)
-
-
-def strict_ef_decode(buf: bytes, n: int) -> np.ndarray:
-    base = ef.decode(buf, n).astype(np.uint64)
-    return base + np.arange(n, dtype=np.uint64)
-
-
-class StrictEfEnumerator:
-    """move / next_geq / prev_value over a strict-EF buffer. next_geq
-    exploits that v_i = ef_i + i is strictly increasing: binary search
-    over positions with select-directory move() probes — O(log n)
-    selects, no decode."""
-
-    def __init__(self, buf: bytes):
-        self._en = ef.EliasFanoEnumerator(buf)
-        self.n = self._en.n
-
-    def move(self, i: int) -> int:
-        return self._en.move(i) + i
-
-    def next_geq(self, target: int) -> "tuple[int, int] | None":
-        lo, hi = 0, self.n  # first i with move(i) >= target
-        while lo < hi:
-            mid = (lo + hi) // 2
-            if self.move(mid) >= target:
-                hi = mid
-            else:
-                lo = mid + 1
-        if lo >= self.n:
-            return None
-        return lo, self.move(lo)
-
-    def prev_value(self, i: int) -> int:
-        if i <= 0:
-            return 0
-        return self.move(i - 1)
 
 
 # ---------------------------------------------------------------------------
@@ -168,7 +126,10 @@ def indexed_encode(values: np.ndarray, universe: int) -> bytes:
 
 def indexed_decode(buf: bytes, universe: int, n: int) -> np.ndarray:
     if len(buf) == 0:
-        assert n == universe
+        if n != universe:
+            raise ValueError(
+                f"pef: truncated partition (no payload for {n} values in universe {universe})"
+            )
         return np.arange(n, dtype=np.uint64)
     t = buf[0]
     if t == T_EF:
@@ -176,149 +137,6 @@ def indexed_decode(buf: bytes, universe: int, n: int) -> np.ndarray:
     if t == T_RB:
         return rb_decode(buf[1:])
     raise ValueError(f"indexed_sequence: unknown type {t}")
-
-
-class IndexedEnumerator:
-    """Dispatching enumerator (ref:indexed_sequence.hpp:89-158). EF
-    partitions navigate via the select directory; RB/all-ones
-    materialize their ≤ partition-sized positions."""
-
-    def __init__(self, buf: bytes, universe: int, n: int):
-        self.n = int(n)
-        if len(buf) == 0:  # implicit all-ones
-            self._vals = None
-            self._en = None
-            self._ao = True
-            return
-        self._ao = False
-        t = buf[0]
-        if t == T_EF:
-            self._en = ef.EliasFanoEnumerator(buf[1:])
-            self._vals = None
-        elif t == T_RB:
-            self._vals = rb_decode(buf[1:]).astype(np.int64)
-            self._en = None
-        else:
-            raise ValueError(f"indexed_sequence: unknown type {t}")
-
-    def move(self, i: int) -> int:
-        if self._ao:
-            return i
-        if self._en is not None:
-            return self._en.move(i)
-        return int(self._vals[i])
-
-    def next_geq(self, target: int) -> "tuple[int, int] | None":
-        if self._ao:
-            t = max(0, int(target))
-            return (t, t) if t < self.n else None
-        if self._en is not None:
-            return self._en.next_geq(target)
-        j = int(self._vals.searchsorted(target))
-        if j >= self.n:
-            return None
-        return j, int(self._vals[j])
-
-    def prev_value(self, i: int) -> int:
-        if i <= 0:
-            return 0
-        return self.move(i - 1)
-
-
-# ---------------------------------------------------------------------------
-# strict_sequence: best-of {strict EF, ranked bitvector, all-ones}
-# (ref:strict_sequence.hpp:12-176 — indexed_sequence with the strict EF
-# leaf; the zeros-index the reference disables via strict_params has no
-# analog here, the select directory is always byte-granular)
-# ---------------------------------------------------------------------------
-
-
-def strict_encode(values: np.ndarray, universe: int) -> bytes:
-    v = np.asarray(values, dtype=np.uint64)
-    n = v.size
-    if n == int(universe):
-        return b""
-    e = strict_ef_encode(v, int(universe))
-    r = rb_encode(v, int(universe))
-    if len(e) <= len(r):
-        return bytes([T_EF]) + e
-    return bytes([T_RB]) + r
-
-
-def strict_decode(buf: bytes, universe: int, n: int) -> np.ndarray:
-    if len(buf) == 0:
-        assert n == universe
-        return np.arange(n, dtype=np.uint64)
-    t = buf[0]
-    if t == T_EF:
-        return strict_ef_decode(buf[1:], n)
-    if t == T_RB:
-        return rb_decode(buf[1:])
-    raise ValueError(f"strict_sequence: unknown type {t}")
-
-
-class StrictEnumerator(IndexedEnumerator):
-    """strict_sequence::enumerator dispatch — identical surface, strict
-    EF leaf."""
-
-    def __init__(self, buf: bytes, universe: int, n: int):
-        self.n = int(n)
-        if len(buf) == 0:
-            self._vals, self._en, self._ao = None, None, True
-            return
-        self._ao = False
-        t = buf[0]
-        if t == T_EF:
-            self._en = StrictEfEnumerator(buf[1:])
-            self._vals = None
-        elif t == T_RB:
-            self._vals = rb_decode(buf[1:]).astype(np.int64)
-            self._en = None
-        else:
-            raise ValueError(f"strict_sequence: unknown type {t}")
-
-
-# ---------------------------------------------------------------------------
-# positive_sequence (ref:positive_sequence.hpp:9-79): positive values
-# stored as their strict prefix sums; the enumerator's next() returns
-# successive differences via prev_value — the third prev_value consumer
-# ---------------------------------------------------------------------------
-
-
-def positive_encode(values: np.ndarray) -> bytes:
-    """values ≥ 1 → strict_sequence of cumsums, universe = sum + 1."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size and int(v.min()) < 1:
-        raise ValueError("positive_sequence requires values >= 1")
-    cs = np.cumsum(v)
-    u = int(cs[-1]) + 1 if cs.size else 1
-    return struct.pack("<IQ", v.size, u) + strict_encode(cs - 1, u - 1 if u > 1 else 1)
-
-
-def positive_decode(buf: bytes, n_expected: "int | None" = None) -> np.ndarray:
-    n, u = struct.unpack_from("<IQ", buf)
-    if n_expected is not None and n != n_expected:
-        raise ValueError(f"positive_sequence: expected {n_expected}, got {n}")
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    cs = strict_decode(buf[12:], u - 1 if u > 1 else 1, n) + np.uint64(1)
-    return np.diff(cs, prepend=np.uint64(0))
-
-
-class PositiveEnumerator:
-    """move(i) → the i-th ORIGINAL value, computed as cumsum(i) −
-    cumsum(i−1) with two enumerator probes (positive_sequence.hpp:55-71
-    uses prev_value for exactly this difference)."""
-
-    def __init__(self, buf: bytes):
-        n, u = struct.unpack_from("<IQ", buf)
-        self.n = int(n)
-        self._en = StrictEnumerator(buf[12:], int(u) - 1 if u > 1 else 1, self.n)
-
-    def move(self, i: int) -> int:
-        cur = self._en.move(i) + 1
-        prev = (self._en.prev_value(i) + 1) if i > 0 else 0
-        return cur - prev
 
 
 # ---------------------------------------------------------------------------
@@ -393,6 +211,8 @@ def optimal_partition(
 
 _MAGIC_UNIFORM = 0xEFA1
 _MAGIC_OPT = 0xEFA2
+# magic, n, universe, parts, log_psize, len(upper bounds), len(cuts)
+_HEAD = struct.Struct("<HIQIBII")
 
 
 def _encode_partitioned(
@@ -403,7 +223,7 @@ def _encode_partitioned(
     n = v.size
     if n == 0:  # the reference asserts n > 0; a zero-row header keeps
         # the block-codec contract total (S3 empty sequences)
-        return struct.pack("<HIQIBII", magic, 0, int(universe), 0, 0, 0, 0)
+        return _HEAD.pack(magic, 0, int(universe), 0, 0, 0, 0)
     parts = len(cuts)
     # upper_bounds = [first value, last of p0, last of p1, ...]
     ubs = np.empty(parts + 1, dtype=np.uint64)
@@ -429,9 +249,8 @@ def _encode_partitioned(
     endpoints = np.cumsum([0] + [len(b) for b in payloads[:-1]]).astype(
         np.uint32
     )
-    head = struct.pack(
-        "<HIQIBII",
-        magic, n, int(universe), parts, log_psize, len(ub_buf), len(cuts_buf),
+    head = _HEAD.pack(
+        magic, n, int(universe), parts, log_psize, len(ub_buf), len(cuts_buf)
     )
     return (
         head + ub_buf + cuts_buf + endpoints.tobytes() + b"".join(payloads)
@@ -456,137 +275,39 @@ def partitioned_encode(values: np.ndarray, universe: int) -> bytes:
     return _encode_partitioned(values, universe, cuts, _MAGIC_OPT, 0)
 
 
-class PartitionedEnumerator:
-    """move / next_geq / prev_value over either partitioned form —
-    uniform_partitioned_sequence::enumerator semantics
-    (ref:uniform_partitioned_sequence.hpp:236-310):
-
-      switch_partition(p): cur_ub   = upper_bounds.move(p+1)
-                           cur_base = upper_bounds.prev_value(p+1)
-                                      + (1 if p else 0)
-      next_geq(t): in-partition when cur_base ≤ t ≤ cur_ub, else route
-      through upper_bounds.next_geq(t) → partition index − 1.
-
-    Only the landed partition's payload is touched; the upper-bounds
-    EF sequence is the sole metadata read on a skip."""
-
-    def __init__(self, buf: bytes):
-        (magic, n, universe, parts, log_psize, ub_len, cuts_len) = (
-            struct.unpack_from("<HIQIBII", buf)
-        )
-        off = struct.calcsize("<HIQIBII")
-        self.n, self.universe, self.parts = int(n), int(universe), int(parts)
-        self._ubs = ef.EliasFanoEnumerator(buf[off : off + ub_len])
-        off += ub_len
-        if magic == _MAGIC_OPT:
-            self._cuts = (
-                np.concatenate(
-                    [
-                        ef.decode(buf[off : off + cuts_len], parts - 1).astype(
-                            np.int64
-                        ),
-                        [n],
-                    ]
-                )
-                if parts > 1
-                else np.asarray([n], dtype=np.int64)
-            )
-        else:
-            psize = 1 << log_psize
-            self._cuts = np.minimum(
-                (np.arange(parts, dtype=np.int64) + 1) * psize, n
-            )
-        off += cuts_len
-        self._endpoints = np.frombuffer(
-            buf, dtype=np.uint32, count=parts, offset=off
-        ).astype(np.int64)
-        self._seq_off = off + 4 * parts
-        self._buf = buf
-        self._cur_p = -1
-        self._pe: IndexedEnumerator | None = None
-        self._cur_base = 0
-        self._cur_ub = 0
-        self._cur_begin = 0
-
-    def _switch(self, p: int) -> None:
-        if p == self._cur_p:
-            return
-        start = self._seq_off + int(self._endpoints[p])
-        end = (
-            self._seq_off + int(self._endpoints[p + 1])
-            if p + 1 < self.parts
-            else len(self._buf)
-        )
-        self._cur_ub = self._ubs.move(p + 1)
-        self._cur_base = self._ubs.prev_value(p + 1) + (1 if p else 0)
-        self._cur_begin = int(self._cuts[p - 1]) if p else 0
-        pn = int(self._cuts[p]) - self._cur_begin
-        self._pe = IndexedEnumerator(
-            self._buf[start:end], self._cur_ub - self._cur_base + 1, pn
-        )
-        self._cur_p = p
-
-    def move(self, i: int) -> int:
-        if not (0 <= i < self.n):
-            raise IndexError(i)
-        p = int(self._cuts.searchsorted(i, side="right"))
-        self._switch(p)
-        return self._cur_base + self._pe.move(i - self._cur_begin)
-
-    def next_geq(self, target: int) -> "tuple[int, int] | None":
-        t = int(target)
-        if self._cur_p >= 0 and self._cur_base <= t <= self._cur_ub:
-            got = self._pe.next_geq(t - self._cur_base)
-            if got is not None:
-                j, val = got
-                return self._cur_begin + j, self._cur_base + val
-            # exhausted below target inside this partition: fall through
-            if self._cur_p + 1 >= self.parts:
-                return None
-            i = int(self._cuts[self._cur_p])
-            return i, self.move(i)
-        r = self._ubs.next_geq(t)
-        if r is None:
-            return None
-        pos, _val = r
-        if pos == 0:
-            return 0, self.move(0)
-        if pos - 1 >= self.parts:
-            return None
-        self._switch(pos - 1)
-        return self.next_geq(t)
-
-    def prev_value(self, i: int) -> int:
-        """predecessor surface (ref:uniform_partitioned_sequence.hpp:
-        203-211): 0 before the start, else element i−1."""
-        if i <= 0:
-            return 0
-        return self.move(i - 1)
-
-
 def partitioned_decode(buf: bytes, n_expected: "int | None" = None) -> np.ndarray:
-    (magic, n, universe, parts, log_psize, ub_len, cuts_len) = (
-        struct.unpack_from("<HIQIBII", buf)
-    )
+    """Either partitioned form: the upper bounds and the optimal form's
+    cuts decode once, then each partition's payload decodes with base
+    ubs[p] + (1 if p else 0) over universe ubs[p+1] − base + 1."""
+    if len(buf) < _HEAD.size:
+        raise ValueError(f"pef: truncated header ({len(buf)} of {_HEAD.size} bytes)")
+    magic, n, _universe, parts, log_psize, ub_len, cuts_len = _HEAD.unpack_from(buf)
     if n_expected is not None and n != n_expected:
         raise ValueError(f"pef: expected {n_expected}, got {n}")
     if n == 0:
         return np.empty(0, dtype=np.uint64)
-    en = PartitionedEnumerator(buf)
+    off = _HEAD.size
+    seq_off = off + ub_len + cuts_len + 4 * parts
+    if len(buf) < seq_off:
+        raise ValueError(f"pef: truncated directory ({len(buf)} of {seq_off} bytes)")
+    ubs = ef.decode(buf[off : off + ub_len], parts + 1).astype(np.int64)
+    off += ub_len
+    if magic == _MAGIC_OPT:  # the last cut (n) is implicit
+        inner = ef.decode(buf[off : off + cuts_len], parts - 1) if parts > 1 else []
+        cuts = np.append(inner, n).astype(np.int64)
+    else:
+        cuts = np.minimum(np.arange(1, parts + 1, dtype=np.int64) << log_psize, n)
+    off += cuts_len
+    starts = seq_off + np.frombuffer(buf, dtype=np.uint32, count=parts, offset=off).astype(np.int64)
+    if starts[-1] > len(buf):
+        raise ValueError(f"pef: truncated payload ({len(buf)} of {starts[-1]}+ bytes)")
+    ends = np.append(starts[1:], len(buf))
     out = np.empty(n, dtype=np.uint64)
-    prev = 0
+    begin = 0
     for p in range(parts):
-        en._switch(p)
-        end = int(en._cuts[p])
-        seg = indexed_decode(
-            en._buf[
-                en._seq_off + int(en._endpoints[p]) :
-                (en._seq_off + int(en._endpoints[p + 1])
-                 if p + 1 < parts else len(buf))
-            ],
-            en._cur_ub - en._cur_base + 1,
-            end - prev,
-        )
-        out[prev:end] = seg + np.uint64(en._cur_base)
-        prev = end
+        base = int(ubs[p]) + (1 if p else 0)
+        end = int(cuts[p])
+        seg = indexed_decode(buf[starts[p] : ends[p]], int(ubs[p + 1]) - base + 1, end - begin)
+        out[begin:end] = seg + np.uint64(base)
+        begin = end
     return out

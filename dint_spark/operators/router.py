@@ -150,7 +150,10 @@ def topk_auto(
     semantics (round-to-9 before rank, ties → doc_id ASC).
 
     norms/universe/sharded_bidx: the serving artifacts of the cogroup
-    route (engine.get_serving); norms is required."""
+    route (engine.get_serving); norms is required. k < 1 is refused
+    before the routing aggregate runs, whichever route would serve."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1 (top-k results per query), got {k}")
     qt = query_terms(queries, dedup=True).join(
         F.broadcast(idx.vocab.select("term", "df")), "term"
     )

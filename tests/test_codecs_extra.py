@@ -108,92 +108,6 @@ def test_elias_gamma_delta_roundtrip(name):
     assert c.encode_docs(np.array([0], dtype=np.uint32))[0] & 0x80
 
 
-def test_ef_enumerator_matches_decode():
-    """EliasFanoEnumerator (move/next_geq, select-directory navigation,
-    compact_elias_fano.hpp:150-420 role) agrees with full decode on
-    random monotone sequences and random skip targets."""
-    import numpy as np
-
-    from dint_spark.codecs import elias_fano as ef
-
-    rng = np.random.default_rng(123)
-    for trial in range(8):
-        n = int(rng.integers(1, 400))
-        u = int(rng.integers(n + 1, n * 50 + 2))
-        vals = np.sort(rng.choice(u, size=n, replace=False)).astype(np.uint64)
-        buf = ef.encode(vals, universe=u)
-        ref = ef.decode(buf, n).astype(np.int64)
-        en = ef.EliasFanoEnumerator(buf)
-        assert en.n == n
-        # move: random access parity
-        for i in rng.integers(0, n, size=20):
-            assert en.move(int(i)) == int(ref[int(i)]), (trial, i)
-        # next_geq: random targets incl. boundaries
-        targets = np.concatenate(
-            [rng.integers(0, u + 2, size=40), [0, int(ref[0]), int(ref[-1]), u]]
-        )
-        for t in targets:
-            t = int(t)
-            got = en.next_geq(t)
-            j = int(np.searchsorted(ref, t))
-            if j >= n:
-                assert got is None, (trial, t, got)
-            else:
-                assert got == (j, int(ref[j])), (trial, t, got, (j, int(ref[j])))
-
-
-def test_ef_enumerator_skips_without_full_low_unpack():
-    """The enumerator touches only the target bucket's lower bits: a
-    single next_geq on a large list gathers ≤ bucket-sized low slices
-    (spot check via the gather size)."""
-    import numpy as np
-
-    from dint_spark.codecs import elias_fano as ef
-
-    n, u = 5000, 1 << 20
-    rng = np.random.default_rng(7)
-    vals = np.sort(rng.choice(u, size=n, replace=False)).astype(np.uint64)
-    buf = ef.encode(vals, universe=u)
-    en = ef.EliasFanoEnumerator(buf)
-    calls = []
-    orig = en._lows
-
-    def spy(i0, i1):
-        calls.append(i1 - i0)
-        return orig(i0, i1)
-
-    en._lows = spy
-    en.next_geq(int(vals[n // 2]) + 1)
-    assert calls and max(calls) < n // 10, calls  # bucket-local, not full
-
-
-def test_ef_enumerator_prev_value():
-    """prev_value(i) ≡ the reference enumerator's prev_value() at
-    m_position == i (compact_elias_fano.hpp:233-254): 0 at the front,
-    element i-1 mid-list (duplicates included), last element at
-    past-the-end, IndexError beyond."""
-    import numpy as np
-    import pytest
-
-    from dint_spark.codecs import elias_fano as ef
-
-    rng = np.random.default_rng(321)
-    for trial in range(8):
-        n = int(rng.integers(1, 300))
-        u = int(rng.integers(n + 1, n * 40 + 2))
-        # non-decreasing WITH duplicates (compact EF allows ties)
-        vals = np.sort(rng.integers(0, u, size=n)).astype(np.uint64)
-        buf = ef.encode(vals, universe=u)
-        ref = ef.decode(buf, n).astype(np.int64)
-        en = ef.EliasFanoEnumerator(buf)
-        assert en.prev_value(0) == 0
-        for i in rng.integers(1, n + 1, size=25):
-            assert en.prev_value(int(i)) == int(ref[int(i) - 1]), (trial, i)
-        assert en.prev_value(n) == int(ref[-1])
-        with pytest.raises(IndexError):
-            en.prev_value(n + 1)
-
-
 def test_ef_rejects_values_beyond_u32():
     """r5 ADVICE (medium): values ≥ 2^32 silently wrapped through the
     u32 decode dtype ([1, 2^33] → [1, 0]). encode must refuse loudly."""
@@ -203,15 +117,6 @@ def test_ef_rejects_values_beyond_u32():
     v = np.array([1, 2 ** 32 - 1], dtype=np.uint64)
     out = ef.decode(ef.encode(v, universe=2 ** 32), 2)
     assert out.astype(np.int64).tolist() == [1, 2 ** 32 - 1]
-
-
-def test_strict_ef_rejects_beyond_u32():
-    from dint_spark.codecs.partitioned_ef import strict_ef_encode
-
-    with pytest.raises(ValueError, match="u32 wire domain"):
-        strict_ef_encode(
-            np.array([0, 2 ** 33], dtype=np.uint64), 2 ** 33 + 1
-        )
 
 
 def test_pef_adapter_rejects_overflowing_prefix_sums():

@@ -102,3 +102,40 @@ def test_declared_queries_and_oracles():
         "ft_wand_twophase", "ft_maxscore_twophase",
     ):
         assert oracles[name] == S.RANKED_OR, name
+
+
+def test_script_imports_resolve():
+    """Every `from dint_spark… import name` in the scripts no test runs
+    (tools/, BENCH/, jobs/, __spark_entry__.py) still names something:
+    the imports are parsed with ast and resolved, the scripts never run.
+    A deleted public name then fails here, not in the next script run."""
+    import ast
+    import importlib
+
+    def resolves(module: str, name: str) -> bool:
+        try:
+            mod = importlib.import_module(module)
+        except ImportError:
+            return False
+        if name == "*" or hasattr(mod, name):
+            return True
+        try:
+            importlib.import_module(f"{module}.{name}")
+        except ImportError:
+            return False
+        return True
+
+    root = PKG.parent
+    scripts = [*sorted(root.glob("tools/*.py")), *sorted(root.glob("BENCH/*.py")),
+               *sorted(root.glob("jobs/*.py")), root / "__spark_entry__.py"]
+    missing, seen = [], 0
+    for f in scripts:
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if (isinstance(node, ast.ImportFrom) and node.level == 0
+                    and node.module.split(".")[0] == "dint_spark"):
+                for a in node.names:
+                    seen += 1
+                    if not resolves(node.module, a.name):
+                        missing.append(f"{f.relative_to(root)}:{node.lineno} {node.module}.{a.name}")
+    assert seen > 0
+    assert missing == [], f"script imports that no longer resolve: {missing}"

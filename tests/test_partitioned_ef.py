@@ -1,8 +1,8 @@
-"""Partitioned Elias-Fano family (codecs/partitioned_ef.py): leaf
-representations, per-partition selection, the optimal-partition DP, the
-partitioned enumerator (move / next_geq / prev_value), and the registry
-gap adapters — property-tested against full decode, the reference's own
-verification strategy (test_sequences.hpp role)."""
+"""Elias-Fano and partitioned Elias-Fano block codecs
+(codecs/elias_fano.py, codecs/partitioned_ef.py): leaf representations,
+per-partition selection, the optimal-partition DP, partitioned decode
+over edge shapes, and the registry gap adapters — round-trip, golden
+wire bytes, and refusal of cut buffers."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ import pytest
 
 from dint_spark.codecs import elias_fano as ef
 from dint_spark.codecs import partitioned_ef as pef
+from tests.test_dint_wire import _digest
 
 
 def _strict(rng, n, universe):
@@ -23,30 +24,12 @@ def _strict(rng, n, universe):
 
 
 @pytest.mark.parametrize("trial", range(6))
-def test_rb_and_strict_ef_roundtrip(trial):
+def test_rb_roundtrip(trial):
     rng = np.random.default_rng(100 + trial)
     n = int(rng.integers(1, 400))
     u = int(rng.integers(n, n * 20 + 2))
     v = _strict(rng, n, u)
     assert np.array_equal(pef.rb_decode(pef.rb_encode(v, u)), v)
-    assert np.array_equal(
-        pef.strict_ef_decode(pef.strict_ef_encode(v, u), n), v
-    )
-
-
-def test_strict_ef_enumerator():
-    rng = np.random.default_rng(5)
-    n, u = 300, 4000
-    v = _strict(rng, n, u).astype(np.int64)
-    en = pef.StrictEfEnumerator(pef.strict_ef_encode(v, u))
-    for i in rng.integers(0, n, size=25):
-        assert en.move(int(i)) == int(v[int(i)])
-    for t in np.concatenate([rng.integers(0, u + 2, size=30), [0, int(v[-1]), u]]):
-        got = en.next_geq(int(t))
-        j = int(np.searchsorted(v, int(t)))
-        assert got == ((j, int(v[j])) if j < n else None), t
-    assert en.prev_value(0) == 0
-    assert en.prev_value(n) == int(v[-1])
 
 
 def test_indexed_sequence_selection_and_roundtrip():
@@ -71,25 +54,6 @@ def test_indexed_sequence_selection_and_roundtrip():
     buf = pef.indexed_encode(v, u)
     assert buf[0] == pef.T_EF
     assert np.array_equal(pef.indexed_decode(buf, u, 40), v)
-
-
-def test_indexed_enumerator_all_types():
-    rng = np.random.default_rng(11)
-    cases = [
-        (np.arange(64, dtype=np.uint64), 64),          # all-ones
-        (_strict(rng, 200, 256), 256),                  # bitvector
-        (_strict(rng, 30, 1 << 14), 1 << 14),           # EF
-    ]
-    for v, u in cases:
-        buf = pef.indexed_encode(v, u)
-        en = pef.IndexedEnumerator(buf, u, len(v))
-        ref = v.astype(np.int64)
-        for i in rng.integers(0, len(v), size=15):
-            assert en.move(int(i)) == int(ref[int(i)])
-        for t in rng.integers(0, u + 1, size=20):
-            j = int(np.searchsorted(ref, int(t)))
-            got = en.next_geq(int(t))
-            assert got == ((j, int(ref[j])) if j < len(v) else None)
 
 
 # ---------------------------------------------------------------------------
@@ -124,72 +88,36 @@ def test_optimal_partition_valid_and_adaptive():
 # ---------------------------------------------------------------------------
 
 
+def _edge_shape(name, rng):
+    """(values, universe) for a partition edge shape; the two runs also
+    check the partition representation they are meant to reach."""
+    if name == "n1":
+        return np.array([41], dtype=np.uint64), 100
+    if name == "psize_multiple":  # the last uniform cut lands exactly on n
+        return _strict(rng, 384, 384 * 20), 384 * 20
+    if name == "run":  # all-ones partitions: empty payloads
+        v = np.arange(300, dtype=np.uint64) + 17
+        assert pef.indexed_encode(v[:128] - v[0], 128) == b""
+        return v, 400
+    assert name == "dense"  # ranked-bitvector partitions
+    v = np.flatnonzero(rng.random(1000) < 0.6).astype(np.uint64)
+    assert pef.indexed_encode(v[:128] - v[0], int(v[127] - v[0]) + 1)[0] == pef.T_RB
+    return v, int(v[-1]) + 1
+
+
 @pytest.mark.parametrize("form", ["uniform", "opt"])
-@pytest.mark.parametrize("trial", range(6))
+@pytest.mark.parametrize("trial", [*range(6), "n1", "psize_multiple", "run", "dense"])
 def test_partitioned_roundtrip(form, trial):
-    rng = np.random.default_rng(300 + trial)
-    n = int(rng.integers(1, 1200))
-    u = int(rng.integers(n, n * 30 + 2))
-    v = _strict(rng, n, u)
+    if isinstance(trial, str):
+        v, u = _edge_shape(trial, np.random.default_rng(17))
+    else:
+        rng = np.random.default_rng(300 + trial)
+        n = int(rng.integers(1, 1200))
+        u = int(rng.integers(n, n * 30 + 2))
+        v = _strict(rng, n, u)
     enc = pef.uniform_encode if form == "uniform" else pef.partitioned_encode
     buf = enc(v, u)
-    assert np.array_equal(pef.partitioned_decode(buf, n), v)
-
-
-@pytest.mark.parametrize("form", ["uniform", "opt"])
-def test_partitioned_enumerator_matches_decode(form):
-    """move / next_geq / prev_value parity with full decode, across
-    partition boundaries (targets planted at cut edges)."""
-    rng = np.random.default_rng(77)
-    n, u = 1000, 40_000
-    v = _strict(rng, n, u).astype(np.int64)
-    enc = pef.uniform_encode if form == "uniform" else pef.partitioned_encode
-    buf = enc(v.astype(np.uint64), u)
-    en = pef.PartitionedEnumerator(buf)
-    assert en.n == n
-    for i in rng.integers(0, n, size=40):
-        assert en.move(int(i)) == int(v[int(i)]), i
-    cuts = en._cuts
-    targets = np.concatenate([
-        rng.integers(0, u + 2, size=60),
-        [0, int(v[0]), int(v[-1]), u],
-        v[np.clip(cuts[:-1], 0, n - 1)],          # partition edges
-        v[np.clip(cuts[:-1], 0, n - 1)] + 1,
-    ])
-    for t in targets:
-        t = int(t)
-        got = en.next_geq(t)
-        j = int(np.searchsorted(v, t))
-        assert got == ((j, int(v[j])) if j < n else None), (t, got)
-    assert en.prev_value(0) == 0
-    for i in rng.integers(1, n + 1, size=20):
-        assert en.prev_value(int(i)) == int(v[int(i) - 1])
-
-
-def test_partitioned_enumerator_touches_one_partition_per_skip():
-    """A next_geq materializes only the landed partition: the number of
-    IndexedEnumerator constructions stays O(1) per skip (metadata-only
-    navigation through the EF upper bounds — the PEF skip contract)."""
-    rng = np.random.default_rng(13)
-    n, u = 4096, 1 << 20
-    v = _strict(rng, n, u)
-    buf = pef.uniform_encode(v, u)
-    en = pef.PartitionedEnumerator(buf)
-    built = []
-    orig = pef.IndexedEnumerator
-
-    class Spy(orig):
-        def __init__(self, *a, **kw):
-            built.append(1)
-            super().__init__(*a, **kw)
-
-    pef.IndexedEnumerator = Spy
-    try:
-        en.next_geq(int(v[n // 2]) + 1)
-        en.next_geq(int(v[3 * n // 4]) + 1)
-    finally:
-        pef.IndexedEnumerator = orig
-    assert len(built) <= 2, built
+    assert np.array_equal(pef.partitioned_decode(buf, len(v)), v)
 
 
 # ---------------------------------------------------------------------------
@@ -210,47 +138,54 @@ def test_registry_pef_roundtrip(name):
         assert np.array_equal(c.decode_freqs(c.encode_freqs(v), n), v), (name, t)
 
 
-# ---------------------------------------------------------------------------
-# strict_sequence + positive_sequence
-# ---------------------------------------------------------------------------
+# sha256 of encode_docs + encode_freqs over golden_gap_blocks(); a digest
+# moves only if the wire format changed
+GOLDEN_ENCODINGS = {
+    "ef": "d49d5724085291ca34d3e37f2cccd3edd28c0c099cd92668ed62229f4a403e0a",
+    "pef_uniform": "41726d4893503310c6bf855c3dca90b6411800dc4de82a5cf33c4a81f0a7bbbd",
+    "pef_opt": "a40a6e8ebe4fd5ede9e2745e62b3cc11373191a87e324948a345289f1a3cbe7c",
+}
 
 
-@pytest.mark.parametrize("trial", range(6))
-def test_strict_sequence_roundtrip_and_enum(trial):
-    rng = np.random.default_rng(500 + trial)
-    n = int(rng.integers(1, 400))
-    u = int(rng.integers(n, n * 10 + 2))
-    v = _strict(rng, n, u)
-    buf = pef.strict_encode(v, u)
-    assert np.array_equal(pef.strict_decode(buf, u, n), v)
-    en = pef.StrictEnumerator(buf, u, n)
-    ref = v.astype(np.int64)
-    for i in rng.integers(0, n, size=10):
-        assert en.move(int(i)) == int(ref[int(i)])
-    for t in rng.integers(0, u + 1, size=15):
-        j = int(np.searchsorted(ref, int(t)))
-        got = en.next_geq(int(t))
-        assert got == ((j, int(ref[j])) if j < n else None)
-    # all-ones branch: contiguous run → zero bytes
-    run = np.arange(37, dtype=np.uint64)
-    assert pef.strict_encode(run, 37) == b""
-    assert np.array_equal(pef.strict_decode(b"", 37, 37), run)
+def golden_gap_blocks() -> list[np.ndarray]:
+    """Seeded gap blocks: n = 1, one full uniform partition, a zero run
+    (all-ones partitions), 0/1 gaps (ranked-bitvector partitions), a
+    run/sparse/dense/run block (the optimal form cuts it in three) and
+    random gaps of three widths."""
+    rng = np.random.default_rng(15)
+    blocks = [
+        np.array([7]),
+        rng.integers(0, 1 << 12, size=128),
+        np.zeros(256, dtype=np.int64),
+        rng.integers(0, 2, size=256),
+        np.concatenate([np.zeros(64, dtype=np.int64), rng.integers(0, 1 << 16, size=64),
+                        rng.integers(0, 2, size=64), np.zeros(64, dtype=np.int64)]),
+    ]
+    blocks += [rng.integers(0, 1 << w, size=256) for w in (3, 9, 20)]
+    return [np.asarray(b, dtype=np.uint32) for b in blocks]
 
 
-@pytest.mark.parametrize("trial", range(6))
-def test_positive_sequence_roundtrip_and_enum(trial):
-    """positive_sequence (ref:positive_sequence.hpp): values ≥ 1 via
-    strict prefix sums; move(i) recovers the ORIGINAL value through a
-    prev_value difference probe."""
-    rng = np.random.default_rng(700 + trial)
-    n = int(rng.integers(0, 300))
-    v = (1 + rng.integers(0, 50, size=n)).astype(np.uint64)
-    buf = pef.positive_encode(v)
-    assert np.array_equal(pef.positive_decode(buf, n), v)
-    if n:
-        en = pef.PositiveEnumerator(buf)
-        for i in rng.integers(0, n, size=min(20, n)):
-            assert en.move(int(i)) == int(v[int(i)]), i
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        pef.positive_encode(np.array([1, 0, 2], dtype=np.uint64))
+@pytest.mark.parametrize("name", sorted(GOLDEN_ENCODINGS))
+def test_encodings_match_golden_digest(name):
+    from dint_spark.codecs.registry import get_codec
+
+    c = get_codec(name)
+    blocks = golden_gap_blocks()
+    encs = [c.encode_docs(v) for v in blocks] + [c.encode_freqs(v) for v in blocks]
+    assert _digest(encs) == GOLDEN_ENCODINGS[name]
+    for v, buf in zip(blocks, encs[len(blocks):]):
+        assert np.array_equal(c.decode_freqs(buf, v.size), v)
+
+
+@pytest.mark.parametrize("name", sorted(GOLDEN_ENCODINGS))
+def test_truncated_block_raises(name):
+    """Every proper prefix of an encoded block is refused with
+    ValueError(...truncated...): no assert, IndexError or struct.error."""
+    from dint_spark.codecs.registry import get_codec
+
+    c = get_codec(name)
+    for v in golden_gap_blocks()[:5]:
+        buf = c.encode_docs(v)
+        for cut in range(len(buf)):
+            with pytest.raises(ValueError, match="truncated"):
+                c.decode_docs(buf[:cut], v.size)

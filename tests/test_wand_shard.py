@@ -726,9 +726,13 @@ def test_legacy_norms_forms_refused(spark, zipf_setup):
 
 def test_k_below_one_refused_before_any_job(spark, zipf_setup):
     """k < 1 is refused when the plan is built, with no Spark job run
-    (universe left for the entry to compute), on both pruned entries —
-    not answered one way by the DAAT kernel and another by the
-    exhaustive merge."""
+    (universe left for the entry to compute), on both pruned entries
+    and on topk_auto for both algos — not answered one way by the DAAT
+    kernel, another by the exhaustive merge and a third (an empty
+    frame) by the relational route."""
+    from functools import partial
+
+    from dint_spark.operators.router import topk_auto
     from dint_spark.operators.wand_shard import (
         maxscore_topk_sharded,
         wand_topk_sharded,
@@ -738,9 +742,11 @@ def test_k_below_one_refused_before_any_job(spark, zipf_setup):
     q = _zipf_queries(spark)
     sc = spark.sparkContext
     group = "test_k_below_one"
+    entries = (wand_topk_sharded, maxscore_topk_sharded,
+               partial(topk_auto, algo="wand"), partial(topk_auto, algo="maxscore"))
     try:
         sc.setJobGroup(group, group)
-        for fn in (wand_topk_sharded, maxscore_topk_sharded):
+        for fn in entries:
             for k in (0, -1):
                 with pytest.raises(ValueError, match="k must be >= 1"):
                     fn(idx, bidx, codec, q, idx.num_docs, slices, k=k)
