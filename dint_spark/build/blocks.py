@@ -271,20 +271,8 @@ def decode_block_index(
         for pdf in batches:
             if not len(pdf):
                 continue
+            cols = _decode_rows(pdf, c)
             ns = pdf["n"].to_numpy(dtype=np.int64)
-            # one many-block decode for the whole Arrow batch, then the
-            # segmented prefix-sum un-gap (P5) over all of it at once:
-            # doc[i] = base(block) + Σ_{block-local ≤ i} (gap+1)
-            gaps, offs = c.decode_docs_batch(list(pdf["docs_bytes"]), ns)
-            cs = np.cumsum(gaps.astype(np.int64) + 1)
-            excl = np.where(offs > 0, cs[offs - 1], 0)
-            bases = pdf["block_base"].to_numpy(dtype=np.int64)
-            tfs_flat, _ = c.decode_freqs_batch(list(pdf["freqs_bytes"]), ns)
-            cols = {
-                "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
-                "doc_id": cs + np.repeat(bases - excl, ns),
-                "tf": tfs_flat.astype(np.int64) + 1,
-            }
             for name in extra_names:
                 cols[name] = np.repeat(pdf[name].to_numpy(), ns)
             yield pd.DataFrame(cols)
@@ -296,6 +284,29 @@ def decode_block_index(
     return index.select(
         *base_cols, *[c for c in extra_names if c not in base_cols]
     ).mapInPandas(decode_blocks, schema=schema)
+
+
+def _decode_rows(pdf: pd.DataFrame, codec) -> dict[str, np.ndarray]:
+    """One Arrow batch of block rows → its postings' term_id/doc_id/tf.
+    Every block is decoded by one codec call; the segmented prefix-sum
+    un-gap (P5) then runs over the whole batch at once:
+    doc[i] = base(block) + Σ_{block-local ≤ i} (gap+1)."""
+    ns = pdf["n"].to_numpy(dtype=np.int64)
+    gaps = np.concatenate(
+        [codec.decode_docs(b, n) for b, n in zip(pdf["docs_bytes"], ns.tolist())]
+    )
+    tfs = np.concatenate(
+        [codec.decode_freqs(b, n) for b, n in zip(pdf["freqs_bytes"], ns.tolist())]
+    )
+    cs = np.cumsum(gaps.astype(np.int64) + 1)
+    offs = np.cumsum(ns) - ns
+    excl = np.where(offs > 0, cs[offs - 1], 0)
+    bases = pdf["block_base"].to_numpy(dtype=np.int64)
+    return {
+        "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
+        "doc_id": cs + np.repeat(bases - excl, ns),
+        "tf": tfs.astype(np.int64) + 1,
+    }
 
 
 def transcode_block_index(index: DataFrame, src_codec, dst_codec) -> DataFrame:

@@ -17,9 +17,10 @@ C++):
   stream of b-bit little-endian units; a pattern or run is one unit, an
   exception is its code unit followed by the 16- or 32-bit value as b-bit
   units (OPERAND_UNITS). single_packed writes the 16-bit stream, which
-  is also multi_packed's 16-bit payload. _ser writes a parse, _decode
-  reads one block, _decode_lockstep reads many blocks at once; a stream
-  cut inside an operand raises ValueError on every read path;
+  is also multi_packed's 16-bit payload. _ser writes a parse and _decode
+  reads one block, the only reader: a stream cut inside an operand, a
+  codeword beyond the dictionary or units left after the block's values
+  raise ValueError;
 * encode = greedy longest-run-then-longest-pattern-first parse
   (dint_codecs.hpp:52-139) or the optimal shortest-path parse
   (dint_codecs.hpp:141-283), with pattern matching VECTORIZED across
@@ -69,9 +70,6 @@ NUM_SELECTORS = 6  # dint_configuration.hpp:20
 # EXC32 = 1): the value is stored as little-endian units
 UNIT_DTYPE = {16: np.dtype("<u2"), 8: np.dtype("u1")}
 OPERAND_UNITS = {16: (1, 2), 8: (2, 4)}
-# zero bytes after the last block of a lockstep batch: a cut final operand
-# reads them and is refused by the post-hoc check instead of indexing out
-_PAD = bytes(4)
 
 
 def ceil_log2(x: int) -> int:
@@ -268,7 +266,12 @@ def _decode(buf: bytes, n: int, d: DintDict, width: int) -> np.ndarray:
         j += 1
         if c >= RESERVED:
             k = c - RESERVED
-            s = int(sizes[k])
+            try:
+                s = int(sizes[k])
+            except IndexError:
+                raise ValueError(
+                    f"dint: codeword {c} beyond dictionary ({len(d)} entries)"
+                ) from None
             out[pos : pos + s] = matrix[k, :s]
             pos += s
         elif c <= EXC32:
@@ -282,6 +285,8 @@ def _decode(buf: bytes, n: int, d: DintDict, width: int) -> np.ndarray:
             pos += RUN_SIZES[c]
     if pos != n:
         raise ValueError(f"dint: decoded {pos}, expected {n}")
+    if j != m:
+        raise ValueError(f"dint: {m - j} units after {n} values")
     return out
 
 
@@ -357,16 +362,6 @@ class DintCodec:
             return np.asarray(_interp().decode(buf, n), dtype=np.uint32)
         return _decode(buf, n, self.dict, 16)
 
-    def decode_batch(
-        self, bufs: list[bytes], ns: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Many blocks → (flat, offsets); every codeword stream in one
-        lockstep pass."""
-        return _decode_blocks(bufs, ns, self.tail_fallback, self._groups)
-
-    def _groups(self, bufs: list[bytes]):
-        return [(slice(None), bufs, self.dict, 16)]
-
 
 class MultiDintCodec:
     """multi_packed DINT (opt_dint_multi_dict_block, dint_codecs.hpp:285-509).
@@ -412,13 +407,6 @@ class MultiDintCodec:
             return np.asarray(_interp().decode(buf, n), dtype=np.uint32)
         return _decode(buf[1:], n, *self._route(buf[0]))
 
-    def decode_batch(
-        self, bufs: list[bytes], ns: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Many blocks → (flat, offsets); one lockstep pass per control
-        byte (dictionary × width)."""
-        return _decode_blocks(bufs, ns, True, self._groups)
-
     def _route(self, ctrl: int) -> tuple[DintDict, int]:
         """Control byte → (dictionary, codeword width)."""
         if ctrl >= 2 * NUM_SELECTORS:
@@ -426,40 +414,6 @@ class MultiDintCodec:
         if ctrl < NUM_SELECTORS:
             return self.dicts[ctrl], 16
         return self.dicts[ctrl - NUM_SELECTORS], 8
-
-    def _groups(self, bufs: list[bytes]):
-        ctrls = np.fromiter((b[0] for b in bufs), dtype=np.int64, count=len(bufs))
-        for ctrl in np.unique(ctrls):
-            sel = np.flatnonzero(ctrls == ctrl)
-            yield (sel, [bufs[i][1:] for i in sel], *self._route(int(ctrl)))
-
-
-def _decode_blocks(
-    bufs: list[bytes], ns: np.ndarray, tails: bool, groups
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode many blocks → (flat, offsets) in block order; block b's
-    values are flat[offsets[b]:offsets[b]+ns[b]]. With `tails`, blocks
-    shorter than DINT_BLOCK_SIZE are interpolative payloads (short by
-    construction) decoded one by one. groups(full blocks' bufs) yields
-    (positions, payloads, dictionary, width) per stream kind, and each
-    kind decodes in one lockstep pass."""
-    ns = np.asarray(ns, dtype=np.int64)
-    is_tail = ns < DINT_BLOCK_SIZE if tails else np.zeros(ns.size, dtype=bool)
-    tail = np.flatnonzero(is_tail)
-    full = np.flatnonzero(~is_tail)
-    parts = []
-    if tail.size:
-        interp = _interp()
-        t_flat = np.concatenate(
-            [np.asarray(interp.decode(bufs[i], int(ns[i])), dtype=np.uint32) for i in tail]
-        )
-        parts.append((tail, t_flat, ns[tail]))
-    if full.size:
-        for sel, payloads, d, width in groups([bufs[i] for i in full]):
-            idx = full[sel]
-            g_flat, _ = _decode_lockstep(payloads, ns[idx], d, width)
-            parts.append((idx, g_flat, ns[idx]))
-    return _merge_subsets(ns, parts)
 
 
 def extract_patterns(vals: np.ndarray, counter: dict) -> None:
@@ -486,107 +440,3 @@ def extract_patterns(vals: np.ndarray, counter: dict) -> None:
             key = row.tobytes()
             counter[key] = counter.get(key, 0) + 1
 
-
-def _decode_lockstep(
-    bufs: list[bytes], ns: np.ndarray, d: DintDict, width: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batch decode of MANY codeword streams of `width`-bit units, in
-    vectorized lockstep.
-
-    The per-block decoder walks codewords in a Python loop (~1 µs each —
-    the engine's hottest path: every WAND/MaxScore rescore and the decode
-    bench pay it). Here all blocks advance ONE codeword per iteration
-    with whole-batch numpy ops, so Python-level iterations drop from
-    Σ codewords to max-codewords-per-block (~100 for 256-int blocks).
-
-    Returns (flat uint32 output, int64 offsets per block); block b's
-    values are flat[offsets[b]:offsets[b]+ns[b]].
-    """
-    nb = len(bufs)
-    if nb == 0:
-        return np.empty(0, dtype=np.uint32), np.zeros(0, dtype=np.int64)
-    size = UNIT_DTYPE[width].itemsize
-    nbytes = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=nb)
-    if (nbytes % size).any():
-        raise ValueError("dint: truncated codeword stream (partial unit)")
-    lens = nbytes // size
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    cws = np.frombuffer(b"".join([*bufs, _PAD]), dtype=UNIT_DTYPE[width]).astype(np.int64)
-    ns = np.asarray(ns, dtype=np.int64)
-    out_off = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    out = np.zeros(int(ns.sum()), dtype=np.uint32)
-    matrix, sizes = d.matrix, d.sizes
-
-    j = np.zeros(nb, dtype=np.int64)  # codeword cursor per block
-    pos = np.zeros(nb, dtype=np.int64)  # output cursor per block
-    active = pos < ns
-    run_sizes = np.zeros(RESERVED, dtype=np.int64)
-    for code, run in RUN_SIZES.items():
-        run_sizes[code] = run
-    while active.any():
-        ai = np.flatnonzero(active)
-        if (j[ai] >= lens[ai]).any():
-            raise ValueError("dint: truncated codeword stream")
-        c = cws[starts[ai] + j[ai]]
-
-        pat = c >= RESERVED
-        if pat.any():
-            pi = ai[pat]
-            k = c[pat] - RESERVED
-            s = sizes[k].astype(np.int64)
-            base = out_off[pi] + pos[pi]
-            for col in range(MAX_PATTERN):
-                m = s > col
-                if not m.any():
-                    break
-                out[base[m] + col] = matrix[k[m], col]
-            pos[pi] += s
-            j[pi] += 1
-
-        for exc in (EXC16, EXC32):
-            e = c == exc
-            if e.any():
-                ei = ai[e]
-                p = starts[ei] + j[ei] + 1
-                x = cws[p]
-                for u in range(1, OPERAND_UNITS[width][exc]):
-                    x = x | (cws[p + u] << (width * u))
-                out[out_off[ei] + pos[ei]] = x.astype(np.uint32)
-                pos[ei] += 1
-                j[ei] += 1 + OPERAND_UNITS[width][exc]
-
-        run = (~pat) & (c > EXC32)
-        if run.any():
-            ri = ai[run]
-            pos[ri] += run_sizes[c[run]]  # output pre-zeroed
-            j[ri] += 1
-
-        active = pos < ns
-    # truncation check, POST-HOC (zero hot-loop cost): an exception
-    # codeword whose operands ran past its block advances j beyond lens,
-    # so an operand read from the NEXT block's units (buffers being
-    # concatenated) or from the zero pad after the last block is refused
-    # here, as the scalar decoder refuses it. Per-iteration operand
-    # checks measured ~45% decode slowdown on the lockstep hot loop.
-    if (j > lens).any():
-        raise ValueError("dint: truncated codeword stream")
-    if (pos != ns).any():
-        raise ValueError("dint: batch decode length mismatch")
-    return out, out_off
-
-
-def _merge_subsets(
-    ns: np.ndarray, parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]]
-) -> tuple[np.ndarray, np.ndarray]:
-    """Assemble per-subset flat outputs into one flat array in original
-    block order. parts: [(block_indices, sub_flat, sub_ns)]."""
-    ns = np.asarray(ns, dtype=np.int64)
-    out_off = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    out = np.empty(int(ns.sum()), dtype=np.uint32)
-    for idxs, sub_flat, sub_ns in parts:
-        if len(idxs) == 0:
-            continue
-        sub_off = np.concatenate(([0], np.cumsum(sub_ns)[:-1]))
-        tgt = np.repeat(out_off[idxs] - sub_off, sub_ns) + np.arange(sub_flat.size)
-        out[tgt] = sub_flat
-    return out, out_off

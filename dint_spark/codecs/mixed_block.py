@@ -49,7 +49,6 @@ import numpy as np
 
 from dint_spark.codecs import dec_time, interpolative, simple16, varintfam
 from dint_spark.codecs.dec_time import Predictor
-from dint_spark.codecs.registry import BlockCodec
 
 BLOCK_SIZE = 256  # build/blocks.py BLOCK_SIZE (reference util.hpp:35)
 
@@ -204,7 +203,7 @@ def decode_block(buf: bytes, n: int) -> np.ndarray:
     return dec(bytes(buf[1:]), n)
 
 
-class MixedCodec(BlockCodec):
+class MixedCodec:
     """Registry codec (symmetric: both streams carry u32 residuals).
 
     ``access_count_fn`` hook: the reference weighs predicted time by the

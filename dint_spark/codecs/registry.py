@@ -2,15 +2,12 @@
 index-type dispatch (/root/reference/include/index_types.hpp:83-87).
 
 A codec object exposes encode_docs / encode_freqs / decode_docs /
-decode_freqs over uint32 numpy arrays (one posting block per call), and
-decode_docs_batch / decode_freqs_batch over many blocks (BlockCodec).
-The serving kernel reads one block per call; the many-block calls serve
-decode_block_index, whose calls carry a whole Arrow batch of blocks —
-enough work for DINT's lockstep decoder to beat the scalar reader. The
-docs stream carries docID gaps−1, the freqs stream tf−1. DINT codecs are
-asymmetric: separate dictionaries are learned for the two streams
-(dict_freq_index::builder::build_model learns two models,
-dict_freq_index.hpp:53-68).
+decode_freqs over uint32 numpy arrays, one posting block per call:
+every reader (the shard kernel, decode_block_index, transcode) decodes
+block by block. The docs stream carries docID gaps−1, the freqs stream
+tf−1. DINT codecs are asymmetric: separate dictionaries are learned for
+the two streams (dict_freq_index::builder::build_model learns two
+models, dict_freq_index.hpp:53-68).
 """
 
 from __future__ import annotations
@@ -20,29 +17,7 @@ import numpy as np
 from dint_spark.codecs import vbyte
 
 
-class BlockCodec:
-    """Many-block decode for every codec: decode_*_batch(bufs, ns) →
-    (flat values, block start offsets). This default decodes block by
-    block; codecs with a vectorized kernel (DINT's lockstep decode)
-    override it."""
-
-    def decode_docs_batch(self, bufs, ns):
-        return _per_block(self.decode_docs, bufs, ns)
-
-    def decode_freqs_batch(self, bufs, ns):
-        return _per_block(self.decode_freqs, bufs, ns)
-
-
-def _per_block(decode, bufs, ns) -> tuple[np.ndarray, np.ndarray]:
-    ns = np.asarray(ns, dtype=np.int64)
-    flat = (
-        np.concatenate([decode(b, int(n)) for b, n in zip(bufs, ns)])
-        if len(ns) else np.empty(0, dtype=np.uint32)
-    )
-    return flat, np.concatenate(([0], np.cumsum(ns)[:-1]))
-
-
-class SymmetricCodec(BlockCodec):
+class SymmetricCodec:
     """Wrap a stateless encode/decode module (vbyte, u32) for both streams."""
 
     def __init__(self, name: str, encode, decode):
@@ -61,7 +36,7 @@ class SymmetricCodec(BlockCodec):
     decode_freqs = decode_docs
 
 
-class PairCodec(BlockCodec):
+class PairCodec:
     """Distinct per-stream codecs (DINT: docs dict + freqs dict)."""
 
     def __init__(self, name: str, docs, freqs):
@@ -80,13 +55,6 @@ class PairCodec(BlockCodec):
 
     def decode_freqs(self, buf, n):
         return self.freqs.decode(buf, n)
-
-    # the per-stream vectorized many-block decode
-    def decode_docs_batch(self, bufs, ns):
-        return self.docs.decode_batch(bufs, ns)
-
-    def decode_freqs_batch(self, bufs, ns):
-        return self.freqs.decode_batch(bufs, ns)
 
 
 def _u32_encode(vals: np.ndarray) -> bytes:

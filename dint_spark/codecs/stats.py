@@ -43,6 +43,8 @@ def _classify(buf: bytes, sizes: np.ndarray) -> dict[str, int]:
         c = cws[j]
         j += 1
         if c >= RESERVED:
+            if c - RESERVED >= len(sizes):
+                raise ValueError(f"dint: codeword {c} beyond dictionary ({len(sizes)} entries)")
             key = f"pattern_{int(sizes[c - RESERVED])}"
         elif c <= EXC32:
             key = "exception_16" if c == EXC16 else "exception_32"

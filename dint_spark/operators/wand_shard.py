@@ -432,9 +432,7 @@ def _exhaustive_merge(
     """Vectorized exhaustive scoring for groups where pruning cannot
     skip enough to pay for the per-doc DAAT loop. Each surviving block
     is read through the same memoized per-block reader as the DAAT path
-    (_TermBlocks.docs / tfs), so later queries in the batch reuse it. A
-    lockstep many-block decode does not pay here: a merge reads ~5 blocks,
-    where its per-call cost is 15-90× the scalar reader's per block.
+    (_TermBlocks.docs / tfs), so later queries in the batch reuse it.
     Aggregation is a bincount over the shard's contiguous doc range;
     top-k by (rounded, -doc).
 

@@ -10,9 +10,15 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
+import pandas as pd
 import pytest
 
-from dint_spark.codecs.dint import NUM_SELECTORS, DintCodec, DintDict, MultiDintCodec
+from dint_spark.build.blocks import _decode_rows
+from dint_spark.codecs.dint import (
+    NUM_SELECTORS, RESERVED, DintCodec, DintDict, MultiDintCodec,
+)
+from dint_spark.codecs.registry import PairCodec
+from dint_spark.codecs.stats import _classify
 
 GOLDEN_ENCODINGS = {
     "single_packed_dint": "ccfaaaee30f2a394431be0bdf2f429d4e2cf5c6085137b8602e9570d3a97850e",
@@ -92,9 +98,8 @@ def test_encodings_match_golden_digest(name):
     assert any(v.size < 256 for v in blocks) and any((v == 0).sum() >= 16 for v in blocks)
     assert any(v.max() >= 1 << 16 for v in blocks) and any(256 <= v.max() < 1 << 16 for v in blocks)
     assert _digest(encs) == GOLDEN_ENCODINGS[name]
-    flat, offs = codec.decode_docs_batch(encs, np.array([v.size for v in blocks]))
-    for v, o in zip(blocks, offs):
-        assert np.array_equal(flat[o : o + v.size], v)
+    for v, e in zip(blocks, encs):
+        assert np.array_equal(codec.decode_docs(e, v.size), v)
 
 
 @pytest.mark.usefixtures("spark")
@@ -141,31 +146,49 @@ def _truncation_case(kind: str, exc_value: int):
 @pytest.mark.parametrize("cut", [1, 2, "head"], ids=["cut1", "cut2", "head"])
 def test_truncated_stream_raises(kind, exc_value, path, cut):
     """A stream whose final exception operand is cut raises ValueError:
-    decoded alone, as the last block of a lockstep batch, and as a block
-    whose cut operand would run into the next block's bytes. A tail
-    (interpolative) payload cut at its end raises it too, and so does
-    every stream cut to 5 bytes (inside a tail's 8-byte header)."""
+    decoded alone, and in one decode_block_index batch as its last block
+    and as a block followed by a whole one (the cut operand must not
+    read the next block's bytes). A tail (interpolative) payload cut at
+    its end raises it too, and so does every stream cut to 5 bytes
+    (inside a tail's 8-byte header)."""
     codec, v = _truncation_case(kind, exc_value)
     enc = codec.encode(v)
     if kind in ("multi16", "multi8"):
         assert (enc[0] >= NUM_SELECTORS) == (kind == "multi8")
     bad = enc[:5] if cut == "head" else enc[:-cut]
-    ns = np.array([v.size, v.size])
     with pytest.raises(ValueError, match="truncated"):
         if path == "scalar":
             codec.decode(bad, v.size)
-        elif path == "batch_last":
-            codec.decode_batch([enc, bad], ns)
         else:
-            codec.decode_batch([bad, enc], ns)
+            bufs = [enc, bad] if path == "batch_last" else [bad, enc]
+            rows = pd.DataFrame({"term_id": [0, 0], "n": [v.size] * 2, "block_base": [-1, -1],
+                                 "docs_bytes": bufs, "freqs_bytes": bufs})
+            _decode_rows(rows, PairCodec("cut", codec, codec))
 
 
-def test_bad_control_byte_raises():
-    """A multi block whose control byte names no (dictionary, width) pair
-    is refused, scalar and lockstep."""
-    codec = MultiDintCodec([golden_dict()] * NUM_SELECTORS)
-    bad = bytes([2 * NUM_SELECTORS]) + bytes(8)
-    with pytest.raises(ValueError, match="control byte"):
+@pytest.mark.parametrize(
+    "fault, match",
+    [("control_byte", "control byte"), ("codeword", "beyond dictionary"),
+     ("trailing", "units after")],
+    ids=["control_byte", "codeword", "trailing"],
+)
+def test_bad_control_byte_raises(fault, match):
+    """A malformed stream is refused with ValueError: a multi block whose
+    control byte names no (dictionary, width) pair, a codeword past the
+    dictionary's last entry (by the reader and the codeword histogram),
+    and units left after the block's values. The encoder writes none of
+    these shapes."""
+    d = golden_dict()
+    codec = MultiDintCodec([d] * NUM_SELECTORS)
+    if fault == "control_byte":
+        bad = bytes([2 * NUM_SELECTORS]) + bytes(8)
+    elif fault == "codeword":
+        bad = bytes([0]) + np.array([RESERVED + len(d)], dtype="<u2").tobytes()
+        with pytest.raises(ValueError, match=match):
+            _classify(bad[1:], d.sizes)
+    else:
+        codec = DintCodec(d)
+        enc = codec.encode(np.arange(256, dtype=np.uint32) % SMALL)
+        bad = enc + enc
+    with pytest.raises(ValueError, match=match):
         codec.decode(bad, 256)
-    with pytest.raises(ValueError, match="control byte"):
-        codec.decode_batch([bad], np.array([256]))

@@ -106,9 +106,11 @@ def test_declared_queries_and_oracles():
 
 def test_script_imports_resolve():
     """Every `from dint_spark… import name` in the scripts no test runs
-    (tools/, BENCH/, jobs/, __spark_entry__.py) still names something:
-    the imports are parsed with ast and resolved, the scripts never run.
-    A deleted public name then fails here, not in the next script run."""
+    (tools/, BENCH/, jobs/, perfbench/, __spark_entry__.py) and every
+    (module, function) pair perfbench/build.py's TRACED tuple wraps
+    still names something: the files are parsed with ast and the names
+    resolved, the scripts never run. A deleted public name then fails
+    here, not in the next script or benchmark run."""
     import ast
     import importlib
 
@@ -127,15 +129,20 @@ def test_script_imports_resolve():
 
     root = PKG.parent
     scripts = [*sorted(root.glob("tools/*.py")), *sorted(root.glob("BENCH/*.py")),
-               *sorted(root.glob("jobs/*.py")), root / "__spark_entry__.py"]
-    missing, seen = [], 0
+               *sorted(root.glob("jobs/*.py")), *sorted(root.glob("perfbench/*.py")),
+               root / "__spark_entry__.py"]
+    names = []  # (where, module, name)
     for f in scripts:
         for node in ast.walk(ast.parse(f.read_text(), str(f))):
             if (isinstance(node, ast.ImportFrom) and node.level == 0
                     and node.module.split(".")[0] == "dint_spark"):
-                for a in node.names:
-                    seen += 1
-                    if not resolves(node.module, a.name):
-                        missing.append(f"{f.relative_to(root)}:{node.lineno} {node.module}.{a.name}")
-    assert seen > 0
+                names += [(f"{f.relative_to(root)}:{node.lineno}", node.module, a.name)
+                          for a in node.names]
+            elif (f == root / "perfbench" / "build.py" and isinstance(node, ast.Assign)
+                    and [getattr(t, "id", None) for t in node.targets] == ["TRACED"]):
+                names += [(f"{f.relative_to(root)}:{node.lineno}", mod, fn)
+                          for mod, fn, *_ in ast.literal_eval(node.value)]
+    assert any(w.startswith("perfbench/build.py") and n == "learn_dint_model"
+               for w, _, n in names)
+    missing = [f"{w} {m}.{n}" for w, m, n in names if not resolves(m, n)]
     assert missing == [], f"script imports that no longer resolve: {missing}"

@@ -115,7 +115,7 @@ def main() -> None:
             {
                 "reps": args.reps,
                 "per_dist": args.per_dist,
-                "unit": "us_per_block_decode",
+                "unit": "us_per_decoded_block",
                 "types": diag,
                 "loadavg_1m": round(os.getloadavg()[0], 2),
             },

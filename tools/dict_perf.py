@@ -3,7 +3,8 @@
 runs over the rectangular dictionary, ns per copy()).
 
 Our dictionary is a (K, 16) numpy matrix; copy() = one fancy-indexed
-row gather per codeword (the Arrow-kernel decode's inner operation).
+row gather per codeword (what codecs/dint.py _decode does for each
+pattern codeword, batched here to time the gather alone).
 
 Usage: python tools/dict_perf.py [--lookups 10000000] [--runs 10]
 """
